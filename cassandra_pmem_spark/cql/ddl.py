@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 from cassandra_pmem_spark.catalog import ClusteringColumn, TableMeta
 from cassandra_pmem_spark.cql.parser import _Parser, _tokenize
 from cassandra_pmem_spark.cql.validator import ConfigurationException, InvalidRequest
+from cassandra_pmem_spark.plans.hints import unpersist_quietly
 
 # db/marshal/* → Spark types. time is nanos-since-midnight (long);
 # uuid/timeuuid/inet keep their canonical text form; duration keeps the
@@ -2138,16 +2139,17 @@ class SchemaRegistry:
             raise InvalidRequest(f"not a DDL statement: {head!r}")
 
 
-def _unpersist_frames(frames: dict) -> None:
-    """weakref.finalize target: unpin a CqlDatabase's persisted
-    visible-state frames when the database object is collected (module-
-    level so the finalizer holds no reference back to the instance)."""
-    for _ver, df in list(frames.values()):
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass  # session may already be stopped
-    frames.clear()
+def _unpersist_frames(memos: tuple, sessions: dict) -> None:
+    """weakref.finalize target: unpin everything a CqlDatabase persisted
+    — its visible-state and pager memo frames and each table's imported
+    base — when the database object is collected (module-level so the
+    finalizer holds no reference back to the instance)."""
+    for memo in memos:
+        for entry in list(memo.values()):
+            unpersist_quietly(entry[1])
+        memo.clear()
+    for sess in list(sessions.values()):
+        sess.release_base()
 
 
 class CqlDatabase:
@@ -2178,12 +2180,18 @@ class CqlDatabase:
         # would. Parquet-backed tables are NOT persisted (their visible
         # state is unbounded; the scan stays the source of truth).
         self._select_frames: dict[tuple, tuple] = {}
+        # the pager's compiled-frame memo: statement repr -> (version,
+        # frame); see QueryPager._page_frame
+        self._pager_frames: dict[str, tuple] = {}
         # unpin everything when this database is collected — otherwise a
         # long Spark session accumulates persisted frames from
         # short-lived CqlDatabase instances (one per registry query)
         import weakref
 
-        weakref.finalize(self, _unpersist_frames, self._select_frames)
+        weakref.finalize(
+            self, _unpersist_frames,
+            (self._select_frames, self._pager_frames), self._sessions,
+        )
         self.last_index_choice: tuple | None = None
         self.current_keyspace: str | None = None
         # ONE coordinator timeline shared by every table session: a write
@@ -2242,6 +2250,17 @@ class CqlDatabase:
                 now_occs=self._now_occs,
             )
         return self._sessions[key]
+
+    def _release_table(self, key: tuple) -> None:
+        """Discard a dropped table's session and unpin everything it
+        pinned: the imported base and its visible-state and pager memo
+        frames (memo versions lead with the session's id)."""
+        sess = self._sessions.pop(key)
+        sess.release_base()
+        for memo in (self._select_frames, self._pager_frames):
+            for k, (ver, _df) in list(memo.items()):
+                if ver[0] == id(sess):
+                    unpersist_quietly(memo.pop(k)[1])
 
     def _check_view_target(self, tks: str | None, tname: str, head: str) -> None:
         """Writes and TRUNCATE must not target a materialized view —
@@ -2414,7 +2433,7 @@ class CqlDatabase:
             # buffered cell names, so it refuses under buffered writes.
             for key in list(self._sessions):
                 if key not in self.registry.tables:
-                    del self._sessions[key]
+                    self._release_table(key)
                     continue
                 sess, new_meta = self._sessions[key], self.registry.tables[key]
                 # table params can change with NO schema change (ALTER
@@ -2544,7 +2563,17 @@ class CqlDatabase:
         regular columns match by name, with absent ones null. Imported
         rows enter at base writetime 0, so any buffered statement
         writes LWW-beat them — the documented deviation from the
-        reference's preserved cell timestamps."""
+        reference's preserved cell timestamps.
+
+        Like `nodetool import`, the call snapshots the files: it decodes
+        the directory once, here, and pins the decoded rows as the
+        table's base (persisted, owned by the table session — TRUNCATE,
+        DROP TABLE and collection of the database unpin it). Reads,
+        conditional writes, pages and flushes then scan the pinned rows,
+        never the files, so the directory may be deleted after the call.
+        The decode is clock-independent (read_sstables resolves TTLs and
+        tombstones at a fixed far-future instant), so the pin stays valid
+        as the session clock advances."""
         import os as _os
 
         from cassandra_pmem_spark.sources.sstable import (
@@ -2611,10 +2640,19 @@ class CqlDatabase:
                 for c, dt in declared.items()
             ]
         )
-        sess = self._session_for_key(key)
-        sess._base = (
-            base if sess._base is None else sess._base.unionByName(base)
-        )
+        # Spark keeps ONE cache entry per plan, and two imports of one
+        # directory plan alike: tag each import so that its pin is the
+        # importing table's own and releasing it never drops another's
+        import uuid
+
+        tag = uuid.uuid4().hex
+        base = base.filter(F.lit(tag) == F.lit(tag)).persist()
+        try:
+            base.count()
+        except Exception:
+            unpersist_quietly(base)
+            raise
+        self._session_for_key(key).import_base(base)
 
     def flush_sstables(self, table, out_dir: str, sstables: int = 1,
                        compression: bool = True) -> list[dict]:
@@ -2838,10 +2876,7 @@ class CqlDatabase:
         if cached is not None and cached[0] == ver:
             return cached[1]
         if cached is not None:
-            try:
-                cached[1].unpersist(blocking=False)
-            except Exception:
-                pass  # never let cache eviction fail a read
+            unpersist_quietly(cached[1])
         df = sess.table(now=now, with_shadows=True)
         if sess._base is None:
             # buffer-backed: the whole visible state derives from

@@ -60,17 +60,9 @@ from cassandra_pmem_spark.cql.parser import (
     Selector,
     parse_select,
 )
+from cassandra_pmem_spark.plans.hints import unpersist_quietly
 
 _HIDDEN = "__pg"
-
-
-def _unpersist_quietly(df) -> None:
-    """weakref.finalize target: unpin a pager's compiled frame when the
-    pager is collected (module-level — holds no pager reference)."""
-    try:
-        df.unpersist(blocking=False)
-    except Exception:
-        pass  # session may already be stopped
 
 
 def _encode_val(v):
@@ -372,11 +364,12 @@ class QueryPager:
         # PagingState (a fresh QueryPager over the same statement) reuses
         # the original pager's compiled+persisted frame instead of
         # re-compiling it — same provable-identity argument, the version
-        # key covers everything the compile reads.
+        # key covers everything the compile reads. The memo is bounded:
+        # a version tick evicts every entry compiled at an older version
+        # of the same table (its session, ver[0]), not only this
+        # statement's, so statements never paged again leave no pin.
         ver = self.db._visible_version(self._st.table)
-        cache = getattr(self.db, "_pager_frames", None)
-        if cache is None:
-            cache = self.db._pager_frames = {}
+        cache = self.db._pager_frames
         skey = repr(self._st)
         cached = cache.get(skey)
         if ver is not None and cached is not None and cached[0] == ver:
@@ -385,11 +378,9 @@ class QueryPager:
         if self.kind != "global" and self._pk_n:
             frame = frame.withColumn(self._tok_name, self._token_expr())
         if ver is not None:
-            if cached is not None:
-                try:
-                    cached[1].unpersist(blocking=False)
-                except Exception:
-                    pass
+            for k, (old, _f) in list(cache.items()):
+                if k == skey or (old[0] == ver[0] and old != ver):
+                    unpersist_quietly(cache.pop(k)[1])
             # pin the compiled frame too: pages share the token/order
             # expressions — persisting above them means page N's job
             # reads the already-hashed rows instead of re-computing per
@@ -399,9 +390,6 @@ class QueryPager:
             # (plan reuse without persist is still safe there)
             if self.db._buffer_backed(self._st.table):
                 frame = frame.persist()
-                import weakref
-
-                weakref.finalize(self.db, _unpersist_quietly, frame)
             cache[skey] = (ver, frame)
         return frame
 

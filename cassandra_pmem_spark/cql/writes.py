@@ -46,6 +46,7 @@ from cassandra_pmem_spark.cql.validator import (
     InvalidRequest,
 )
 from cassandra_pmem_spark.operators.upsert import upsert_lww_cells
+from cassandra_pmem_spark.plans.hints import unpersist_quietly
 
 
 @dataclass(frozen=True)
@@ -805,11 +806,27 @@ class CqlWriteSession:
         # were never written, so the next statement may re-mint them
         self._now_occs = now_occs if now_occs is not None else NowOccs()
         self._base = base
+        # frames load_sstables persisted into _base: the session owns
+        # their pins and releases them with the base (release_base)
+        self._pinned: list[DataFrame] = []
         # True iff the LAST statement (or any inner batch statement)
         # carried an IF clause — the coordinator's trigger hook reads it
         # to apply the CAS-path same-partition gate
         # (TriggerExecutor.validateForSinglePartition)
         self.last_conditional = False
+
+    def import_base(self, df: DataFrame) -> None:
+        """Merge an imported, already-persisted frame into the base
+        history; the session now owns its pin."""
+        self._pinned.append(df)
+        self._base = df if self._base is None else self._base.unionByName(df)
+
+    def release_base(self) -> None:
+        """Drop the base history and unpin every imported frame."""
+        for df in self._pinned:
+            unpersist_quietly(df)
+        self._pinned.clear()
+        self._base = None
 
     # -- statement entry (ModificationStatement.execute analog) ---------------
 
@@ -926,7 +943,7 @@ class CqlWriteSession:
             self._row_tombs.clear()
             self._cell_tombs.clear()
             self._range_tombs.clear()
-            self._base = None
+            self.release_base()
             return True
         if head not in ("insert", "update", "delete"):
             if forced_ts is not None:

@@ -33,14 +33,14 @@ direct port of the reference algorithm, in tests/test_murmur3.py.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
+
+from cassandra_pmem_spark.session import env_flag
 
 C1 = 0x87C37B91114253D5
 C2 = 0x4CF5AD432745937F
@@ -187,7 +187,7 @@ def murmur3_token_column(col):
     the default; set SPARK_GRAFT_NATIVE_TOKEN=1 on cluster deployments
     (requires the engine's ANSI-off posture — enforced here, falling
     back to the kernel on ANSI sessions)."""
-    if os.environ.get("SPARK_GRAFT_NATIVE_TOKEN") and _ansi_off():
+    if env_flag("SPARK_GRAFT_NATIVE_TOKEN") and _ansi_off():
         return murmur3_token_column_native(col)
     c = F.col(col) if isinstance(col, str) else col
     return _murmur3_token_udf(c.cast("long"))

@@ -18,6 +18,8 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cassandra_pmem_spark.session import env_flag
+
 # Hint only below this planner-estimated size. Larger than the default
 # spark.sql.autoBroadcastJoinThreshold (10 MB) because the planner's
 # estimate for a filtered parquet scan is the full file size (filter
@@ -67,6 +69,15 @@ def maybe_broadcast(df: DataFrame, max_bytes: int = DEFAULT_MAX_BYTES) -> DataFr
     return df
 
 
+def unpersist_quietly(df: DataFrame) -> None:
+    """Unpin a persisted frame; never fails (the Spark session may
+    already be stopped when a finalizer or cache eviction runs)."""
+    try:
+        df.unpersist(blocking=False)
+    except Exception:
+        pass
+
+
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize a bounded intermediate and truncate its lineage —
     the shared primitive behind every iterative loop's per-round barrier
@@ -93,7 +104,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     executor loss at the cost of a write to reliable storage. Same
     rows, same plans above the checkpoint boundary — an availability
     trade only (SCALE.md §r14)."""
-    if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT"):
+    if env_flag("SPARK_GRAFT_RELIABLE_CHECKPOINT"):
         sc = df.sparkSession.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             sc.setCheckpointDir(

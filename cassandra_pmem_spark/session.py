@@ -18,6 +18,12 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def env_flag(name: str) -> bool:
+    """A boolean env flag. Only ``1``, ``true`` or ``yes`` (any case)
+    turn it on, so ``=0``, ``=false`` and an empty value all mean off."""
+    return os.environ.get(name, "").strip().lower() in ("1", "true", "yes")
+
+
 # spellings of "the session timezone is UTC" accepted by the UTC-gated
 # fast paths (statement-log Arrow frames, nested-timestamp tokens).
 # ONE set — two hand-maintained copies classified 'Etc/GMT' differently
@@ -62,6 +68,6 @@ def get_spark(app_name: str = "cassandra-pmem-spark", shuffle_partitions: int | 
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    if not os.environ.get("SPARK_GRAFT_NO_MASTER"):
+    if not env_flag("SPARK_GRAFT_NO_MASTER"):
         builder = builder.master(f"local[{cpus}]")
     return builder.getOrCreate()

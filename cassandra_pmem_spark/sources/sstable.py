@@ -2626,19 +2626,6 @@ def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
             return [(path, s, e, ix0, ix1) for s, e, ix0, ix1 in spans]
         return [(path, s, e, -1, -1) for s, e, _ix0, _ix1 in spans]
 
-    # parse width: bounded by the byte estimate (counting the splits
-    # frame would execute the planning stage twice) AND by ~2 waves of
-    # the cluster's cores — a task happily walks several splits
-    # sequentially, and 35 tiny tasks on 8 threads cost ~2x the wall
-    # time of 16 packed ones (measured; same packing discipline as
-    # spark.sql.files.maxPartitionBytes)
-    total_bytes = sum(os.path.getsize(p) for p in datas)
-    n_splits = max(1, min(
-        4096,
-        total_bytes // max(1, split_bytes) + 1,
-        spark.sparkContext.defaultParallelism * 2,
-    ))
-
     index_total = sum(
         os.path.getsize(p[: -len("Data.db")] + "Index.db") for p in datas
     )
@@ -2653,6 +2640,8 @@ def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
             "ix_start": pa.array([r[3] for r in rows], type=pa.int64()),
             "ix_end": pa.array([r[4] for r in rows], type=pa.int64()),
         })
+        # a local table scan spreads the split rows over up to
+        # defaultParallelism partitions itself: parse reads it directly
         splits_df = spark.createDataFrame(tbl)
     else:
         files_df = spark.createDataFrame(
@@ -2674,7 +2663,21 @@ def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
                                  "ix_start", "ix_end"],
                     )
 
-        splits_df = files_df.mapInPandas(plan, schema=split_schema)
+        # parse width: bounded by the byte estimate (counting the splits
+        # frame would execute the planning stage twice) AND by ~2 waves
+        # of the cluster's cores — a task happily walks several splits
+        # sequentially, and 35 tiny tasks on 8 threads cost ~2x the wall
+        # time of 16 packed ones (measured; same packing discipline as
+        # spark.sql.files.maxPartitionBytes)
+        total_bytes = sum(os.path.getsize(p) for p in datas)
+        n_splits = max(1, min(
+            4096,
+            total_bytes // max(1, split_bytes) + 1,
+            spark.sparkContext.defaultParallelism * 2,
+        ))
+        splits_df = files_df.mapInPandas(plan, schema=split_schema).repartition(
+            n_splits, F.col("path"), F.col("start")
+        )
     out_schema = _spark_schema(schema)
     cols = [f.name for f in out_schema.fields]
 
@@ -2748,10 +2751,7 @@ def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
                         out[c] = out[c].astype(dt)
                 yield out
 
-    return (
-        splits_df.repartition(n_splits, F.col("path"), F.col("start"))
-        .mapInPandas(parse, schema=out_schema)
-    )
+    return splits_df.mapInPandas(parse, schema=out_schema)
 
 
 # -- Filter.db bloom filter (utils/BloomFilter.java, OffHeapBitSet.java) -----

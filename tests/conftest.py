@@ -54,3 +54,23 @@ def normalize_rows(rows, colnames):
         out.append(tuple(vals))
     out.sort()
     return out
+
+
+def persisted_rdds(spark) -> int:
+    """getPersistentRDDs() size once it has settled: the async
+    ContextCleaner may still be releasing other tests' collected frames,
+    so read until two reads in a row agree. Assert on deltas of this,
+    never on a global count."""
+    import gc
+    import time
+
+    jsc = spark.sparkContext._jsc.sc()
+    gc.collect()
+    n = jsc.getPersistentRDDs().size()
+    for _ in range(10):
+        time.sleep(0.2)
+        m = jsc.getPersistentRDDs().size()
+        if m == n:
+            break
+        n = m
+    return n

@@ -340,3 +340,27 @@ class TestParquetBackedFramePersistGate:
         q = db.pager("SELECT k, c FROM t", page_size=7, state=p.state())
         q.fetch_page()
         assert db._pager_frames[repr(q._st)][1] is f1
+
+
+class TestPagerMemoBound:
+    def test_write_evicts_every_stale_entry_of_the_table(self, db, spark):
+        """A version tick evicts (and unpins) the memo entries of EVERY
+        statement paged at an older version of the table, not only the
+        one paged again: statements never paged again leave no pin."""
+        from tests.conftest import persisted_rdds
+
+        stmts = [
+            "SELECT k, c FROM t",
+            "SELECT k, v FROM t",
+            "SELECT k, c, v FROM t WHERE k = 1",
+        ]
+        drain(db.pager(stmts[0], page_size=5))
+        one_statement = persisted_rdds(spark)
+        for s in stmts[1:]:
+            drain(db.pager(s, page_size=5))
+        assert len(db._pager_frames) == 3
+        db.execute("INSERT INTO t (k, c, v) VALUES (9, 9, 99)")
+        rows = [r for pg in drain(db.pager(stmts[0], page_size=5)) for r in pg]
+        assert len(rows) == 25
+        assert len(db._pager_frames) == 1
+        assert persisted_rdds(spark) == one_statement

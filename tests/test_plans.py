@@ -1032,3 +1032,53 @@ class TestRound12Plans:
         above = page_plan.split("InMemoryTableScan")[0]
         assert "ArrowEvalPython" not in above
         assert "BatchEvalPython" not in above
+
+
+FLAG_VALUES = [("0", False), ("", False), ("false", False), ("1", True)]
+
+
+class TestEnvFlags:
+    """Boolean env flags parse strictly: only 1/true/yes turn one on, so
+    `=0` and an empty value mean off (session.env_flag)."""
+
+    @pytest.mark.parametrize("value, on", FLAG_VALUES)
+    def test_native_token(self, spark, monkeypatch, value, on):
+        from cassandra_pmem_spark.functions.murmur3 import murmur3_token_column
+
+        monkeypatch.setenv("SPARK_GRAFT_NATIVE_TOKEN", value)
+        df = spark.createDataFrame([(1,)], "k bigint")
+        plan = plan_of(df.select(murmur3_token_column("k")))
+        assert ("EvalPython" not in plan) is on
+
+    @pytest.mark.parametrize("value, on", FLAG_VALUES)
+    def test_reliable_checkpoint(self, spark, monkeypatch, tmp_path, value, on):
+        from cassandra_pmem_spark.plans.hints import materialize
+
+        monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", value)
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
+        df = spark.range(5)
+        cls = type(df)
+        called = []
+        for name in ("checkpoint", "localCheckpoint"):
+            real = getattr(cls, name)
+            monkeypatch.setattr(
+                cls, name,
+                lambda self, eager=True, _n=name, _f=real: (
+                    called.append(_n) or _f(self, eager)
+                ),
+            )
+        assert materialize(df).count() == 5
+        assert called == (["checkpoint"] if on else ["localCheckpoint"])
+
+    @pytest.mark.parametrize("value, on", FLAG_VALUES)
+    def test_no_master(self, monkeypatch, value, on):
+        from pyspark.sql import SparkSession
+
+        from cassandra_pmem_spark.session import get_spark
+
+        monkeypatch.setenv("SPARK_GRAFT_NO_MASTER", value)
+        # return the configured options instead of starting a session
+        monkeypatch.setattr(
+            SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+        )
+        assert ("spark.master" not in get_spark()) is on

@@ -649,6 +649,30 @@ class TestSparkIntegration:
         for k, c, v, n in rows:
             assert got[(k, c)] == (v, n)
 
+    def test_driver_planned_read_has_no_exchange(self, spark, tmp_path,
+                                                  monkeypatch):
+        """A small directory plans its splits on the driver and parses
+        them straight from the local split table: one stage, no
+        Exchange. The task-planned branch keeps its shuffle, and both
+        return the same rows."""
+        from cassandra_pmem_spark.sources import sstable as mod
+
+        rows = [(k, c, f"{k}.{c}") for k in range(10) for c in range(3)]
+        _events_dir(spark, str(tmp_path), rows)
+        df = mod.read_sstables(spark, str(tmp_path))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan and "LocalTableScan" in plan
+        got = sorted((r["key0"], r["ck0"], r["v"]) for r in df.collect())
+        assert got == sorted(rows)
+
+        monkeypatch.setattr(mod, "DRIVER_PLAN_INDEX_BYTES", 0)
+        df = mod.read_sstables(spark, str(tmp_path))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" in plan
+        assert sorted(
+            (r["key0"], r["ck0"], r["v"]) for r in df.collect()
+        ) == got
+
     def test_out_of_ns_range_timestamps_read_back(self, spark, tmp_path):
         """Timestamps outside pandas' datetime64[ns] span (years
         1677..2262) must survive the distributed read: the columnar
@@ -1213,6 +1237,132 @@ class TestSstableLoader:
         db.execute("CREATE TABLE two (a int, b int, v text, PRIMARY KEY (a, b))")
         with pytest.raises(InvalidRequest, match="does not match table"):
             db.load_sstables("two", out)
+
+
+def _events_dir(spark, out, rows, sstables=2):
+    """bulk-write (k int, c int, v text) rows as a two-sstable directory."""
+    from cassandra_pmem_spark.catalog import ClusteringColumn, TableMeta
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("k", T.IntegerType()),
+        T.StructField("c", T.IntegerType()),
+        T.StructField("v", T.StringType()),
+    ])
+    meta = TableMeta(
+        "src", schema, partition_key=("k",),
+        clustering=(ClusteringColumn("c"),),
+    )
+    bulk_write_sstables(
+        spark.createDataFrame(rows, schema), meta, out, sstables=sstables,
+        timestamp_micros=TS,
+    )
+
+
+def _kcv_db(spark, ks, tables=("t",)):
+    from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+    db = CqlDatabase(spark)
+    db.execute(f"CREATE KEYSPACE {ks} WITH REPLICATION = {{'class': 'SimpleStrategy'}}")
+    db.execute(f"USE {ks}")
+    for t in tables:
+        db.execute(f"CREATE TABLE {t} (k int, c int, v text, PRIMARY KEY (k, c))")
+    return db
+
+
+class TestImportSnapshot:
+    """load_sstables decodes the directory once and pins the rows as the
+    table's base, like `nodetool import` taking the files in: the source
+    may be deleted afterwards, and the table owns (and releases) the pin."""
+
+    def test_source_may_be_deleted_after_import(self, spark, tmp_path):
+        import shutil
+
+        rows = [(k, c, f"{k}.{c}") for k in range(6) for c in range(3)]
+        src = str(tmp_path / "src")
+        _events_dir(spark, src, rows)
+        db = _kcv_db(spark, "snapks")
+        db.load_sstables("t", src)
+        shutil.rmtree(src)
+
+        got = {(r.k, r.c): r.v for r in db.execute("SELECT * FROM t").collect()}
+        assert got == {(k, c): v for k, c, v in rows}
+        db.execute("UPDATE t SET v = 'patched' WHERE k = 2 AND c = 1")
+        assert db.execute(
+            "SELECT v FROM t WHERE k = 2 AND c = 1"
+        ).collect()[0].v == "patched"
+        out = str(tmp_path / "flushed")
+        manifests = db.flush_sstables("t", out)
+        assert sum(m["rows"] for m in manifests) == len(rows)
+        db.execute("CREATE TABLE t2 (k int, c int, v text, PRIMARY KEY (k, c))")
+        db.load_sstables("t2", out)
+        got2 = {(r.k, r.c): r.v for r in db.execute("SELECT * FROM t2").collect()}
+        assert got2 == {**got, (2, 1): "patched"}
+
+    def test_load_pins_once_and_truncate_unpins(self, spark, tmp_path):
+        from tests.conftest import persisted_rdds
+
+        src = str(tmp_path / "src")
+        _events_dir(spark, src, [(k, 0, str(k)) for k in range(5)])
+        db = _kcv_db(spark, "pinks1")
+        before = persisted_rdds(spark)
+        db.load_sstables("t", src)
+        assert persisted_rdds(spark) == before + 1
+        # reads scan the pinned rows: no new pin, no re-decode
+        assert db.execute("SELECT count(*) FROM t").collect()[0][0] == 5
+        assert persisted_rdds(spark) == before + 1
+        db.execute("TRUNCATE t")
+        assert persisted_rdds(spark) == before
+        assert db.execute("SELECT count(*) FROM t").collect()[0][0] == 0
+
+    def test_two_loads_keep_the_union(self, spark, tmp_path):
+        from tests.conftest import persisted_rdds
+
+        a, b = str(tmp_path / "a"), str(tmp_path / "b")
+        _events_dir(spark, a, [(k, 0, "a") for k in range(4)])
+        _events_dir(spark, b, [(k, 1, "b") for k in range(2, 6)])
+        db = _kcv_db(spark, "pinks2")
+        before = persisted_rdds(spark)
+        db.load_sstables("t", a)
+        db.load_sstables("t", b)
+        assert persisted_rdds(spark) == before + 2
+        got = sorted(
+            (r.k, r.c, r.v) for r in db.execute("SELECT * FROM t").collect()
+        )
+        assert got == sorted(
+            [(k, 0, "a") for k in range(4)] + [(k, 1, "b") for k in range(2, 6)]
+        )
+
+    def test_drop_table_releases_its_pins(self, spark, tmp_path):
+        from tests.conftest import persisted_rdds
+
+        src = str(tmp_path / "src")
+        _events_dir(spark, src, [(k, 0, str(k)) for k in range(5)])
+        db = _kcv_db(spark, "pinks3", tables=("t", "keep"))
+        db.load_sstables("keep", src)
+        before = persisted_rdds(spark)
+        db.load_sstables("t", src)
+        db.load_sstables("t", src)
+        db.execute("INSERT INTO t (k, c, v) VALUES (9, 9, 'w')")
+        assert db.execute("SELECT count(*) FROM t").collect()[0][0] == 6
+        db.execute("DROP TABLE t")
+        assert persisted_rdds(spark) == before
+        # the other table's pin is untouched
+        assert db.execute("SELECT count(*) FROM keep").collect()[0][0] == 5
+
+    def test_collected_database_leaves_no_pins(self, spark, tmp_path):
+        from tests.conftest import persisted_rdds
+
+        src = str(tmp_path / "src")
+        _events_dir(spark, src, [(k, 0, str(k)) for k in range(5)])
+        before = persisted_rdds(spark)
+        db = _kcv_db(spark, "pinks4")
+        db.load_sstables("t", src)
+        db.execute("INSERT INTO t (k, c, v) VALUES (9, 9, 'w')")
+        assert db.execute("SELECT count(*) FROM t").collect()[0][0] == 6
+        assert persisted_rdds(spark) > before
+        del db
+        assert persisted_rdds(spark) == before
 
 
 class TestFlush:
