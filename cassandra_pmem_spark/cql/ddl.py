@@ -2820,8 +2820,9 @@ class CqlDatabase:
 
     def _visible_version(self, table: str) -> tuple | None:
         """The current visible-state version of a registered table (the
-        same tuple _visible_frame keys its memo by), or None when the
-        name resolves to a view/system table (those always re-plan).
+        _visible_state tuple _visible_frame keys its memo by), or None
+        when the name resolves to a view/system table (those always
+        re-plan).
         Driver-side only — no Spark work. The pager uses this to reuse
         its compiled page frame while the version is unchanged."""
         ks, _, tbl = table.rpartition(".")
@@ -2837,48 +2838,54 @@ class CqlDatabase:
         sess = self._sessions.get(key)
         if sess is None:
             return None
-        return (
-            id(sess),
-            sess._snapshot(),
-            sess._clock_ref[0],
-            id(sess._base),
-            sess.meta.schema.simpleString(),
-        )
+        return self._visible_state(sess)[0]
 
     def _buffer_backed(self, table: str) -> bool:
         """True when the table's visible state is derived purely from the
-        write buffer (sess._base is None) — the only case where caching a
-        materialized visible frame is bounded. Parquet-backed tables must
-        NOT be persisted (mirrors _visible_frame's own persist gate): an
+        write buffer — the only case where caching a materialized visible
+        frame is bounded. Parquet-backed tables must NOT be persisted
+        (_visible_state's persist gate, shared with _visible_frame): an
         InMemoryRelation over the scan blocks resume-point predicate
         pushdown and caches unbounded scan output."""
         ks, _, tbl = table.rpartition(".")
         key = self._table_key((ks or None, tbl))
         sess = self._sessions.get(key)
-        return sess is not None and sess._base is None
+        return sess is not None and self._visible_state(sess)[1]
+
+    @staticmethod
+    def _visible_state(sess) -> tuple[tuple, bool]:
+        """(version, pinnable) of one session's SELECT-visible state — the
+        one definition behind both memos (_visible_frame here, the pager's
+        page frames through _visible_version / _buffer_backed), so they
+        cannot disagree on when a frame is stale. The version covers
+        every way the visible state can change: the buffer watermarks +
+        coordinator clock (_snapshot — writes, tombstones, TTL expiry
+        time), the session and base identities (re-registration, sstable
+        imports swap _base), and the schema text (ALTER re-syncs in
+        place). pinnable is the persist gate: only state derived purely
+        from the write buffer (no _base) is bounded."""
+        return (
+            (
+                id(sess),
+                sess._snapshot(),
+                sess._clock_ref[0],
+                id(sess._base),
+                sess.meta.schema.simpleString(),
+            ),
+            sess._base is None,
+        )
 
     def _visible_frame(self, key: tuple, sess):
         """The SELECT-visible frame for one session, memoized per version
-        (see _select_frames). The version key covers every way the
-        visible state can change: the buffer watermarks + coordinator
-        clock (_snapshot — writes, tombstones, TTL expiry time), the
-        session and base identities (re-registration, sstable imports
-        swap _base), and the schema text (ALTER re-syncs in place)."""
-        now = sess._clock_ref[0]
-        ver = (
-            id(sess),
-            sess._snapshot(),
-            now,
-            id(sess._base),
-            sess.meta.schema.simpleString(),
-        )
+        (see _select_frames and _visible_state)."""
+        ver, pinnable = self._visible_state(sess)
         cached = self._select_frames.get(key)
         if cached is not None and cached[0] == ver:
             return cached[1]
         if cached is not None:
             unpersist_quietly(cached[1])
-        df = sess.table(now=now, with_shadows=True)
-        if sess._base is None:
+        df = sess.table(now=ver[2], with_shadows=True)
+        if pinnable:
             # buffer-backed: the whole visible state derives from
             # driver-held statements — bounded, safe to pin. Coalesce
             # the cached layout to one partition first: the merge ran at

@@ -40,8 +40,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
-from cassandra_pmem_spark.session import env_flag
-
 C1 = 0x87C37B91114253D5
 C2 = 0x4CF5AD432745937F
 F1 = 0xFF51AFD7ED558CCD
@@ -54,6 +52,18 @@ LONG_MAX = (1 << 63) - 1
 
 # --- Spark backend: vectorized Arrow kernel ----------------------------------
 
+def _rotl_np(a: "np.ndarray", n: int) -> "np.ndarray":
+    return (a << np.uint64(n)) | (a >> np.uint64(64 - n))
+
+
+def _fmix_np(h: "np.ndarray") -> "np.ndarray":
+    h = h ^ (h >> np.uint64(33))
+    h = h * np.uint64(F1)
+    h = h ^ (h >> np.uint64(33))
+    h = h * np.uint64(F2)
+    return h ^ (h >> np.uint64(33))
+
+
 def _murmur3_tokens_np(v: np.ndarray) -> np.ndarray:
     """hash3_x64_128 h1 (normalized) of 8-byte big-endian keys, vectorized.
 
@@ -65,23 +75,12 @@ def _murmur3_tokens_np(v: np.ndarray) -> np.ndarray:
         b = (u >> np.uint64(56 - 8 * j)) & np.uint64(0xFF)
         sx = np.where(b > np.uint64(127), b | np.uint64(0xFFFFFFFFFFFFFF00), b)
         k1 ^= sx << np.uint64(8 * j)
-
-    def rotl(a: np.ndarray, n: int) -> np.ndarray:
-        return (a << np.uint64(n)) | (a >> np.uint64(64 - n))
-
-    def fmix(h: np.ndarray) -> np.ndarray:
-        h = h ^ (h >> np.uint64(33))
-        h = h * np.uint64(F1)
-        h = h ^ (h >> np.uint64(33))
-        h = h * np.uint64(F2)
-        return h ^ (h >> np.uint64(33))
-
     k1 = k1 * np.uint64(C1)
-    k1 = rotl(k1, 31)
+    k1 = _rotl_np(k1, 31)
     k1 = k1 * np.uint64(C2)
     h1 = (k1 ^ np.uint64(8)) + np.uint64(8)          # h1 = (0^k1)^len; h1 += h2(=len)
     h2 = np.uint64(8) + h1                            # h2 += h1
-    h1 = fmix(h1) + fmix(h2)                          # h1 += h2 after fmix
+    h1 = _fmix_np(h1) + _fmix_np(h2)                  # h1 += h2 after fmix
     s = h1.astype(np.int64)
     return np.where(s == np.int64(LONG_MIN), np.int64(LONG_MAX), s)
 
@@ -98,97 +97,19 @@ def _murmur3_token_fn(keys: pd.Series) -> pd.Series:
 _murmur3_token_udf = pandas_udf(_murmur3_token_fn, LongType())
 
 
-def _ansi_off() -> bool:
-    """True when the active session wraps long overflow like Java (the
-    engine's pinned posture — session.get_spark sets ansi off). The native
-    expression form depends on wrapping multiply/add/shift, so a foreign
-    ANSI session falls back to the Arrow kernel. NOTE: no default is
-    passed to conf.get — Spark 4 defaults ansi ON, so the EFFECTIVE value
-    must be read (a "false" fallback default would silently pick the
-    native form on a bare ANSI session and overflow at run time)."""
-    from pyspark.sql import SparkSession
-
-    s = SparkSession.getActiveSession()
-    if s is None:
-        return False
-    try:
-        return s.conf.get("spark.sql.ansi.enabled") == "false"
-    except Exception:
-        return False
-
-
-def murmur3_token_column_native(col):
-    """JVM-native Column form of the bigint token: the ~25-step hash as ONE
-    codegen'd long-arithmetic expression — no Python boundary, so the token
-    lane (filters, join keys, bulk-write partitioning) runs entirely inside
-    WholeStageCodegen.
-
-    Correctness rests on ANSI-off wrapping semantics (Java two's-complement
-    long multiply/add/shift — exactly the reference's arithmetic). The
-    expression references its input a bounded number of times (the only
-    duplicating steps are the 3 xor-shifts per fmix, one rotl and the
-    MIN-normalize), so the unrolled tree is ~1.5k leaf references — linear
-    to plan and codegen, unlike the per-step decimal emulation whose
-    project-collapse re-expansion was measured exponential (module note).
-    Pinned against murmur3_token_py over the same vectors as the Arrow
-    kernel (tests/test_murmur3.py)."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("long")
-
-    def s64(x: int):  # unsigned 64-bit constant -> signed long literal
-        return F.lit(x - TWO64 if x >= TWO63 else x)
-
-    def rotl(a, n: int):
-        return F.shiftleft(a, n).bitwiseOR(F.shiftrightunsigned(a, 64 - n))
-
-    def fmix(h):
-        h = h.bitwiseXOR(F.shiftrightunsigned(h, 33))
-        h = h * s64(F1)
-        h = h.bitwiseXOR(F.shiftrightunsigned(h, 33))
-        h = h * s64(F2)
-        return h.bitwiseXOR(F.shiftrightunsigned(h, 33))
-
-    # k1 = XOR_j sx(byte_j) << 8j over the 8 big-endian key bytes, with the
-    # reference's tail sign-extension quirk: sx(b) = b | 0xFF..FF00 when
-    # b > 127. Arithmetic-shift form: shiftleft parks byte j at the top,
-    # ARITHMETIC shiftright(56) sign-extends it — one reference to the key
-    # per byte, 3 nodes per term. Tree size is plan-time cost here (the
-    # optimizer re-walks the whole expression every rule pass), so every
-    # removed duplication is driver latency, not style.
-    k1 = None
-    for j in range(8):
-        sx = F.shiftright(F.shiftleft(c, 8 * j), 56)
-        term = F.shiftleft(sx, 8 * j)
-        k1 = term if k1 is None else k1.bitwiseXOR(term)
-    k1 = k1 * s64(C1)
-    k1 = rotl(k1, 31)
-    k1 = k1 * s64(C2)
-    h1 = k1.bitwiseXOR(F.lit(8)) + F.lit(8)   # h1 = (0^k1)^len; h1 += h2(=len)
-    h2 = F.lit(8) + h1                         # h2 += h1
-    h1 = fmix(h1) + fmix(h2)                   # h1 += h2 after fmix
-    # normalize(MIN) -> MAX (Murmur3Partitioner.java:244)
-    return F.when(h1 == F.lit(LONG_MIN), F.lit(LONG_MAX)).otherwise(h1)
-
-
 def murmur3_token_column(col):
     """Column expression form: Cassandra Murmur3 token of a bigint column
     (non-null, as partition keys are). Usable in filters and projections.
 
-    Backend dispatch, measured not guessed (r14): the native expression
-    removes the JVM→Python boundary (~2 µs/row of Arrow transfer +
-    batch dispatch) but costs a FIXED ~0.5-1 s of driver work per query
-    invocation — Catalyst re-walks the ~2k-node hash tree every
-    optimizer pass, and every sink re-plans (measured: shallow token
-    query 0.1 s plan/0.4 s total with the kernel vs 0.4-0.7 s plan/
-    0.9-1.1 s total native at sf0.1; the bulk-write shape 0.25 s vs
-    0.4-1.0 s). The crossover is ~0.5-1M rows per token evaluation:
-    below it the Arrow kernel wins, above it the native form saves
-    minutes per pass (10^9 rows ≈ 30+ min of boundary vs ~1 s of plan
-    tax). Local/bench scale sits under the crossover, so the kernel is
-    the default; set SPARK_GRAFT_NATIVE_TOKEN=1 on cluster deployments
-    (requires the engine's ANSI-off posture — enforced here, falling
-    back to the kernel on ANSI sessions)."""
-    if env_flag("SPARK_GRAFT_NATIVE_TOKEN") and _ansi_off():
-        return murmur3_token_column_native(col)
+    There is no JVM-native form, by measurement. The hash can be written
+    as one wrapping long-arithmetic Column expression (ANSI off): that
+    removes the Python boundary, but Catalyst then walks a ~2k-node
+    tree at every reference. On the shape CQL token ranges compile to,
+    ``filter(token(k) > x)`` over ``spark.range(n)`` in the engine
+    session at local[4], that form took 1.64 / 9.47 / 80.5 s at
+    0.1M / 1M / 10M rows against 0.44 / 0.57 / 1.64 s for this kernel
+    (3.8× / 17× / 49× slower). It won only when projected and summed
+    above ~1M rows (0.83 vs 1.91 s at 10M), a shape no caller has."""
     c = F.col(col) if isinstance(col, str) else col
     return _murmur3_token_udf(c.cast("long"))
 
@@ -207,18 +128,14 @@ def murmur3_token_column_once(col):
     filter pushdown / project collapse from substituting the token
     expression into every downstream reference.
 
-    This form DELIBERATELY stays on the Arrow kernel even under the
-    engine session (where murmur3_token_column compiles to the native
-    long-arithmetic expression): its call sites — the sketch double-
-    hashing lanes (bloom/count-min/HLL) and the packing hash buckets —
-    derive several columns from the token and reference them many times
-    inside filter conditions. With a deterministic native expression,
-    filter pushdown inlines the ~10k-node hash tree at every reference
-    (pushdown has no cheapness guard), and the optimizer then walks a
-    few-hundred-thousand-node condition to fixpoint — MEASURED as a
-    multi-minute planning hang on sketch_runtime_filtered_join (r14).
-    The pinned UDF is the collapse barrier that keeps those plans
-    linear: one ArrowEvalPython per lane, everything above it JVM."""
+    Its call sites — the sketch double-hashing lanes (bloom/count-min/
+    HLL) and the packing hash buckets — derive several columns from the
+    token and reference them many times inside filter conditions.
+    Filter pushdown has no cheapness guard: with a deterministic UDF it
+    substitutes the token call into each referencing condition and
+    evaluates the UDF once per reference. The pinned UDF is the
+    collapse barrier that keeps those plans linear: one ArrowEvalPython
+    per lane, everything above it JVM."""
     c = F.col(col) if isinstance(col, str) else col
     return _murmur3_token_udf_once(c.cast("long"))
 
@@ -332,18 +249,6 @@ def murmur3_token_subquery(
 # only the tail sign-extends (the documented quirk, :29).
 
 _SIGN_EXT = 0xFFFFFFFFFFFFFF00
-
-
-def _rotl_np(a: "np.ndarray", n: int) -> "np.ndarray":
-    return (a << np.uint64(n)) | (a >> np.uint64(64 - n))
-
-
-def _fmix_np(h: "np.ndarray") -> "np.ndarray":
-    h = h ^ (h >> np.uint64(33))
-    h = h * np.uint64(F1)
-    h = h ^ (h >> np.uint64(33))
-    h = h * np.uint64(F2)
-    return h ^ (h >> np.uint64(33))
 
 
 def _murmur3_bytes_np(B: "np.ndarray", lens: "np.ndarray") -> "np.ndarray":

@@ -471,6 +471,11 @@ def dedup_cascade(
     return d1.join(drop, id_col, "left_anti")
 
 
+class NotConverged(RuntimeError):
+    """An iterative operator ran out of rounds before its fixpoint; its
+    partial result would be wrong, so it is not returned."""
+
+
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
@@ -487,7 +492,8 @@ def connected_components(
     minimum; stop when a round changes nothing. Rounds needed = graph
     diameter, and near-dup components are shallow (chains of edit
     generations — single digits even at corpus scale), so the loop is
-    bounded in practice and `max_iter` caps the worst case. Each round
+    bounded in practice; a graph that needs more than `max_iter` rounds
+    raises NotConverged instead of returning partial labels. Each round
     is one shuffle join + one min-aggregation, all JVM-side; labels are
     localCheckpoint-ed per round so plan depth stays flat. For graphs
     with adversarially long paths, swap the per-round body for the
@@ -496,7 +502,9 @@ def connected_components(
 
     Returns (id_col, component) with component = min reachable id.
     """
-    from cassandra_pmem_spark.plans.hints import materialize
+    from pyspark.sql import types as T
+
+    from cassandra_pmem_spark.plans.hints import materialize, release_pin
 
     # materialize the (possibly expensive — LSH + verify) edge frame ONCE;
     # the loop re-reads it every round
@@ -507,35 +515,28 @@ def connected_components(
     labels = materialize(
         vertices.select(F.col(id_col).alias("id"), F.col(id_col).alias("comp"))
     )
-    # Convergence detector: min-label propagation only ever DECREASES a
-    # label, so "no label changed" ⟺ "Σ comp unchanged" — an exact
-    # decimal(38,0) sum over the just-checkpointed frame (no overflow up
-    # to 10^19 vertices of long labels). That replaces the previous
-    # per-round join-with-old-labels + count, i.e. one whole shuffle
-    # join per round becomes a single cached-scan aggregate. The sum
-    # trick needs an INTEGRAL label dtype: with ANSI off a non-numeric
-    # id (string doc ids) would cast to NULL, both sums would be None,
-    # and None == None would end the loop after one round — those ids
-    # take the orderable-type-safe changed-count join detector instead.
-    from pyspark.sql import types as T
-
+    # Convergence detector: a round only ADDS ids (those reached for the
+    # first time) and only DECREASES labels, so "nothing changed" ⟺
+    # "row count and Σ comp unchanged" — one exact decimal(38,0) aggregate
+    # over the just-checkpointed frame (no overflow up to 10^19 vertices
+    # of long labels) instead of a join with the old labels. The count is
+    # needed: a round that only adds ids can leave the sum unchanged (a
+    # new id labelled 0). The sum needs an INTEGRAL label dtype: with ANSI
+    # off a non-numeric id (string doc ids) would cast to NULL. Those ids
+    # keep the count, and when it is unchanged a changed-label join
+    # proves the round changed nothing.
     comp_dt = labels.schema["comp"].dataType
     integral = isinstance(
         comp_dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     ) or (isinstance(comp_dt, T.DecimalType) and comp_dt.scale == 0)
 
-    def _label_sum(frame: DataFrame) -> object:
-        s = frame.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        assert s is not None or frame.isEmpty(), (
-            "label sum cast to NULL — non-integral comp dtype leaked "
-            "past the integral gate"
-        )
-        return s
+    def _label_sig(frame: DataFrame) -> tuple:
+        aggs = [F.count("*").alias("n")]
+        if integral:
+            aggs.append(F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"))
+        return tuple(frame.agg(*aggs).collect()[0])
 
-    if integral:
-        prev_sum = _label_sum(labels)
+    prev_sig = _label_sig(labels)
     # ONE Spark job per round (§1.2, the BPE discipline): the new label
     # frame is LAZILY checkpointed — materialize(eager=False) truncates
     # the logical plan NOW (flat plans round over round) but computes at
@@ -554,29 +555,28 @@ def connected_components(
             .agg(F.min("comp").alias("comp")),
             eager=False,
         )
-        if integral:
-            cur_sum = _label_sum(nxt)
-            unchanged = cur_sum == prev_sum
-            prev_sum = cur_sum
-        else:
-            # any orderable id type: did any vertex's label change?
-            # (count() first — a full scan materializing the lazy
-            # checkpoint; the limit(1) probe could stop early)
-            nxt.count()
-            unchanged = (
-                nxt.alias("n")
-                .join(
-                    labels.alias("o"),
-                    (F.col("n.id") == F.col("o.id"))
-                    & (F.col("n.comp") != F.col("o.comp")),
-                )
-                .limit(1)
-                .count()
-                == 0
+        sig = _label_sig(nxt)
+        release_pin(nxt)
+        unchanged = sig == prev_sig and (
+            integral
+            or nxt.alias("n")
+            .join(
+                labels.alias("o"),
+                (F.col("n.id") == F.col("o.id"))
+                & (F.col("n.comp") != F.col("o.comp")),
             )
-        labels = nxt
+            .limit(1)
+            .count()
+            == 0
+        )
+        labels, prev_sig = nxt, sig
         if unchanged:
             break
+    else:
+        raise NotConverged(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds"
+        )
     return labels.select(F.col("id").alias(id_col), "comp")
 
 
@@ -604,8 +604,9 @@ def connected_components_star(
     scale path for adversarially long chains (e.g. serial edit
     generations). At convergence the edges form a star forest: every
     node points at its component min. Same return shape:
-    (id_col, component)."""
-    from cassandra_pmem_spark.plans.hints import materialize
+    (id_col, component), and the same NotConverged when `max_iter`
+    rounds do not reach that fixpoint."""
+    from cassandra_pmem_spark.plans.hints import materialize, release_pin
 
     # canonical orientation u > v, no self-loops, deduped
     e = materialize(
@@ -690,12 +691,18 @@ def connected_components_star(
         # signature degenerates to the count gate — correctness is
         # unaffected, the exceptAll proof is what stops the loop.)
         sig = _edge_sig(nxt)
+        release_pin(nxt)
         unchanged = (
             sig == prev_sig and nxt.exceptAll(e).limit(1).count() == 0
         )
         e, prev_sig = nxt, sig
         if unchanged:
             break
+    else:
+        raise NotConverged(
+            f"connected_components_star: edges still changing after "
+            f"max_iter={max_iter} rounds"
+        )
     # star forest: (u, v) = (member, root); roots + isolated vertices
     # label themselves. groupBy-min guards the (converged) uniqueness.
     member = e.groupBy("u").agg(F.min("v").alias("comp")).select(

@@ -117,13 +117,28 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         # the reliable-checkpoint file write runs as a follow-up job that
         # would otherwise RECOMPUTE the frame from lineage — persisting
         # makes it a cache read. The blocks are dropped once the
-        # checkpoint files are the source of truth.
+        # checkpoint files are the source of truth: now when eager, by
+        # release_pin after the first action when lazy.
         df = df.persist()
         out = df.checkpoint(eager=eager)
         if eager:
             df.unpersist(blocking=False)
+        else:
+            out._checkpoint_pin = df
         return out
     return df.localCheckpoint(eager=eager)
+
+
+def release_pin(df: DataFrame) -> None:
+    """Drop the blocks a lazy reliable checkpoint (``materialize(...,
+    eager=False)`` with SPARK_GRAFT_RELIABLE_CHECKPOINT) persisted to
+    write its files. Call once the frame's first full action has run:
+    the checkpoint is written by then, so nothing reads the blocks
+    again. A no-op for every other frame, so the default
+    localCheckpoint path plans exactly as before."""
+    pin = getattr(df, "_checkpoint_pin", None)
+    if pin is not None:
+        unpersist_quietly(pin)
 
 
 def ensure_scan_parallelism(df: DataFrame) -> DataFrame:

@@ -249,6 +249,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.readStream.schema(TABLES["events"].schema).parquet(d)
 
 
+STREAM_STATE_PARTS = 8  # see _run_stream_to_memory
+
+
 def _run_stream_to_memory(out: DataFrame, prefix: str, mode: str = "append") -> DataFrame:
     """availableNow → memory sink with a fresh checkpoint; returns the sink
     table (the run IS one complete micro-batch lifecycle).
@@ -257,11 +260,10 @@ def _run_stream_to_memory(out: DataFrame, prefix: str, mode: str = "append") -> 
     per shuffle partition per micro-batch; for these ONE-SHOT availableNow
     runs that init is the dominant cost (measured: 2.0 s at 32 partitions
     → 0.9 s at 8 for the same data), with no amortizing steady state. The
-    state partition count is therefore sized by SPARK_GRAFT_STREAM_STATE_PARTS
-    (default 8) for the duration of the run and restored after. A long-lived
-    deployment should size state partitions via cluster conf instead — there
-    the per-provider init amortizes over every micro-batch."""
-    import os
+    state partition count is therefore set to STREAM_STATE_PARTS (8) for
+    the duration of the run and restored after. A long-lived deployment
+    should size state partitions via cluster conf instead — there the
+    per-provider init amortizes over every micro-batch."""
     import shutil
     import tempfile
     import uuid
@@ -269,9 +271,8 @@ def _run_stream_to_memory(out: DataFrame, prefix: str, mode: str = "append") -> 
     spark = out.sparkSession
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     ck = tempfile.mkdtemp(prefix="cps_stream_ck_")
-    parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTS))
     try:
         q = (
             out.writeStream.format("memory")

@@ -54,13 +54,31 @@ def capture_loops(spark, sf_dir: str, tag: str) -> None:
 
     from cassandra_pmem_spark.pipeline.bpe import _adjacent_pairs
     from cassandra_pmem_spark.pipeline.dedup import (
+        NotConverged,
         connected_components,
         connected_components_star,
     )
     from cassandra_pmem_spark.pipeline.graph import pagerank_exact
     from cassandra_pmem_spark.plans import hints
 
-    hints.materialize = lambda df, eager=True: df  # show the loop body
+    rounds = []  # frames the CC loops hand to their next round
+
+    def identity(df, eager=True):  # show the loop body
+        if not eager:
+            rounds.append(df)
+        return df
+
+    hints.materialize = identity
+
+    def one_round(cc):
+        # one round does not reach the fixpoint, so the engine raises
+        # instead of returning; its round frame is what the plan shows
+        rounds.clear()
+        try:
+            cc(edges, ids, max_iter=1)
+        except NotConverged:
+            pass
+        return rounds[-1]
 
     docs = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -80,11 +98,11 @@ def capture_loops(spark, sf_dir: str, tag: str) -> None:
         "loop_pagerank", tag, header,
     )
     _write_plan(
-        connected_components(edges, ids, max_iter=1),
+        one_round(connected_components),
         "loop_connected_components", tag, header,
     )
     _write_plan(
-        connected_components_star(edges, ids, max_iter=1),
+        one_round(connected_components_star),
         "loop_components_star", tag, header,
     )
     # BPE's train loop returns a list (merge table), so its in-loop

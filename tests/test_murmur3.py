@@ -2,8 +2,8 @@
 
 Ground truth is murmur3_token_py — a direct port of
 utils/MurmurHash.java:174 hash3_x64_128 + Murmur3Partitioner.java:244
-normalize for 8-byte bigint keys. Both engine backends (Spark decimal
-arithmetic, DuckDB HUGEINT SQL) must match it value-for-value, including
+normalize for 8-byte bigint keys. Both engine backends (the Spark Arrow
+kernel, DuckDB HUGEINT SQL) must match it value-for-value, including
 the reference's sign-extension quirk (negative-byte keys) and the
 Long.MIN_VALUE normalization edge."""
 
@@ -53,83 +53,20 @@ class TestMurmur3Token:
         # contract instead — every token must exceed LONG_MIN
         assert all(murmur3_token_py(v) > -(2**63) for v in EDGE_KEYS)
 
-    def test_native_expression_matches_reference_port(self, spark):
-        # the JVM-native Column form (ANSI-off wrapping long arithmetic)
-        # must match the port bit-for-bit, including sign-extended tail
-        # bytes, and must plan without any Python evaluation node
-        import random
-
-        from cassandra_pmem_spark.functions.murmur3 import (
-            murmur3_token_column_native,
-        )
-
-        rng = random.Random(0xC5)
-        vals = EDGE_KEYS + [
-            rng.randint(-(2**63), 2**63 - 1) for _ in range(500)
-        ]
-        df = spark.createDataFrame([(v,) for v in vals], "k bigint")
-        out = df.select(
-            "k", murmur3_token_column_native("k").alias("t")
-        ).collect()
-        assert {r.k: r.t for r in out} == {
-            v: murmur3_token_py(v) for v in vals
-        }
-        plan = (
-            df.select(murmur3_token_column_native("k"))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "EvalPython" not in plan
-
-    def test_native_token_dispatch_gates(self, spark, monkeypatch):
-        # SPARK_GRAFT_NATIVE_TOKEN=1 engages the native expression (a
-        # scale lever: fixed plan tax vs per-row boundary — see the
-        # dispatch docstring), but ONLY under ANSI-off wrapping
-        # semantics: with ANSI on (Spark 4's bare-session default — the
-        # driver gate runs one) the dispatch must keep the Arrow kernel
-        # and the values must still match the port. Reads the EFFECTIVE
-        # conf value — a fallback default here once silently chose
-        # native on an ANSI session and overflowed at run time.
-        from cassandra_pmem_spark.functions.murmur3 import (
-            murmur3_token_column,
-        )
+    def test_ansi_session_matches_reference_port(self, spark):
+        # Spark 4 defaults ANSI on (the bare session scripts/driver_gate.py
+        # builds): the kernel's wrapping uint64 arithmetic must still match
+        # the port with no overflow error
+        from cassandra_pmem_spark.functions.murmur3 import murmur3_token_column
 
         df = spark.createDataFrame([(v,) for v in EDGE_KEYS], "k bigint")
-
-        def plan_of():
-            return (
-                df.select(murmur3_token_column("k"))
-                ._jdf.queryExecution().executedPlan().toString()
-            )
-
-        assert "EvalPython" in plan_of()  # default: Arrow kernel
-        monkeypatch.setenv("SPARK_GRAFT_NATIVE_TOKEN", "1")
-        assert "EvalPython" not in plan_of()  # lever engaged: native
         spark.conf.set("spark.sql.ansi.enabled", "true")
         try:
             out = df.select("k", murmur3_token_column("k").alias("t"))
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            assert "EvalPython" in plan  # ANSI blocks native even w/ env
-            got = {r.k: r.t for r in out.collect()}  # no overflow error
+            got = {r.k: r.t for r in out.collect()}
         finally:
             spark.conf.set("spark.sql.ansi.enabled", "false")
         assert got == {v: murmur3_token_py(v) for v in EDGE_KEYS}
-
-    def test_native_expression_agrees_with_arrow_kernel(self, spark):
-        # both backends of murmur3_token_column must agree (the dispatch
-        # picks native under the engine session, the Arrow kernel under
-        # foreign ANSI sessions)
-        from cassandra_pmem_spark.functions.murmur3 import (
-            _murmur3_token_udf,
-            murmur3_token_column_native,
-        )
-        from pyspark.sql import functions as F
-
-        df = spark.createDataFrame([(v,) for v in EDGE_KEYS], "k bigint")
-        got = df.select(
-            murmur3_token_column_native("k").alias("a"),
-            _murmur3_token_udf(F.col("k").cast("long")).alias("b"),
-        ).collect()
-        assert all(r.a == r.b for r in got)
 
     def test_where_token_uses_murmur3_for_bigint_pk(self, spark):
         from cassandra_pmem_spark.cql.table import cql_table

@@ -1100,6 +1100,44 @@ class TestConnectedComponents:
         assert got == {"a": "a", "b": "a", "c": "a", "d": "a",
                        "x": "x", "y": "x", "z": "z"}
 
+    @pytest.mark.parametrize("ids", [("a", "b", "c"), (0, 1, 2)])
+    def test_rounds_that_only_add_ids_keep_going(self, spark, ids):
+        """Vertices {x} with edges x-y, y-z: round 1 only ADDS y — no
+        existing label changes, and with id 0 the label sum stays 0 — so
+        the detector must compare row counts too. String and long ids
+        return the same 3 rows."""
+        from cassandra_pmem_spark.pipeline.dedup import connected_components
+
+        x, y, z = ids
+        t = "string" if isinstance(x, str) else "long"
+        edges = spark.createDataFrame([(x, y), (y, z)], f"a {t}, b {t}")
+        verts = spark.createDataFrame([(x,)], f"doc_id {t}")
+        got = {
+            r["doc_id"]: r["comp"]
+            for r in connected_components(edges, verts).collect()
+        }
+        assert got == {x: x, y: x, z: x}
+
+    @pytest.mark.parametrize(
+        "engine, kwargs",
+        [("connected_components", {}),
+         ("connected_components_star", {"max_iter": 2})],
+    )
+    def test_running_out_of_rounds_raises(self, spark, engine, kwargs):
+        """A 40-node chain needs 40 label-propagation rounds (default
+        max_iter=15) and more than 2 star rounds. Stopping early returned
+        partial labels (25 and 36 components instead of 1), so both
+        engines must raise instead."""
+        from cassandra_pmem_spark.pipeline import dedup
+
+        n = 40
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "a long, b long"
+        )
+        verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        with pytest.raises(dedup.NotConverged):
+            getattr(dedup, engine)(edges, verts, **kwargs)
+
     def test_near_dup_components_clusters_generations(self, spark):
         """base, base+' alpha beta', base+' gamma delta' must share one
         cluster labelled by the smallest id."""

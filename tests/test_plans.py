@@ -8,6 +8,7 @@ a row-count test would never catch.
 
 from __future__ import annotations
 
+import re
 import shutil
 import tempfile
 
@@ -66,6 +67,30 @@ class TestMaterialize:
         # the reliable checkpoint actually landed in the configured dir
         ckdir = spark.sparkContext._jsc.sc().getCheckpointDir()
         assert not ckdir.isEmpty() and str(tmp_path / "ck") in ckdir.get()
+
+    @pytest.mark.parametrize(
+        "engine", ["connected_components", "connected_components_star"]
+    )
+    def test_reliable_lazy_rounds_release_their_pins(
+        self, spark, monkeypatch, tmp_path, engine
+    ):
+        # under the reliable checkpoint a lazy round persists its frame to
+        # write the checkpoint files; a 16-node chain takes both engines
+        # at least 3 rounds, and none of those pins may outlive its round
+        from cassandra_pmem_spark.pipeline import dedup
+        from tests.conftest import persisted_rdds
+
+        monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
+        n = 16
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "a long, b long"
+        )
+        verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        before = persisted_rdds(spark)
+        got = getattr(dedup, engine)(edges, verts, max_iter=n + 1).collect()
+        assert {r.comp for r in got} == {0} and len(got) == n
+        assert persisted_rdds(spark) <= before
 
 
 class TestPushdownAndBroadcast:
@@ -1042,15 +1067,6 @@ class TestEnvFlags:
     `=0` and an empty value mean off (session.env_flag)."""
 
     @pytest.mark.parametrize("value, on", FLAG_VALUES)
-    def test_native_token(self, spark, monkeypatch, value, on):
-        from cassandra_pmem_spark.functions.murmur3 import murmur3_token_column
-
-        monkeypatch.setenv("SPARK_GRAFT_NATIVE_TOKEN", value)
-        df = spark.createDataFrame([(1,)], "k bigint")
-        plan = plan_of(df.select(murmur3_token_column("k")))
-        assert ("EvalPython" not in plan) is on
-
-    @pytest.mark.parametrize("value, on", FLAG_VALUES)
     def test_reliable_checkpoint(self, spark, monkeypatch, tmp_path, value, on):
         from cassandra_pmem_spark.plans.hints import materialize
 
@@ -1082,3 +1098,37 @@ class TestEnvFlags:
             SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
         )
         assert ("spark.master" not in get_spark()) is on
+
+
+# Deployment settings: where data lives, how much CPU and memory, whether
+# the session picks its own master, and the checkpoint's fault posture
+# (same rows, same plans above the boundary). None of them chooses an
+# algorithm; a new env var must be one of these kinds to be added here.
+DEPLOYMENT_ENV_VARS = {
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_NO_MASTER",
+    "SPARK_GRAFT_RELIABLE_CHECKPOINT",
+    "SPARK_GRAFT_CHECKPOINT_DIR",
+}
+
+_ENV_READ = re.compile(
+    r"""(?:os\.environ\.get\(|os\.getenv\(|env_flag\(|os\.environ\[)\s*["']([^"']+)["']"""
+)
+
+
+def test_engine_reads_only_deployment_env_vars():
+    """No env var chooses an algorithm: the engine package reads exactly
+    the deployment settings."""
+    from pathlib import Path
+
+    import cassandra_pmem_spark
+
+    root = Path(cassandra_pmem_spark.__file__).parent
+    names = {
+        name
+        for path in root.rglob("*.py")
+        for name in _ENV_READ.findall(path.read_text())
+    }
+    assert names == DEPLOYMENT_ENV_VARS
