@@ -2139,17 +2139,12 @@ class SchemaRegistry:
             raise InvalidRequest(f"not a DDL statement: {head!r}")
 
 
-def _unpersist_frames(memos: tuple, sessions: dict) -> None:
-    """weakref.finalize target: unpin everything a CqlDatabase persisted
-    — its visible-state and pager memo frames and each table's imported
-    base — when the database object is collected (module-level so the
-    finalizer holds no reference back to the instance)."""
-    for memo in memos:
-        for entry in list(memo.values()):
-            unpersist_quietly(entry[1])
-        memo.clear()
+def _release_sessions(sessions: dict) -> None:
+    """weakref.finalize target: unpin everything a CqlDatabase's table
+    sessions hold when the database object is collected (module-level so
+    the finalizer holds no reference back to the instance)."""
     for sess in list(sessions.values()):
-        sess.release_base()
+        sess.release()
 
 
 class CqlDatabase:
@@ -2170,28 +2165,12 @@ class CqlDatabase:
         # on DDL, deliberately NOT per-write — estimates lag in the
         # reference too)
         self._index_stats: dict[tuple, dict] = {}
-        # SELECT-side visible-state frames, memoized per session version
-        # (buffer watermarks + clock + schema/base identity) and
-        # Spark-persisted for BUFFER-BACKED tables: a pager fetching N
-        # pages re-reads the same visible state N times — caching the
-        # post-merge frame executor-side turns pages 2..N into single-
-        # stage jobs while every write/ALTER/TRUNCATE/import invalidates
-        # via the version key, so reads observe exactly what re-planning
-        # would. Parquet-backed tables are NOT persisted (their visible
-        # state is unbounded; the scan stays the source of truth).
-        self._select_frames: dict[tuple, tuple] = {}
-        # the pager's compiled-frame memo: statement repr -> (version,
-        # frame); see QueryPager._page_frame
-        self._pager_frames: dict[str, tuple] = {}
         # unpin everything when this database is collected — otherwise a
         # long Spark session accumulates persisted frames from
         # short-lived CqlDatabase instances (one per registry query)
         import weakref
 
-        weakref.finalize(
-            self, _unpersist_frames,
-            (self._select_frames, self._pager_frames), self._sessions,
-        )
+        weakref.finalize(self, _release_sessions, self._sessions)
         self.last_index_choice: tuple | None = None
         self.current_keyspace: str | None = None
         # ONE coordinator timeline shared by every table session: a write
@@ -2253,14 +2232,8 @@ class CqlDatabase:
 
     def _release_table(self, key: tuple) -> None:
         """Discard a dropped table's session and unpin everything it
-        pinned: the imported base and its visible-state and pager memo
-        frames (memo versions lead with the session's id)."""
-        sess = self._sessions.pop(key)
-        sess.release_base()
-        for memo in (self._select_frames, self._pager_frames):
-            for k, (ver, _df) in list(memo.items()):
-                if ver[0] == id(sess):
-                    unpersist_quietly(memo.pop(k)[1])
+        pinned: its memo frames and imported base."""
+        self._sessions.pop(key).release()
 
     def _check_view_target(self, tks: str | None, tname: str, head: str) -> None:
         """Writes and TRUNCATE must not target a materialized view —
@@ -2294,8 +2267,7 @@ class CqlDatabase:
         per-column liveness shadows pass straight through (view cells
         carry the base cells' timestamps)."""
         vm = self.registry.views[vkey]
-        sess = self._session_for_key(vm.base_key)
-        df = sess.table(now=sess._clock_ref[0], with_shadows=True)
+        df = self._session_for_key(vm.base_key).visible_frame()
         cond = F.lit(True)
         # EVERY column the WHERE clause restricted IS NOT NULL filters
         # the view — not just the view PK columns
@@ -2501,8 +2473,8 @@ class CqlDatabase:
                                     for c in ct.columns
                                 ]
                             if (
-                                sess._base is not None
-                                and col in sess._base.columns
+                                sess.base is not None
+                                and col in sess.base.columns
                             ):
                                 newdt = {
                                     f.name: f.dataType
@@ -2511,9 +2483,9 @@ class CqlDatabase:
                                 rev = {n: o for o, n in renames.items()}
                                 old_fields = {
                                     f.name
-                                    for f in sess._base.schema[col].dataType.fields
+                                    for f in sess.base.schema[col].dataType.fields
                                 }
-                                sess._base = sess._base.withColumn(
+                                sess.base = sess.base.withColumn(
                                     col,
                                     F.struct(
                                         *[
@@ -2800,7 +2772,7 @@ class CqlDatabase:
         # SELECT reads at the session's current logical time: TTL'd
         # cells past their expiry vanish (PurgeFunction analog), and
         # the liveness shadows feed the writetime()/ttl() selectors
-        df = self._visible_frame(key, sess)
+        df = sess.visible_frame()
         sink: list = []
         kinds_map, modes_map = _indexed(key)
         out = _compile(
@@ -2817,88 +2789,6 @@ class CqlDatabase:
         # the getBestIndexFor outcome, for tracing/tests
         self.last_index_choice = sink[-1] if sink else None
         return out
-
-    def _visible_version(self, table: str) -> tuple | None:
-        """The current visible-state version of a registered table (the
-        _visible_state tuple _visible_frame keys its memo by), or None
-        when the name resolves to a view/system table (those always
-        re-plan).
-        Driver-side only — no Spark work. The pager uses this to reuse
-        its compiled page frame while the version is unchanged."""
-        ks, _, tbl = table.rpartition(".")
-        if ks == "system_schema":
-            return None
-        tkey = self.registry.tables.resolve(
-            tbl, keyspace=ks or None, current=self.current_keyspace,
-            missing_ok=True,
-        )
-        if tkey is None:
-            return None
-        key = self._table_key((ks or None, tbl))
-        sess = self._sessions.get(key)
-        if sess is None:
-            return None
-        return self._visible_state(sess)[0]
-
-    def _buffer_backed(self, table: str) -> bool:
-        """True when the table's visible state is derived purely from the
-        write buffer — the only case where caching a materialized visible
-        frame is bounded. Parquet-backed tables must NOT be persisted
-        (_visible_state's persist gate, shared with _visible_frame): an
-        InMemoryRelation over the scan blocks resume-point predicate
-        pushdown and caches unbounded scan output."""
-        ks, _, tbl = table.rpartition(".")
-        key = self._table_key((ks or None, tbl))
-        sess = self._sessions.get(key)
-        return sess is not None and self._visible_state(sess)[1]
-
-    @staticmethod
-    def _visible_state(sess) -> tuple[tuple, bool]:
-        """(version, pinnable) of one session's SELECT-visible state — the
-        one definition behind both memos (_visible_frame here, the pager's
-        page frames through _visible_version / _buffer_backed), so they
-        cannot disagree on when a frame is stale. The version covers
-        every way the visible state can change: the buffer watermarks +
-        coordinator clock (_snapshot — writes, tombstones, TTL expiry
-        time), the session and base identities (re-registration, sstable
-        imports swap _base), and the schema text (ALTER re-syncs in
-        place). pinnable is the persist gate: only state derived purely
-        from the write buffer (no _base) is bounded."""
-        return (
-            (
-                id(sess),
-                sess._snapshot(),
-                sess._clock_ref[0],
-                id(sess._base),
-                sess.meta.schema.simpleString(),
-            ),
-            sess._base is None,
-        )
-
-    def _visible_frame(self, key: tuple, sess):
-        """The SELECT-visible frame for one session, memoized per version
-        (see _select_frames and _visible_state)."""
-        ver, pinnable = self._visible_state(sess)
-        cached = self._select_frames.get(key)
-        if cached is not None and cached[0] == ver:
-            return cached[1]
-        if cached is not None:
-            unpersist_quietly(cached[1])
-        df = sess.table(now=ver[2], with_shadows=True)
-        if pinnable:
-            # buffer-backed: the whole visible state derives from
-            # driver-held statements — bounded, safe to pin. Coalesce
-            # the cached layout to one partition first: the merge ran at
-            # spark.sql.shuffle.partitions width, and dragging 32 tiny
-            # cached partitions through every subsequent page/SELECT job
-            # costs more task overhead than the data is worth. Guarded
-            # by the buffer size so a genuinely large ingest keeps its
-            # parallel layout.
-            if len(sess._mutations) <= 100_000:
-                df = df.coalesce(1)
-            df = df.persist()
-        self._select_frames[key] = (ver, df)
-        return df
 
     def _collect_updates(self, key: tuple, marks: tuple) -> list:
         """TriggerUpdate list for the buffer entries a statement appended

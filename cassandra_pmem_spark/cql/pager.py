@@ -29,12 +29,14 @@ it through the aggregation to the scan (filters on grouping columns
 push through Aggregate) — at 100 TB a page touches only the groups at
 and after the resume point, never the already-returned prefix. No
 driver-side RESULT caching: every page is a Spark job over live data.
-The compiled PLAN is reused across pages only while the table's
-visible-state version (buffer watermarks + coordinator clock + schema/
-base identity — CqlDatabase._visible_version) is unchanged, i.e. only
-when re-planning would provably rebuild the identical frame; any write,
-clock tick, or DDL between fetches re-plans, exactly like the
-reference re-issuing a ReadCommand from the PagingState position.
+The compiled PLAN is the table session's memo frame
+(CqlWriteSession.memo_frame, keyed by the statement), reused only while
+the session's version (a generation every write, TRUNCATE, import and
+ALTER bumps, plus the coordinator clock) is unchanged, i.e. only when
+re-planning would provably rebuild the identical frame; anything else
+between fetches re-plans, exactly like the reference re-issuing a
+ReadCommand from the PagingState position. Views have no session and
+re-plan every page.
 
 PER PARTITION LIMIT pages correctly WITHOUT the reference's
 remainingInPartition counter: the compiled statement ranks and caps
@@ -60,7 +62,6 @@ from cassandra_pmem_spark.cql.parser import (
     Selector,
     parse_select,
 )
-from cassandra_pmem_spark.plans.hints import unpersist_quietly
 
 _HIDDEN = "__pg"
 
@@ -178,7 +179,6 @@ class QueryPager:
             if vkey is None:
                 raise InvalidRequest(f"unknown table {st.table!r} for paging")
             self.meta = db.registry.views[vkey].meta
-        self._tkey = tkey
 
         def _is_agg(s) -> bool:
             if s.kind == "agg":
@@ -355,42 +355,26 @@ class QueryPager:
 
     def _page_frame(self):
         # pages observe writes between fetches, like the reference's
-        # per-page ReadCommands — but while the table's visible-state
-        # VERSION is unchanged (no write, no clock tick, no DDL) the
-        # compiled frame is provably identical, so it is reused instead
-        # of re-parsed/re-planned per page; any version change falls
-        # back to a fresh compile. The memo lives on the DATABASE keyed
-        # by the statement's structural repr, so a pager RESUMED from a
-        # PagingState (a fresh QueryPager over the same statement) reuses
-        # the original pager's compiled+persisted frame instead of
-        # re-compiling it — same provable-identity argument, the version
-        # key covers everything the compile reads. The memo is bounded:
-        # a version tick evicts every entry compiled at an older version
-        # of the same table (its session, ver[0]), not only this
-        # statement's, so statements never paged again leave no pin.
-        ver = self.db._visible_version(self._st.table)
-        cache = self.db._pager_frames
-        skey = repr(self._st)
-        cached = cache.get(skey)
-        if ver is not None and cached is not None and cached[0] == ver:
-            return cached[1]
+        # per-page ReadCommands. The table session memoizes the compiled
+        # frame by the statement's structural repr, so later pages — and
+        # a pager RESUMED from a PagingState — reuse it while nothing
+        # changed. A buffer-backed frame is pinned on top of the pinned
+        # visible frame: pages share the token/order expressions, so page
+        # N reads the already-hashed rows.
+        ks, _, tbl = self._st.table.rpartition(".")
+        key = self.db.registry.tables.resolve(
+            tbl, keyspace=ks or None, current=self.db.current_keyspace,
+            missing_ok=True,
+        )
+        sess = self.db._sessions.get(key)
+        if sess is None:
+            return self._compile_frame()
+        return sess.memo_frame(repr(self._st), self._compile_frame)
+
+    def _compile_frame(self):
         frame = self.db._compile_select(self._st)
         if self.kind != "global" and self._pk_n:
             frame = frame.withColumn(self._tok_name, self._token_expr())
-        if ver is not None:
-            for k, (old, _f) in list(cache.items()):
-                if k == skey or (old[0] == ver[0] and old != ver):
-                    unpersist_quietly(cache.pop(k)[1])
-            # pin the compiled frame too: pages share the token/order
-            # expressions — persisting above them means page N's job
-            # reads the already-hashed rows instead of re-computing per
-            # page. ONLY for buffer-backed tables: a parquet-backed
-            # visible frame is unbounded, and an InMemoryRelation above
-            # the scan would block the resume-point filter's pushdown
-            # (plan reuse without persist is still safe there)
-            if self.db._buffer_backed(self._st.table):
-                frame = frame.persist()
-            cache[skey] = (ver, frame)
         return frame
 
     # -- QueryPager surface ----------------------------------------------------

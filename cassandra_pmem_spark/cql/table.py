@@ -92,7 +92,7 @@ class CqlTable:
         df: DataFrame,
         meta: TableMeta,
         strict: bool = False,
-        indexed_columns: "frozenset[str] | dict[str, str]" = frozenset(),
+        index_kinds: "dict[str, dict[str, str]] | None" = None,
         stats_fn=None,
         choice_sink: list | None = None,
         index_modes: "dict | None" = None,
@@ -105,17 +105,8 @@ class CqlTable:
         # (IndexTarget.Type: simple/full()=EQ, values()=CONTAINS,
         # keys()=CONTAINS KEY, entries()=m[k]=v) passes the ALLOW
         # FILTERING gate (the 2i read path — physically still Catalyst
-        # pushdown + file skipping). Accepted shapes: col -> {kind: name}
-        # (kind-aware), col -> name (legacy, kind 'any'), or a frozenset
-        # of columns (kind 'any').
-        if isinstance(indexed_columns, dict):
-            self.index_kinds = {
-                c: (dict(v) if isinstance(v, dict) else {"any": str(v)})
-                for c, v in indexed_columns.items()
-            }
-        else:
-            self.index_kinds = {c: {"any": f"idx_{c}"} for c in indexed_columns}
-        self.indexed_columns = frozenset(self.index_kinds)
+        # pushdown + file skipping), given as col -> {kind: index name}.
+        self.index_kinds = dict(index_kinds or {})
         # col -> SASI IndexMode analog ({'mode','analyzed','is_literal'})
         # for columns whose CUSTOM index is SASI-class; None entries /
         # absent columns keep the shape-agnostic generic-custom behavior
@@ -529,12 +520,10 @@ class CqlTable:
             if not _op_index_served(r, kinds, self.index_modes.get(r.column)):
                 continue
             # the index whose KIND matches the operator serves — SAME
-            # table the gate consulted; 'any' entries are legacy
-            name = next(
-                (kinds[k] for k in KINDS_FOR_OP.get(r.op, ()) if k in kinds),
-                None,
-            ) or kinds.get("any") or min(kinds.values())
-            cands[r.column] = name
+            # table the gate consulted
+            cands[r.column] = next(
+                kinds[k] for k in KINDS_FOR_OP[r.op] if k in kinds
+            )
         cand_cols = sorted(cands)
         if cand_cols and self._choice_sink is not None:
             if len(cand_cols) == 1:

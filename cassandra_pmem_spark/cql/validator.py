@@ -78,19 +78,6 @@ def declared_timeuuid(meta, col: str) -> bool:
     return dict(getattr(meta, "cql_key_types", ()) or ()).get(col) == "timeuuid"
 
 
-def _index_kinds(indexed) -> dict:
-    """Normalize the index descriptor: a mapping col -> {kind: name}
-    (IndexTarget.Type analogs 'simple'/'values'/'keys'/'entries'/'full'),
-    accepting the legacy frozenset-of-columns / col->name forms as kind
-    'any' (op-unrestricted, the pre-kind behavior)."""
-    if isinstance(indexed, dict):
-        return {
-            c: (v if isinstance(v, dict) else {"any": str(v)})
-            for c, v in indexed.items()
-        }
-    return {c: {"any": c} for c in indexed}
-
-
 # CassandraIndex.supportsExpression analog, the ONE op->serving-kinds
 # table (index selection in table.py reads the same mapping): simple and
 # full() serve EQ (plus CUSTOM SASI-class, which also serves LIKE —
@@ -222,10 +209,6 @@ def sasi_supports(op: str, m: dict) -> bool:
 
 
 def _op_index_served(r: Restriction, kinds: dict, mode_info: dict | None = None) -> bool:
-    if "any" in kinds:
-        # legacy descriptors predate entry relations and LIKE serving: a
-        # pre-kind simple index never served either
-        return r.op in (Op.EQ, Op.CONTAINS, Op.CONTAINS_KEY)
     if not any(k in kinds for k in KINDS_FOR_OP.get(r.op, ())):
         return False
     if mode_info is not None:
@@ -251,7 +234,7 @@ def validate_restrictions(
     meta: TableMeta,
     restrictions: list[Restriction],
     allow_filtering: bool = False,
-    indexed: "frozenset[str] | dict" = frozenset(),
+    indexed: "dict[str, dict[str, str]] | None" = None,
     index_modes: "dict | None" = None,
 ) -> None:
     """Classify WHERE relations like StatementRestrictions.java:126 and
@@ -265,7 +248,10 @@ def validate_restrictions(
         (ClusteringIndexSliceFilter);
       * regular columns: exactly ONE restriction served by a secondary
         index — EQ (or CONTAINS/CONTAINS KEY on an indexed collection) on
-        a column in `indexed` (SecondaryIndexManager.getBestIndexFor;
+        a column whose `indexed` entry ({kind: index name}, the
+        IndexTarget.Type analogs 'simple'/'values'/'keys'/'entries'/
+        'full'/'custom') serves the operator
+        (SecondaryIndexManager.getBestIndexFor;
         any ADDITIONAL regular restriction is post-filtering and needs
         ALLOW FILTERING, StatementRestrictions.needFiltering). The index
         itself is semantic here: execution stays Catalyst predicate
@@ -276,7 +262,7 @@ def validate_restrictions(
     # rescue it (StatementRestrictions.java:174-180: a LIKE relation on a
     # column without a queriable index rejects outright; RowFilter has no
     # LIKE post-filter path)
-    kindmap = _index_kinds(indexed)
+    kindmap = indexed or {}
     for r in restrictions:
         if r.op is Op.LIKE and not _op_index_served(
             r, kindmap.get(r.column, {}), (index_modes or {}).get(r.column)

@@ -33,7 +33,7 @@ expiry rides with each mutation's cells.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -767,13 +767,24 @@ def _split_statements(s: str) -> list[str]:
     return parts
 
 
+# memo_frame key of the visible frame (paged statements use their repr)
+_VISIBLE = "visible"
+
+
 class CqlWriteSession:
     """Mutable table state driven by CQL write statements.
 
-    `table(now)` materializes the visible state, applying in order:
-    cell-level LWW merge → counter folding → cell tombstones → row
-    tombstones → TTL expiry. `now` (same unit as writetime) is injectable
-    for deterministic TTL tests (TTLTest.java style)."""
+    `table(now)` materializes the visible state, applying in order: TTL
+    expiry (mutations expired at `now` leave the log before the merge) →
+    cell-level LWW merge → counter folding → cell tombstones → row and
+    range tombstones. `now` (same unit as writetime) is injectable for
+    deterministic TTL tests (TTLTest.java style).
+
+    The session also memoizes the frames reads compile over `table()`
+    (`visible_frame`, `memo_frame`). They are valid for one version,
+    (generation, shared clock): every statement, rollback, TRUNCATE,
+    import and base or meta assignment bumps the generation, and the
+    clock carries TTL visibility and every other table's writes."""
 
     def __init__(
         self,
@@ -786,7 +797,8 @@ class CqlWriteSession:
         now_occs: "NowOccs | None" = None,
     ):
         self.spark = spark
-        self.meta = meta
+        self._generation = 0
+        self._meta = meta
         self.collection_info = collection_info
         # TableParams.defaultTimeToLive: applied when a write carries no
         # USING TTL; an EXPLICIT `USING TTL 0` means no expiry and the
@@ -809,24 +821,93 @@ class CqlWriteSession:
         # frames load_sstables persisted into _base: the session owns
         # their pins and releases them with the base (release_base)
         self._pinned: list[DataFrame] = []
+        # frames compiled over table() at _frames_version: the visible
+        # frame under _VISIBLE, each paged statement's frame under its repr
+        self._frames: dict = {}
+        self._frames_version: tuple | None = None
         # True iff the LAST statement (or any inner batch statement)
         # carried an IF clause — the coordinator's trigger hook reads it
         # to apply the CAS-path same-partition gate
         # (TriggerExecutor.validateForSinglePartition)
         self.last_conditional = False
 
+    @property
+    def meta(self) -> TableMeta:
+        return self._meta
+
+    @meta.setter
+    def meta(self, meta: TableMeta) -> None:
+        self._meta = meta
+        self._generation += 1
+
+    @property
+    def base(self) -> DataFrame | None:
+        """The table's history before the buffered statements (imported
+        sstables, a fixture frame), merged under them at writetime 0."""
+        return self._base
+
+    @base.setter
+    def base(self, df: DataFrame | None) -> None:
+        self._base = df
+        self._generation += 1
+
     def import_base(self, df: DataFrame) -> None:
         """Merge an imported, already-persisted frame into the base
         history; the session now owns its pin."""
         self._pinned.append(df)
-        self._base = df if self._base is None else self._base.unionByName(df)
+        self.base = df if self._base is None else self._base.unionByName(df)
 
     def release_base(self) -> None:
         """Drop the base history and unpin every imported frame."""
         for df in self._pinned:
             unpersist_quietly(df)
         self._pinned.clear()
-        self._base = None
+        self.base = None
+
+    def release(self) -> None:
+        """Unpin everything the session holds: memo frames and imports."""
+        self.drop_frames()
+        self.release_base()
+
+    def drop_frames(self) -> None:
+        """Unpin and forget every memo frame (the next read re-plans)."""
+        for df in self._frames.values():
+            unpersist_quietly(df)
+        self._frames.clear()
+
+    def memo_frame(self, key: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """`build()`'s frame, memoized under `key` while the version holds.
+        Pinned only when the table has no base: state derived purely from
+        the write buffer is bounded, while a persisted scan of a base
+        would cache unbounded rows and block predicate pushdown."""
+        version = (self._generation, self._clock_ref[0])
+        if version != self._frames_version:
+            self.drop_frames()
+            self._frames_version = version
+        df = self._frames.get(key)
+        if df is None:
+            df = build()
+            if self._base is None:
+                df = df.persist()
+            self._frames[key] = df
+        return df
+
+    def visible_frame(self) -> DataFrame:
+        """What a SELECT or a view reads: the visible state at the shared
+        clock with its liveness shadows, memoized (memo_frame), so a
+        pager's later pages read the merged rows instead of re-merging."""
+
+        def build() -> DataFrame:
+            df = self.table(now=self._clock_ref[0], with_shadows=True)
+            # the merge ran at spark.sql.shuffle.partitions width; a pinned
+            # frame keeps one partition so later page/SELECT jobs do not
+            # drag many tiny cached partitions along. A large ingest keeps
+            # its parallel layout.
+            if self._base is None and len(self._mutations) <= 100_000:
+                df = df.coalesce(1)
+            return df
+
+        return self.memo_frame(_VISIBLE, build)
 
     # -- statement entry (ModificationStatement.execute analog) ---------------
 
@@ -851,6 +932,7 @@ class CqlWriteSession:
             raise
 
     def _execute(self, cql: str, params: list[Any], cursor: list[int], forced_ts: int | None, fold_ts: int | None = None) -> bool:
+        self._generation += 1
         head = cql.strip().split(None, 1)[0].lower()
         if head == "begin":
             # BEGIN [UNLOGGED|COUNTER] BATCH [USING TIMESTAMP t] stmt; ...;
@@ -1827,6 +1909,7 @@ class CqlWriteSession:
         )
 
     def _restore(self, snap: tuple) -> None:
+        self._generation += 1
         n_mut, n_row, n_cell, n_rng, clock, occ_mark = snap
         del self._mutations[n_mut:]
         del self._row_tombs[n_row:]

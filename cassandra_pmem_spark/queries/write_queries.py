@@ -649,7 +649,7 @@ def cql_udf_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # route the parquet frame in as the session base (bounded: no collect)
     sess = db._session_for_key(("udfks", "orders_fn"))
-    sess._base = (
+    sess.base = (
         load_table(spark, "orders", sf_dir)
         .withColumn(
             "o_orderpriority",
@@ -710,7 +710,7 @@ def cql_uda_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # l_linenumber) duplicates exist, which the session's LWW merge would
     # collapse nondeterministically — pre-aggregate onto the CQL pk so
     # Spark and oracle see the same unique-keyed rows at any SF
-    sess._base = li.groupBy("l_suppkey", "l_orderkey", "l_linenumber").agg(
+    sess.base = li.groupBy("l_suppkey", "l_orderkey", "l_linenumber").agg(
         F.sum(F.floor(F.col("l_extendedprice") * 100).cast("long")).alias("l_cents")
     )
     return db.execute(
@@ -754,7 +754,7 @@ def cql_indexed_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type text)"
     )
     sess = db._session_for_key(("idx_ks", "ev"))
-    sess._base = load_table(spark, "events", sf_dir).select(
+    sess.base = load_table(spark, "events", sf_dir).select(
         "event_id", "user_id", "event_type"
     )
     for bad in (
@@ -835,7 +835,7 @@ def cql_list_cell_liveness(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.alias("l"), F.array_sort(F.collect_set("event_type")).alias("s")
     )
     sess = db._session_for_key(("lcl", "cl"))
-    sess._base = base
+    sess.base = base
     db.execute("UPDATE cl USING TIMESTAMP 777 SET l = l + ['end'] WHERE user_id = 1")
     db.execute("UPDATE cl USING TIMESTAMP 777 SET l = ['start'] + l WHERE user_id = 2")
     db.execute("UPDATE cl USING TIMESTAMP 777 SET s = s + {'zz'} WHERE user_id = 3")
@@ -944,7 +944,7 @@ def cql_udt_field_writes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sess = db._session_for_key(("ufw", "cust"))
-    sess._base = base
+    sess.base = base
     db.execute("UPDATE cust USING TIMESTAMP 500 SET p.seg = 'VIP' WHERE ck = 1")
     db.execute("DELETE p.name FROM cust USING TIMESTAMP 500 WHERE ck = 2")
     db.execute("UPDATE cust USING TIMESTAMP 500 SET p = {name: 'X'} WHERE ck = 3")
@@ -1036,7 +1036,7 @@ def cql_alter_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("l"),
     )
     sess = db._session_for_key(("alt_ks", "sup"))
-    sess._base = base
+    sess.base = base
     db.execute("UPDATE sup USING TIMESTAMP 100 SET l.r = 99 WHERE sk = 1")
     db.execute("ALTER TYPE loc ADD extra text")
     db.execute("UPDATE sup USING TIMESTAMP 200 SET l.extra = 'E2' WHERE sk = 2")
@@ -1088,7 +1088,7 @@ def cql_agg_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey", "o_orderkey", "o_totalprice")
     )
     sess = db._session_for_key(("agn", "ord"))
-    sess._base = base
+    sess.base = base
     db.execute(
         "INSERT INTO ord (o_custkey, o_orderkey, o_totalprice) "
         "VALUES (-1, -1, 1000.9) USING TIMESTAMP 500"

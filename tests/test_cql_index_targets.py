@@ -225,8 +225,9 @@ class TestReviewRegressions:
             partition_key=("k",),
         )
         rs = [Restriction("k", Op.EQ), Restriction("m", Op.ENTRY)]
+        # a non-entries index does not serve m[k]=v
         with pytest.raises(InvalidRequest, match="ALLOW FILTERING"):
-            validate_restrictions(meta, rs, False, frozenset({"m"}))
+            validate_restrictions(meta, rs, False, {"m": {"simple": "m_idx"}})
         # a kind-aware entries descriptor serves it
         validate_restrictions(meta, rs, False, {"m": {"entries": "m_ent"}})
 

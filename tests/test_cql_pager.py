@@ -295,7 +295,7 @@ class TestParquetBackedFramePersistGate:
     """The page-frame memo persists ONLY buffer-backed visible state: a
     parquet-backed table's visible frame is unbounded, and an
     InMemoryRelation above the scan would block resume-filter pushdown
-    (mirrors ddl._visible_frame's own persist gate)."""
+    (the same gate the session's visible frame uses)."""
 
     def test_parquet_backed_frame_reused_but_not_persisted(
         self, db, spark, tmp_path
@@ -306,19 +306,17 @@ class TestParquetBackedFramePersistGate:
             [(k, c, 10 * k + c) for k in range(6) for c in range(4)],
             "k int, c int, v int",
         ).write.parquet(pq)
-        key = db._table_key("t2")
-        db._session_for_key(key)._base = spark.read.parquet(pq)
-        assert db._buffer_backed("t2") is False
-        assert db._buffer_backed("t") is True  # the insert-built fixture
+        sess2 = db._session_for_key(db._table_key("t2"))
+        sess2.base = spark.read.parquet(pq)
 
         p = db.pager("SELECT k, c, v FROM t2", page_size=7)
         pages = drain(p)
         assert sorted((r["k"], r["c"]) for pg in pages for r in pg) == [
             (k, c) for k in range(6) for c in range(4)
         ]
-        # memo still reused across pages (db-level since r14, keyed by
+        # memo still reused across pages (the table session's, keyed by
         # the statement's structural repr)
-        ver, frame = db._pager_frames[repr(p._st)]
+        frame = sess2._frames[repr(p._st)]
         assert frame.storageLevel.useMemory is False
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" not in plan
@@ -327,19 +325,20 @@ class TestParquetBackedFramePersistGate:
         # already-hashed token rows)
         pb = db.pager("SELECT k, c FROM t", page_size=7)
         pb.fetch_page()
-        _, bframe = db._pager_frames[repr(pb._st)]
-        assert bframe.storageLevel.useMemory is True
+        sess = db._session_for_key(db._table_key("t"))
+        assert sess.base is None  # the insert-built fixture
+        assert sess._frames[repr(pb._st)].storageLevel.useMemory is True
 
     def test_resumed_pager_reuses_compiled_frame(self, db):
         # a pager RESUMED from a PagingState over the same statement must
-        # hit the db-level frame memo instead of re-compiling (r14: the
-        # memo moved from the pager instance to the database)
+        # hit the session's frame memo instead of re-compiling
+        sess = db._session_for_key(db._table_key("t"))
         p = db.pager("SELECT k, c FROM t", page_size=7)
         p.fetch_page()
-        f1 = db._pager_frames[repr(p._st)][1]
+        f1 = sess._frames[repr(p._st)]
         q = db.pager("SELECT k, c FROM t", page_size=7, state=p.state())
         q.fetch_page()
-        assert db._pager_frames[repr(q._st)][1] is f1
+        assert sess._frames[repr(q._st)] is f1
 
 
 class TestPagerMemoBound:
@@ -354,13 +353,15 @@ class TestPagerMemoBound:
             "SELECT k, v FROM t",
             "SELECT k, c, v FROM t WHERE k = 1",
         ]
+        sess = db._session_for_key(db._table_key("t"))
         drain(db.pager(stmts[0], page_size=5))
         one_statement = persisted_rdds(spark)
         for s in stmts[1:]:
             drain(db.pager(s, page_size=5))
-        assert len(db._pager_frames) == 3
+        # the visible frame plus one frame per paged statement
+        assert len(sess._frames) == 4
         db.execute("INSERT INTO t (k, c, v) VALUES (9, 9, 99)")
         rows = [r for pg in drain(db.pager(stmts[0], page_size=5)) for r in pg]
         assert len(rows) == 25
-        assert len(db._pager_frames) == 1
+        assert len(sess._frames) == 2
         assert persisted_rdds(spark) == one_statement

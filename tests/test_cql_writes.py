@@ -1433,7 +1433,7 @@ class TestCollectionLiteralErrors:
 
 
 class TestVisibleFrameCacheInvalidation:
-    """The SELECT-side visible-frame memo (CqlDatabase._visible_frame)
+    """The table session's frame memo (CqlWriteSession.memo_frame)
     must be invisible: across random interleavings of writes, deletes,
     TTL writes, TRUNCATE, and paged reads, every cached read must equal
     the same statement re-planned from scratch (the memo cleared)."""
@@ -1450,6 +1450,7 @@ class TestVisibleFrameCacheInvalidation:
         )
         db.execute("USE vfc")
         db.execute("CREATE TABLE t (k int, c int, v int, PRIMARY KEY (k, c))")
+        sess = db._session_for_key(db._table_key("t"))
 
         def mutate(step: int) -> None:
             r = rng.random()
@@ -1462,10 +1463,16 @@ class TestVisibleFrameCacheInvalidation:
                 db.execute(f"UPDATE t SET v = {step * 10} WHERE k = {k} AND c = {c}")
             elif r < 0.75:
                 db.execute(f"DELETE FROM t WHERE k = {k} AND c = {c}")
-            elif r < 0.9:
+            elif r < 0.82:
                 db.execute(
                     f"INSERT INTO t (k, c, v) VALUES ({k}, {c}, {step}) "
                     "USING TTL 2"
+                )
+            elif r < 0.9:
+                # an explicit timestamp ticks no clock
+                db.execute(
+                    f"INSERT INTO t (k, c, v) VALUES ({k}, {c}, {step}) "
+                    f"USING TIMESTAMP {step}"
                 )
             else:
                 db.execute("TRUNCATE t")
@@ -1474,7 +1481,7 @@ class TestVisibleFrameCacheInvalidation:
             cached = sorted(tuple(r) for r in db.execute(sql).collect())
             # control: clear the memo so the same statement re-plans
             # and re-executes from the raw session state
-            db._select_frames.clear()
+            sess.drop_frames()
             fresh = sorted(tuple(r) for r in db.execute(sql).collect())
             assert cached == fresh, sql
             return cached
@@ -1492,7 +1499,7 @@ class TestVisibleFrameCacheInvalidation:
                     if not got:
                         break
                     paged.extend((r["k"], r["c"], r["v"]) for r in got)
-                db._select_frames.clear()
+                sess.drop_frames()
                 direct = sorted(
                     tuple(r)
                     for r in db.execute("SELECT k, c, v FROM t").collect()
@@ -1500,3 +1507,60 @@ class TestVisibleFrameCacheInvalidation:
                 assert sorted(paged) == direct
         # final read after the whole interleaving
         read("SELECT k, c, v FROM t")
+
+    def test_truncate_then_same_shape_write(self, spark):
+        """A USING TIMESTAMP write ticks no clock and TRUNCATE empties the
+        buffers, so the write after a TRUNCATE can leave the buffers the
+        same size as before it. A SELECT, a pager and a view over the
+        table must still read the new row, like a fresh database running
+        the same statements."""
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+        def new_db():
+            db = CqlDatabase(spark)
+            db.execute(
+                "CREATE KEYSPACE tsw WITH REPLICATION = "
+                "{'class': 'SimpleStrategy'}"
+            )
+            db.execute("USE tsw")
+            db.execute("CREATE TABLE t (k int PRIMARY KEY, v text)")
+            db.execute(
+                "CREATE MATERIALIZED VIEW byv AS SELECT k, v FROM t "
+                "WHERE k IS NOT NULL AND v IS NOT NULL PRIMARY KEY (v, k)"
+            )
+            return db
+
+        def paged(db):
+            p = db.pager("SELECT k, v FROM t", page_size=2)
+            rows = []
+            while not p.is_exhausted():
+                rows.extend((r["k"], r["v"]) for r in p.fetch_page())
+            return sorted(rows)
+
+        reads = {
+            "select": lambda db: sorted(
+                tuple(r) for r in db.execute("SELECT k, v FROM t").collect()
+            ),
+            "pager": paged,
+            "view": lambda db: sorted(
+                tuple(r) for r in db.execute("SELECT k, v FROM byv").collect()
+            ),
+        }
+        writes = [
+            "INSERT INTO t (k, v) VALUES (1, 'a') USING TIMESTAMP 100",
+            "TRUNCATE t",
+            "INSERT INTO t (k, v) VALUES (2, 'b') USING TIMESTAMP 100",
+        ]
+        for name, read in reads.items():
+            db, fresh = new_db(), new_db()
+            db.execute(writes[0])
+            assert read(db) == [(1, "a")], name
+            for w in writes[1:]:
+                db.execute(w)
+            for w in writes:
+                fresh.execute(w)
+            assert read(db) == read(fresh) == [(2, "b")], name
+            # a plain append at the same timestamp ticks no clock either
+            for d in (db, fresh):
+                d.execute("INSERT INTO t (k, v) VALUES (3, 'c') USING TIMESTAMP 100")
+            assert read(db) == read(fresh) == [(2, "b"), (3, "c")], name

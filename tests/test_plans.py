@@ -1042,7 +1042,7 @@ class TestRound12Plans:
         p = db.pager("SELECT k, c FROM t", page_size=5)
         first = p.fetch_page()
         assert len(first) == 5
-        frame = db._pager_frames[repr(p._st)][1]
+        frame = db._session_for_key(db._table_key("t"))._frames[repr(p._st)]
         spec = p._order_spec()
         page_plan = (
             frame.filter(p._after_filter(p._pos))

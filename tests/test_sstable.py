@@ -1333,6 +1333,26 @@ class TestImportSnapshot:
             [(k, 0, "a") for k in range(4)] + [(k, 1, "b") for k in range(2, 6)]
         )
 
+    def test_truncate_then_import_reads_the_new_rows(self, spark, tmp_path):
+        # TRUNCATE frees the old base and the next import makes a new
+        # one; the memoized read must follow, round after round
+        a, b = str(tmp_path / "a"), str(tmp_path / "b")
+        rows_a = [(k, 0, "a") for k in range(4)]
+        rows_b = [(k, 1, "b") for k in range(2, 6)]
+        _events_dir(spark, a, rows_a)
+        _events_dir(spark, b, rows_b)
+        db = _kcv_db(spark, "trimp")
+
+        def read():
+            return sorted(tuple(r) for r in db.execute("SELECT * FROM t").collect())
+
+        for _ in range(4):
+            for src, rows in ((a, rows_a), (b, rows_b)):
+                db.execute("TRUNCATE t")
+                assert read() == []
+                db.load_sstables("t", src)
+                assert read() == rows
+
     def test_drop_table_releases_its_pins(self, spark, tmp_path):
         from tests.conftest import persisted_rdds
 
