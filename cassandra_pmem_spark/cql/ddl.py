@@ -2502,22 +2502,20 @@ class CqlDatabase:
                                     ),
                                 )
             return None
-        if head == "begin":
-            if not self.registry.triggers:
-                return self._execute_batch(cql, params if params is not None else [])
-            return self._run_with_triggers(
-                lambda: self._execute_batch(cql, params if params is not None else [])
-            )
         if head in self._DML_HEADS:
-            tks, tname = self._dml_table(cql)
-            self._check_view_target(tks, tname, head)
-            sess = self._session((tks, tname))
+            if head == "begin":
+                run = lambda: self._execute_batch(cql, params if params is not None else [])
+            else:
+                tks, tname = self._dml_table(cql)
+                self._check_view_target(tks, tname, head)
+                sess = self._session((tks, tname))
+                run = lambda: sess.execute(cql, params)
             if not self.registry.triggers or head == "truncate":
                 # TRUNCATE produces no partition updates — triggers never
                 # fire for it (TruncateStatement bypasses StorageProxy's
                 # mutateWithTriggers path entirely)
-                return sess.execute(cql, params)
-            return self._run_with_triggers(lambda: sess.execute(cql, params))
+                return run()
+            return self._run_with_triggers(run)
         if head == "select":
             from cassandra_pmem_spark.cql.parser import parse_select
 
@@ -2546,10 +2544,8 @@ class CqlDatabase:
         The decode is clock-independent (read_sstables resolves TTLs and
         tombstones at a fixed far-future instant), so the pin stays valid
         as the session clock advances."""
-        import os as _os
-
         from cassandra_pmem_spark.sources.sstable import (
-            parse_statistics,
+            read_dir_header,
             read_sstables,
         )
 
@@ -2558,18 +2554,11 @@ class CqlDatabase:
         df = read_sstables(self.spark, sst_dir)
         pk = list(meta.partition_key)
         ck = [c.name for c in meta.clustering]
-        # primary-key shape comes from the sstable HEADER, never from
-        # column-name prefixes (a regular column named 'keyword' must
-        # not count as a key component)
-        stats_files = sorted(
-            f for f in _os.listdir(sst_dir) if f.endswith("-Statistics.db")
-        )
-        from cassandra_pmem_spark.sources.sstable import version_from_path
-
-        with open(_os.path.join(sst_dir, stats_files[0]), "rb") as fh:
-            _stats, hdr = parse_statistics(
-                fh.read(), version=version_from_path(stats_files[0]).name
-            )
+        # primary-key shape comes from the sstable HEADER — the same one
+        # read_sstables took the schema from — never from column-name
+        # prefixes (a regular column named 'keyword' must not count as a
+        # key component)
+        _datas, hdr = read_dir_header(sst_dir)
         n_key = len(hdr["key_types"])
         n_ck = len(hdr["clustering_types"])
         positional = {f"key{i}" for i in range(n_key)} | {
@@ -2935,93 +2924,18 @@ class CqlDatabase:
             raise
 
     def _execute_batch(self, cql: str, params: list[Any]) -> bool:
-        """BATCH across table sessions. A single-table batch delegates to
-        that table's session (which owns counter/timestamp semantics); a
-        multi-table batch validates the whole BatchStatement matrix —
-        including the cross-table condition rule (BatchStatement.java:234)
-        — as a dry pass, then applies every inner statement with ONE
-        shared coordinator timestamp from the database clock."""
-        import re as _re2
+        """BATCH across table sessions through writes.execute_batch, the
+        one BATCH path (a standalone CqlWriteSession runs it too). This
+        side only maps each inner statement to its table session: the
+        target resolves to its canonical (keyspace, name) key, so a
+        qualified ks.t and a bare t under USE ks share ONE session, and
+        inner statements get the same view-modification rejection as
+        standalone ones (BatchStatement prepares each child)."""
+        from cassandra_pmem_spark.cql.writes import execute_batch
 
-        from cassandra_pmem_spark.cql.writes import (
-            _APPLY_RE,
-            _BATCH_OPEN_RE,
-            _split_statements,
-            validate_batch_pieces,
-        )
-
-        m = _BATCH_OPEN_RE.match(cql)
-        if not m:
-            raise InvalidRequest("malformed BATCH: expected BEGIN [UNLOGGED|COUNTER] BATCH")
-        pieces = _split_statements(cql[m.end():])
-        first = pieces[0]
-        if _re2.match(r"\s*using\s+ttl\b", first, _re2.I) or _re2.match(
-            r"\s*using\s+timestamp\s+(?:\?|-?\d+)\s+and\s+ttl\b", first, _re2.I
-        ):
-            raise InvalidRequest("Global TTL on the BATCH statement is not supported.")
-        cursor = [0]
-        batch_ts: int | None = None
-        mu = _re2.match(r"\s*using\s+timestamp\s+(\?|-?\d+)\s*", first, _re2.I)
-        if mu:
-            tok = mu.group(1)
-            if tok == "?":
-                batch_ts = int(params[cursor[0]])
-                cursor[0] += 1
-            else:
-                batch_ts = int(tok)
-            pieces[0] = first[mu.end():]
-        if not _APPLY_RE.match(pieces[-1]):
-            raise InvalidRequest("BATCH must end with APPLY BATCH")
-        inner = [s.strip() for s in pieces[:-1] if s.strip()]
-        # resolve every target to its canonical (keyspace, name) key so a
-        # qualified ks.t and a bare t under USE ks share ONE session;
-        # inner statements get the same view-modification rejection as
-        # standalone ones (BatchStatement prepares each child)
-        targets = [self._dml_table(s) for s in inner]
-        for (tks, tname), stmt in zip(targets, inner):
+        def session_for(stmt: str):
+            tks, tname = self._dml_table(stmt)
             self._check_view_target(tks, tname, stmt.split(None, 1)[0].lower())
-        keys = [self._table_key(t) for t in targets]
-        if len(set(keys)) <= 1:
-            if not keys:
-                return True  # empty batch is a no-op
-            return self._session_for_key(keys[0]).execute(cql, params)
-        # the dry parse must fold now()-family terms too (a multi-table
-        # batch containing now() is valid) — throwaway per-statement
-        # clocks that consume nothing from the session allocator, exactly
-        # like the single-table path (writes.py _execute's batch branch)
-        from cassandra_pmem_spark.cql.terms import SessionClockFold
+            return self._session((tks, tname))
 
-        validate_batch_pieces(
-            m.group(1), batch_ts is not None, inner, params, cursor,
-            multi_table=True,
-            clock_factory=lambda: SessionClockFold(
-                lambda: self._write_clock[0] + 1
-            ),
-        )
-        # prepare-then-apply atomicity across sessions: per-statement
-        # semantic checks fire during the real pass, so snapshot every
-        # involved session's buffers (all share one clock ref — each
-        # snapshot records the same pre-batch clock value) and roll all of
-        # them back if any inner statement rejects.
-        sessions = {k: self._session_for_key(k) for k in set(keys)}
-        snaps = {k: s._snapshot() for k, s in sessions.items()}
-        if batch_ts is None:
-            self._write_clock[0] += 1
-            batch_ts = self._write_clock[0]
-            batch_fold = batch_ts
-        else:
-            # explicit user batch timestamps never drive the now()-fold
-            # instant (they are arbitrary magnitudes — epoch micros by
-            # convention); fold from the clock peek like writes.py
-            batch_fold = self._write_clock[0] + 1
-        try:
-            for stmt, k in zip(inner, keys):
-                sessions[k]._execute(
-                    stmt, params, cursor, forced_ts=batch_ts,
-                    fold_ts=batch_fold,
-                )
-        except Exception:
-            for k, s in sessions.items():
-                s._restore(snaps[k])
-            raise
-        return True
+        return execute_batch(cql, params, [0], session_for)

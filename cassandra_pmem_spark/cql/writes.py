@@ -732,9 +732,12 @@ class _WriteParser(_Parser):
 
 import re as _re
 
-# BEGIN [UNLOGGED|COUNTER] BATCH prefix / APPLY BATCH suffix; statement
+# BEGIN [UNLOGGED|COUNTER] BATCH prefix, its optional USING clause (a
+# literal, ? or :name per attribute) and the APPLY BATCH suffix; statement
 # bodies in between are split on ';' *outside string literals*
 _BATCH_OPEN_RE = _re.compile(r"^\s*begin\s+(?:(unlogged|counter)\s+)?batch\b", _re.I)
+_BATCH_ATTR = r"(?:timestamp|ttl)\s+(?:\?|:[A-Za-z_]\w*|-?\d+)"
+_BATCH_USING_RE = _re.compile(rf"\s*using\s+{_BATCH_ATTR}(?:\s+and\s+{_BATCH_ATTR})*", _re.I)
 _APPLY_RE = _re.compile(r"^\s*apply\s+batch\s*;?\s*$", _re.I)
 
 
@@ -784,7 +787,11 @@ class CqlWriteSession:
     (`visible_frame`, `memo_frame`). They are valid for one version,
     (generation, shared clock): every statement, rollback, TRUNCATE,
     import and base or meta assignment bumps the generation, and the
-    clock carries TTL visibility and every other table's writes."""
+    clock carries TTL visibility and every other table's writes.
+
+    A BATCH statement runs through `execute_batch`, the one BATCH path,
+    with every inner statement mapped to this session; CqlDatabase runs
+    the same function with one session per target table."""
 
     def __init__(
         self,
@@ -935,89 +942,7 @@ class CqlWriteSession:
         self._generation += 1
         head = cql.strip().split(None, 1)[0].lower()
         if head == "begin":
-            # BEGIN [UNLOGGED|COUNTER] BATCH [USING TIMESTAMP t] stmt; ...;
-            # APPLY BATCH (BatchStatement.java:56). One coordinator
-            # timestamp stamps every inner statement — intra-batch order
-            # does NOT create LWW ordering, and at the shared timestamp a
-            # tombstone beats a live cell (the merge's `<=` shadowing), so
-            # insert-then-delete in one batch deletes. `?` markers bind
-            # through ONE shared cursor across the inner statements.
-            if forced_ts is not None:
-                raise InvalidRequest("cannot nest BATCH statements")
-            m = _BATCH_OPEN_RE.match(cql)
-            if not m:
-                raise InvalidRequest("malformed BATCH: expected BEGIN [UNLOGGED|COUNTER] BATCH")
-            pieces = _split_statements(cql[m.end():])
-            first = pieces[0]
-            if _re.match(r"\s*using\s+ttl\b", first, _re.I) or _re.match(
-                r"\s*using\s+timestamp\s+(?:\?|-?\d+)\s+and\s+ttl\b", first, _re.I
-            ):
-                # BatchStatement.java:172
-                raise InvalidRequest("Global TTL on the BATCH statement is not supported.")
-            mu = _re.match(
-                r"\s*using\s+timestamp\s+(\?|:[A-Za-z_]\w*|-?\d+)\s*", first, _re.I
-            )
-            batch_ts: int | None = None
-            if mu:
-                tok = mu.group(1)
-                if tok == "?":
-                    if isinstance(params, dict):
-                        raise InvalidRequest(
-                            "positional ? markers cannot bind named "
-                            "parameters (use :name markers with a dict)"
-                        )
-                    batch_ts = int(params[cursor[0]])
-                    cursor[0] += 1
-                elif tok.startswith(":"):
-                    bname = tok[1:]
-                    if not isinstance(params, dict):
-                        raise InvalidRequest(
-                            f"named bind marker :{bname} needs named "
-                            "parameters (pass a dict)"
-                        )
-                    if bname not in params:
-                        raise InvalidRequest(f"no bind value for marker :{bname}")
-                    batch_ts = int(params[bname])
-                else:
-                    batch_ts = int(tok)
-                pieces[0] = first[mu.end():]
-            if not _APPLY_RE.match(pieces[-1]):
-                raise InvalidRequest("BATCH must end with APPLY BATCH")
-            self._validate_batch(m.group(1), batch_ts is not None, pieces[:-1], params, cursor)
-            # prepare-then-apply atomicity (BatchStatement.java executes
-            # only after every inner statement validated): the dry pass
-            # above covers the batch matrix, but per-statement semantic
-            # checks (TTL bounds, PK-in-SET, counter rules, unknown
-            # columns) fire during the real pass — snapshot the buffers so
-            # a late rejection rolls back the earlier statements' writes,
-            # and a failed LWT condition applies nothing at all.
-            snap = self._snapshot()
-            if batch_ts is None:
-                batch_ts = self._tick()
-                batch_fold = batch_ts
-            else:
-                # EXPLICIT batch timestamps are arbitrary user values
-                # (epoch micros by convention) — the now()-family fold
-                # instant must stay on the session-clock timeline, so the
-                # inner statements fold from the clock peek instead (the
-                # reference's now() is wall-clock, independent of USING
-                # TIMESTAMP)
-                batch_fold = self._clock_ref[0] + 1
-            applied = True
-            try:
-                for stmt in pieces[:-1]:
-                    if stmt.strip():
-                        applied &= self._execute(
-                            stmt.strip(), params, cursor,
-                            forced_ts=batch_ts, fold_ts=batch_fold,
-                        )
-            except Exception:
-                self._restore(snap)
-                raise
-            if not applied:
-                self._restore(snap)
-                return False
-            return True
+            return execute_batch(cql, params, cursor, lambda _s: self)
         if head == "truncate":
             # TRUNCATE (cql3/statements/TruncateStatement.java): drop all
             # data — mutations, tombstones, and the base table
@@ -1028,9 +953,6 @@ class CqlWriteSession:
             self.release_base()
             return True
         if head not in ("insert", "update", "delete"):
-            if forced_ts is not None:
-                # BatchStatement accepts only modification statements
-                raise InvalidRequest("Only INSERT, UPDATE and DELETE are allowed in BATCH")
             raise InvalidRequest(f"unsupported write statement {head!r}")
         counters = self.collection_info.counters if self.collection_info else frozenset()
         p = _WriteParser(_tokenize(cql))
@@ -1293,16 +1215,6 @@ class CqlWriteSession:
             raise InvalidRequest(f"ttl is too large. requested ({ttl}) maximum ({MAX_TTL})")
         if ttl == 0:
             del using["ttl"]
-
-    def _validate_batch(
-        self, kind: str | None, has_batch_ts: bool, pieces: list, params: list, cursor: list
-    ) -> None:
-        validate_batch_pieces(
-            kind, has_batch_ts, pieces, params, cursor,
-            clock_factory=lambda: SessionClockFold(
-                lambda: self._clock_ref[0] + 1
-            ),
-        )
 
     def _apply_update_row(
         self, key: dict, sets: dict, deltas: dict, elem_ops: list,
@@ -2806,33 +2718,29 @@ class CqlWriteSession:
 def validate_batch_pieces(
     kind: str | None,
     has_batch_ts: bool,
-    pieces: list,
+    pieces: list[str],
     params: list,
     cursor: list,
-    multi_table: bool = False,
-    clock_factory=None,
+    multi_table: bool,
+    clock: list[int] | None,
 ) -> None:
     """BatchStatement.verifyBatchType/attrs validation
     (BatchStatement.java:170-234), run as a DRY PARSE over the inner
-    statements BEFORE any of them mutates session state — a rejected
-    batch must apply nothing. The dry pass reads params through a cloned
-    cursor so the real pass binds identically. With multi_table=True the
-    cross-table condition rule (BatchStatement.java:234) also applies."""
+    statements (stripped, each an INSERT, UPDATE or DELETE) BEFORE any of
+    them mutates session state — a rejected batch must apply nothing.
+    The dry pass reads params through a cloned cursor so the real pass
+    binds identically. With multi_table=True the cross-table condition
+    rule (BatchStatement.java:234) also applies."""
     kind = (kind or "logged").lower()
     dry = [cursor[0]]
     has_counter = has_non_counter = any_cond = any_ts = False
     for stmt in pieces:
-        stmt = stmt.strip()
-        if not stmt:
-            continue
         head = stmt.split(None, 1)[0].lower()
-        if head not in ("insert", "update", "delete"):
-            raise InvalidRequest("Only INSERT, UPDATE and DELETE are allowed in BATCH")
         p = _WriteParser(_tokenize(stmt))
         # the dry parse discards values, but now()-family terms must
         # still fold (a batch containing now() is valid) — a throwaway
         # per-statement clock keeps the real pass's folds untouched
-        p.clock_fold = clock_factory() if clock_factory is not None else None
+        p.clock_fold = SessionClockFold(lambda: clock[0] + 1)
         if head == "insert":
             _, _, using, cond, _ = p.insert_statement(params, dry)
             is_ctr = False
@@ -2863,3 +2771,83 @@ def validate_batch_pieces(
         raise InvalidRequest("Cannot include a counter statement in a logged batch")
     if multi_table and any_cond:
         raise InvalidRequest("Batch with conditions cannot span multiple tables")
+
+
+def execute_batch(
+    cql: str,
+    params: list[Any],
+    cursor: list[int],
+    session_for: Callable[[str], "CqlWriteSession"],
+) -> bool:
+    """BEGIN [UNLOGGED|COUNTER] BATCH [USING TIMESTAMP t] stmt; ...;
+    APPLY BATCH (BatchStatement.java:56) — the one BATCH path, for a
+    standalone session (every statement maps to it) and for CqlDatabase
+    (`session_for` resolves each inner statement's table session).
+
+    One coordinator timestamp stamps every inner statement — intra-batch
+    order does NOT create LWW ordering, and at the shared timestamp a
+    tombstone beats a live cell (the merge's `<=` shadowing), so
+    insert-then-delete in one batch deletes. `?` markers bind through
+    ONE shared cursor across the header and the inner statements.
+    Returns the LWT [applied] flag; a rejected or condition-false batch
+    applies nothing in any session."""
+    m = _BATCH_OPEN_RE.match(cql)
+    if not m:
+        raise InvalidRequest("malformed BATCH: expected BEGIN [UNLOGGED|COUNTER] BATCH")
+    pieces = _split_statements(cql[m.end():])
+    batch_ts: int | None = None
+    mu = _BATCH_USING_RE.match(pieces[0])
+    if mu:
+        if _re.search(r"(?:using|and)\s+ttl\b", mu.group(0), _re.I):
+            # BatchStatement.java:172, checked before anything binds
+            raise InvalidRequest("Global TTL on the BATCH statement is not supported.")
+        batch_ts = _WriteParser(_tokenize(mu.group(0)))._using(params, cursor)["timestamp"]
+        pieces[0] = pieces[0][mu.end():]
+    if not _APPLY_RE.match(pieces[-1]):
+        raise InvalidRequest("BATCH must end with APPLY BATCH")
+    inner = [s.strip() for s in pieces[:-1] if s.strip()]
+    # BatchStatement accepts only modification statements — checked
+    # before any target resolves (a nested BEGIN BATCH has none)
+    for stmt in inner:
+        if stmt.split(None, 1)[0].lower() not in ("insert", "update", "delete"):
+            raise InvalidRequest("Only INSERT, UPDATE and DELETE are allowed in BATCH")
+    targets = [session_for(stmt) for stmt in inner]
+    sessions = list(dict.fromkeys(targets))
+    # every session shares one coordinator clock (None: empty batch)
+    clock = sessions[0]._clock_ref if sessions else None
+    validate_batch_pieces(
+        m.group(1), batch_ts is not None, inner, params, cursor,
+        multi_table=len(sessions) > 1, clock=clock,
+    )
+    if not sessions:
+        return True  # empty batch is a no-op
+    # prepare-then-apply atomicity (BatchStatement.java executes only
+    # after every inner statement validated): the dry pass above covers
+    # the batch matrix, but per-statement semantic checks (TTL bounds,
+    # PK-in-SET, counter rules, unknown columns) fire during the real
+    # pass — snapshot every involved session so a late rejection rolls
+    # back the earlier statements' writes, and a failed LWT condition
+    # applies nothing at all.
+    snaps = [(s, s._snapshot()) for s in sessions]
+    if batch_ts is None:
+        clock[0] += 1
+        batch_ts = batch_fold = clock[0]
+    else:
+        # EXPLICIT batch timestamps are arbitrary user values (epoch
+        # micros by convention) — the now()-family fold instant must
+        # stay on the session-clock timeline, so the inner statements
+        # fold from the clock peek instead (the reference's now() is
+        # wall-clock, independent of USING TIMESTAMP)
+        batch_fold = clock[0] + 1
+    applied = True
+    try:
+        for sess, stmt in zip(targets, inner):
+            applied &= sess._execute(stmt, params, cursor, batch_ts, batch_fold)
+    except Exception:
+        for sess, snap in snaps:
+            sess._restore(snap)
+        raise
+    if not applied:
+        for sess, snap in snaps:
+            sess._restore(snap)
+    return applied

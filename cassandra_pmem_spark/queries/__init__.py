@@ -24,28 +24,27 @@ from pyspark.sql import DataFrame, SparkSession
 # First-50 window budget, rotated by STALENESS each round (COVERAGE.md
 # rule: edited since last green driver evidence ⇒ re-enter the window;
 # never-evidenced entries outrank everything).
-# Round-13 layout: (1) the two NEW round-13 queries (never
-# evidenced); (2) stale-by-edit — the sstable tier, the write-path
-# tier, and the frozen-token queries whose machinery round 13 touched
-# (see inline notes); (3) the ENTIRE r8-evidence backlog — the 29
-# registry rows whose latest driver evidence is CORRECTNESS_r08;
-# (4) one r9 fill. After this window records, every registry row's
-# latest driver evidence is r9 or newer. Exactly 50 names.
+# Current layout: (1) the six rows whose code changed after their latest
+# gate evidence (r11/r12); (2) the rows the round-14 window evidenced,
+# minus six untouched pure-DataFrame rows that make room for
+# (1); the write-path and sstable rows stay because their code changed
+# again since. Exactly 50 names.
 _PRIORITY: tuple[str, ...] = (
-    # -- (1) new in round 13 (never driver-evidenced): the
-    # token-range-pruned distributed sstable scan, and the frozen
-    # TIMESTAMP-element token lane (nested timestamps joined the
-    # murmur3 covered set under the pinned-UTC session)
+    # -- (1) stale-by-edit since their latest evidence: the pager memo
+    # (cql_paging, r12), the connected-components stop tests (r11, r12)
+    # and the iterative loops over plans/hints.materialize (r11, r12)
+    "cql_paging",
+    "dedup_connected_components",
+    "dedup_components_star",
+    "text_dsir_weights",
+    "multimodal_image_dedup",
+    "graph_pagerank_exact",
+    # -- (2) round-14 evidence. The sstable tier (read_dir_header, the
+    # import snapshot), the write path (one BATCH path, the session
+    # frame memo) and the token lane (native expression deleted) all
+    # changed again since.
     "source_sstable_pruned_scan",
     "cql_token_scan_frozen_ts",
-    # -- (2) stale-by-edit: round 13 touched their machinery — the
-    # sstable wire codec fast paths (columnar reader, inlined cell
-    # serializer, running-min stats, pyarrow LZ4 decode), the
-    # WIDTH_BASE=64KiB promoted-index fix (wide_slice/pointread), the
-    # nb write path (version_interop now writes nb+na+md+ma), the
-    # prepare-time timestamp/date literal parsing + UTC-gated Arrow
-    # log frame on the statement write path, and the frozen-token
-    # resolver/_set_sort_key (timestamp elements)
     "cql_token_scan_frozen",
     "cql_token_scan_frozen_num",
     "source_sstable_roundtrip",
@@ -64,14 +63,7 @@ _PRIORITY: tuple[str, ...] = (
     "cql_counter_fold",
     "cql_trigger_audit",
     "cql_collection_writetime",
-    # -- (3) the ENTIRE r8-evidence backlog (29) — after this window
-    # records, the oldest driver evidence is r9
-    "analytics_count_distinct",
-    "analytics_explode_wordcount",
-    "analytics_rollup",
     "analytics_salted_agg",
-    "analytics_set_ops",
-    "analytics_topk_orders",
     "cql_clustering_slice",
     "cql_distinct_partitions",
     "cql_duration_arithmetic",
@@ -87,7 +79,6 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_exact_docs",
     "dedup_ngram_jaccard",
     "dedup_simhash",
-    "jsonl_roundtrip",
     "multimodal_video_dedup",
     "sim_ivf_topk",
     "streaming_exactly_once_sink",
@@ -95,16 +86,13 @@ _PRIORITY: tuple[str, ...] = (
     "streaming_sliding_batch",
     "streaming_tumbling_batch",
     "virtual_system_tables",
-    # -- (4) next-oldest (r9) fill to exactly 50
     "csv_roundtrip",
 )
-# Deliberately outside the window this round: everything with r9+
-# evidence and unchanged machinery. The statement-write edits
-# (_parse_timestamp_text, the UTC gate on _log_frame, checked()'s
-# timestamp/date branches) are represented by the eleven write-path
-# queries in tier (2) plus this session's full local gates. After
-# this window records, every registry row's latest driver evidence
-# is r9 or newer.
+# Deliberately outside the window this round: analytics_count_distinct,
+# analytics_set_ops, analytics_topk_orders, analytics_rollup,
+# analytics_explode_wordcount and jsonl_roundtrip — plain DataFrame
+# queries over the generated tables, with round-14 evidence and no code
+# change since.
 
 
 def all_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:

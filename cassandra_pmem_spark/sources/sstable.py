@@ -2535,6 +2535,25 @@ def _ms_series_to_datetime(vals: list):
 DRIVER_PLAN_INDEX_BYTES = 32 * 1024 * 1024
 
 
+def read_dir_header(in_dir: str) -> tuple[list[str], dict]:
+    """A directory's sorted ``*-Data.db`` paths and the Statistics.db
+    serialization header of the first one. That ONE header is the schema
+    of every sstable in the directory (all sstables of a table share it),
+    for the reader and for the loader's key-shape check alike."""
+    datas = sorted(
+        os.path.join(in_dir, f)
+        for f in os.listdir(in_dir)
+        if f.endswith("-Data.db")
+    )
+    if not datas:
+        raise ValueError(f"no *-Data.db under {in_dir!r}")
+    with open(datas[0][: -len("Data.db")] + "Statistics.db", "rb") as f:
+        _stats, hdr = parse_statistics(
+            f.read(), version=version_from_path(datas[0]).name
+        )
+    return datas, hdr
+
+
 def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
                   now_seconds: int | None = None,
                   token_range: "tuple[int | None, int | None] | None" = None,
@@ -2573,18 +2592,7 @@ def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    datas = sorted(
-        os.path.join(in_dir, f)
-        for f in os.listdir(in_dir)
-        if f.endswith("-Data.db")
-    )
-    if not datas:
-        raise ValueError(f"no *-Data.db under {in_dir!r}")
-    # schema comes from ONE header (all sstables of a table share it)
-    with open(datas[0][: -len("Data.db")] + "Statistics.db", "rb") as f:
-        _stats, hdr = parse_statistics(
-            f.read(), version=version_from_path(datas[0]).name
-        )
+    datas, hdr = read_dir_header(in_dir)
     # reconstruct the schema; key/clustering NAMES are not part of the
     # header (the reference resolves them from the table schema) — use
     # positional names, overridable by the caller reading into a table

@@ -361,6 +361,97 @@ class TestBatch:
         assert rows(sess.table(), "k", "a") == [(7, "pre")]
 
 
+_AB_META = TableMeta(
+    "a",
+    T.StructType(
+        [T.StructField("k", T.IntegerType()), T.StructField("v", T.StringType())]
+    ),
+    partition_key=("k",),
+)
+_INSERT_A = "INSERT INTO a (k, v) VALUES (:k, 'x'); "
+_INSERT_B = "INSERT INTO b (k, v) VALUES (:k, 'y'); "
+_PARAMS = {"ts": 5, "k": 1}
+# (header, trailer) around the inner statements, and the outcome every
+# entry path must give: the rows (k, v, writetime(v)) of each target
+# table, or the InvalidRequest message (then no table holds a row)
+_PARITY_CASES = {
+    "named_timestamp": (
+        "BEGIN BATCH USING TIMESTAMP :ts ", "APPLY BATCH",
+        {"a": [(1, "x", 5)], "b": [(1, "y", 5)]},
+    ),
+    "positional_timestamp_with_dict": (
+        "BEGIN BATCH USING TIMESTAMP ? ", "APPLY BATCH",
+        "positional ? markers cannot bind named parameters (use :name markers with a dict)",
+    ),
+    "named_timestamp_and_ttl": (
+        "BEGIN BATCH USING TIMESTAMP :ts AND TTL 5 ", "APPLY BATCH",
+        "Global TTL on the BATCH statement is not supported.",
+    ),
+    "nested_batch": (
+        "BEGIN BATCH BEGIN BATCH ", "APPLY BATCH; APPLY BATCH",
+        "Only INSERT, UPDATE and DELETE are allowed in BATCH",
+    ),
+}
+# entry path -> the tables its batch writes
+_PATH_TABLES = {
+    "session": ("a",),
+    "database_one_table": ("a",),
+    "database_two_tables": ("a", "b"),
+}
+
+
+class TestBatchEntryParity:
+    """A batch gives the same rows and writetimes, or the same rejection,
+    through a standalone session, through CqlDatabase with one target
+    table, and through CqlDatabase with two (BatchStatement.java:56 has
+    one implementation for single- and multi-table batches)."""
+
+    @staticmethod
+    def _outcome(run, tables):
+        try:
+            run()
+        except InvalidRequest as e:
+            assert all(t() == [] for t in tables.values())  # applied nothing
+            return str(e)
+        return {name: t() for name, t in tables.items()}
+
+    def _session(self, spark, header, trailer):
+        sess = CqlWriteSession(spark, _AB_META)
+        return self._outcome(
+            lambda: sess.execute(header + _INSERT_A + trailer, _PARAMS),
+            {"a": lambda: rows(sess.table(with_shadows=True), "k", "v", "_writetime_v")},
+        )
+
+    def _database(self, spark, header, trailer, names):
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+        db = CqlDatabase(spark)
+        for t in ("a", "b"):
+            db.execute(f"CREATE TABLE {t} (k int PRIMARY KEY, v text)")
+        inner = {"a": _INSERT_A, "b": _INSERT_B}
+        cql = header + "".join(inner[t] for t in names) + trailer
+        return self._outcome(
+            lambda: db.execute(cql, _PARAMS),
+            {
+                t: lambda t=t: rows(db.execute(f"SELECT k, v, writetime(v) FROM {t}"))
+                for t in names
+            },
+        )
+
+    @pytest.mark.parametrize("path", sorted(_PATH_TABLES))
+    @pytest.mark.parametrize("case", sorted(_PARITY_CASES))
+    def test_same_outcome_on_every_entry_path(self, spark, case, path):
+        header, trailer, expected = _PARITY_CASES[case]
+        names = _PATH_TABLES[path]
+        if path == "session":
+            got = self._session(spark, header, trailer)
+        else:
+            got = self._database(spark, header, trailer, names)
+        if isinstance(expected, dict):
+            expected = {t: expected[t] for t in names}
+        assert got == expected
+
+
 class TestPrimaryKeyInSet:
     def test_update_set_on_partition_key_rejected(self, sess):
         with pytest.raises(InvalidRequest, match="PRIMARY KEY part"):
