@@ -34,30 +34,41 @@ import re
 import sys
 
 _FROM_RE = re.compile(r"\bfrom\s+([A-Za-z_][\w]*(?:\.[\w]+)?)", re.IGNORECASE)
+_BEGIN_RE = re.compile(r"begin\b", re.IGNORECASE)
+_APPLY_END_RE = re.compile(r"\bapply\s+batch\s*$", re.IGNORECASE)
 
 
 def split_statements(text: str) -> list[str]:
-    """Split on ';' while keeping BEGIN ... BATCH ... APPLY BATCH whole."""
-    parts = [p.strip() for p in text.split(";")]
+    """Split on ';' outside string literals (the BATCH body splitter,
+    cql/writes._split_statements) while keeping BEGIN ... APPLY BATCH
+    whole."""
+    from cassandra_pmem_spark.cql.writes import _split_statements
+
     out: list[str] = []
     buf: list[str] = []
-    for p in parts:
+    for p in (p.strip() for p in _split_statements(text)):
         if not p and not buf:
             continue
         if buf:
             buf.append(p)
-            if re.search(r"\bapply\s+batch\s*$", p, re.IGNORECASE):
+            if _APPLY_END_RE.search(p):
                 out.append("; ".join(buf))
                 buf = []
-        elif re.match(r"\s*begin\b", p, re.IGNORECASE) and not re.search(
-            r"\bapply\s+batch\s*$", p, re.IGNORECASE
-        ):
+        elif _BEGIN_RE.match(p) and not _APPLY_END_RE.search(p):
             buf = [p]
         else:
             out.append(p)
     if buf:
         out.append("; ".join(buf))
     return [s for s in out if s]
+
+
+def _sstable_paths(target: str) -> list[str]:
+    """The *-Data.db file given, or every one under a directory (raises
+    ValueError when the directory holds none)."""
+    from cassandra_pmem_spark.sources.sstable import data_files
+
+    return data_files(target) if os.path.isdir(target) else [target]
 
 
 def _route(db, spark, stmt: str, sf_dir: str):
@@ -346,16 +357,9 @@ def main(argv: list[str] | None = None) -> int:
         from cassandra_pmem_spark.sources.sstable import reset_sstable_level
 
         target = args.sstablelevelreset
-        paths = (
-            sorted(
-                os.path.join(target, f)
-                for f in os.listdir(target)
-                if f.endswith("-Data.db")
-            )
-            if os.path.isdir(target)
-            else [target]
-        )
-        if not paths:
+        try:
+            paths = _sstable_paths(target)
+        except ValueError:
             print("Found no sstables, did you give the correct directory?")
             return 1
         for p in paths:
@@ -373,15 +377,7 @@ def main(argv: list[str] | None = None) -> int:
         from cassandra_pmem_spark.sources.sstable import set_sstable_repaired
 
         target = args.sstablerepairedset
-        paths = (
-            sorted(
-                os.path.join(target, f)
-                for f in os.listdir(target)
-                if f.endswith("-Data.db")
-            )
-            if os.path.isdir(target)
-            else [target]
-        )
+        paths = _sstable_paths(target)
         for p in paths:
             m = set_sstable_repaired(p, repaired=not args.is_unrepaired)
             print(
@@ -429,15 +425,7 @@ def main(argv: list[str] | None = None) -> int:
             target if os.path.isdir(target) else os.path.dirname(target),
             "split",
         )
-        paths = (
-            sorted(
-                os.path.join(target, f)
-                for f in os.listdir(target)
-                if f.endswith("-Data.db")
-            )
-            if os.path.isdir(target)
-            else [target]
-        )
+        paths = _sstable_paths(target)
         for p in paths:
             ms = split_sstable(p, out_dir, size_mb=args.split_size)
             if not ms:
@@ -461,15 +449,7 @@ def main(argv: list[str] | None = None) -> int:
             target if os.path.isdir(target) else os.path.dirname(target),
             "scrubbed",
         )
-        paths = (
-            sorted(
-                os.path.join(target, f)
-                for f in os.listdir(target)
-                if f.endswith("-Data.db")
-            )
-            if os.path.isdir(target)
-            else [target]
-        )
+        paths = _sstable_paths(target)
         for p in paths:
             m = scrub_sstable(p, out_dir)
             print(
@@ -529,15 +509,7 @@ def main(argv: list[str] | None = None) -> int:
         from cassandra_pmem_spark.sources.sstable import sstable_metadata
 
         target = args.sstablemetadata
-        paths = (
-            sorted(
-                os.path.join(target, f)
-                for f in os.listdir(target)
-                if f.endswith("-Data.db")
-            )
-            if os.path.isdir(target)
-            else [target]
-        )
+        paths = _sstable_paths(target)
         for p in paths:
             for line in sstable_metadata(p):
                 print(line)
@@ -548,15 +520,7 @@ def main(argv: list[str] | None = None) -> int:
         from cassandra_pmem_spark.sources.sstable import dump_sstable
 
         target = args.sstabledump
-        paths = (
-            sorted(
-                os.path.join(target, f)
-                for f in os.listdir(target)
-                if f.endswith("-Data.db")
-            )
-            if os.path.isdir(target)
-            else [target]
-        )
+        paths = _sstable_paths(target)
         dump = []
         for p in paths:
             dump.extend(dump_sstable(p))

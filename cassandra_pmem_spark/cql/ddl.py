@@ -2545,7 +2545,8 @@ class CqlDatabase:
         tombstones at a fixed far-future instant), so the pin stays valid
         as the session clock advances."""
         from cassandra_pmem_spark.sources.sstable import (
-            read_dir_header,
+            data_files,
+            open_sstable,
             read_sstables,
         )
 
@@ -2558,7 +2559,7 @@ class CqlDatabase:
         # read_sstables took the schema from — never from column-name
         # prefixes (a regular column named 'keyword' must not count as a
         # key component)
-        _datas, hdr = read_dir_header(sst_dir)
+        hdr = open_sstable(data_files(sst_dir)[0]).header
         n_key = len(hdr["key_types"])
         n_ck = len(hdr["clustering_types"])
         positional = {f"key{i}" for i in range(n_key)} | {

@@ -11,9 +11,10 @@ Two tiers, mirroring the reference's two write paths:
 
 - `CqlWriteSession` (this module) — the *statement* path: parses CQL text,
   accumulates mutations/tombstones driver-side (statement workloads are
-  small by nature), and materializes visible state through the SAME
-  distributed operators the bulk path uses (upsert_lww_cells,
-  apply_row_tombstones). This is what runs the reference's
+  small by nature), and materializes visible state through the bulk
+  path's LWW merge (upsert_lww_cells); cell, row and range tombstones
+  then shadow the merged cells by timestamp in this module's own
+  column expressions. This is what runs the reference's
   InsertTest/UpdateTest/DeleteTest/TTLTest-style corpus.
 - bulk loading — operators/upsert.py directly over mutation-log
   DataFrames; fully distributed (the CqlBulkRecordWriter analog).

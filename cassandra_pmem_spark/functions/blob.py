@@ -28,11 +28,6 @@ def text_as_blob(col: Column | str) -> Column:
     return c.cast(T.BinaryType())
 
 
-def blob_as_text(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(T.StringType())
-
-
 def bigint_as_blob(col: Column | str) -> Column:
     """8-byte big-endian, matching LongType serialization in the reference."""
     c = F.col(col) if isinstance(col, str) else col

@@ -64,10 +64,6 @@ def int_div(a: Column, b: Column) -> Column:
     return (a / b).cast(T.LongType())
 
 
-def int_mod(a: Column, b: Column) -> Column:
-    return a % b
-
-
 def ts_plus_duration(ts: Column, months: int = 0, days: int = 0, micros: int = 0) -> Column:
     """timestamp ± duration (OperationFcts.java:218). CQL duration is a
     (months, days, nanos) triple (cql3/Duration.java:35-82); Spark intervals

@@ -58,11 +58,6 @@ def ts_plus_duration(ts: Column | str, dur: str) -> Column:
     return c + duration_interval(dur)
 
 
-def ts_minus_duration(ts: Column | str, dur: str) -> Column:
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return c - duration_interval(dur)
-
-
 def assert_comparable(dtype: str, context: str = "clustering/ordering") -> None:
     """Reject duration where a total order is required
     (Duration is not comparable — SURVEY §1.2 type-system note)."""

@@ -7,7 +7,7 @@ cql3/Json.java:34,:281; whole-row form Selectable.java:389
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
@@ -24,15 +24,3 @@ def from_json(col: Column | str, schema: DataType | str) -> Column:
     """fromjson(s) — JSON text → typed value (FromJsonFct.java:79)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.from_json(c, schema)
-
-
-def select_json(df: DataFrame) -> DataFrame:
-    """SELECT JSON * — one `[json]` text column per row (Json.java:34)."""
-    return df.select(F.to_json(F.struct(*df.columns)).alias("[json]"))
-
-
-def get_json_field(col: Column | str, path: str) -> Column:
-    """m = fromjson(props)['k'] convenience — JSON path extraction stays
-    JVM-side via get_json_object."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, f"$.{path}")

@@ -21,31 +21,12 @@ def current_date() -> Column:  # TimeFcts.java:42
     return F.current_date()
 
 
-def current_time() -> Column:  # TimeFcts.java:43 — nanos since midnight in CQL;
-    # we return micros-precision 'HH:mm:ss.SSSSSS' (Spark has no TimeType)
-    return F.date_format(F.current_timestamp(), "HH:mm:ss.SSSSSS")
-
-
-def now_uuid() -> Column:  # TimeFcts.java:39 now() — timeuuid; we pair uuid+ts shadow
-    return F.uuid()
-
-
 def to_date(col: Column | str) -> Column:  # TimeFcts.java:149
     return F.to_date(col)
 
 
 def to_timestamp(col: Column | str) -> Column:  # TimeFcts.java:170
     return F.to_timestamp(col)
-
-
-def to_unix_timestamp_millis(col: Column | str) -> Column:  # TimeFcts.java:191 (millis, like CQL)
-    return F.unix_millis(F.to_timestamp(col))
-
-
-def date_of(ts_shadow: Column | str) -> Column:  # TimeFcts.java:97 dateof(timeuuid)
-    """With timeuuids modeled as uuid+timestamp shadow, dateof() is identity
-    on the shadow column."""
-    return F.col(ts_shadow) if isinstance(ts_shadow, str) else ts_shadow
 
 
 def min_timeuuid_bound(ts: Column | str) -> Column:

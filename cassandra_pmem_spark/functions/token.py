@@ -167,7 +167,3 @@ def token_column(
 
             return murmur3_token_key_columns(list(exprs), list(eff))
     return F.xxhash64(*[F.col(c) for c in cols])
-
-
-def with_token(df, partition_key: Sequence[str] | str, name: str = "token"):
-    return df.withColumn(name, token_column(partition_key, df.schema))

@@ -58,10 +58,3 @@ def exact_double_sum(col: Column | str, scale: int = 6) -> Column:
     Identical results on Spark and DuckDB regardless of partitioning."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal(30,{scale})")).cast("double")
-
-
-def exact_double_avg(col: Column | str, scale: int = 6) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.sum(c.cast(f"decimal(30,{scale})")).cast("double") / F.count(c)
-    ).cast("double")

@@ -117,10 +117,6 @@ def map_put(m: Column | str, other: Column) -> Column:  # Maps.Putter:426 — RH
     )
 
 
-def map_set_key(m: Column | str, k, v) -> Column:  # Maps.SetterByKey:349
-    return map_put(m, F.create_map(F.lit(k), F.lit(v)))
-
-
 def map_remove_key(m: Column | str, k) -> Column:  # Maps.DiscarderByKey
     return F.map_filter(_c(m), lambda key, _: key != F.lit(k))
 

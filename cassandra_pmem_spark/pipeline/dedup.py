@@ -138,12 +138,6 @@ def simhash32_md5(col: Column | str) -> Column:
     return _simhash(col, 32, md5_hash32)
 
 
-def with_minhash(
-    df: DataFrame, text_col: str = "text", num_hashes: int = 32, shingle: int = 3
-) -> DataFrame:
-    return df.withColumn("minhash", minhash_signature(word_shingles(text_col, shingle), num_hashes))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -301,11 +301,6 @@ def _zigzag(resid: np.ndarray) -> np.ndarray:
     )
 
 
-def _rice_cost(resid: np.ndarray, p: int) -> int:
-    z = _zigzag(resid)
-    return int((z >> p).sum()) + len(z) * (1 + p)
-
-
 def _best_rice_z(resid: np.ndarray, z: np.ndarray) -> tuple[int, int]:
     """(best p, its cost) over the zigzagged residual — z computed ONCE
     by the caller (it was re-derived per candidate p before, a measured
@@ -327,12 +322,6 @@ def _best_rice_z(resid: np.ndarray, z: np.ndarray) -> tuple[int, int]:
     costs = (z[None, :] >> ps[:, None]).sum(axis=1) + len(z) * (1 + ps)
     j = int(np.argmin(costs))
     return int(ps[j]), int(costs[j])
-
-
-def _best_rice(resid: np.ndarray) -> int:
-    if not len(resid):
-        return 0
-    return _best_rice_z(resid, _zigzag(resid))[0]
 
 
 def _write_rice(w: "_BitWriter", resid: np.ndarray, partition_order: int, n: int,
@@ -362,13 +351,6 @@ def _write_rice(w: "_BitWriter", resid: np.ndarray, partition_order: int, n: int
             cols = term[:, None] + 1 + np.arange(p)
             bits[cols] = ((z[:, None] >> np.arange(p - 1, -1, -1)) & 1).astype(np.uint8)
         w.write_bits_array(bits)
-
-
-def _fixed_residual(x: np.ndarray, order: int) -> np.ndarray:
-    r = x.astype(np.int64)
-    for _ in range(order):
-        r = np.diff(r)
-    return r
 
 
 def _lpc_quantized(x: np.ndarray, order: int, precision: int = 15):

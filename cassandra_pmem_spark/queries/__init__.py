@@ -39,8 +39,8 @@ _PRIORITY: tuple[str, ...] = (
     "text_dsir_weights",
     "multimodal_image_dedup",
     "graph_pagerank_exact",
-    # -- (2) round-14 evidence. The sstable tier (read_dir_header, the
-    # import snapshot), the write path (one BATCH path, the session
+    # -- (2) round-14 evidence. The sstable tier (one opener and one
+    # ranged partition walker, the import snapshot), the write path (one BATCH path, the session
     # frame memo) and the token lane (native expression deleted) all
     # changed again since.
     "source_sstable_pruned_scan",

@@ -649,12 +649,12 @@ def source_sstable_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_pmem_spark.catalog import ClusteringColumn, TableMeta
     from cassandra_pmem_spark.sources.sstable import (
         TIMESTAMP_EPOCH,
-        CompressionInfo,
         bulk_write_sstables,
+        data_files,
+        open_sstable,
         plan_splits,
         plan_splits_pruned,
         read_sstables,
-        version_from_path,
     )
 
     out_dir = os.path.join(_SCRATCH, "sstable_pruned")
@@ -680,16 +680,9 @@ def source_sstable_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     split_bytes = 96 * 1024
     all_splits = sel_splits = tot_entries = sel_entries = 0
     empty_sstables = 0
-    for f in sorted(os.listdir(out_dir)):
-        if not f.endswith("-Data.db"):
-            continue
-        base = os.path.join(out_dir, f)[: -len("Data.db")]
-        with open(base + "Index.db", "rb") as fh:
-            idx = fh.read()
-        with open(base + "CompressionInfo.db", "rb") as fh:
-            dlen = CompressionInfo.parse(
-                fh.read(), version=version_from_path(base + "Data.db").name
-            ).data_length
+    for path in data_files(out_dir):
+        sst = open_sstable(path)
+        idx, dlen = sst.read("Index.db"), sst.data_length
         all_splits += len(plan_splits(idx, dlen, split_bytes))
         pruned, n, nsel = plan_splits_pruned(idx, dlen, split_bytes, rng)
         sel_splits += len(pruned)

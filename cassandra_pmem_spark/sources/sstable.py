@@ -2535,11 +2535,8 @@ def _ms_series_to_datetime(vals: list):
 DRIVER_PLAN_INDEX_BYTES = 32 * 1024 * 1024
 
 
-def read_dir_header(in_dir: str) -> tuple[list[str], dict]:
-    """A directory's sorted ``*-Data.db`` paths and the Statistics.db
-    serialization header of the first one. That ONE header is the schema
-    of every sstable in the directory (all sstables of a table share it),
-    for the reader and for the loader's key-shape check alike."""
+def data_files(in_dir: str) -> list[str]:
+    """A directory's sorted ``*-Data.db`` paths; raises when it has none."""
     datas = sorted(
         os.path.join(in_dir, f)
         for f in os.listdir(in_dir)
@@ -2547,11 +2544,52 @@ def read_dir_header(in_dir: str) -> tuple[list[str], dict]:
     )
     if not datas:
         raise ValueError(f"no *-Data.db under {in_dir!r}")
-    with open(datas[0][: -len("Data.db")] + "Statistics.db", "rb") as f:
-        _stats, hdr = parse_statistics(
-            f.read(), version=version_from_path(datas[0]).name
-        )
-    return datas, hdr
+    return datas
+
+
+@dataclass(frozen=True)
+class OpenSSTable:
+    """One sstable opened for reading: everything a reader or offline
+    tool needs before it touches Data.db. ``data_length`` is the
+    LOGICAL (uncompressed) Data.db length — CompressionInfo's
+    dataLength for compressed sstables, the file size otherwise."""
+
+    data_path: str
+    base: str  # component path prefix: base + "Index.db", ...
+    version: SSTableVersion
+    stats: EncodingStats
+    header: dict
+    schema: SSTableSchema
+    compression: "CompressionInfo | None"
+    data_length: int
+
+    def component(self, name: str) -> str:
+        return self.base + name
+
+    def read(self, name: str) -> bytes:
+        with open(self.base + name, "rb") as f:
+            return f.read()
+
+    def index_entries(self) -> list[tuple[bytes, int]]:
+        return read_index_entries(self.read("Index.db"))
+
+
+def open_sstable(data_path: str) -> OpenSSTable:
+    """The one sstable opener: Statistics.db (serialization header,
+    EncodingStats, STATS/VALIDATION/COMPACTION metadata) and, when
+    present, CompressionInfo.db — each parsed once per sstable."""
+    base = data_path[: -len("Data.db")]
+    ver = version_from_path(data_path)
+    with open(base + "Statistics.db", "rb") as f:
+        stats, hdr = parse_statistics(f.read(), version=ver.name)
+    info = None
+    if os.path.exists(base + "CompressionInfo.db"):
+        with open(base + "CompressionInfo.db", "rb") as f:
+            info = CompressionInfo.parse(f.read(), version=ver.name)
+    return OpenSSTable(
+        data_path, base, ver, stats, hdr, schema_from_header(hdr), info,
+        info.data_length if info else os.path.getsize(data_path),
+    )
 
 
 def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
@@ -2592,11 +2630,12 @@ def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    datas, hdr = read_dir_header(in_dir)
-    # reconstruct the schema; key/clustering NAMES are not part of the
-    # header (the reference resolves them from the table schema) — use
-    # positional names, overridable by the caller reading into a table
-    schema = schema_from_header(hdr)
+    # the first sstable's header is the schema of every sstable in the
+    # directory; key/clustering NAMES are not part of the header (the
+    # reference resolves them from the table schema) — use positional
+    # names, overridable by the caller reading into a table
+    datas = data_files(in_dir)
+    schema = open_sstable(datas[0]).schema
     if now_seconds is None:
         now_seconds = 2 ** 31 - 2
 
@@ -2612,22 +2651,11 @@ def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
 
     def plan_file(path: str) -> list:
         """One sstable's splits — shared by the driver-side (job-client
-        getSplits) and task-side planners."""
-        base = path[: -len("Data.db")]
-        with open(base + "Index.db", "rb") as f:
-            idx = f.read()
-        # split coordinates are UNCOMPRESSED positions: for a
-        # compressed sstable the logical length comes from
-        # CompressionInfo's dataLength, not the file size
-        if os.path.exists(base + "CompressionInfo.db"):
-            with open(base + "CompressionInfo.db", "rb") as f:
-                dlen = CompressionInfo.parse(
-                    f.read(), version=version_from_path(path).name
-                ).data_length
-        else:
-            dlen = os.path.getsize(path)
+        getSplits) and task-side planners. Split coordinates are
+        UNCOMPRESSED positions, bounded by the logical data length."""
+        sst = open_sstable(path)
         spans, _n, _sel = _plan_splits_with_index(
-            idx, dlen, split_bytes, token_range
+            sst.read("Index.db"), sst.data_length, split_bytes, token_range
         )
         if ck_bounds is not None:
             # the slice path needs each split's Index.db range
@@ -2702,6 +2730,7 @@ def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
     def parse(pdf_iter):
         import pandas as pd
 
+        opened: dict = {}  # each sstable is opened once per task
         for pdf in pdf_iter:
             acc: dict = {c: [] for c in cols}
             ts_set: set = set()
@@ -2709,37 +2738,29 @@ def read_sstables(spark, in_dir: str, split_bytes: int = 64 * 1024 * 1024,
                 pdf["path"], pdf["start"], pdf["end"],
                 pdf["ix_start"], pdf["ix_end"],
             ):
-                base = path[: -len("Data.db")]
-                with open(base + "Statistics.db", "rb") as f:
-                    stats, _h = parse_statistics(
-                        f.read(), version=version_from_path(path).name
-                    )
-                if (
-                    _h["key_types"] != schema.key_types
-                    or _h["clustering_types"] != schema.clustering_types
-                    or _h["regular"] != schema.regular
-                    or _h.get("statics", []) != schema.statics
-                ):
-                    raise ValueError(
-                        f"mixed sstable schemas under one directory: "
-                        f"{path} does not match the first sstable's header"
-                    )
+                sst = opened.get(path)
+                if sst is None:
+                    sst = opened[path] = open_sstable(path)
+                    if sst.schema != schema:
+                        raise ValueError(
+                            f"mixed sstable schemas under one directory: "
+                            f"{path} does not match the first sstable's "
+                            f"header"
+                        )
                 start, end = int(start), int(end)
                 # ranged I/O: a task reads only ITS split's bytes (and
                 # for compressed sstables only the overlapping chunks)
-                buf, base_off = read_uncompressed_file_range(
-                    path, start, end
-                )
+                buf, base_off = read_uncompressed_file_range(sst, start, end)
                 if ck_bounds is not None:
                     got, ts_cols = _sliced_split_columns(
-                        base, buf, base_off, start, end,
-                        int(ix0), int(ix1), schema, stats,
+                        sst.base, buf, base_off, start, end,
+                        int(ix0), int(ix1), schema, sst.stats,
                         now_seconds, ck_bounds, _trace_path,
                     )
                 else:
                     got, ts_cols = read_visible_columns(
                         buf, start - base_off, end - base_off, schema,
-                        stats, now_seconds,
+                        sst.stats, now_seconds,
                     )
                 ts_set.update(ts_cols)
                 for c in cols:
@@ -2894,35 +2915,27 @@ def sstable_point_read(sst_dir: str, key_values: list,
         _trace.setdefault("index_blocks_read", 0)
         _trace.setdefault("index_blocks_total", 0)
     out: list[dict] = []
-    for f in sorted(os.listdir(sst_dir)):
-        if not f.endswith("-Data.db"):
-            continue
-        base = os.path.join(sst_dir, f[: -len("Data.db")])
-        ver = version_from_path(f)
-        with open(base + "Statistics.db", "rb") as fh:
-            stats, hdr = parse_statistics(fh.read(), version=ver.name)
-        schema = schema_from_header(hdr)
+    for path in data_files(sst_dir):
+        sst = open_sstable(path)
+        schema = sst.schema
         key = schema.key_bytes(key_values)
-        filter_path = base + "Filter.db"
-        if os.path.exists(filter_path):
-            with open(filter_path, "rb") as fh:
-                bf = BloomFilter.deserialize(
-                    fh.read(), old_format=ver.has_old_bf_format
-                )
+        if os.path.exists(sst.component("Filter.db")):
+            bf = BloomFilter.deserialize(
+                sst.read("Filter.db"),
+                old_format=sst.version.has_old_bf_format,
+            )
             if not bf.is_present(key):
                 if _trace is not None:
                     _trace["bloom_skips"] += 1
                 continue  # definite miss — Data.db never touched
-        with open(base + "Index.db", "rb") as fh:
-            idx_blob = fh.read()
+        idx_blob = sst.read("Index.db")
         probe_tk = (murmur3_token_bytes_py(key), key)
         start_off = 0
-        if os.path.exists(base + "Summary.db"):
+        if os.path.exists(sst.component("Summary.db")):
             # index summary seek: start the Index.db scan at the
             # greatest sampled key <= probe (IndexSummary binary search
             # direction); first/last keys short-circuit out-of-range
-            with open(base + "Summary.db", "rb") as fh:
-                summ = read_summary(fh.read())
+            summ = read_summary(sst.read("Summary.db"))
             lo = (murmur3_token_bytes_py(summ["first"]), summ["first"])
             hi = (murmur3_token_bytes_py(summ["last"]), summ["last"])
             if probe_tk < lo or probe_tk > hi:
@@ -2959,18 +2972,13 @@ def sstable_point_read(sst_dir: str, key_values: list,
             continue  # bloom false positive
         if bound is None:
             # last partition in the sstable: bound = logical data length
-            if os.path.exists(base + "CompressionInfo.db"):
-                with open(base + "CompressionInfo.db", "rb") as fh:
-                    bound = CompressionInfo.parse(
-                        fh.read(), version=ver.name
-                    ).data_length
-            else:
-                bound = os.path.getsize(base + "Data.db")
-        def read_range(s, e, _b=base):
-            return read_uncompressed_file_range(_b + "Data.db", s, e)
+            bound = sst.data_length
+
+        def read_range(s, e, _sst=sst):
+            return read_uncompressed_file_range(_sst, s, e)
 
         part = _read_partition_sliced(
-            read_range, pos, bound, promoted_blob, schema, stats,
+            read_range, pos, bound, promoted_blob, schema, sst.stats,
             ck_bounds, _trace,
         )
         rows = visible_rows(part, schema, now_seconds)
@@ -3229,27 +3237,21 @@ def dump_sstable(data_path: str, now_seconds: int | None = None) -> list[dict]:
     expired), row deletion_info, and cells ({name, value, [tstamp],
     [ttl, expires_at], [deletion_info]} — a cell's tstamp is omitted
     when it equals the row liveness timestamp, like the tool).
-    Decompresses transparently when CompressionInfo.db is present."""
+    Decompresses transparently when CompressionInfo.db is present; reads
+    Data.db in bounded windows (_iter_partition_ranges)."""
     if now_seconds is None:
         import time as _time
 
         now_seconds = int(_time.time())
-    base = data_path[: -len("Data.db")]
-    _ver = version_from_path(data_path)
-    with open(base + "Statistics.db", "rb") as fh:
-        stats, hdr = parse_statistics(fh.read(), version=_ver.name)
-    schema = schema_from_header(hdr)
-    with open(data_path, "rb") as fh:
-        blob = fh.read()
-    if os.path.exists(base + "CompressionInfo.db"):
-        with open(base + "CompressionInfo.db", "rb") as fh:
-            cinfo = CompressionInfo.parse(fh.read(), version=_ver.name)
-        blob, _base = decompress_range(blob, cinfo, 0, cinfo.data_length)
-    r = ByteReader(blob)
+    sst = open_sstable(data_path)
+    schema = sst.schema
     out = []
-    while r.remaining():
-        position = r.pos
-        part = read_partition(r, schema, stats)
+    for _k, _ikey, position, _pend, buf, bbase in _iter_partition_ranges(
+        sst, sst.index_entries()
+    ):
+        part = read_partition(
+            ByteReader(buf, position - bbase), schema, sst.stats
+        )
         pj: dict = {
             "partition": {
                 "key": [str(v) for v in part.key_values],
@@ -3458,23 +3460,19 @@ def read_summary(blob: bytes) -> dict:
     }
 
 
-def read_uncompressed_file_range(data_path: str, start: int, end: int
+def read_uncompressed_file_range(sst: OpenSSTable, start: int, end: int
                                  ) -> tuple[bytes, int]:
     """[start, end) of the LOGICAL (uncompressed) Data.db stream read
     with ranged file I/O — a task reads only ITS split's bytes (plus,
     for compressed sstables, the chunk remainder at each edge), never
     the whole file. Returns (buffer, uncompressed offset of buffer[0]).
     """
-    base = data_path[: -len("Data.db")]
-    info_path = base + "CompressionInfo.db"
-    if not os.path.exists(info_path):
+    data_path = sst.data_path
+    info = sst.compression
+    if info is None:
         with open(data_path, "rb") as f:
             f.seek(start)
             return f.read(max(0, end - start)), start
-    with open(info_path, "rb") as f:
-        info = CompressionInfo.parse(
-            f.read(), version=version_from_path(data_path).name
-        )
     end = min(end, info.data_length)
     if start >= end:
         return b"", start
@@ -3508,41 +3506,34 @@ def read_uncompressed_file_range(data_path: str, start: int, end: int
     return buf, first * info.chunk_length + rel_base
 
 
-def _logical_data_length(data_path: str) -> int:
-    """UNCOMPRESSED Data.db stream length (CompressionInfo dataLength
-    for compressed sstables, file size otherwise)."""
-    info_path = data_path[: -len("Data.db")] + "CompressionInfo.db"
-    if os.path.exists(info_path):
-        with open(info_path, "rb") as fh:
-            return CompressionInfo.parse(
-                fh.read(), version=version_from_path(data_path).name
-            ).data_length
-    return os.path.getsize(data_path)
+# how much of Data.db one walker read spans (plus the partition that
+# crosses the mark): offline tools hold one window, never the file
+_WALK_WINDOW_BYTES = 8 << 20
 
 
-def _iter_partition_ranges(data_path: str,
-                           index_entries: list[tuple[bytes, int]],
-                           dlen: int,
-                           window_bytes: int = 8 << 20):
-    """Walk a Data.db partition-by-partition with RANGED file I/O:
-    consecutive partitions are batched into ~window_bytes reads
-    (read_uncompressed_file_range, which also CRC-verifies each
-    overlapped chunk for compressed sstables), so offline tools hold
-    one window — never the whole file — in memory. Yields
-    (i, index_key, start, end, buffer, buffer_base_offset) per
-    partition, where [start, end) are uncompressed Data.db bounds from
-    the Index.db entries (the Verifier/Scrubber seek discipline,
-    Verifier.java:225-299, Scrubber.java:150-260)."""
+def _iter_partition_ranges(sst: OpenSSTable,
+                           index_entries: list[tuple[bytes, int]]):
+    """The one partition walker: Data.db partition-by-partition with
+    RANGED file I/O. Consecutive partitions are batched into
+    ~_WALK_WINDOW_BYTES reads (read_uncompressed_file_range, which also
+    CRC-verifies each overlapped chunk for compressed sstables), so
+    readers and offline tools hold one window — never the whole file —
+    in memory. Yields (i, index_key, start, end, buffer,
+    buffer_base_offset) per partition, where [start, end) are
+    uncompressed Data.db bounds from the Index.db entries (the
+    Verifier/Scrubber seek discipline, Verifier.java:225-299,
+    Scrubber.java:150-260)."""
+    dlen = sst.data_length
     n = len(index_entries)
     i = 0
     while i < n:
         lo = index_entries[i][1]
         j = i
         end = dlen if j == n - 1 else index_entries[j + 1][1]
-        while j + 1 < n and end - lo < window_bytes:
+        while j + 1 < n and end - lo < _WALK_WINDOW_BYTES:
             j += 1
             end = dlen if j == n - 1 else index_entries[j + 1][1]
-        buf, base = read_uncompressed_file_range(data_path, lo, end)
+        buf, base = read_uncompressed_file_range(sst, lo, end)
         for k in range(i, j + 1):
             pstart = index_entries[k][1]
             pend = dlen if k == n - 1 else index_entries[k + 1][1]
@@ -3800,7 +3791,6 @@ def verify_sstable(data_path: str, extended: bool = False,
     """
     from cassandra_pmem_spark.functions.murmur3 import murmur3_token_bytes_py
 
-    base = data_path[: -len("Data.db")]
     ver = version_from_path(data_path)
     out = [f"Verifying {os.path.basename(data_path)} "
            f"({os.path.getsize(data_path)} bytes)"]
@@ -3811,40 +3801,36 @@ def verify_sstable(data_path: str, extended: bool = False,
         )
     out.append("Deserializing sstable metadata")
     try:
-        with open(base + "Statistics.db", "rb") as fh:
-            stats, hdr = parse_statistics(fh.read(), version=ver.name)
+        sst = open_sstable(data_path)
     except Exception as e:
         raise CorruptSSTableError(f"Statistics.db: {e}") from e
-    part_cls = hdr.get("partitioner",
-                       "org.apache.cassandra.dht.Murmur3Partitioner")
+    part_cls = sst.header.get("partitioner",
+                              "org.apache.cassandra.dht.Murmur3Partitioner")
     if part_cls != "org.apache.cassandra.dht.Murmur3Partitioner":
         raise CorruptSSTableError("Partitioner does not match validation metadata")
-    schema = schema_from_header(hdr)
+    schema = sst.schema
     out.append("Deserializing index")
     try:
-        with open(base + "Index.db", "rb") as fh:
-            index_entries = read_index_entries(fh.read())
+        index_entries = sst.index_entries()
     except Exception as e:
         raise CorruptSSTableError(f"Index.db: {e}") from e
-    if os.path.exists(base + "Summary.db"):
+    if os.path.exists(sst.component("Summary.db")):
         try:
-            with open(base + "Summary.db", "rb") as fh:
-                read_summary(fh.read())
+            read_summary(sst.read("Summary.db"))
             out.append("Deserializing index summary")
         except Exception:
             out.append(
                 "Index summary is corrupt - if it is removed it will get "
                 "rebuilt on startup"
             )
-    if os.path.exists(base + "Filter.db"):
+    if os.path.exists(sst.component("Filter.db")):
         out.append("Deserializing bloom filter")
         try:
-            with open(base + "Filter.db", "rb") as fh:
-                BloomFilter.deserialize(fh.read(),
-                                        old_format=ver.has_old_bf_format)
+            BloomFilter.deserialize(sst.read("Filter.db"),
+                                    old_format=ver.has_old_bf_format)
         except Exception as e:
             raise CorruptSSTableError(f"Filter.db: {e}") from e
-    digest_path = base + "Digest.crc32"
+    digest_path = sst.component("Digest.crc32")
     if os.path.exists(digest_path):
         out.append("Checking computed hash")
         with open(digest_path) as fh:
@@ -3868,8 +3854,7 @@ def verify_sstable(data_path: str, extended: bool = False,
     out.append("Extended Verify requested, proceeding to inspect values")
     if index_entries and index_entries[0][1] != 0:
         raise CorruptSSTableError("first row position from index is not 0")
-    dlen = _logical_data_length(data_path)
-    if not index_entries and dlen > 0:
+    if not index_entries and sst.data_length > 0:
         raise CorruptSSTableError(
             "data has more partitions than the index (0)"
         )
@@ -3880,11 +3865,11 @@ def verify_sstable(data_path: str, extended: bool = False,
     prev_tk = None
     n_parts = 0
     try:
-        ranges = _iter_partition_ranges(data_path, index_entries, dlen)
+        ranges = _iter_partition_ranges(sst, index_entries)
         for k, ikey, pstart, pend, buf, bbase in ranges:
             rr = ByteReader(buf, pstart - bbase)
             try:
-                part = read_partition(rr, schema, stats)
+                part = read_partition(rr, schema, sst.stats)
             except Exception as e:
                 raise CorruptSSTableError(
                     f"partition at {pstart} fails to decode: {e}"
@@ -3922,13 +3907,8 @@ def verify_sstable(data_path: str, extended: bool = False,
 def verify_sstables(sst_dir: str, extended: bool = False) -> list[str]:
     """Verify every sstable under a directory; lines from each."""
     out: list[str] = []
-    found = False
-    for f in sorted(os.listdir(sst_dir)):
-        if f.endswith("-Data.db"):
-            found = True
-            out += verify_sstable(os.path.join(sst_dir, f), extended=extended)
-    if not found:
-        raise ValueError(f"no *-Data.db under {sst_dir!r}")
+    for path in data_files(sst_dir):
+        out += verify_sstable(path, extended=extended)
     return out
 
 
@@ -3941,34 +3921,23 @@ def upgrade_sstable(data_path: str, out_dir: str,
     descriptor.version = current). Content-preserving: partitions,
     rows, cells (timestamps/TTLs/tombstones), static rows and range
     tombstone markers all pass through the normal read/write codecs;
-    compression presence is kept. Returns the writer manifest."""
-    base = data_path[: -len("Data.db")]
-    ver = version_from_path(data_path)
-    with open(base + "Statistics.db", "rb") as fh:
-        stats, hdr = parse_statistics(fh.read(), version=ver.name)
-    schema = schema_from_header(hdr)
-    if os.path.exists(base + "CompressionInfo.db"):
-        with open(base + "CompressionInfo.db", "rb") as fh:
-            info = CompressionInfo.parse(fh.read(), version=ver.name)
-        with open(data_path, "rb") as fh:
-            blob, _off = decompress_range(fh.read(), info, 0, info.data_length)
-        compression = True
-        chunk_length = info.chunk_length
-    else:
-        with open(data_path, "rb") as fh:
-            blob = fh.read()
-        compression = False
-        chunk_length = None
-    r = ByteReader(blob)
-    parts = []
-    while r.remaining():
-        parts.append(read_partition(r, schema, stats))
+    compression presence is kept. Data.db is read in bounded windows
+    (_iter_partition_ranges). Returns the writer manifest."""
+    sst = open_sstable(data_path)
+    info = sst.compression
+    parts = [
+        read_partition(ByteReader(buf, pstart - bbase), sst.schema, sst.stats)
+        for _k, _key, pstart, _pend, buf, bbase in _iter_partition_ranges(
+            sst, sst.index_entries()
+        )
+    ]
     if generation is None:
         # old filename: <version>-<generation>-big-Data.db
         generation = int(os.path.basename(data_path).split("-")[1])
     return write_sstable(
-        out_dir, generation, schema, parts,
-        compression=compression, chunk_length=chunk_length,
+        out_dir, generation, sst.schema, parts,
+        compression=info is not None,
+        chunk_length=info.chunk_length if info else None,
         version=VERSION,
     )
 
@@ -3977,14 +3946,11 @@ def upgrade_sstables(in_dir: str, out_dir: str) -> list[dict]:
     """Upgrade every non-current sstable under a directory into
     out_dir (current-version sstables are skipped, like the tool's
     default; pass their paths to upgrade_sstable directly to force)."""
-    out: list[dict] = []
-    for f in sorted(os.listdir(in_dir)):
-        if not f.endswith("-Data.db"):
-            continue
-        if version_from_path(f).name == VERSION:
-            continue
-        out.append(upgrade_sstable(os.path.join(in_dir, f), out_dir))
-    return out
+    return [
+        upgrade_sstable(path, out_dir)
+        for path in data_files(in_dir)
+        if version_from_path(path).name != VERSION
+    ]
 
 
 def scrub_sstable(data_path: str, out_dir: str,
@@ -3998,39 +3964,26 @@ def scrub_sstable(data_path: str, out_dir: str,
     of aborting. Survivors are re-written at the current version in
     token order. Returns the writer manifest plus
     ``good_partitions`` / ``bad_partitions`` counts."""
-    base = data_path[: -len("Data.db")]
-    ver = version_from_path(data_path)
-    with open(base + "Statistics.db", "rb") as fh:
-        stats, hdr = parse_statistics(fh.read(), version=ver.name)
-    schema = schema_from_header(hdr)
-    with open(base + "Index.db", "rb") as fh:
-        index_entries = read_index_entries(fh.read())
-    if os.path.exists(base + "CompressionInfo.db"):
-        with open(base + "CompressionInfo.db", "rb") as fh:
-            info = CompressionInfo.parse(fh.read(), version=ver.name)
-        compression = True
-        chunk_length = info.chunk_length
-    else:
-        compression = False
-        chunk_length = None
+    sst = open_sstable(data_path)
+    schema, info = sst.schema, sst.compression
+    index_entries = sst.index_entries()
     good: list[PartitionData] = []
     bad = 0
     # ranged walk over index-entry bounds (never the whole Data.db in
     # memory); a chunk-CRC failure inside a window skips all of that
     # window's partitions — Scrubber's seek-to-next-index discipline
-    dlen = _logical_data_length(data_path)
     i = 0
     n = len(index_entries)
     while i < n:
         try:
             consumed = i
             for k, ikey, pstart, _pend, buf, bbase in _iter_partition_ranges(
-                data_path, index_entries[i:], dlen
+                sst, index_entries[i:]
             ):
                 consumed = i + k + 1
                 try:
                     part = read_partition(
-                        ByteReader(buf, pstart - bbase), schema, stats
+                        ByteReader(buf, pstart - bbase), schema, sst.stats
                     )
                     if schema.key_bytes(part.key_values) != ikey:
                         raise ValueError("index/data key mismatch")
@@ -4047,7 +4000,8 @@ def scrub_sstable(data_path: str, out_dir: str,
         generation = int(os.path.basename(data_path).split("-")[1])
     manifest = write_sstable(
         out_dir, generation, schema, good,
-        compression=compression, chunk_length=chunk_length,
+        compression=info is not None,
+        chunk_length=info.chunk_length if info else None,
         version=VERSION,
     )
     manifest["good_partitions"] = len(good)
@@ -4071,26 +4025,13 @@ def split_sstable(data_path: str, out_dir: str,
     unique; a naive gen0+i here collided). An sstable already under
     the cap is left alone and reported as skipped (the
     isSSTableLargerEnough gate, :181-185). Returns writer manifests
-    (or [] when skipped)."""
-    base = data_path[: -len("Data.db")]
-    ver = version_from_path(data_path)
+    (or [] when skipped). Data.db is read in bounded windows
+    (_iter_partition_ranges), so memory holds one window plus the
+    output group being filled."""
     if os.path.getsize(data_path) < size_mb * 1024 * 1024:
         return []  # "skipping (under the size limit)"
-    with open(base + "Statistics.db", "rb") as fh:
-        stats, hdr = parse_statistics(fh.read(), version=ver.name)
-    schema = schema_from_header(hdr)
-    if os.path.exists(base + "CompressionInfo.db"):
-        with open(base + "CompressionInfo.db", "rb") as fh:
-            info = CompressionInfo.parse(fh.read(), version=ver.name)
-        with open(data_path, "rb") as fh:
-            blob, _off = decompress_range(fh.read(), info, 0, info.data_length)
-        compression = True
-        chunk_length = info.chunk_length
-    else:
-        with open(data_path, "rb") as fh:
-            blob = fh.read()
-        compression = False
-        chunk_length = None
+    sst = open_sstable(data_path)
+    schema, info = sst.schema, sst.compression
     gen0 = int(os.path.basename(data_path).split("-")[1])
     cap = size_mb * 1024 * 1024
     manifests: list[dict] = []
@@ -4102,7 +4043,8 @@ def split_sstable(data_path: str, out_dir: str,
             try:
                 m = write_sstable(
                     out_dir, next_gen, schema, group,
-                    compression=compression, chunk_length=chunk_length,
+                    compression=info is not None,
+                    chunk_length=info.chunk_length if info else None,
                     version=VERSION, exclusive=True,
                 )
                 next_gen += 1
@@ -4110,13 +4052,14 @@ def split_sstable(data_path: str, out_dir: str,
             except FileExistsError:
                 next_gen += 1  # generation taken by another source/task
 
-    r = ByteReader(blob)
     group: list[PartitionData] = []
     group_bytes = 0
-    while r.remaining():
-        start = r.pos
-        part = read_partition(r, schema, stats)
-        size = r.pos - start
+    for _k, _key, pstart, _pend, buf, bbase in _iter_partition_ranges(
+        sst, sst.index_entries()
+    ):
+        r = ByteReader(buf, pstart - bbase)
+        part = read_partition(r, schema, sst.stats)
+        size = r.pos - (pstart - bbase)
         if group and group_bytes + size > cap:
             manifests.append(write_group(group))
             group, group_bytes = [], 0
@@ -4211,14 +4154,8 @@ def sstable_expired_blockers(sst_dir: str, gc_grace_seconds: int,
         int(_time.time()) if now_seconds is None else now_seconds
     ) - gc_grace_seconds
     infos = []
-    for f in sorted(os.listdir(sst_dir)):
-        if not f.endswith("-Data.db"):
-            continue
-        path = os.path.join(sst_dir, f)
-        ver = version_from_path(path)
-        with open(path[: -len("Data.db")] + "Statistics.db", "rb") as fh:
-            _s, hdr = parse_statistics(fh.read(), version=ver.name)
-        sm = hdr["stats_metadata"]
+    for path in data_files(sst_dir):
+        sm = open_sstable(path).header["stats_metadata"]
         infos.append({
             "path": path,
             "min_ts": sm["min_timestamp"],
@@ -4257,24 +4194,15 @@ def offline_relevel(sst_dir: str, dry_run: bool = False) -> dict:
     )
 
     ssts = []
-    for f in sorted(os.listdir(sst_dir)):
-        if not f.endswith("-Data.db"):
-            continue
-        path = os.path.join(sst_dir, f)
-        base = path[: -len("Data.db")]
-        ver = version_from_path(path)
-        with open(base + "Summary.db", "rb") as fh:
-            summ = read_summary(fh.read())
-        with open(base + "Statistics.db", "rb") as fh:
-            _s, hdr = parse_statistics(fh.read(), version=ver.name)
+    for path in data_files(sst_dir):
+        sst = open_sstable(path)
+        summ = read_summary(sst.read("Summary.db"))
         ssts.append({
             "path": path,
             "first": (murmur3_token_bytes_py(summ["first"]), summ["first"]),
             "last": (murmur3_token_bytes_py(summ["last"]), summ["last"]),
-            "level": hdr["stats_metadata"]["sstable_level"],
+            "level": sst.header["stats_metadata"]["sstable_level"],
         })
-    if not ssts:
-        raise ValueError(f"no *-Data.db under {sst_dir!r}")
     # Relevel's constructor: ceil(log10(n)) — 0 for a single sstable,
     # which then overflows it to L0 exactly like the reference
     approx_expected = int(_m.ceil(_m.log10(len(ssts))))
@@ -4341,13 +4269,7 @@ def distributed_sstable_maintenance(spark, in_dir: str, tool: str,
         raise ValueError(f"unknown sstable tool {tool!r}")
     if tool not in in_place and not out_dir:
         raise ValueError(f"tool {tool!r} needs out_dir")
-    datas = sorted(
-        os.path.join(in_dir, f)
-        for f in os.listdir(in_dir)
-        if f.endswith("-Data.db")
-    )
-    if not datas:
-        raise ValueError(f"no *-Data.db under {in_dir!r}")
+    datas = data_files(in_dir)
     files_df = spark.createDataFrame(
         [(p,) for p in datas],
         T.StructType([T.StructField("path", T.StringType())]),
@@ -4413,11 +4335,9 @@ def sstable_metadata(data_path: str) -> list[str]:
     deletion times, TTLs, compression ratio, level, repairedAt,
     clustering bounds, totals), COMPACTION (the HLL cardinality
     estimate — :409), and the EncodingStats epoch deltas."""
-    base = data_path[: -len("Data.db")]
-    _ver = version_from_path(data_path)
-    with open(base + "Statistics.db", "rb") as fh:
-        stats, hdr = parse_statistics(fh.read(), version=_ver.name)
-    lines = [f"SSTable: {base.rstrip('-')}"]
+    sst = open_sstable(data_path)
+    stats, hdr = sst.stats, sst.header
+    lines = [f"SSTable: {sst.base.rstrip('-')}"]
     lines.append(
         "Partitioner: "
         + hdr.get("partitioner", "org.apache.cassandra.dht.Murmur3Partitioner")
@@ -4435,11 +4355,8 @@ def sstable_metadata(data_path: str) -> list[str]:
         lines.append(
             f"SSTable max local deletion time: {sm['max_local_deletion_time']}"
         )
-        info_path = base + "CompressionInfo.db"
-        if os.path.exists(info_path):
-            with open(info_path, "rb") as fh:
-                info = CompressionInfo.parse(fh.read(), version=_ver.name)
-            lines.append(f"Compressor: {info.compressor}")
+        if sst.compression is not None:
+            lines.append(f"Compressor: {sst.compression.compressor}")
             lines.append(f"Compression ratio: {sm['compression_ratio']}")
         else:
             lines.append("Compressor: -")

@@ -583,6 +583,10 @@ class TestCli:
         assert got[1].lower().startswith("begin batch")
         assert got[1].lower().endswith("apply batch")
         assert got[2].startswith("SELECT")
+        # a ';' inside a string literal never splits a statement
+        assert split_statements(
+            "INSERT INTO t (k, v) VALUES (1, 'a;b'); SELECT * FROM t"
+        ) == ["INSERT INTO t (k, v) VALUES (1, 'a;b')", "SELECT * FROM t"]
 
     def test_cli_routes_db_and_facade(self, spark, capsys):
         from cassandra_pmem_spark.__main__ import run_statement

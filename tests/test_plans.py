@@ -1132,3 +1132,44 @@ def test_engine_reads_only_deployment_env_vars():
         for name in _ENV_READ.findall(path.read_text())
     }
     assert names == DEPLOYMENT_ENV_VARS
+
+
+def test_sstable_metadata_parsed_only_by_the_opener():
+    """Statistics.db and CompressionInfo.db are parsed in one place, the
+    sstable opener; the metadata mutator may parse the raw Statistics.db
+    bytes it patches. Every other reader and tool goes through
+    open_sstable."""
+    import ast
+    from pathlib import Path
+
+    import cassandra_pmem_spark
+
+    root = Path(cassandra_pmem_spark.__file__).parent
+    calls = set()
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.stack = rel, ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            callee = ast.unparse(node.func)
+            for name in ("parse_statistics", "CompressionInfo.parse"):
+                if callee == name or callee.endswith("." + name):
+                    calls.add((self.rel, self.stack[-1], name))
+            self.generic_visit(node)
+
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root).as_posix()
+        Calls(rel).visit(ast.parse(path.read_text()))
+    assert calls == {
+        ("sources/sstable.py", "open_sstable", "parse_statistics"),
+        ("sources/sstable.py", "open_sstable", "CompressionInfo.parse"),
+        ("sources/sstable.py", "mutate_sstable_metadata", "parse_statistics"),
+    }

@@ -2891,6 +2891,97 @@ class TestSplit:
         ) == []
 
 
+class TestBoundedWalk:
+    """dump, upgrade and split read Data.db through the one ranged
+    partition walker: with the walker window shrunk to a few KB, no
+    single Data.db read of a compressed multi-chunk sstable exceeds the
+    chunks of one window plus one chunk at each edge — never the whole
+    file — and every output is the one the default window gives."""
+
+    CHUNK = 1024
+    WINDOW = 4 * CHUNK
+
+    def _sstable(self, tmp_path) -> str:
+        import hashlib
+
+        parts = TestVersionInterop()._parts(128)
+        for p in parts:
+            k = p.key_values[0]
+            # distinct hex digests: LZ4 barely shrinks them, so the
+            # file spans many windows
+            p.rows[0].cells["v"] = CellValue(
+                value="".join(
+                    hashlib.sha256(f"{k}-{i}".encode()).hexdigest()
+                    for i in range(4)
+                ),
+                timestamp=p.rows[0].cells["v"].timestamp,
+            )
+        write_sstable(str(tmp_path / "old"), 5, _schema(), parts,
+                      version="md", compression=True,
+                      chunk_length=self.CHUNK)
+        return str(tmp_path / "old" / "md-5-big-Data.db")
+
+    @staticmethod
+    def _files(manifests) -> list:
+        return [open(m["data_path"], "rb").read() for m in manifests]
+
+    def test_tools_read_one_window_at_a_time(self, tmp_path, monkeypatch):
+        import builtins
+        import os as _os
+
+        from cassandra_pmem_spark.sources import sstable as mod
+
+        dp = self._sstable(tmp_path)
+        info = mod.open_sstable(dp).compression
+        size = _os.path.getsize(dp)
+        ends = info.offsets[1:] + [size]
+        max_chunk = max(e - o for o, e in zip(info.offsets, ends))
+        bound = (self.WINDOW // self.CHUNK + 2) * max_chunk
+        assert len(info.offsets) > 30 and size > 4 * bound
+
+        def run(tag):
+            out = tmp_path / tag
+            return (
+                mod.dump_sstable(dp, now_seconds=DELETION_TIME_EPOCH),
+                self._files([mod.upgrade_sstable(dp, str(out / "up"))]),
+                self._files(mod.split_sstable(dp, str(out / "split"),
+                                              size_mb=0.01)),
+            )
+
+        want = run("default")
+        reads: list[int] = []
+
+        class Counting:
+            def __init__(self, fh):
+                self._fh = fh
+
+            def read(self, n=-1):
+                b = self._fh.read(n)
+                reads.append(len(b))
+                return b
+
+            def __getattr__(self, name):
+                return getattr(self._fh, name)
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                return self._fh.__exit__(*exc)
+
+        def counting_open(path, mode="r", *a, **kw):
+            fh = builtins.open(path, mode, *a, **kw)
+            return Counting(fh) if str(path) == dp else fh
+
+        monkeypatch.setattr(mod, "_WALK_WINDOW_BYTES", self.WINDOW)
+        monkeypatch.setattr(mod, "open", counting_open, raising=False)
+        got = run("small")
+        assert got == want
+        assert len(got[2]) >= 2
+        assert len(reads) > 3 * 3  # several windows per tool
+        assert max(reads) <= bound
+
+
 class TestDistributedMaintenance:
     """The reference's offline tools run one JVM on one node; the
     engine maps them one-Spark-task-per-sstable (each sstable is
