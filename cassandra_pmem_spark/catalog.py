@@ -58,12 +58,22 @@ class TableMeta:
     partition_key: tuple[str, ...]
     clustering: tuple[ClusteringColumn, ...] = ()
     static_columns: tuple[str, ...] = ()
-    # CQL type names Spark's schema erases but token() must see:
-    # uuid/timeuuid/inet columns store as StringType yet hash their
-    # marshal wire forms (UUIDType/TimeUUIDType 16-byte msb||lsb,
-    # InetAddressType address bytes) — (column, cql_type_name) pairs,
-    # recorded by the DDL and consumed by CqlTable.where_token.
-    cql_key_types: tuple[tuple[str, str], ...] = ()
+    # Each column's declared CQL type text, as its statement wrote it
+    # (lower-cased, ", " after commas) — (column, text) pairs, read
+    # through cql_type(). The one record of what Spark's types erase:
+    # the uuid/timeuuid/inet wire forms token() hashes (UUIDType/
+    # TimeUUIDType 16-byte msb||lsb, InetAddressType address bytes), set
+    # vs list, frozen, counter and user type names (cql/ddl.type_facts
+    # derives those). Empty for tables no statement declared.
+    cql_types: tuple[tuple[str, str], ...] = ()
+
+    def cql_type(self, col: str) -> str | None:
+        """`col`'s declared CQL type text; None when no statement
+        declared it (the Spark type is then all there is)."""
+        for c, t in self.cql_types:
+            if c == col:
+                return t
+        return None
 
     @property
     def primary_key(self) -> tuple[str, ...]:

@@ -21,6 +21,8 @@ point that runs every statement kind the engine supports.
 
 from __future__ import annotations
 
+import dataclasses
+import re
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -59,6 +61,45 @@ _NATIVE_TYPES: dict[str, T.DataType] = {
     "time": T.LongType(),
     "duration": T.StringType(),
 }
+
+
+@dataclass(frozen=True)
+class TypeFacts:
+    """What a declared CQL type says that its Spark type erases (set<t>
+    and list<t> are both ArrayType, frozen<X> stores like X, counter is a
+    long, a user type is a bare struct) — the facts the reference's
+    mutation validation and schema dependencies read (Lists/Sets/Maps
+    operation dispatch, FrozenCollectionsTest, Operation.java:169
+    counter setter rejection, Schema type references)."""
+
+    # top-level 'list' | 'set' | 'map' | 'udt' | None, under any frozen<>
+    kind: str | None
+    frozen: bool
+    counter: bool
+    udt: str | None  # the top-level user type's name
+    refs: frozenset  # every user type the text names, nested ones too
+
+
+_TYPE_WORD = re.compile(r"[^\s<>,]+")
+_GENERIC_TYPES = frozenset(("frozen", "list", "set", "map", "tuple"))
+
+
+def type_facts(text: str, types) -> TypeFacts:
+    """Derive the Spark-erased facts from one declared type text (a
+    table column's TableMeta.cql_type, a user type field's
+    registry.type_field_text); `types` holds the user type names. A
+    column of a user type is multi-cell unless frozen<...>
+    (db/marshal/UserType.java:52-63 isMultiCell; CASSANDRA-7423)."""
+    words = _TYPE_WORD.findall(text)
+    frozen = bool(words) and words[0] == "frozen"
+    head = next((w for w in words if w != "frozen"), "")
+    refs = frozenset(
+        w for w in words
+        if w in types and w not in _NATIVE_TYPES and w not in _GENERIC_TYPES
+    )
+    udt = head if head in refs else None
+    kind = head if head in ("list", "set", "map") else "udt" if udt else None
+    return TypeFacts(kind, frozen, text == "counter", udt, refs)
 
 
 def _as_int(v) -> int | None:
@@ -112,19 +153,11 @@ class IndexMeta:
 
 def _is_literal_type(owner, table_key: tuple, col: str) -> bool:
     """SASI isLiteral DEFAULT (IndexMode.getMode:180-182): the column's
-    declared type is UTF8Type or AsciiType. Reads the registry's declared
-    type text first (Spark stores uuid/inet as strings, so the Spark dtype
-    alone over-claims); falls back to the Spark dtype for schemas created
-    outside the DDL path."""
-    reg = owner.registry
-    tt = (
-        reg.column_type_text.get(table_key, {}).get(col, "").strip().lower()
-    )
-    if tt:
-        return tt in ("text", "varchar", "ascii")
-    meta = reg.tables[table_key]
-    dt = {f.name: f.dataType for f in meta.schema.fields}.get(col)
-    return isinstance(dt, T.StringType)
+    declared type is UTF8Type or AsciiType. Reads the declared type text,
+    not the Spark dtype (Spark stores uuid/inet as strings, so the dtype
+    alone over-claims)."""
+    meta = owner.registry.tables[table_key]
+    return meta.cql_type(col) in ("text", "varchar", "ascii")
 
 
 def index_target_text(im: IndexMeta) -> str:
@@ -421,35 +454,6 @@ class _DdlParser(_Parser):
             return True
         return False
 
-    def column_type(self) -> tuple[T.DataType, str | None, bool, bool]:
-        """Like cql_type, but ALSO reports the top-level collection kind
-        ('list' | 'set' | 'map' | None), frozen-ness, and counter-ness —
-        Spark erases all three (set<t> and list<t> are ArrayType; frozen<X>
-        stores like X; counter is a long), yet the reference's
-        mutation-validation rules depend on them (Lists/Sets/Maps.java
-        operation dispatch; FrozenCollectionsTest; Operation.java:169
-        counter setter rejection)."""
-        name = self.peek().text.lower()
-        if name == "frozen":
-            self.next()
-            self.expect_op("<")
-            dtype, kind, _, _ = self.column_type()
-            self.expect_op(">")
-            return dtype, kind, True, False
-        if name in ("list", "set", "map"):
-            kind = name
-        elif name in self.registry.types:
-            # a column of a user type is MULTI-CELL unless frozen<…>
-            # (db/marshal/UserType.java:52-63 isMultiCell; since
-            # CASSANDRA-7423 non-frozen UDTs store one cell per field)
-            kind = "udt"
-            # side-channel for schema bookkeeping: ALTER TYPE must find
-            # every table column declared with this type name
-            self._last_udt_typename = name
-        else:
-            kind = None
-        return self.cql_type(), kind, False, name == "counter"
-
     def cql_type(self) -> T.DataType:
         """type := native | list<t> | set<t> | map<k,v> | tuple<t,...>
         | frozen<t> | udt_name (Parser.g comparatorType)."""
@@ -483,14 +487,17 @@ class _DdlParser(_Parser):
         if name in _NATIVE_TYPES:
             return _NATIVE_TYPES[name]
         if name in self.registry.types:
-            # record the reference for schema bookkeeping: DROP TYPE's
-            # in-use gate and ALTER TYPE propagation must see user types
-            # NESTED inside collections/tuples, not just direct columns
-            if not hasattr(self, "_type_refs"):
-                self._type_refs = set()
-            self._type_refs.add(name)
             return self.registry.types[name]
         raise InvalidRequest(f"unknown type {name!r}")
+
+    def declared_type(self) -> tuple[T.DataType, str]:
+        """One column or field type: its Spark type and the declared CQL
+        text the schema keeps (lower-cased, ", " after commas) — the
+        system_schema `type` cell, and what type_facts reads."""
+        start = self.i
+        dtype = self.cql_type()
+        text = "".join(t.text for t in self.toks[start:self.i]).lower()
+        return dtype, text.replace(",", ", ")
 
     def map_literal(self) -> dict:
         """{'k': v, ...} — keyspace replication options et al."""
@@ -549,21 +556,12 @@ class _DdlParser(_Parser):
         ine = self.if_not_exists()
         ks, name = self.qualified_name()
         self.last_type_keyspace = ks if ks is not None else self.current_keyspace
-        self._type_refs = set()
         self.last_type_field_text: dict[str, str] = {}
         self.expect_punct("(")
 
         def one_field() -> tuple[str, T.DataType]:
             fname = self.ident()
-            tstart = self.i
-            ftype = self.cql_type()
-            # declared CQL type text verbatim — reconstruction from Spark
-            # types can't see set-vs-list (same capture create_table does)
-            self.last_type_field_text[fname] = (
-                "".join(t.text for t in self.toks[tstart:self.i])
-                .lower()
-                .replace(",", ", ")
-            )
+            ftype, self.last_type_field_text[fname] = self.declared_type()
             return fname, ftype
 
         fields = [one_field()]
@@ -571,9 +569,6 @@ class _DdlParser(_Parser):
             fields.append(one_field())
         self.expect_punct(")")
         self._end()
-        # types EMBEDDED in this type's fields (frozen<other> et al.) —
-        # DROP TYPE's gate and ALTER TYPE must see type-in-type usage
-        self.last_type_refs = frozenset(self._type_refs)
         if name.lower() in self.registry.types:
             if ine:
                 return None
@@ -590,20 +585,14 @@ class _DdlParser(_Parser):
         if ks is not None and ks not in self.registry.keyspaces:
             raise InvalidRequest(f"unknown keyspace {ks!r}")
         self.last_key = (eff_ks, name)  # canonical registry key
-        self.last_collection_kinds: dict[str, str] = {}
-        self.last_frozen: set[str] = set()
-        self.last_counters: set[str] = set()
-        self.last_udt_columns: dict[str, str] = {}  # col -> type name
-        self.last_udt_refs: dict[str, frozenset] = {}  # col -> all type names
-        self.last_column_type_text: dict[str, str] = {}  # col -> CQL text
         self.last_default_ttl: int = 0  # TableParams default_time_to_live
         self.expect_punct("(")
 
         cols: list[tuple[str, T.DataType]] = []
+        cql_types: dict[str, str] = {}  # col -> declared CQL type text
         statics: list[str] = []
         pk_cols: list[str] | None = None
         ck_cols: list[str] = []
-        special_types: dict[str, str] = {}  # uuid/timeuuid/inet wire forms
         while True:
             if self.accept_kw("primary"):
                 # PRIMARY KEY ((p1, p2), c1, c2) | PRIMARY KEY (p, c1, ...)
@@ -621,31 +610,7 @@ class _DdlParser(_Parser):
                 self.expect_punct(")")
             else:
                 col = self.ident()
-                raw_type = self.peek().text.lower()
-                self._type_refs = set()
-                tstart = self.i
-                typ, kind, frozen, is_counter = self.column_type()
-                # the DECLARED CQL type text, verbatim (normalized) — the
-                # system_schema.columns `type` cell; reconstruction from
-                # Spark types can't see nesting facts (set-vs-list, UDT
-                # names inside collections), the source text can
-                self.last_column_type_text[col] = (
-                    "".join(t.text for t in self.toks[tstart:self.i])
-                    .lower()
-                    .replace(",", ", ")
-                )
-                if self._type_refs:
-                    self.last_udt_refs[col] = frozenset(self._type_refs)
-                if raw_type in ("uuid", "timeuuid", "inet"):
-                    special_types[col] = raw_type
-                if kind is not None:
-                    self.last_collection_kinds[col] = kind
-                if kind == "udt":
-                    self.last_udt_columns[col] = self._last_udt_typename
-                if frozen:
-                    self.last_frozen.add(col)
-                if is_counter:
-                    self.last_counters.add(col)
+                typ, cql_types[col] = self.declared_type()
                 is_static = self.accept_kw("static")
                 cols.append((col, typ))
                 if is_static:
@@ -658,6 +623,10 @@ class _DdlParser(_Parser):
             if not self.accept_punct(","):
                 break
         self.expect_punct(")")
+        counters = {
+            c for c, t in cql_types.items()
+            if type_facts(t, self.registry.types).counter
+        }
 
         clustering_order: dict[str, bool] = {}
         if self.accept_kw("with"):
@@ -685,7 +654,7 @@ class _DdlParser(_Parser):
                     val = self._skip_option_value()
                     if opt == "default_time_to_live":
                         self.last_default_ttl = _validated_default_ttl(
-                            val, bool(self.last_counters)
+                            val, bool(counters)
                         )
                 if not self.accept_kw("and"):
                     break
@@ -705,13 +674,13 @@ class _DdlParser(_Parser):
             raise InvalidRequest(
                 f"CLUSTERING ORDER BY columns {sorted(bad_order)} are not clustering columns"
             )
-        if self.last_counters:
+        if counters:
             # CreateTableStatement.java:229 — a counter table's non-key
             # columns must ALL be counters
-            plain = declared - set(pk_cols) - set(ck_cols) - self.last_counters
+            plain = declared - set(pk_cols) - set(ck_cols) - counters
             if plain:
                 raise InvalidRequest("Cannot mix counter and non counter columns in the same table")
-            bad_key = self.last_counters & (set(pk_cols) | set(ck_cols))
+            bad_key = counters & (set(pk_cols) | set(ck_cols))
             if bad_key:
                 raise InvalidRequest(
                     f"counter type is not supported for PRIMARY KEY column {sorted(bad_key)[0]!r}"
@@ -725,7 +694,7 @@ class _DdlParser(_Parser):
                 ClusteringColumn(c, clustering_order.get(c, True)) for c in ck_cols
             ),
             static_columns=tuple(statics),
-            cql_key_types=tuple(sorted(special_types.items())),
+            cql_types=tuple(cql_types.items()),
         )
         # exact-key existence only: the same bare name may live in two
         # different keyspaces (CreateTest.java duplicate-table rejection
@@ -902,16 +871,12 @@ class _DdlParser(_Parser):
         meta = self.registry.tables[table_key]
         if col not in {f.name for f in meta.schema.fields}:
             raise InvalidRequest(f"Column '{col}' doesn't exist")
-        import re as _re3
-
-        type_text = self.registry.column_type_text.get(table_key, {}).get(col, "")
+        type_text = meta.cql_type(col)
         # WORD match: a UDT named work_duration must stay indexable
-        if _re3.search(r"(?<![a-z0-9_])duration(?![a-z0-9_])", type_text.lower()) or dict(
-            getattr(meta, "cql_key_types", ()) or ()
-        ).get(col) == "duration":
+        if re.search(r"(?<![a-z0-9_])duration(?![a-z0-9_])", type_text):
             raise InvalidRequest(
                 "Secondary indexes are not supported on duration columns"
-                if type_text.lower().strip() == "duration"
+                if type_text == "duration"
                 else "Secondary indexes are not supported on collections "
                 "containing durations"
             )
@@ -920,8 +885,8 @@ class _DdlParser(_Parser):
                 "Cannot create secondary index on the only partition key "
                 f"column {col}"
             )
-        coll_kind = self.registry.collection_kinds.get(table_key, {}).get(col)
-        frozen = col in self.registry.frozen_columns.get(table_key, frozenset())
+        facts = type_facts(type_text, self.registry.types)
+        coll_kind, frozen = facts.kind, facts.frozen
         is_coll = coll_kind in ("list", "set", "map")
         if is_coll and frozen and kind != "full":
             raise InvalidRequest(
@@ -1046,7 +1011,7 @@ class _DdlParser(_Parser):
                 )
             raise InvalidRequest(f"Base table '{b_name}' doesn't exist")
         base = self.registry.tables[base_key]
-        if self.registry.counter_columns.get(base_key):
+        if any(f.counter for f in self.registry.facts(base).values()):
             # CreateViewStatement.java:135
             raise InvalidRequest(
                 "Materialized views are not supported on counter tables"
@@ -1236,9 +1201,7 @@ class _DdlParser(_Parser):
             clustering=tuple(
                 ClusteringColumn(c, clustering_order.get(c, True)) for c in ck_cols
             ),
-            cql_key_types=tuple(
-                (c, t) for c, t in base.cql_key_types if c in set(selected)
-            ),
+            cql_types=tuple((c, base.cql_type(c)) for c in view_pk + rest),
         )
         if self.last_key in self.registry.views:
             if ine:
@@ -1472,14 +1435,8 @@ class _DdlParser(_Parser):
         self.last_type_field_add: tuple[str, str] | None = None
         if self.accept_kw("add"):
             fname = self.ident()
-            tstart = self.i
-            ftype = self.cql_type()
-            self.last_type_field_add = (
-                fname,
-                "".join(t.text for t in self.toks[tstart:self.i])
-                .lower()
-                .replace(",", ", "),
-            )
+            ftype, ftext = self.declared_type()
+            self.last_type_field_add = (fname, ftext)
             if fname in old.fieldNames():
                 raise InvalidRequest(
                     f"field {fname!r} already exists in type {name!r}"
@@ -1526,6 +1483,8 @@ class _DdlParser(_Parser):
         return name, new, renames
 
     def alter_table(self) -> TableMeta:
+        """ALTER TABLE ADD / DROP / RENAME / WITH. The new meta derives
+        from the old one, so each column's declared type moves with it."""
         self.expect_kw("table")
         ks, name = self.qualified_name()
         key = self.registry.tables.resolve(
@@ -1534,63 +1493,37 @@ class _DdlParser(_Parser):
         self.last_key = key
         meta = self.registry.tables[key]
         fields = list(meta.schema.fields)
+        has_counters = any(f.counter for f in self.registry.facts(meta).values())
         if self.accept_kw("add"):
             col = self.ident()
-            self._type_refs = set()
-            tstart = self.i
-            typ, kind, frozen, is_counter = self.column_type()
-            add_refs = frozenset(self._type_refs)
-            add_type_text = (
-                "".join(t.text for t in self.toks[tstart:self.i])
-                .lower()
-                .replace(",", ", ")
-            )
+            typ, text = self.declared_type()
             if col in {f.name for f in fields}:
                 raise InvalidRequest(f"column {col!r} already exists")
             # counter purity holds under ALTER too (AlterTableStatement:
             # a table is either all-counter or no-counter outside its keys)
-            table_counters = self.registry.counter_columns.get(key, frozenset())
-            if is_counter != bool(table_counters):
+            if type_facts(text, self.registry.types).counter != has_counters:
                 raise InvalidRequest(
                     "Cannot mix counter and non counter columns in the same table"
                 )
-            # record the Spark-erased facts for the new column — AFTER
-            # every validation above, so a rejected ALTER leaves no stale
-            # bookkeeping (a stale udt_refs entry would wedge DROP TYPE)
-            if kind is not None:
-                self.registry.collection_kinds.setdefault(key, {})[col] = kind
-            if kind == "udt":
-                self.registry.udt_columns.setdefault(key, {})[col] = (
-                    self._last_udt_typename
-                )
-            if add_refs:
-                self.registry.udt_refs.setdefault(key, {})[col] = add_refs
-            self.registry.column_type_text.setdefault(key, {})[col] = add_type_text
-            if frozen:
-                self.registry.frozen_columns[key] = (
-                    self.registry.frozen_columns.get(key, frozenset()) | {col}
-                )
-            if is_counter:
-                self.registry.counter_columns[key] = table_counters | {col}
-            fields.append(T.StructField(col, typ))
-        elif self.accept_kw("drop"):
+            self._end()
+            return dataclasses.replace(
+                meta,
+                schema=T.StructType(fields + [T.StructField(col, typ)]),
+                cql_types=meta.cql_types + ((col, text),),
+            )
+        if self.accept_kw("drop"):
             col = self.ident()
             if col in meta.primary_key:
                 raise InvalidRequest(f"cannot drop PRIMARY KEY column {col!r}")
             if col not in {f.name for f in fields}:
                 raise InvalidRequest(f"unknown column {col!r}")
-            self.registry.collection_kinds.get(key, {}).pop(col, None)
-            self.registry.udt_columns.get(key, {}).pop(col, None)
-            self.registry.udt_refs.get(key, {}).pop(col, None)
-            self.registry.column_type_text.get(key, {}).pop(col, None)
-            self.registry.frozen_columns[key] = (
-                self.registry.frozen_columns.get(key, frozenset()) - {col}
+            self._end()
+            return dataclasses.replace(
+                meta,
+                schema=T.StructType([f for f in fields if f.name != col]),
+                cql_types=tuple((c, t) for c, t in meta.cql_types if c != col),
             )
-            self.registry.counter_columns[key] = (
-                self.registry.counter_columns.get(key, frozenset()) - {col}
-            )
-            fields = [f for f in fields if f.name != col]
-        elif self.accept_kw("rename"):
+        if self.accept_kw("rename"):
             old = self.ident()
             self.expect_kw("to")
             new = self.ident()
@@ -1598,21 +1531,24 @@ class _DdlParser(_Parser):
                 # reference restriction: only primary-key columns may be
                 # renamed (AlterTableStatement.Renames)
                 raise InvalidRequest("only PRIMARY KEY columns can be renamed")
-            fields = [
-                T.StructField(new, f.dataType) if f.name == old else f for f in fields
-            ]
             self._end()
-            return TableMeta(
-                meta.name,
-                T.StructType(fields),
-                partition_key=tuple(new if c == old else c for c in meta.partition_key),
+
+            def renamed(c: str) -> str:
+                return new if c == old else c
+
+            return dataclasses.replace(
+                meta,
+                schema=T.StructType(
+                    [T.StructField(renamed(f.name), f.dataType) for f in fields]
+                ),
+                partition_key=tuple(map(renamed, meta.partition_key)),
                 clustering=tuple(
-                    ClusteringColumn(new, c.ascending) if c.name == old else c
+                    ClusteringColumn(renamed(c.name), c.ascending)
                     for c in meta.clustering
                 ),
-                static_columns=meta.static_columns,
+                cql_types=tuple((renamed(c), t) for c, t in meta.cql_types),
             )
-        elif self.accept_kw("with"):
+        if self.accept_kw("with"):
             # ALTER TABLE t WITH option = value [AND ...] — the options
             # form (AlterTableStatement.Options); only modeled params
             # take effect, the rest parse and drop like CREATE TABLE.
@@ -1626,7 +1562,7 @@ class _DdlParser(_Parser):
                 val = self._skip_option_value()
                 if opt == "default_time_to_live":
                     pending["default_ttl"] = _validated_default_ttl(
-                        val, bool(self.registry.counter_columns.get(key))
+                        val, has_counters
                     )
                 if not self.accept_kw("and"):
                     break
@@ -1648,16 +1584,7 @@ class _DdlParser(_Parser):
                     "default_ttl"
                 ] = pending["default_ttl"]
             return meta
-        else:
-            raise InvalidRequest("ALTER TABLE supports ADD / DROP / RENAME / WITH")
-        self._end()
-        return TableMeta(
-            meta.name,
-            T.StructType(fields),
-            partition_key=meta.partition_key,
-            clustering=meta.clustering,
-            static_columns=meta.static_columns,
-        )
+        raise InvalidRequest("ALTER TABLE supports ADD / DROP / RENAME / WITH")
 
 
 class SchemaRegistry:
@@ -1686,28 +1613,12 @@ class SchemaRegistry:
         # (schema/IndexMetadata.java lives inside KeyspaceMetadata) — same
         # scoped-namespace shape as tables
         self.indexes: TableNamespace = TableNamespace()
-        # Spark's type system erases collection kind (set vs list) and
-        # frozen-ness; the reference's mutation validation needs both.
-        # All three are keyed by the canonical (keyspace, name) table key.
-        self.collection_kinds: dict[tuple, dict[str, str]] = {}
-        self.frozen_columns: dict[tuple, frozenset[str]] = {}
-        self.counter_columns: dict[tuple, frozenset[str]] = {}
-        # columns declared with a user type: table key -> {col -> type
-        # name} — ALTER TYPE propagation walks this (the reference keeps
-        # the same dependency via Schema.getTypes references)
-        self.udt_columns: dict[tuple, dict[str, str]] = {}
-        # EVERY user type a column's declared type references, including
-        # nested uses (list<frozen<t>>, map<k, frozen<t>>, tuple<t, ...>)
-        self.udt_refs: dict[tuple, dict[str, frozenset]] = {}
-        # type-in-type embedding (CREATE TYPE outer (i frozen<inner>)) and
         # the keyspace a type was created under (types store by bare name)
-        self.type_refs: dict[str, frozenset] = {}
         self.type_keyspaces: dict[str, str | None] = {}
         # declared CQL field-type text per user type (DESCRIBE and
-        # system_schema.types — Spark's struct erases set-vs-list)
+        # system_schema.types — Spark's struct erases set-vs-list); the
+        # type-in-type references derive from it (embedded_types)
         self.type_field_text: dict[str, dict[str, str]] = {}
-        # declared CQL type text per column (system_schema.columns)
-        self.column_type_text: dict[tuple, dict[str, str]] = {}
         # modeled table params (TableParams.java): default_time_to_live
         self.table_params: dict[tuple, dict] = {}
         # (type name, {old field -> new field}) of the LAST ALTER TYPE —
@@ -1725,19 +1636,35 @@ class SchemaRegistry:
         key = self.tables.resolve(name, keyspace=keyspace, current=current)
         return self.tables[key]
 
+    def facts(self, meta: TableMeta) -> dict[str, TypeFacts]:
+        """type_facts of every declared column of `meta`."""
+        return {c: type_facts(t, self.types) for c, t in meta.cql_types}
+
+    def embedded_types(self, name: str) -> frozenset:
+        """The user types user type `name`'s fields name (CREATE TYPE
+        outer (i frozen<inner>) embeds inner)."""
+        return frozenset().union(
+            *(type_facts(t, self.types).refs
+              for t in self.type_field_text[name].values())
+        )
+
+    def _table_users(self, name: str) -> dict[tuple, TypeFacts]:
+        """(table key, column) -> facts for every table column whose
+        declared type names user type `name`, nested uses included."""
+        return {
+            (key, c): f
+            for key, meta in self.tables.items()
+            for c, f in self.facts(meta).items()
+            if name in f.refs
+        }
+
     def _drop_table_indexes(self, table_key: tuple) -> None:
         for idx in [n for n, m in self.indexes.items() if m.table == table_key]:
             del self.indexes[idx]
 
     def _forget_table(self, table_key: tuple) -> None:
-        """Remove a table's auxiliary records (collection metadata,
+        """Remove a table's auxiliary records (params, triggers,
         indexes); the tables entry itself is deleted by DROP."""
-        self.collection_kinds.pop(table_key, None)
-        self.frozen_columns.pop(table_key, None)
-        self.counter_columns.pop(table_key, None)
-        self.udt_columns.pop(table_key, None)
-        self.udt_refs.pop(table_key, None)
-        self.column_type_text.pop(table_key, None)
         self.table_params.pop(table_key, None)
         self.triggers.pop(table_key, None)
         self._drop_table_indexes(table_key)
@@ -1774,9 +1701,6 @@ class SchemaRegistry:
                 out = p.create_type()
                 if out is not None:
                     self.types[out[0]] = out[1]
-                    self.type_refs[out[0]] = getattr(
-                        p, "last_type_refs", frozenset()
-                    )
                     self.type_keyspaces[out[0]] = getattr(
                         p, "last_type_keyspace", None
                     )
@@ -1788,24 +1712,6 @@ class SchemaRegistry:
                 if meta is not None:
                     key = p.last_key
                     self.tables[key] = meta
-                    self.collection_kinds[key] = getattr(
-                        p, "last_collection_kinds", {}
-                    )
-                    self.frozen_columns[key] = frozenset(
-                        getattr(p, "last_frozen", ())
-                    )
-                    self.counter_columns[key] = frozenset(
-                        getattr(p, "last_counters", ())
-                    )
-                    self.udt_columns[key] = dict(
-                        getattr(p, "last_udt_columns", {})
-                    )
-                    self.udt_refs[key] = dict(
-                        getattr(p, "last_udt_refs", {})
-                    )
-                    self.column_type_text[key] = dict(
-                        getattr(p, "last_column_type_text", {})
-                    )
                     if getattr(p, "last_default_ttl", 0):
                         self.table_params[key] = {
                             "default_ttl": p.last_default_ttl
@@ -1882,10 +1788,8 @@ class SchemaRegistry:
                 name, new_struct, renames = p.alter_type()
                 # validate BEFORE mutating the registry: a nested-usage
                 # rejection must leave types and tables untouched
-                import dataclasses as _dc
-
                 embedding = sorted(
-                    t for t, refs in self.type_refs.items() if name in refs
+                    t for t in self.types if name in self.embedded_types(t)
                 )
                 if embedding:
                     raise InvalidRequest(
@@ -1893,57 +1797,53 @@ class SchemaRegistry:
                         f"'{embedding[0]}' embeds it (in-place rewrite of "
                         "embedding types is not supported by this engine)"
                     )
-
-                for tkey, refmap in self.udt_refs.items():
-                    direct = {
-                        c
-                        for c, tn in self.udt_columns.get(tkey, {}).items()
-                        if tn == name
-                    }
-                    nested_only = sorted(
-                        c
-                        for c, refs in refmap.items()
-                        if name in refs and c not in direct
+                users = self._table_users(name)
+                nested = [k for k, f in users.items() if f.udt != name]
+                if nested:
+                    # a type buried inside a collection/tuple column
+                    # cannot be rewritten in place without re-deriving
+                    # every nested value shape — refuse loudly rather
+                    # than leave the table schema stale (documented
+                    # engine boundary; the reference rewrites nested
+                    # types too)
+                    tkey, c = nested[0]
+                    raise InvalidRequest(
+                        f"Cannot alter type '{name}': column "
+                        f"{c!r} of table {tkey[1]!r} uses "
+                        "it inside a collection or tuple"
                     )
-                    if nested_only:
-                        # a type buried inside a collection/tuple column
-                        # cannot be rewritten in place without re-deriving
-                        # every nested value shape — refuse loudly rather
-                        # than leave the table schema stale (documented
-                        # engine boundary; the reference rewrites nested
-                        # types too)
-                        raise InvalidRequest(
-                            f"Cannot alter type '{name}': column "
-                            f"{nested_only[0]!r} of table {tkey[1]!r} uses "
-                            "it inside a collection or tuple"
-                        )
+                add = getattr(p, "last_type_field_add", None)
+                if add is not None and name in type_facts(add[1], self.types).refs:
+                    # AlterTypeStatement.AddField
+                    raise InvalidRequest(
+                        f"Cannot add new field {add[0]} of type {add[1]} to "
+                        f"user type {name} as this would create a circular "
+                        "reference"
+                    )
                 self.types[name] = new_struct
                 self.last_alter_type = (name, renames)
-                # keep the declared field-text map in step (DESCRIBE and
-                # system_schema.types read it)
-                ftxt = self.type_field_text.setdefault(name, {})
-                add = getattr(p, "last_type_field_add", None)
+                # keep the declared field-text map in step (DESCRIBE,
+                # system_schema.types and embedded_types read it)
+                ftxt = {
+                    renames.get(f, f): t
+                    for f, t in self.type_field_text[name].items()
+                }
                 if add is not None:
                     ftxt[add[0]] = add[1]
-                for o, n in renames.items():
-                    if o in ftxt:
-                        ftxt[n] = ftxt.pop(o)
+                self.type_field_text[name] = ftxt
                 # propagate to every table column declared with the type
                 # (the reference rewrites dependent TableMetadata the
                 # same way; AlterTypeStatement updates keyspace.types and
                 # all referencing tables)
-                for tkey, colmap in self.udt_columns.items():
-                    cols = [c for c, tn in colmap.items() if tn == name]
-                    if not cols:
-                        continue
+                for tkey in dict.fromkeys(tkey for tkey, _ in users):
                     tm = self.tables[tkey]
                     nf = [
                         T.StructField(f.name, new_struct)
-                        if f.name in cols
+                        if (tkey, f.name) in users
                         else f
                         for f in tm.schema.fields
                     ]
-                    self.tables[tkey] = _dc.replace(
+                    self.tables[tkey] = dataclasses.replace(
                         tm, schema=T.StructType(nf)
                     )
                 return
@@ -2087,19 +1987,14 @@ class SchemaRegistry:
             if kind == "type":
                 # DropTypeStatement.java: a type still referenced by a
                 # table column cannot be dropped out from under it
-                users = sorted(
-                    {tk[1] for tk, colmap in self.udt_columns.items()
-                     if key in colmap.values()}
-                    | {tk[1] for tk, refmap in self.udt_refs.items()
-                       if any(key in refs for refs in refmap.values())}
-                )
+                users = sorted({tk[1] for tk, _ in self._table_users(key)})
                 if users:
                     raise InvalidRequest(
                         f"Cannot drop user type '{name}' as it is still "
                         f"used by table {users[0]}"
                     )
                 embedding = sorted(
-                    t for t, refs in self.type_refs.items() if key in refs
+                    t for t in self.types if key in self.embedded_types(t)
                 )
                 if embedding:
                     # DropTypeStatement: a type embedded in another type
@@ -2108,7 +2003,6 @@ class SchemaRegistry:
                         f"Cannot drop user type '{name}' as it is still "
                         f"used by user type {embedding[0]}"
                     )
-                self.type_refs.pop(key, None)
                 self.type_keyspaces.pop(key, None)
                 self.type_field_text.pop(key, None)
             del store[key]
@@ -2132,7 +2026,6 @@ class SchemaRegistry:
                     if ks == key
                 ]:
                     self.types.pop(tn, None)
-                    self.type_refs.pop(tn, None)
                     self.type_keyspaces.pop(tn, None)
                     self.type_field_text.pop(tn, None)
         else:
@@ -2203,10 +2096,11 @@ class CqlDatabase:
     def _collection_info(self, key: tuple):
         from cassandra_pmem_spark.cql.writes import CollectionInfo
 
+        facts = self.registry.facts(self.registry.tables[key])
         return CollectionInfo(
-            kinds=self.registry.collection_kinds.get(key, {}),
-            frozen=self.registry.frozen_columns.get(key, frozenset()),
-            counters=self.registry.counter_columns.get(key, frozenset()),
+            kinds={c: f.kind for c, f in facts.items() if f.kind},
+            frozen=frozenset(c for c, f in facts.items() if f.frozen),
+            counters=frozenset(c for c, f in facts.items() if f.counter),
         )
 
     def _session(self, table):
@@ -2444,10 +2338,8 @@ class CqlDatabase:
                         tname, renames = at
                         cols = [
                             c
-                            for c, tn in self.registry.udt_columns.get(
-                                key, {}
-                            ).items()
-                            if tn == tname
+                            for c, f in self.registry.facts(new_meta).items()
+                            if f.udt == tname
                         ]
                         for col in cols:
                             for m in sess._mutations:
@@ -2624,24 +2516,17 @@ class CqlDatabase:
         bulk-write it as big-format sstables. With load_sstables this
         closes the dump/restore loop entirely inside the engine.
         uuid/timeuuid/ascii columns keep their declared CQL types via
-        the registry's column text (Spark erases them to string);
-        counter columns flush their folded totals as single-global-shard
+        the meta's cql_types (Spark erases them to string); counter
+        columns flush their folded totals as single-global-shard
         CounterContext cells (CounterContext.createGlobal)."""
         from cassandra_pmem_spark.sources.sstable import bulk_write_sstables
 
         key = self._table_key(table)
-        meta = self.registry.tables[key]
         sess = self._session_for_key(key)
         df = sess.table(now=sess._clock_ref[0])
-        overrides = {
-            c: t
-            for c, t in self.registry.column_type_text.get(key, {}).items()
-            if t.lower() in ("uuid", "timeuuid", "ascii", "counter")
-        }
         return bulk_write_sstables(
-            df, meta, out_dir, sstables=sstables,
-            type_overrides=overrides or None, compression=compression,
-            collection_kinds=self.registry.collection_kinds.get(key) or None,
+            df, self.registry.tables[key], out_dir, sstables=sstables,
+            compression=compression,
         )
 
     def pager(self, cql: str, params: list[Any] | None = None,

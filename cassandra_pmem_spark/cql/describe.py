@@ -14,10 +14,9 @@ driver-side consumer sees a familiar frame. Everything derives from
 SchemaRegistry; like every introspection surface this is deliberately
 driver-side and tiny (schema objects, not data).
 
-Reconstruction limits mirror system_schema (sources/virtual.py): a UDT
-embedded in ANOTHER TYPE's field renders as its structural tuple<...>
-text (Spark's struct erases the name); table columns keep their declared
-text verbatim via registry.column_type_text.
+Column and field types print as their statements declared them: table
+columns from TableMeta.cql_type, user type fields from
+registry.type_field_text (the same text system_schema shows).
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ from __future__ import annotations
 from typing import Any
 
 from cassandra_pmem_spark.cql.validator import InvalidRequest
-from cassandra_pmem_spark.sources.virtual import _cql_type_text
 
 
 def _quote(v: Any) -> str:
@@ -51,36 +49,10 @@ def _keyspace_cql(ks) -> str:
 def _type_cql(registry, name: str) -> str:
     st = registry.types[name]
     ks = registry.type_keyspaces.get(name)
-    declared = registry.type_field_text.get(name, {})
+    declared = registry.type_field_text[name]
     qual = f"{ks}.{name}" if ks else name
-    fields = ",\n".join(
-        f"    {f.name} "
-        + declared.get(f.name, _cql_type_text(f.dataType, None, None))
-        for f in st.fields
-    )
+    fields = ",\n".join(f"    {f.name} {declared[f.name]}" for f in st.fields)
     return f"CREATE TYPE {qual} (\n{fields}\n);"
-
-
-def _column_text(registry, key, meta, col: str, dtype) -> str:
-    """Declared CQL text when the table came from a statement; the
-    system_schema reconstruction otherwise (same rules as
-    sources/virtual.py columns)."""
-    declared = registry.column_type_text.get(key, {})
-    if col in declared:
-        return declared[col]
-    special = dict(getattr(meta, "cql_key_types", ()) or ())
-    txt = special.get(col) or _cql_type_text(
-        dtype,
-        registry.collection_kinds.get(key, {}).get(col),
-        registry.udt_columns.get(key, {}).get(col),
-    )
-    kinds = registry.collection_kinds.get(key, {})
-    udts = registry.udt_columns.get(key, {})
-    if col in registry.frozen_columns.get(key, frozenset()) and (
-        kinds.get(col) or udts.get(col)
-    ):
-        txt = f"frozen<{txt}>"
-    return txt
 
 
 def _primary_key_text(meta) -> str:
@@ -109,9 +81,8 @@ def _table_cql(registry, key) -> str:
     qual = f"{key[0]}.{key[1]}" if key[0] else key[1]
     lines = []
     for f in meta.schema.fields:
-        txt = _column_text(registry, key, meta, f.name, f.dataType)
         static = " STATIC" if f.name in meta.static_columns else ""
-        lines.append(f"    {f.name} {txt}{static}")
+        lines.append(f"    {f.name} {meta.cql_type(f.name)}{static}")
     lines.append(f"    {_primary_key_text(meta)}")
     opts = []
     if (co := _clustering_order_option(meta)) is not None:
@@ -233,7 +204,7 @@ def _keyspace_rows(registry, ks: str) -> list[tuple]:
     while ks_types:
         progressed = False
         for t in list(ks_types):
-            if registry.type_refs.get(t, frozenset()) <= emitted | (
+            if registry.embedded_types(t) <= emitted | (
                 set(registry.types) - set(ks_types)
             ):
                 rows.append((ks, "type", t, _type_cql(registry, t)))

@@ -302,20 +302,14 @@ class QueryPager:
         from cassandra_pmem_spark.functions.token import token_column
 
         by_name = {f.name: f.dataType for f in self.meta.schema.fields}
-        cql_types = dict(getattr(self.meta, "cql_key_types", ()) or ())
         names = self._names[: self._pk_n]
+        pk = self.meta.partition_key
         schema = T.StructType(
-            [
-                T.StructField(n, by_name[self.meta.partition_key[i]])
-                for i, n in enumerate(names)
-            ]
+            [T.StructField(n, by_name[c]) for n, c in zip(names, pk)]
         )
-        remapped = {
-            n: cql_types[self.meta.partition_key[i]]
-            for i, n in enumerate(names)
-            if self.meta.partition_key[i] in cql_types
-        }
-        return token_column(names, schema, remapped)
+        return token_column(
+            names, schema, {n: self.meta.cql_type(c) for n, c in zip(names, pk)}
+        )
 
     def _order_spec(self):
         """(column expr, ascending) pairs: token of the partition key,

@@ -687,12 +687,11 @@ def _timefct_column(s, meta):
     from cassandra_pmem_spark.functions.timefcts import timeuuid_unix_ms
 
     fn, c = s.args
-    decl = dict(getattr(meta, "cql_key_types", ()) or ()).get(c)
     dt = {f.name: f.dataType for f in meta.schema.fields}.get(c)
     if dt is None:
         raise InvalidRequest(f"unknown column {c!r} in {fn}()")
     alias = s.alias or f"{fn}_{c}"
-    is_tu = decl == "timeuuid"
+    is_tu = declared_timeuuid(meta, c)
     if is_tu:
         ms = timeuuid_unix_ms(c)
     elif isinstance(dt, _T.TimestampType):
@@ -720,7 +719,7 @@ def _scalar_token(meta, values: tuple) -> int:
     serialize_partition_key + murmur3_token_bytes_py), so the scalar
     compares bit-exactly against where_token's column expression.
     uuid/timeuuid/inet keys resolve their wire form via the table's
-    cql_key_types, exactly like token_column."""
+    declared cql_types, exactly like token_column."""
     from cassandra_pmem_spark.functions.murmur3 import (
         InetMarshal,
         UuidMarshal,
@@ -736,10 +735,10 @@ def _scalar_token(meta, values: tuple) -> int:
     from pyspark.sql import types as _T
 
     marshal_by_cql = {"uuid": UuidMarshal, "timeuuid": UuidMarshal, "inet": InetMarshal}
-    cql_types = dict(getattr(meta, "cql_key_types", ()) or ())
     by_name = {f.name: f.dataType for f in meta.schema.fields}
     dtypes = [
-        marshal_by_cql[cql_types[c]]() if c in cql_types else by_name[c]
+        marshal_by_cql[t]() if (t := meta.cql_type(c)) in marshal_by_cql
+        else by_name[c]
         for c in meta.partition_key
     ]
 
@@ -1128,9 +1127,7 @@ def _compile(
                 raise InvalidRequest("token() selector requires the full partition key")
             projection.append(
                 token_column(
-                    s.args,
-                    meta.schema,
-                    dict(getattr(meta, "cql_key_types", ()) or ()) or None,
+                    s.args, meta.schema, {c: meta.cql_type(c) for c in s.args}
                 ).alias(s.alias or "token")
             )
         elif s.kind == "cast":

@@ -436,18 +436,18 @@ class CqlTable:
         """token(pk) relation (cql3/restrictions/TokenRestriction.java:40) —
         range scan in hash order. Keys whose column types are in the
         covered marshal set — including uuid/timeuuid/inet, whose CQL
-        type names ride on TableMeta.cql_key_types because Spark stores
+        type names ride on TableMeta.cql_types because Spark stores
         them as plain strings — hash with the bit-exact Cassandra Murmur3
         token (functions/murmur3.py), so token literals from a real
         cluster carry over; other key shapes fall back to xxhash64 (same
         ordering semantics, different values — see functions/token.py)."""
         op = Op(op) if isinstance(op, str) else op
         t = self._copy()
-        cql_types = dict(getattr(self.meta, "cql_key_types", ()) or ())
+        pk = self.meta.partition_key
         t._conditions.append(
             _OP_TO_COLUMN[op](
                 token_column(
-                    self.meta.partition_key, self.meta.schema, cql_types or None
+                    pk, self.meta.schema, {c: self.meta.cql_type(c) for c in pk}
                 ),
                 value,
             )

@@ -73,9 +73,9 @@ _SLICE_OPS = {Op.LT, Op.LTE, Op.GT, Op.GTE}
 
 def declared_timeuuid(meta, col: str) -> bool:
     """Whether `col`'s DECLARED CQL type is timeuuid (Spark stores
-    uuids as text; the declared type rides on TableMeta.cql_key_types).
+    uuids as text; the declared type rides on TableMeta.cql_types).
     The ONE definition — writes/table/parser all gate on it."""
-    return dict(getattr(meta, "cql_key_types", ()) or ()).get(col) == "timeuuid"
+    return meta.cql_type(col) == "timeuuid"
 
 
 # CassandraIndex.supportsExpression analog, the ONE op->serving-kinds

@@ -530,11 +530,11 @@ def source_sstable_counter_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count("*").alias("n"))
     )
-    meta = TableMeta("hits", agg.schema, partition_key=("user_id",))
-    bulk_write_sstables(
-        agg, meta, out_dir, sstables=2, type_overrides={"n": "counter"},
-        compression=True,
+    meta = TableMeta(
+        "hits", agg.schema, partition_key=("user_id",),
+        cql_types=(("n", "counter"),),
     )
+    bulk_write_sstables(agg, meta, out_dir, sstables=2, compression=True)
     return (
         read_sstables(spark, out_dir)
         .select(F.col("key0").alias("user_id"), F.col("n"))

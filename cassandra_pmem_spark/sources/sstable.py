@@ -546,14 +546,14 @@ class SSTableSchema:
         return got
 
     @classmethod
-    def from_table_meta(cls, meta, type_overrides: dict | None = None,
-                        collection_kinds: dict | None = None):
+    def from_table_meta(cls, meta):
         """Derive from a catalog TableMeta; Spark types map to their
-        default marshal, with `type_overrides` (col -> CQL name like
-        'uuid'/'ascii') for the Spark-erased ones and
-        `collection_kinds` (col -> 'list'|'set'|'map') for the
-        set-vs-list distinction Spark's ArrayType erases."""
+        default marshal, except where the declared CQL type (meta.
+        cql_types) names a Spark-erased one: uuid/timeuuid/ascii/counter
+        columns, and the set-vs-list kind Spark's ArrayType erases."""
         from pyspark.sql import types as T
+
+        from cassandra_pmem_spark.cql.ddl import type_facts
 
         ov = {
             "uuid": _MARSHAL + "UUIDType",
@@ -561,19 +561,17 @@ class SSTableSchema:
             "ascii": _MARSHAL + "AsciiType",
             "counter": _MARSHAL + "CounterColumnType",
         }
-        over = {c: ov[t] for c, t in (type_overrides or {}).items()}
-        kinds = collection_kinds or {}
         by_name = {}
         for f in meta.schema.fields:
+            declared = meta.cql_type(f.name)
             if isinstance(f.dataType, (T.ArrayType, T.MapType)):
-                kind = kinds.get(
-                    f.name,
-                    "map" if isinstance(f.dataType, T.MapType) else "list",
-                )
+                kind = type_facts(declared or "", ()).kind
+                if kind not in ("list", "set", "map"):
+                    kind = "map" if isinstance(f.dataType, T.MapType) else "list"
                 by_name[f.name] = marshal_for_collection(kind, f.dataType)
                 continue
             ss = f.dataType.simpleString()
-            m = over.get(f.name) or _SPARK_TO_MARSHAL.get(ss)
+            m = ov.get(declared) or _SPARK_TO_MARSHAL.get(ss)
             if m is None:
                 raise ValueError(
                     f"column {f.name!r}: no sstable marshal for spark "
@@ -2320,9 +2318,7 @@ def _partition_tags(n: int) -> list[int]:
 def bulk_write_sstables(df, meta, out_dir: str, sstables: int = 1,
                         timestamp_micros: int = TIMESTAMP_EPOCH + 1,
                         ttl_seconds: int = 0,
-                        type_overrides: dict | None = None,
                         compression: bool = False,
-                        collection_kinds: dict | None = None,
                         version: str = VERSION,
                         column_index_size: int = 64 * 1024) -> list[dict]:
     """The CqlBulkRecordWriter / SSTable bulk-load analog: bucket the
@@ -2339,9 +2335,9 @@ def bulk_write_sstables(df, meta, out_dir: str, sstables: int = 1,
 
     from cassandra_pmem_spark.functions.token import token_column
 
-    schema = SSTableSchema.from_table_meta(meta, type_overrides, collection_kinds)
-    cql_types = dict(getattr(meta, "cql_key_types", ()) or ())
-    tok = token_column(list(meta.partition_key), df.schema, cql_types)
+    schema = SSTableSchema.from_table_meta(meta)
+    pk = list(meta.partition_key)
+    tok = token_column(pk, df.schema, {c: meta.cql_type(c) for c in pk})
     work = df.withColumn("__sst_tok", tok)
     # bucket = floor((token - MIN_LONG) / (2^64 / sstables)), computed
     # as floor((token/2^64 + 0.5) * sstables) in double space (no

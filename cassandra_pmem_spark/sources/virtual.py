@@ -71,39 +71,6 @@ def system_tables_oracle_sql() -> str:
 # virtual system views above (fixture-level), these derive from a LIVE
 # CqlDatabase registry — DDL is immediately visible to SELECTs.
 
-def _cql_type_text(dt: T.DataType, kind_hint: str | None, udt_name: str | None) -> str:
-    """Reverse-map a Spark type to its CQL name (AbstractType.asCQL3Type
-    analog). `kind_hint` disambiguates the Spark-erased set-vs-list;
-    `udt_name` names struct columns declared with a user type."""
-    if udt_name:
-        return udt_name
-    prim = {
-        T.LongType: "bigint", T.IntegerType: "int", T.ShortType: "smallint",
-        T.ByteType: "tinyint", T.StringType: "text", T.DoubleType: "double",
-        T.FloatType: "float", T.BooleanType: "boolean", T.BinaryType: "blob",
-        T.DateType: "date", T.TimestampType: "timestamp",
-    }.get(type(dt))
-    if prim:
-        return prim
-    if isinstance(dt, T.DecimalType):
-        return "varint" if dt.scale == 0 else "decimal"
-    if isinstance(dt, T.ArrayType):
-        inner = _cql_type_text(dt.elementType, None, None)
-        return f"set<{inner}>" if kind_hint == "set" else f"list<{inner}>"
-    if isinstance(dt, T.MapType):
-        return (
-            f"map<{_cql_type_text(dt.keyType, None, None)}, "
-            f"{_cql_type_text(dt.valueType, None, None)}>"
-        )
-    if isinstance(dt, T.StructType):
-        return (
-            "tuple<"
-            + ", ".join(_cql_type_text(f.dataType, None, None) for f in dt.fields)
-            + ">"
-        )
-    return dt.simpleString()
-
-
 def system_schema_frame(spark: SparkSession, registry, name: str) -> tuple:
     """(DataFrame, TableMeta) for one system_schema table reflecting the
     registry's CURRENT state. Tiny by construction — the deliberate
@@ -136,11 +103,6 @@ def system_schema_frame(spark: SparkSession, registry, name: str) -> tuple:
         rows = []
         for key in sorted(registry.tables, key=lambda k: (k[0] or "", k[1])):
             m = registry.tables[key]
-            kinds = registry.collection_kinds.get(key, {})
-            frozen = registry.frozen_columns.get(key, frozenset())
-            udts = registry.udt_columns.get(key, {})
-            declared = registry.column_type_text.get(key, {})
-            special = dict(getattr(m, "cql_key_types", ()) or ())
             ck_names = [c.name for c in m.clustering]
             for f in m.schema.fields:
                 c = f.name
@@ -152,15 +114,7 @@ def system_schema_frame(spark: SparkSession, registry, name: str) -> tuple:
                     kind, pos = "static", -1
                 else:
                     kind, pos = "regular", -1
-                txt = declared.get(c)
-                if txt is None:
-                    # API-built tables have no statement text — reconstruct
-                    txt = special.get(c) or _cql_type_text(
-                        f.dataType, kinds.get(c), udts.get(c)
-                    )
-                    if c in frozen and (kinds.get(c) or udts.get(c)):
-                        txt = f"frozen<{txt}>"
-                rows.append((key[0] or "", key[1], c, kind, pos, txt))
+                rows.append((key[0] or "", key[1], c, kind, pos, m.cql_type(c)))
         meta = TableMeta(
             "columns", schema, partition_key=("keyspace_name",),
             clustering=(
@@ -182,12 +136,7 @@ def system_schema_frame(spark: SparkSession, registry, name: str) -> tuple:
                 tn,
                 ",".join(st.fieldNames()),
                 ",".join(
-                    # declared text when the type came from a statement
-                    # (set-vs-list survives); reconstruction otherwise
-                    registry.type_field_text.get(tn, {}).get(
-                        f.name, _cql_type_text(f.dataType, None, None)
-                    )
-                    for f in st.fields
+                    registry.type_field_text[tn][f.name] for f in st.fields
                 ),
             )
             for tn, st in sorted(registry.types.items())

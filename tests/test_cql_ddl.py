@@ -195,8 +195,9 @@ class TestCqlDatabase:
     def test_uuid_pk_tokens_use_wire_form(self, spark):
         """A DDL-created table with a uuid partition key must hash the
         UUIDType 16-byte wire form (msb||lsb), NOT the 36-char text —
-        TableMeta.cql_key_types carries the type name Spark's StringType
-        erases, and both the token() selector and relation honor it."""
+        TableMeta.cql_types carries the type name Spark's StringType
+        erases, and both the token() selector and relation honor it,
+        also after an ALTER rebuilt the table's meta."""
         from cassandra_pmem_spark.functions.murmur3 import murmur3_token_bytes_py
 
         db = CqlDatabase(spark)
@@ -209,6 +210,7 @@ class TestCqlDatabase:
         ]
         for i, u in enumerate(uuids):
             db.execute(f"INSERT INTO u (id, v) VALUES ('{u}', {i})")
+        db.execute("ALTER TABLE uks.u ADD w int")
         got = {
             r.id: r.token
             for r in db.execute("SELECT id, token(id) FROM u").collect()
@@ -236,6 +238,81 @@ class TestCqlDatabase:
         db = CqlDatabase(spark)
         with pytest.raises(InvalidRequest, match="unknown table"):
             db.execute("SELECT * FROM ghosts")
+
+
+class TestDeclaredTypesFollowAlter:
+    """A column's declared CQL type is one record on TableMeta, so every
+    ALTER carries it along: the wire form, DESCRIBE text and type
+    references Spark's types erase stay right after the meta is rebuilt."""
+
+    def test_rename_keeps_timeuuid_clustering_type(self, spark):
+        db = CqlDatabase(spark)
+        db.execute("CREATE KEYSPACE rk WITH REPLICATION = {'class': 'SimpleStrategy'}")
+        db.execute("USE rk")
+        db.execute("CREATE TABLE t (k int, c timeuuid, v int, PRIMARY KEY (k, c))")
+        db.execute("ALTER TABLE t RENAME c TO cc")
+        for v, day in ((1, 16), (2, 18)):
+            db.execute(
+                f"INSERT INTO t (k, cc, v) VALUES "
+                f"(1, minTimeuuid('2015-07-{day} 00:00:00'), {v})"
+            )
+        ddl = db.execute("DESCRIBE TABLE t").collect()[0].create_statement
+        assert "    cc timeuuid," in ddl
+        cols = {
+            r.column_name: r.type
+            for r in db.execute(
+                "SELECT column_name, type FROM system_schema.columns"
+            ).collect()
+        }
+        assert cols == {"k": "int", "cc": "timeuuid", "v": "int"}
+        rows = db.execute(
+            "SELECT v FROM t WHERE k = 1 AND cc > maxTimeuuid('2015-07-17 00:00:00')"
+        ).collect()
+        assert [r.v for r in rows] == [2]
+
+    def test_add_on_uuid_key_then_flush_and_reload(self, spark, tmp_path):
+        from cassandra_pmem_spark.sources.sstable import verify_sstables
+
+        db = CqlDatabase(spark)
+        db.execute("CREATE TABLE u (id uuid PRIMARY KEY, v bigint)")
+        uuids = [f"{i:08x}-9dad-11d1-80b4-00c04fd430c8" for i in range(1, 9)]
+        for i, u in enumerate(uuids):
+            db.execute(f"INSERT INTO u (id, v) VALUES ('{u}', {i})")
+        db.execute("ALTER TABLE u ADD w int")
+        out = str(tmp_path / "flushed")
+        manifests = db.flush_sstables("u", out, sstables=2)
+        assert sum(m["rows"] for m in manifests) == len(uuids)
+        verify_sstables(out, extended=True)  # raises on corruption
+        db.execute("CREATE TABLE u2 (id uuid PRIMARY KEY, v bigint, w int)")
+        db.load_sstables("u2", out)
+        got = {(r.id, r.v, r.w) for r in db.execute("SELECT * FROM u2").collect()}
+        assert got == {(u, i, None) for i, u in enumerate(uuids)}
+
+    def test_alter_type_add_records_the_nested_reference(self, reg):
+        reg.execute("CREATE TYPE inner_t (a int)")
+        reg.execute("CREATE TYPE outer_t (b int)")
+        reg.execute("ALTER TYPE outer_t ADD f frozen<inner_t>")
+        with pytest.raises(
+            InvalidRequest,
+            match="Cannot drop user type 'inner_t' as it is still used by "
+            "user type outer_t",
+        ):
+            reg.execute("DROP TYPE inner_t")
+
+    def test_alter_type_chained_rename_keeps_field_types(self, reg):
+        from cassandra_pmem_spark.cql.describe import describe_rows
+
+        reg.execute("CREATE TYPE pair_t (a int, b text)")
+        reg.execute("ALTER TYPE pair_t RENAME b TO c AND a TO b")
+        ddl = describe_rows(reg, "TYPE pair_t", None)[0][3]
+        assert ddl == "CREATE TYPE pair_t (\n    b int,\n    c text\n);"
+
+    def test_alter_type_add_rejects_a_self_reference(self, reg):
+        # AlterTypeStatement.AddField: a type may not name itself
+        reg.execute("CREATE TYPE node_t (a int)")
+        with pytest.raises(InvalidRequest, match="circular reference"):
+            reg.execute("ALTER TYPE node_t ADD next frozen<node_t>")
+        reg.execute("DROP TYPE node_t")
 
 
 class TestQualifiedDmlAndCascade:

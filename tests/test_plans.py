@@ -1173,3 +1173,37 @@ def test_sstable_metadata_parsed_only_by_the_opener():
         ("sources/sstable.py", "open_sstable", "CompressionInfo.parse"),
         ("sources/sstable.py", "mutate_sstable_metadata", "parse_statistics"),
     }
+
+
+def test_ddl_builds_table_metas_only_at_create():
+    """Only CREATE TABLE and CREATE MATERIALIZED VIEW build a TableMeta
+    in the DDL; every ALTER derives its meta from the old one
+    (dataclasses.replace), so a column's declared type cannot be lost
+    by a field an ALTER forgot to copy."""
+    import ast
+    from pathlib import Path
+
+    import cassandra_pmem_spark
+
+    path = Path(cassandra_pmem_spark.__file__).parent / "cql" / "ddl.py"
+    calls = []
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self):
+            self.stack = ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            callee = ast.unparse(node.func)
+            if callee == "TableMeta" or callee.endswith(".TableMeta"):
+                calls.append(self.stack[-1])
+            self.generic_visit(node)
+
+    Calls().visit(ast.parse(path.read_text()))
+    assert sorted(calls) == ["create_table", "create_view"]
