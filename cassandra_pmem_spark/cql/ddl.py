@@ -354,6 +354,41 @@ class ViewMeta:
     isnotnull: tuple[str, ...] = ()
 
 
+def _renamed_meta(meta: TableMeta, renames: dict) -> TableMeta:
+    """`meta` with columns renamed per `renames` (old → new); each
+    column keeps its type, declared type and key position."""
+
+    def renamed(c: str) -> str:
+        return renames.get(c, c)
+
+    return dataclasses.replace(
+        meta,
+        schema=T.StructType(
+            [T.StructField(renamed(f.name), f.dataType) for f in meta.schema.fields]
+        ),
+        partition_key=tuple(map(renamed, meta.partition_key)),
+        clustering=tuple(
+            ClusteringColumn(renamed(c.name), c.ascending) for c in meta.clustering
+        ),
+        cql_types=tuple((renamed(c), t) for c, t in meta.cql_types),
+    )
+
+
+def _renamed_view(vm: ViewMeta, renames: dict) -> ViewMeta:
+    """`vm` over a base whose columns were renamed per `renames`."""
+
+    def renamed(c: str) -> str:
+        return renames.get(c, c)
+
+    return dataclasses.replace(
+        vm,
+        meta=_renamed_meta(vm.meta, renames),
+        selected=tuple(map(renamed, vm.selected)),
+        relations=tuple((renamed(c), op, v) for c, op, v in vm.relations),
+        isnotnull=tuple(map(renamed, vm.isnotnull)),
+    )
+
+
 class TableNamespace(dict):
     """Tables keyed by ``(keyspace | None, name)``, mirroring the
     reference's keyspace-scoped schema model (schema/KeyspaceMetadata.java
@@ -1532,22 +1567,7 @@ class _DdlParser(_Parser):
                 # renamed (AlterTableStatement.Renames)
                 raise InvalidRequest("only PRIMARY KEY columns can be renamed")
             self._end()
-
-            def renamed(c: str) -> str:
-                return new if c == old else c
-
-            return dataclasses.replace(
-                meta,
-                schema=T.StructType(
-                    [T.StructField(renamed(f.name), f.dataType) for f in fields]
-                ),
-                partition_key=tuple(map(renamed, meta.partition_key)),
-                clustering=tuple(
-                    ClusteringColumn(renamed(c.name), c.ascending)
-                    for c in meta.clustering
-                ),
-                cql_types=tuple((renamed(c), t) for c, t in meta.cql_types),
-            )
+            return _renamed_meta(meta, {old: new})
         if self.accept_kw("with"):
             # ALTER TABLE t WITH option = value [AND ...] — the options
             # form (AlterTableStatement.Options); only modeled params
@@ -1848,22 +1868,34 @@ class SchemaRegistry:
                     )
                 return
             meta = p.alter_table()
-            # AlterTableStatement.java:262 — a column a view selects
-            # cannot be dropped out from under it
             old = self.tables[p.last_key]
-            dropped = {f.name for f in old.schema.fields} - {
-                f.name for f in meta.schema.fields
-            }
-            if dropped:
-                for vm in self.views.values():
-                    if vm.base_key != p.last_key:
-                        continue
+            old_names = old.schema.fieldNames()
+            new_names = meta.schema.fieldNames()
+            views = [
+                (vk, vm) for vk, vm in self.views.items()
+                if vm.base_key == p.last_key
+            ]
+            if len(new_names) < len(old_names):
+                # AlterTableStatement.java:262 — a column a view selects
+                # cannot be dropped out from under it
+                dropped = set(old_names) - set(new_names)
+                for _vk, vm in views:
                     used = dropped & set(vm.selected)
                     if used:
                         raise InvalidRequest(
                             f"Cannot drop column {sorted(used)[0]} on base "
                             f"table {old.name} with materialized views"
                         )
+            elif len(new_names) == len(old_names):
+                # a RENAME renames the column in every dependent view too
+                # (AlterTableStatement.RenameColumns renames the view's
+                # primary-key column)
+                renames = {
+                    o: n for o, n in zip(old_names, new_names) if o != n
+                }
+                if renames:
+                    for vk, vm in views:
+                        self.views[vk] = _renamed_view(vm, renames)
             self.tables[p.last_key] = meta
         elif head == "drop":
             p.expect_kw("drop")
@@ -2290,6 +2322,7 @@ class CqlDatabase:
             return None
         if head in self._DDL_HEADS:
             # the parser scopes unqualified CREATEs to the USE'd keyspace
+            views_before = dict(self.registry.views)
             self.registry.execute(cql, current_keyspace=self.current_keyspace)
             self._index_stats.clear()  # DDL invalidates index estimates
             # sync live write sessions with the new schema: ADD/DROP swap
@@ -2313,11 +2346,14 @@ class CqlDatabase:
                         and (sess._mutations or sess._row_tombs or sess._cell_tombs)
                     ):
                         # roll the registry back to the pre-RENAME meta
-                        # before refusing — otherwise the registry holds
+                        # and views before refusing — otherwise it holds
                         # the new pk names while the live session (and its
                         # buffered mutations) keeps the old ones, and every
                         # later statement sees inconsistent schema
                         self.registry.tables[key] = sess.meta
+                        for vk, vm in views_before.items():
+                            if vm.base_key == key:
+                                self.registry.views[vk] = vm
                         raise InvalidRequest(
                             "cannot RENAME primary key columns while writes are buffered"
                         )

@@ -12,10 +12,11 @@ Two tiers, mirroring the reference's two write paths:
 - `CqlWriteSession` (this module) — the *statement* path: parses CQL text,
   accumulates mutations/tombstones driver-side (statement workloads are
   small by nature), and materializes visible state through the bulk
-  path's LWW merge (upsert_lww_cells); cell, row and range tombstones
-  then shadow the merged cells by timestamp in this module's own
-  column expressions. This is what runs the reference's
-  InsertTest/UpdateTest/DeleteTest/TTLTest-style corpus.
+  path's per-cell LWW aggregates (lww_cell_aggs), with row liveness in
+  the same aggregate; cell, row and range tombstones then shadow the
+  merged cells by timestamp in this module's own column expressions.
+  This is what runs the reference's InsertTest/UpdateTest/DeleteTest/
+  TTLTest-style corpus.
 - bulk loading — operators/upsert.py directly over mutation-log
   DataFrames; fully distributed (the CqlBulkRecordWriter analog).
 
@@ -36,7 +37,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -46,7 +47,7 @@ from cassandra_pmem_spark.cql.validator import (
     declared_timeuuid as _decl_timeuuid,
     InvalidRequest,
 )
-from cassandra_pmem_spark.operators.upsert import upsert_lww_cells
+from cassandra_pmem_spark.operators.upsert import lww_cell_aggs
 from cassandra_pmem_spark.plans.hints import unpersist_quietly
 
 
@@ -636,7 +637,7 @@ class _WriteParser(_Parser):
             vals.append(self.term(params, cursor))
         self.expect_punct(")")
         # TimeuuidBound elements resolve at the apply site, where the
-        # column's declared type is known (_resolve_tu_keys)
+        # column's declared type is known (_resolve_keys)
         if len(vals) == 1:
             # SingleColumnRelation.java:208 normalizes a one-element
             # literal IN to an EQ restriction at prepare time, so
@@ -659,7 +660,7 @@ class _WriteParser(_Parser):
                     )
                 v = self.term(params, cursor)
                 # a TimeuuidBound resolves at the apply site, where the
-                # column's declared type is known (_resolve_tu_keys)
+                # column's declared type is known (_resolve_keys)
                 out[col] = v
             if not self.accept_kw("and"):
                 break
@@ -780,8 +781,9 @@ class CqlWriteSession:
 
     `table(now)` materializes the visible state, applying in order: TTL
     expiry (mutations expired at `now` leave the log before the merge) →
-    cell-level LWW merge → counter folding → cell tombstones → row and
-    range tombstones. `now` (same unit as writetime) is injectable for
+    one aggregate for the cell-level LWW merge and row liveness →
+    counter folding → cell, row and range tombstones (one threshold
+    pass). `now` (same unit as writetime) is injectable for
     deterministic TTL tests (TTLTest.java style).
 
     The session also memoizes the frames reads compile over `table()`
@@ -1091,7 +1093,7 @@ class CqlWriteSession:
                 raise InvalidRequest(
                     f"PRIMARY KEY part {sorted(bad_pk)} found in SET part"
                 )
-            combos = _expand_in_keys(self._resolve_tu_keys(key))
+            combos = _expand_in_keys(self._resolve_keys(key))
             if cond is not None:
                 _reject_in_with_conditions(key, self.meta, "updates")
             if not self._condition_holds(cond, self._key_of(combos[0])):
@@ -1135,12 +1137,12 @@ class CqlWriteSession:
                 if bad:
                     raise InvalidRequest(f"range delete only on clustering columns; got {bad}")
                 self._gate_tu_ranges(ranges)
-                for ckey in _expand_in_keys(self._resolve_tu_keys(key)):
+                for ckey in _expand_in_keys(self._resolve_keys(key)):
                     self._range_tombs.append(
                         RangeTombstoneStmt(dict(ckey), dict(ranges), wt)
                     )
                 return True
-            combos = _expand_in_keys(self._resolve_tu_keys(key))
+            combos = _expand_in_keys(self._resolve_keys(key))
             if cond is not None:
                 _reject_in_with_conditions(key, self.meta, "deletions")
             if not self._condition_holds(cond, self._key_of(combos[0])):
@@ -1855,14 +1857,21 @@ class CqlWriteSession:
             return val.instant()
         return val
 
-    def _resolve_tu_keys(self, key: dict) -> dict:
-        """min/maxTimeuuid folds in WHERE =/IN key positions: on a
-        declared timeuuid column the extreme IS a value — the reference's
-        fake uuid — so the predicate that SELECTs a stored extreme
-        addresses it in UPDATE/DELETE too; elsewhere it equals nothing
-        real and rejects with guidance (parser parity)."""
+    def _resolve_keys(self, key: dict) -> dict:
+        """UPDATE/DELETE WHERE =/IN key values. A null is refused, as the
+        reference's EQ/IN restrictions refuse it (SingleColumnRestriction
+        appendTo), so no mutation or tombstone carries a null key part.
+        min/maxTimeuuid folds: on a declared timeuuid column the extreme
+        IS a value — the reference's fake uuid — so the predicate that
+        SELECTs a stored extreme addresses it in UPDATE/DELETE too;
+        elsewhere it equals nothing real and rejects with guidance
+        (parser parity)."""
 
         def one(col, v, where):
+            if v is None:
+                raise InvalidRequest(
+                    f"Invalid null value in condition for column {col}"
+                )
             if not isinstance(v, TimeuuidBound):
                 return v
             if _decl_timeuuid(self.meta, col):
@@ -2229,18 +2238,30 @@ class CqlWriteSession:
 
         log = self._log_frame(rows, log_schema) if rows else None
         if self._base is not None:
-            base = (
-                self._base.select(*fields)
-                .withColumn("__writetime", F.lit(0).cast("long"))
-                .withColumn("__expiry", F.lit(None).cast("long"))
-                .withColumn("__row_live_wt", F.lit(0).cast("long"))
-                .withColumn("__stmt", F.lit(0).cast("long"))
-            )
+            # one projection: the constant shadows, each elem column's
+            # fragment/full-write pair and each UDT's field cells
+            proj = [
+                F.lit(None).cast(by_name[c].dataType).alias(c)
+                # the struct column itself is dead weight post-
+                # decomposition (reassembly rebuilds it) — null it at the
+                # DECLARED type so unionByName can't clash when the base
+                # was captured under a pre-ALTER TYPE shape
+                if c in udt_syn
+                else F.col(c)
+                for c in fields
+            ] + [
+                F.lit(0).cast("long").alias("__writetime"),
+                F.lit(None).cast("long").alias("__expiry"),
+                F.lit(0).cast("long").alias("__row_live_wt"),
+                F.lit(0).cast("long").alias("__stmt"),
+            ]
             for c in elem_cols:
-                base = base.withColumn(
-                    f"__frag_{c}",
-                    F.lit(None).cast(self._cell_map_type(c, by_name[c].dataType)),
-                ).withColumn(f"__full_{c}", F.col(c).isNotNull())
+                proj.append(
+                    F.lit(None)
+                    .cast(self._cell_map_type(c, by_name[c].dataType))
+                    .alias(f"__frag_{c}")
+                )
+                proj.append(F.col(c).isNotNull().alias(f"__full_{c}"))
             for c in udt_cols:
                 # base struct decomposes into field cells written at t=0;
                 # a field ADDed by ALTER TYPE after the base was captured
@@ -2252,17 +2273,14 @@ class CqlWriteSession:
                     else set()
                 )
                 for syn, f, ftype in udt_syn[c]:
-                    base = base.withColumn(
-                        syn,
-                        F.col(c).getField(f)
-                        if f in have
-                        else F.lit(None).cast(ftype),
+                    proj.append(
+                        (
+                            F.col(c).getField(f)
+                            if f in have
+                            else F.lit(None).cast(ftype)
+                        ).alias(syn)
                     )
-                # the struct column itself is dead weight post-
-                # decomposition (reassembly rebuilds it) — null it at the
-                # DECLARED type so unionByName can't clash when the base
-                # was captured under a pre-ALTER TYPE shape
-                base = base.withColumn(c, F.lit(None).cast(by_name[c].dataType))
+            base = self._base.select(*proj)
             log = base.unionByName(log) if log is not None else base
         if log is None:
             # empty session: the zero-row frame still needs the shadow
@@ -2300,88 +2318,67 @@ class CqlWriteSession:
         if now is not None:
             log = log.filter(F.col("__expiry").isNull() | (F.col("__expiry") > F.lit(now)))
 
-        if scalar_cols:
-            merged = upsert_lww_cells(
-                log,
-                key=key_cols,
-                value_cols=scalar_cols,
-                writetime_col="__writetime",
-                expiry_col="__expiry",
-            )
-        else:  # every value column is per-cell: pk universe only
-            merged = log.select(*key_cols).distinct()
-        liveness = log.groupBy(*key_cols).agg(
-            F.max("__row_live_wt").alias("__rlwt")
+        # ONE aggregate: cell LWW for every scalar column and the row's
+        # primary-key liveness (db/LivenessInfo.java) group the same log
+        # by the same key, so they share one shuffle
+        merged = log.groupBy(*key_cols).agg(
+            *lww_cell_aggs(scalar_cols, "__writetime", "__expiry"),
+            F.max("__row_live_wt").alias("__rlwt"),
         )
-        merged = merged.join(liveness, key_cols, "left")
         for c in elem_cols:
             merged = merged.join(
                 self._merge_elem_col(log, log_all, key_cols, c), key_cols, "left"
-            ).withColumn(
-                f"_writetime_{c}",
-                F.when(
-                    F.size(F.map_values(F.col(f"_cellwt_{c}"))) > 0,
-                    F.array_max(F.map_values(F.col(f"_cellwt_{c}"))),
-                ),
-            ).withColumn(
-                f"_expiry_{c}",
-                F.when(
-                    F.size(F.map_values(F.col(f"_cellexp_{c}"))) > 0,
-                    F.array_max(F.map_values(F.col(f"_cellexp_{c}"))),
-                ),
             )
+        merged = _project(
+            merged,
+            {
+                sh: F.when(
+                    F.size(F.map_values(F.col(f"{cells}{c}"))) > 0,
+                    F.array_max(F.map_values(F.col(f"{cells}{c}"))),
+                )
+                for c in elem_cols
+                for sh, cells in (
+                    (f"_writetime_{c}", "_cellwt_"),
+                    (f"_expiry_{c}", "_cellexp_"),
+                )
+            },
+        )
 
-        # counter folding (CounterMutation.java:49): deltas replayed on top
+        # counter folding (CounterMutation.java:49): each counter column
+        # becomes coalesce(col, 0) + the sum of its key's deltas, in one
+        # projection (a row no delta matches keeps its value)
+        deltas: dict[str, list] = {}
         for m in self._mutations:
-            for col, d in m.counter_deltas.items():
-                cond = F.lit(True)
-                for kc, kv in zip(key_cols, m.key):
-                    cond = cond & (F.col(kc) == F.lit(kv))
-                merged = merged.withColumn(
-                    col,
-                    F.when(cond, F.coalesce(F.col(col), F.lit(0)) + F.lit(d)).otherwise(
-                        F.col(col)
-                    ),
-                )
+            if m.counter_deltas:
+                cond = _key_match(zip(key_cols, m.key))
+                for col, d in m.counter_deltas.items():
+                    deltas.setdefault(col, []).append((cond, d))
+        folded = {}
+        for col, hits in deltas.items():
+            total, any_hit = F.coalesce(F.col(col), F.lit(0)), F.lit(False)
+            for cond, d in hits:
+                total = total + F.when(cond, F.lit(d)).otherwise(F.lit(0))
+                any_hit = any_hit | cond
+            folded[col] = F.when(any_hit, total).otherwise(F.col(col))
+        merged = _project(merged, folded)
 
-        # cell tombstones: null out cells whose surviving writetime <= delete ts
-        # (their liveness shadows go with them — a deleted cell has no
-        # writetime/ttl to SELECT). For per-cell map columns the shadow is
-        # cell-granular: only entries written at or before the delete die.
-        for ct in self._cell_tombs:
-            cond = F.lit(True)
-            for kc, kv in zip(key_cols, ct.key):
-                cond = cond & (F.col(kc) == F.lit(kv))
-            for col in ct.columns:
-                if col in elem_cols:
-                    merged = self._shadow_elem_cells(merged, col, cond, ct.writetime)
-                    continue
-                dead = cond & (
-                    F.col(f"_writetime_{col}").isNull()
-                    | (F.col(f"_writetime_{col}") <= F.lit(ct.writetime))
-                )
-                merged = merged.withColumn(
-                    col, F.when(dead, F.lit(None)).otherwise(F.col(col))
-                )
-                for sh in (f"_writetime_{col}", f"_expiry_{col}"):
-                    merged = merged.withColumn(
-                        sh, F.when(dead, F.lit(None)).otherwise(F.col(sh))
-                    )
-
-        # row + range tombstones (db/DeletionTime.java, RangeTombstone.java):
-        # a delete at t shadows every matching cell with writetime <= t — so
-        # delete-then-reinsert keeps only the newer cells. Rows whose cells
-        # are all shadowed disappear.
-        shadow_preds = []
-        for rt in self._row_tombs:
-            cond = F.lit(True)
-            for kc, kv in zip(key_cols, rt.key):
-                cond = cond & (F.col(kc) == F.lit(kv))
-            shadow_preds.append((cond, rt.writetime))
+        # tombstones (db/DeletionTime.java, RangeTombstone.java): a delete
+        # at t shadows every matching cell with writetime <= t — so
+        # delete-then-reinsert keeps only the newer cells, and rows whose
+        # cells are all shadowed disappear. A shadowed cell never revives,
+        # so a cell dies iff the NEWEST tombstone matching it is at or
+        # after its writetime: one projection computes that threshold per
+        # row (`__del`, row + range tombstones) and per cell-tombstoned
+        # column (`__cdel_{col}`), a second applies it. Cell tombstones
+        # null the cell with its liveness shadows (a deleted cell has no
+        # writetime/ttl to SELECT); per-cell collection columns drop only
+        # the cells written at or before the threshold.
+        shadow_preds = [
+            (_key_match(zip(key_cols, rt.key)), rt.writetime)
+            for rt in self._row_tombs
+        ]
         for rg in self._range_tombs:
-            cond = F.lit(True)
-            for kc, kv in rg.eq.items():
-                cond = cond & (F.col(kc) == F.lit(kv))
+            cond = _key_match(rg.eq.items())
             for col, (lo, hi) in rg.ranges.items():
                 for bound, is_lo in ((lo, True), (hi, False)):
                     if bound is None:
@@ -2424,95 +2421,82 @@ class CqlWriteSession:
                     else:
                         cond = cond & ((lhs <= rv) if incl else (lhs < rv))
             shadow_preds.append((cond, rg.writetime))
+        cell_preds: dict[str, list] = {}
+        for ct in self._cell_tombs:
+            cond = _key_match(zip(key_cols, ct.key))
+            for col in ct.columns:
+                cell_preds.setdefault(col, []).append((cond, ct.writetime))
+        thresholds = {
+            f"__cdel_{col}": _newest_match(preds)
+            for col, preds in cell_preds.items()
+        }
         if shadow_preds:
-            any_key_cond = F.lit(False)
-            for cond, wt in shadow_preds:
-                any_key_cond = any_key_cond | cond
-                merged = merged.withColumn(
-                    "__rlwt",
-                    F.when(
-                        cond & (F.col("__rlwt") <= F.lit(wt)), F.lit(None)
-                    ).otherwise(F.col("__rlwt")),
-                )
-                for col in elem_cols:
-                    merged = self._shadow_elem_cells(merged, col, cond, wt)
-                for col in scalar_cols:
-                    # Materialize deadness FIRST: the chained withColumns
-                    # below mutate columns that `dead` references, and a
-                    # lazily-bound expression would re-evaluate against
-                    # the already-nulled column (wrong answer).
-                    merged = merged.withColumn(
-                        f"__dead_{col}",
-                        cond
-                        & (
-                            F.col(f"_writetime_{col}").isNull()
-                            | (F.col(f"_writetime_{col}") <= F.lit(wt))
-                        ),
-                    )
-                    dead = F.col(f"__dead_{col}")
-                    merged = merged.withColumn(
-                        col, F.when(dead, F.lit(None)).otherwise(F.col(col))
-                    ).withColumn(
-                        f"_writetime_{col}",
-                        F.when(dead, F.lit(None)).otherwise(F.col(f"_writetime_{col}")),
-                    ).withColumn(
-                        f"_expiry_{col}",
-                        F.when(dead, F.lit(None)).otherwise(F.col(f"_expiry_{col}")),
-                    ).drop(f"__dead_{col}")
+            thresholds["__del"] = _newest_match(shadow_preds)
+        if thresholds:
+            merged = _project(merged, thresholds)
+            applied = {}
+            row_del = [F.col("__del")] if shadow_preds else []
+            if shadow_preds:
+                applied["__rlwt"] = F.when(
+                    F.col("__rlwt") <= F.col("__del"), F.lit(None)
+                ).otherwise(F.col("__rlwt"))
+            shadowed = (scalar_cols + elem_cols if shadow_preds else []) + list(
+                cell_preds
+            )
+            for col in dict.fromkeys(shadowed):
+                ts = row_del + ([F.col(f"__cdel_{col}")] if col in cell_preds else [])
+                thr = ts[0] if len(ts) == 1 else F.greatest(*ts)
+                if col in elem_cols:
+                    applied.update(self._shadow_elem_cells(col, thr))
+                    continue
+                wt = F.col(f"_writetime_{col}")
+                dead = thr.isNotNull() & (wt.isNull() | (wt <= thr))
+                for c in (col, f"_writetime_{col}", f"_expiry_{col}"):
+                    applied[c] = F.when(dead, F.lit(None)).otherwise(F.col(c))
+            merged = _project(merged, applied, drop=thresholds)
+
         # non-frozen empty collections are a COMPLEX DELETION, not a
         # value: writing {} / [] stores no cells, so the column is dead —
         # value NULL and no liveness (WRITETIME must be NULL, and an
         # UPDATE-created row whose only column is an empty collection is
         # not visible at all). Runs BEFORE the row-visibility filter so
         # the dead column cannot keep the row alive. Frozen collections
-        # are single cells and keep their empty value.
+        # are single cells and keep their empty value; the per-cell path
+        # already stores no cells for {}.
         info = self.collection_info
+        emptied = {}
         for col in value_cols:
             dt = by_name[col].dataType
             if not isinstance(dt, (T.ArrayType, T.MapType)):
                 continue
-            if info and col in info.frozen:
+            if (info and col in info.frozen) or col in elem_cols:
                 continue
-            if col in elem_cols:
-                continue  # per-cell path already stores no cells for {}
-            sz = F.size(
+            dead = F.size(
                 F.map_keys(F.col(col)) if isinstance(dt, T.MapType) else F.col(col)
-            )
-            # `sz == 0` references `col`, which the first withColumn
-            # nulls; materialize deadness in a temp column so the shadow
-            # columns see the PRE-mutation value (a lazily-bound `dead`
-            # would re-evaluate size(NULL) and never clear the shadows).
-            merged = merged.withColumn(f"__dead_{col}", sz == 0)
-            dead = F.col(f"__dead_{col}")
-            merged = merged.withColumn(
-                col, F.when(dead, F.lit(None)).otherwise(F.col(col))
-            ).withColumn(
-                f"_writetime_{col}",
-                F.when(dead, F.lit(None)).otherwise(F.col(f"_writetime_{col}")),
-            ).withColumn(
-                f"_expiry_{col}",
-                F.when(dead, F.lit(None)).otherwise(F.col(f"_expiry_{col}")),
-            ).drop(f"__dead_{col}")
+            ) == 0
+            for c in (col, f"_writetime_{col}", f"_expiry_{col}"):
+                emptied[c] = F.when(dead, F.lit(None)).otherwise(F.col(c))
+        merged = _project(merged, emptied)
 
         # reassemble non-frozen UDT structs from their surviving field
         # cells; the column is NULL iff no field cell is live (a UDT with
         # every field deleted reads as NULL, UserTypesTest shapes), and
         # its column-level writetime/expiry are the per-cell maxima —
         # matching what elem_cols expose post-merge
+        reassembled = {}
         for c in udt_cols:
             wts = [F.col(f"_writetime_{s}") for s, _f, _t in udt_syn[c]]
             exps = [F.col(f"_expiry_{s}") for s, _f, _t in udt_syn[c]]
-            merged = merged.withColumn(
-                f"_writetime_{c}", F.greatest(*wts) if len(wts) > 1 else wts[0]
-            ).withColumn(
-                f"_expiry_{c}", F.greatest(*exps) if len(exps) > 1 else exps[0]
-            ).withColumn(
-                c,
-                F.when(
-                    F.col(f"_writetime_{c}").isNotNull(),
-                    F.struct(*[F.col(s).alias(f) for s, f, _t in udt_syn[c]]),
-                ).otherwise(F.lit(None).cast(by_name[c].dataType)),
+            newest = F.greatest(*wts) if len(wts) > 1 else wts[0]
+            reassembled[f"_writetime_{c}"] = newest
+            reassembled[f"_expiry_{c}"] = (
+                F.greatest(*exps) if len(exps) > 1 else exps[0]
             )
+            reassembled[c] = F.when(
+                newest.isNotNull(),
+                F.struct(*[F.col(s).alias(f) for s, f, _t in udt_syn[c]]),
+            ).otherwise(F.lit(None).cast(by_name[c].dataType))
+        merged = _project(merged, reassembled)
 
         visible = F.col("__rlwt").isNotNull()
         for col in value_cols:
@@ -2662,58 +2646,78 @@ class CqlWriteSession:
             F.map_from_entries(ent(F.col("__c.exp"))).alias(f"_cellexp_{col}"),
         )
 
-    def _shadow_elem_cells(self, merged, col, cond, wt):
-        """Tombstone shadowing at cell granularity: under `cond`, drop
-        every cell whose own writetime <= the delete timestamp, then
-        recompute the column-level liveness from the survivors. The
-        value rewrite follows the collection shape — map entries by key,
-        set elements by themselves, list values by their position in the
+    def _shadow_elem_cells(self, col: str, thr: Column) -> dict:
+        """Tombstone shadowing at cell granularity, as expressions over
+        one projection's input: where the newest matching tombstone `thr`
+        is not null, drop every cell whose own writetime <= thr, then
+        derive the column-level liveness from the survivors. The value
+        rewrite follows the collection shape — map entries by key, set
+        elements by themselves, list values by their position in the
         key-sorted cell order."""
         kind = self._collection_kind_of(col)
+        hit = thr.isNotNull()
         cwt = F.col(f"_cellwt_{col}")
-        survivors = F.map_filter(cwt, lambda _k, w: w > F.lit(wt))
         if kind == "map":
-            new_val = F.map_filter(
-                F.col(col), lambda k, _v: cwt[k] > F.lit(wt)
-            )
+            new_val = F.map_filter(F.col(col), lambda k, _v: cwt[k] > thr)
         elif kind == "set":
-            new_val = F.filter(F.col(col), lambda x: cwt[x] > F.lit(wt))
+            new_val = F.filter(F.col(col), lambda x: cwt[x] > thr)
         else:
             # i-th list value ↔ i-th key-sorted cell: zip, filter, project
             ks = F.array_sort(F.map_keys(cwt))
             new_val = F.transform(
                 F.filter(
                     F.arrays_zip(ks.alias("k"), F.col(col).alias("v")),
-                    lambda e: cwt[e["k"]] > F.lit(wt),
+                    lambda e: cwt[e["k"]] > thr,
                 ),
                 lambda e: e["v"],
             )
-        keep = lambda m: F.map_filter(  # noqa: E731
-            m, lambda k, _v: cwt[k] > F.lit(wt)
-        )
-        merged = (
-            merged.withColumn(
-                col, F.when(cond, new_val).otherwise(F.col(col))
-            )
-            .withColumn(
-                f"_cellexp_{col}",
-                F.when(cond, keep(F.col(f"_cellexp_{col}"))).otherwise(
-                    F.col(f"_cellexp_{col}")
-                ),
-            )
-            .withColumn(
-                f"_cellwt_{col}",
-                F.when(cond, survivors).otherwise(F.col(f"_cellwt_{col}")),
-            )
-        )
-        alive = F.size(F.map_values(F.col(f"_cellwt_{col}"))) > 0
-        return merged.withColumn(
-            f"_writetime_{col}",
-            F.when(alive, F.array_max(F.map_values(F.col(f"_cellwt_{col}")))),
-        ).withColumn(
-            f"_expiry_{col}",
-            F.when(alive, F.array_max(F.map_values(F.col(f"_cellexp_{col}")))),
-        )
+
+        def keep(m: Column) -> Column:
+            return F.when(
+                hit, F.map_filter(m, lambda k, _v: cwt[k] > thr)
+            ).otherwise(m)
+
+        new_wt, new_exp = keep(cwt), keep(F.col(f"_cellexp_{col}"))
+        alive = F.size(F.map_values(new_wt)) > 0
+        return {
+            col: F.when(hit, new_val).otherwise(F.col(col)),
+            f"_cellwt_{col}": new_wt,
+            f"_cellexp_{col}": new_exp,
+            f"_writetime_{col}": F.when(alive, F.array_max(F.map_values(new_wt))),
+            f"_expiry_{col}": F.when(alive, F.array_max(F.map_values(new_exp))),
+        }
+
+
+def _project(df: DataFrame, cols: dict, drop=()) -> DataFrame:
+    """One Project over `df`: each name in `cols` replaced in place (or
+    appended) by its expression, every name in `drop` removed, the rest
+    kept in order. Every expression reads `df`'s columns — a chain of
+    withColumn calls would build and analyse a Dataset per column."""
+    if not cols and not drop:
+        return df
+    kept = [
+        cols[c].alias(c) if c in cols else F.col(c)
+        for c in df.columns
+        if c not in drop
+    ]
+    added = [e.alias(c) for c, e in cols.items() if c not in df.columns]
+    return df.select(*kept, *added)
+
+
+def _key_match(pairs) -> Column:
+    """Equality on every (key column, value) pair."""
+    cond = F.lit(True)
+    for kc, kv in pairs:
+        cond = cond & (F.col(kc) == F.lit(kv))
+    return cond
+
+
+def _newest_match(preds: list) -> Column:
+    """Timestamp of the newest tombstone whose key predicate matches the
+    row, NULL when none does: greatest() skips the NULLs of the
+    tombstones that miss."""
+    hits = [F.when(cond, F.lit(wt)) for cond, wt in preds]
+    return hits[0] if len(hits) == 1 else F.greatest(*hits)
 
 
 def validate_batch_pieces(

@@ -18,6 +18,13 @@ Everything below is shuffle-based aggregation / anti-join — no collect(),
 no Python row loop — so it scales linearly with cluster size. At 100 TB the
 single shuffle on the primary key dominates; pre-bucketing the mutation log
 by pk makes the groupBy/anti-join shuffle-free.
+
+`lww_cell_aggs` is the per-cell aggregate list behind `upsert_lww_cells`.
+The CQL statement path (cql/writes.py) appends its row-liveness max
+(db/LivenessInfo.java) to the same list, so a row's cells and its
+primary-key liveness reconcile in ONE groupBy — one shuffle, no join —
+the way db/rows/Rows.java merges them in one pass. Its tombstones are
+column expressions over that aggregate, not the joins below.
 """
 
 from __future__ import annotations
@@ -49,6 +56,27 @@ def upsert_lww_rows(
     return out
 
 
+def lww_cell_aggs(
+    value_cols: Sequence[str],
+    writetime_col: str = "writetime",
+    expiry_col: str | None = None,
+) -> list:
+    """The per-cell LWW aggregate expressions behind `upsert_lww_cells`:
+    per column, the non-null value with the highest writetime
+    (``max_by``) and that writetime as ``_writetime_{col}``; with
+    ``expiry_col``, the winning cell's expiry as ``_expiry_{col}``.
+    Exposed so a caller can fold further aggregates (the statement
+    path's row liveness) into the SAME groupBy — one shuffle."""
+    aggs = []
+    for c in value_cols:
+        wt = F.when(F.col(c).isNotNull(), F.col(writetime_col))
+        aggs.append(F.max_by(F.col(c), wt).alias(c))
+        aggs.append(F.max(wt).alias(f"_writetime_{c}"))
+        if expiry_col is not None:
+            aggs.append(F.max_by(F.col(expiry_col), wt).alias(f"_expiry_{c}"))
+    return aggs
+
+
 def upsert_lww_cells(
     mutations: DataFrame,
     key: Sequence[str],
@@ -65,14 +93,9 @@ def upsert_lww_cells(
     Single hash aggregate; fully JVM-side. With ``expiry_col``, each
     surviving cell also carries its own expiry as ``_expiry_{col}`` (the
     liveness the TTL(col) selector reads — db/LivenessInfo.java)."""
-    aggs = []
-    for c in value_cols:
-        wt = F.when(F.col(c).isNotNull(), F.col(writetime_col))
-        aggs.append(F.max_by(F.col(c), wt).alias(c))
-        aggs.append(F.max(wt).alias(f"_writetime_{c}"))
-        if expiry_col is not None:
-            aggs.append(F.max_by(F.col(expiry_col), wt).alias(f"_expiry_{c}"))
-    return mutations.groupBy(*key).agg(*aggs)
+    return mutations.groupBy(*key).agg(
+        *lww_cell_aggs(value_cols, writetime_col, expiry_col)
+    )
 
 
 def apply_row_tombstones(

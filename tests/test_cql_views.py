@@ -154,6 +154,32 @@ class TestViewGates:
         with pytest.raises(InvalidRequest, match="Cannot drop column"):
             db.execute("ALTER TABLE scores DROP day")
 
+    def _rename_fixture(self, db):
+        db.execute("CREATE TABLE t (k int, c int, v int, PRIMARY KEY (k, c))")
+        db.execute(
+            "CREATE MATERIALIZED VIEW mv AS SELECT k, c, v FROM t "
+            "WHERE k IS NOT NULL AND c IS NOT NULL AND c > 0 "
+            "PRIMARY KEY (c, k)"
+        )
+
+    def test_alter_rename_selected_pk_column_renames_it_in_the_view(self, db):
+        # AlterTableStatement.RenameColumns renames the view's column; a
+        # RENAME is not a DROP of the old name
+        self._rename_fixture(db)
+        db.execute("ALTER TABLE mvt.t RENAME c TO cc")
+        db.execute("INSERT INTO mvt.t (k, cc, v) VALUES (1, 2, 3)")
+        db.execute("INSERT INTO mvt.t (k, cc, v) VALUES (4, 0, 5)")
+        got = [tuple(r) for r in db.execute("SELECT cc, k, v FROM mvt.mv").collect()]
+        assert got == [(2, 1, 3)]
+
+    def test_refused_rename_leaves_the_view_unrenamed(self, db):
+        self._rename_fixture(db)
+        db.execute("INSERT INTO mvt.t (k, c, v) VALUES (1, 2, 3)")
+        with pytest.raises(InvalidRequest, match="while writes are buffered"):
+            db.execute("ALTER TABLE mvt.t RENAME c TO cc")
+        got = [tuple(r) for r in db.execute("SELECT c, k, v FROM mvt.mv").collect()]
+        assert got == [(2, 1, 3)]
+
     def test_counter_base_rejected(self, db):
         db.execute("CREATE TABLE ctr (k int PRIMARY KEY, n counter)")
         with pytest.raises(InvalidRequest, match="not supported on counter tables"):

@@ -84,6 +84,17 @@ class TestCounters:
         sess.execute("UPDATE kv SET n = n - 2 WHERE k = 1 AND c = 1")
         assert rows(sess.table(), "k", "c", "n") == [(1, 1, 6)]
 
+    def test_deltas_fold_per_key_around_a_row_delete(self, sess):
+        # one key's deltas interleave with another key's; the other key's
+        # row delete must not touch the first key's sum
+        sess.execute("UPDATE kv SET n = n + 5 WHERE k = 1 AND c = 1")
+        sess.execute("UPDATE kv SET n = n + 3 WHERE k = 1 AND c = 1")
+        sess.execute("UPDATE kv SET n = n + 7 WHERE k = 2 AND c = 1")
+        sess.execute("UPDATE kv SET n = n - 2 WHERE k = 1 AND c = 1")
+        sess.execute("DELETE FROM kv WHERE k = 2 AND c = 1")
+        sess.execute("UPDATE kv SET n = n + 4 WHERE k = 1 AND c = 1")
+        assert rows(sess.table(), "k", "c", "n") == [(1, 1, 10)]
+
 
 class TestDelete:
     def test_row_delete(self, sess):
@@ -450,6 +461,29 @@ class TestBatchEntryParity:
         if isinstance(expected, dict):
             expected = {t: expected[t] for t in names}
         assert got == expected
+
+
+class TestNullKeyRefused:
+    """SingleColumnRestriction appendTo: a null in a WHERE =/IN key
+    relation is refused, so no buffered mutation or tombstone carries a
+    null key part."""
+
+    @pytest.mark.parametrize(
+        "stmt, params",
+        [
+            ("UPDATE kv SET a = 'x' WHERE k = null AND c = 1", None),
+            ("UPDATE kv SET n = n + 1 WHERE k = ? AND c = 1", [None]),
+            ("UPDATE kv SET a = 'x' WHERE k = 1 AND c IN (1, null)", None),
+            ("DELETE FROM kv WHERE k = ? AND c = 1", [None]),
+            ("DELETE a FROM kv WHERE k = 1 AND c = null", None),
+            ("DELETE FROM kv WHERE k = null AND c >= 1", None),
+        ],
+    )
+    def test_null_key_relation_refused(self, sess, stmt, params):
+        with pytest.raises(InvalidRequest, match="Invalid null value in condition"):
+            sess.execute(stmt, params=params)
+        assert not (sess._mutations or sess._row_tombs or sess._cell_tombs)
+        assert not sess._range_tombs
 
 
 class TestPrimaryKeyInSet:

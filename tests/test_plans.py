@@ -905,9 +905,10 @@ class TestRound6Plans:
 
 class TestUdtMergePlan:
     """SCALE.md round-9 claim: non-frozen UDT field cells ride the SAME
-    one-pass cell-LWW merge as scalar columns — decomposing a UDT into
+    cell-LWW aggregate as scalar columns — decomposing a UDT into
     per-field synthetic columns adds ZERO exchanges over an equivalent
-    all-scalar table."""
+    all-scalar table (TestVisibleMergePlan pins that aggregate to one
+    shuffle)."""
 
     def _session(self, spark, udt: bool):
         from pyspark.sql import types as T
@@ -956,6 +957,64 @@ class TestUdtMergePlan:
         n_scalar = scalar_plan.count("Exchange")
         n_udt = udt_plan.count("Exchange")
         assert n_udt == n_scalar, (n_udt, n_scalar)
+
+
+class TestVisibleMergePlan:
+    """The statement path's visible-state merge (`CqlWriteSession.table`):
+    cell LWW and row liveness share ONE aggregate — one shuffle, no join —
+    and the tombstones apply in a fixed number of projections whatever
+    their count."""
+
+    def _session(self, spark, base=None):
+        from pyspark.sql import types as T
+
+        from cassandra_pmem_spark.catalog import ClusteringColumn, TableMeta
+        from cassandra_pmem_spark.cql.writes import CqlWriteSession
+
+        schema = T.StructType(
+            [
+                T.StructField("k", T.LongType()),
+                T.StructField("c", T.LongType()),
+                T.StructField("a", T.StringType()),
+                T.StructField("b", T.LongType()),
+            ]
+        )
+        meta = TableMeta(
+            "t", schema, partition_key=("k",), clustering=(ClusteringColumn("c"),)
+        )
+        if base is not None:
+            base = spark.createDataFrame(base, schema).persist()
+        s = CqlWriteSession(spark, meta, base=base)
+        s.execute("UPDATE t SET a = 'x' WHERE k = 1 AND c = 1")
+        s.execute("INSERT INTO t (k, c, a, b) VALUES (2, 1, 'y', 3)")
+        return s, base
+
+    @pytest.mark.parametrize("with_base", [False, True])
+    def test_merge_is_one_exchange_and_no_join(self, spark, with_base):
+        s, base = self._session(
+            spark, base=[(3, 1, "p", 4), (1, 2, "q", 5)] if with_base else None
+        )
+        try:
+            plan = plan_of(s.table())
+        finally:
+            if base is not None:
+                base.unpersist()
+        assert plan.count("Exchange") == 1, plan
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+
+    def test_tombstone_count_adds_no_projection(self, spark):
+        def projects(s):
+            analysed = s.table()._jdf.queryExecution().analyzed().toString()
+            return analysed.count("Project [")
+
+        one, _ = self._session(spark)
+        one.execute("DELETE FROM t WHERE k = 1 AND c = 1")
+        twelve, _ = self._session(spark)
+        for i in range(4):
+            twelve.execute(f"DELETE FROM t WHERE k = {i} AND c = 1")
+            twelve.execute(f"DELETE FROM t WHERE k = {i} AND c >= {i}")
+            twelve.execute(f"DELETE a FROM t WHERE k = {i} AND c = 2")
+        assert projects(twelve) == projects(one), (projects(twelve), projects(one))
 
 
 class TestRound12Plans:

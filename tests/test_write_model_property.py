@@ -1,8 +1,9 @@
 """Property test: CqlWriteSession vs a reference model.
 
-Random sequences of INSERT / UPDATE / DELETE (row + column) with unique
-explicit timestamps applied both to the Spark write session and to a plain
-Python model of CQL cell semantics — final visible states must agree.
+Random sequences of INSERT / UPDATE / DELETE (row, column and clustering
+range) with unique explicit timestamps applied both to the Spark write
+session and to a plain Python model of CQL cell semantics — final visible
+states must agree.
 This sweeps interleavings (delete-then-reinsert, disjoint cell writes,
 out-of-order timestamps) that the hand-written scenarios can't enumerate.
 """
@@ -37,9 +38,17 @@ _VALS = ["v1", "v2", "v3"]
 
 @st.composite
 def op(draw):
-    kind = draw(st.sampled_from(["insert", "update_a", "update_b", "del_row", "del_col_a"]))
+    kind = draw(
+        st.sampled_from(
+            ["insert", "update_a", "update_b", "del_row", "del_col_a", "del_range"]
+        )
+    )
     key = draw(st.sampled_from(_KEYS))
-    val = draw(st.sampled_from(_VALS))
+    if kind == "del_range":
+        # a clustering-range delete from the key's c up to this bound
+        val = draw(st.integers(min_value=key[1], max_value=2))
+    else:
+        val = draw(st.sampled_from(_VALS))
     return kind, key, val
 
 
@@ -62,6 +71,11 @@ class Model:
             if col in d and d[col][1] <= wt:
                 del d[col]
 
+    def delete_range(self, k: int, c_lo: int, c_hi: int, wt: int):
+        for kk, cc in list(self.cells):
+            if kk == k and c_lo <= cc <= c_hi:
+                self.delete_cells((kk, cc), ["a", "b"], wt)
+
     def visible(self):
         out = []
         for (k, c), d in self.cells.items():
@@ -74,7 +88,7 @@ class Model:
 
 class TestWriteModelProperty:
     @settings(
-        max_examples=12,  # each example runs Spark jobs — keep the corpus tight
+        max_examples=16,  # each example runs Spark jobs — keep the corpus tight
         deadline=None,
         derandomize=True,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
@@ -110,6 +124,12 @@ class TestWriteModelProperty:
                     f"DELETE a FROM kv USING TIMESTAMP {wt} WHERE k = {k} AND c = {c}"
                 )
                 model.delete_cells((k, c), ["a"], wt)
+            elif kind == "del_range":
+                sess.execute(
+                    f"DELETE FROM kv USING TIMESTAMP {wt} "
+                    f"WHERE k = {k} AND c >= {c} AND c <= {val}"
+                )
+                model.delete_range(k, c, val, wt)
 
         got = sorted(
             (tuple(r) for r in sess.table().select("k", "c", "a", "b").collect()),
@@ -278,6 +298,8 @@ class TestBatchAtomicityProperty:
                 return f"UPDATE kv SET b = '{v}' WHERE k = {k} AND c = {c}"
             if kind == "del_row":
                 return f"DELETE FROM kv WHERE k = {k} AND c = {c}"
+            if kind == "del_range":
+                return f"DELETE FROM kv WHERE k = {k} AND c >= {c} AND c <= {v}"
             return f"DELETE a FROM kv WHERE k = {k} AND c = {c}"
 
         bad_stmt = {
