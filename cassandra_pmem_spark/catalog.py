@@ -85,6 +85,26 @@ class TableMeta:
         return tuple(f.name for f in self.schema.fields if f.name not in pk)
 
 
+def column_map(old: TableMeta, new: TableMeta) -> dict[str, str]:
+    """Where one ALTER moved each of `old`'s cells: old name -> new name.
+    Equal column counts pair positionally (a RENAME keeps the column
+    order); otherwise a column keeps its name, and one `new` lacks was
+    dropped and has no entry. A struct column's fields map the same way
+    under their "col#field" cell names, positionally over the common
+    prefix of the two structs (ALTER TYPE ADD appends a field, ALTER
+    TYPE RENAME renames one in place)."""
+    o, n = old.schema.fieldNames(), new.schema.fieldNames()
+    cols = dict(zip(o, n)) if len(o) == len(n) else {c: c for c in o if c in n}
+    old_t = {f.name: f.dataType for f in old.schema.fields}
+    new_t = {f.name: f.dataType for f in new.schema.fields}
+    out = dict(cols)
+    for oc, nc in cols.items():
+        if isinstance(old_t[oc], T.StructType) and isinstance(new_t[nc], T.StructType):
+            for of, nf in zip(old_t[oc].fields, new_t[nc].fields):
+                out[f"{oc}#{of.name}"] = f"{nc}#{nf.name}"
+    return out
+
+
 def _s(*fields: tuple[str, T.DataType]) -> T.StructType:
     return T.StructType([T.StructField(n, t) for n, t in fields])
 

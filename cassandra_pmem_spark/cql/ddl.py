@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cassandra_pmem_spark.catalog import ClusteringColumn, TableMeta
+from cassandra_pmem_spark.catalog import ClusteringColumn, TableMeta, column_map
 from cassandra_pmem_spark.cql.parser import _Parser, _tokenize
 from cassandra_pmem_spark.cql.validator import ConfigurationException, InvalidRequest
 from cassandra_pmem_spark.plans.hints import unpersist_quietly
@@ -1641,9 +1641,6 @@ class SchemaRegistry:
         self.type_field_text: dict[str, dict[str, str]] = {}
         # modeled table params (TableParams.java): default_time_to_live
         self.table_params: dict[tuple, dict] = {}
-        # (type name, {old field -> new field}) of the LAST ALTER TYPE —
-        # CqlDatabase's session sync consumes it to remap buffered cells
-        self.last_alter_type: tuple[str, dict[str, str]] | None = None
         # triggers per table (schema/TriggerMetadata.java: name + the
         # single 'class' option): table key -> {trigger name -> class}
         self.triggers: dict[tuple, dict[str, str]] = {}
@@ -1754,7 +1751,6 @@ class SchemaRegistry:
                 raise InvalidRequest(f"unsupported CREATE {nxt.upper()}")
         elif head == "alter":
             p.expect_kw("alter")
-            self.last_alter_type = None
             if p.peek().kind == "ident" and p.peek().text.lower() == "materialized":
                 # ALTER MATERIALIZED VIEW ks.v WITH opt = val [AND ...]
                 # (Parser.g st40; AlterViewStatement.java:44-71) — the
@@ -1841,7 +1837,6 @@ class SchemaRegistry:
                         "reference"
                     )
                 self.types[name] = new_struct
-                self.last_alter_type = (name, renames)
                 # keep the declared field-text map in step (DESCRIBE,
                 # system_schema.types and embedded_types read it)
                 ftxt = {
@@ -1869,33 +1864,27 @@ class SchemaRegistry:
                 return
             meta = p.alter_table()
             old = self.tables[p.last_key]
-            old_names = old.schema.fieldNames()
-            new_names = meta.schema.fieldNames()
+            moved = column_map(old, meta)
             views = [
                 (vk, vm) for vk, vm in self.views.items()
                 if vm.base_key == p.last_key
             ]
-            if len(new_names) < len(old_names):
-                # AlterTableStatement.java:262 — a column a view selects
-                # cannot be dropped out from under it
-                dropped = set(old_names) - set(new_names)
-                for _vk, vm in views:
-                    used = dropped & set(vm.selected)
-                    if used:
-                        raise InvalidRequest(
-                            f"Cannot drop column {sorted(used)[0]} on base "
-                            f"table {old.name} with materialized views"
-                        )
-            elif len(new_names) == len(old_names):
-                # a RENAME renames the column in every dependent view too
-                # (AlterTableStatement.RenameColumns renames the view's
-                # primary-key column)
-                renames = {
-                    o: n for o, n in zip(old_names, new_names) if o != n
-                }
-                if renames:
-                    for vk, vm in views:
-                        self.views[vk] = _renamed_view(vm, renames)
+            # AlterTableStatement.java:262 — a column a view selects
+            # cannot be dropped out from under it
+            for _vk, vm in views:
+                used = [c for c in vm.selected if c not in moved]
+                if used:
+                    raise InvalidRequest(
+                        f"Cannot drop column {sorted(used)[0]} on base "
+                        f"table {old.name} with materialized views"
+                    )
+            # a RENAME renames the column in every dependent view too
+            # (AlterTableStatement.RenameColumns renames the view's
+            # primary-key column)
+            renames = {o: n for o, n in moved.items() if o != n}
+            if renames:
+                for vk, vm in views:
+                    self.views[vk] = _renamed_view(vm, renames)
             self.tables[p.last_key] = meta
         elif head == "drop":
             p.expect_kw("drop")
@@ -2322,14 +2311,11 @@ class CqlDatabase:
             return None
         if head in self._DDL_HEADS:
             # the parser scopes unqualified CREATEs to the USE'd keyspace
-            views_before = dict(self.registry.views)
             self.registry.execute(cql, current_keyspace=self.current_keyspace)
             self._index_stats.clear()  # DDL invalidates index estimates
-            # sync live write sessions with the new schema: ADD/DROP swap
-            # the meta in place (buffered mutations carry over — absent
-            # columns read as null, dropped cells are ignored at merge);
-            # a DROP TABLE discards the session. RENAME would orphan
-            # buffered cell names, so it refuses under buffered writes.
+            # sync live write sessions with the new schema: a DROP TABLE
+            # discards the session; an ALTER TABLE or ALTER TYPE moves its
+            # base and buffered writes to the new meta (apply_schema)
             for key in list(self._sessions):
                 if key not in self.registry.tables:
                     self._release_table(key)
@@ -2341,94 +2327,9 @@ class CqlDatabase:
                     "default_ttl", 0
                 )
                 if sess.meta is not new_meta:
-                    if (
-                        set(new_meta.primary_key) != set(sess.meta.primary_key)
-                        and (sess._mutations or sess._row_tombs or sess._cell_tombs)
-                    ):
-                        # roll the registry back to the pre-RENAME meta
-                        # and views before refusing — otherwise it holds
-                        # the new pk names while the live session (and its
-                        # buffered mutations) keeps the old ones, and every
-                        # later statement sees inconsistent schema
-                        self.registry.tables[key] = sess.meta
-                        for vk, vm in views_before.items():
-                            if vm.base_key == key:
-                                self.registry.views[vk] = vm
-                        raise InvalidRequest(
-                            "cannot RENAME primary key columns while writes are buffered"
-                        )
-                    sess.meta = new_meta
-                    # refresh the Spark-erased facts too: an ALTER can add
-                    # or drop counter/frozen/collection columns, and a
-                    # cached session holding stale CollectionInfo would
-                    # e.g. let `SET ctr = 5` through on a column ALTERed
-                    # in as a counter (Operation.java setter rejection)
-                    sess.collection_info = self._collection_info(key)
-                    # ALTER TYPE RENAME: remap buffered per-field cells,
-                    # field-cell tombstones, and the base frame's struct
-                    # field names so the merge sees the NEW schema
-                    # (AlterTypeStatement renames the field, the cell
-                    # path — the field index — is unchanged)
-                    at = self.registry.last_alter_type
-                    if at and at[1]:
-                        tname, renames = at
-                        cols = [
-                            c
-                            for c, f in self.registry.facts(new_meta).items()
-                            if f.udt == tname
-                        ]
-                        for col in cols:
-                            for m in sess._mutations:
-                                if col in m.udt_cells:
-                                    m.udt_cells[col] = {
-                                        renames.get(f, f): v
-                                        for f, v in m.udt_cells[col].items()
-                                    }
-                                # frozen UDT whole-value cells are dicts
-                                # keyed by field name — remap those too
-                                v = m.cells.get(col)
-                                if isinstance(v, dict):
-                                    m.cells[col] = {
-                                        renames.get(f, f): x
-                                        for f, x in v.items()
-                                    }
-                            pref = col + "#"
-                            for ct in sess._cell_tombs:
-                                ct.columns = [
-                                    pref + renames.get(c[len(pref):], c[len(pref):])
-                                    if c.startswith(pref)
-                                    else c
-                                    for c in ct.columns
-                                ]
-                            if (
-                                sess.base is not None
-                                and col in sess.base.columns
-                            ):
-                                newdt = {
-                                    f.name: f.dataType
-                                    for f in new_meta.schema.fields
-                                }[col]
-                                rev = {n: o for o, n in renames.items()}
-                                old_fields = {
-                                    f.name
-                                    for f in sess.base.schema[col].dataType.fields
-                                }
-                                sess.base = sess.base.withColumn(
-                                    col,
-                                    F.struct(
-                                        *[
-                                            (
-                                                F.col(col).getField(
-                                                    rev.get(f.name, f.name)
-                                                )
-                                                if rev.get(f.name, f.name)
-                                                in old_fields
-                                                else F.lit(None).cast(f.dataType)
-                                            ).alias(f.name)
-                                            for f in newdt.fields
-                                        ]
-                                    ),
-                                )
+                    # the Spark-erased facts follow too: an ALTER can add
+                    # or drop counter/frozen/collection columns
+                    sess.apply_schema(new_meta, self._collection_info(key))
             return None
         if head in self._DML_HEADS:
             if head == "begin":

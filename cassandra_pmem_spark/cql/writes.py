@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cassandra_pmem_spark.catalog import TableMeta
+from cassandra_pmem_spark.catalog import TableMeta, column_map
 from cassandra_pmem_spark.cql.parser import _Parser, _tokenize
 from cassandra_pmem_spark.cql.validator import (
     declared_timeuuid as _decl_timeuuid,
@@ -789,7 +789,7 @@ class CqlWriteSession:
     The session also memoizes the frames reads compile over `table()`
     (`visible_frame`, `memo_frame`). They are valid for one version,
     (generation, shared clock): every statement, rollback, TRUNCATE,
-    import and base or meta assignment bumps the generation, and the
+    import, base assignment and schema change bumps the generation, and the
     clock carries TTL visibility and every other table's writes.
 
     A BATCH statement runs through `execute_batch`, the one BATCH path,
@@ -845,11 +845,6 @@ class CqlWriteSession:
     def meta(self) -> TableMeta:
         return self._meta
 
-    @meta.setter
-    def meta(self, meta: TableMeta) -> None:
-        self._meta = meta
-        self._generation += 1
-
     @property
     def base(self) -> DataFrame | None:
         """The table's history before the buffered statements (imported
@@ -859,6 +854,77 @@ class CqlWriteSession:
     @base.setter
     def base(self, df: DataFrame | None) -> None:
         self._base = df
+        self._generation += 1
+
+    def apply_schema(
+        self, meta: TableMeta, collection_info: CollectionInfo | None
+    ) -> None:
+        """Move the whole session state to `meta`, the table's schema
+        after one ALTER TABLE or ALTER TYPE, through one column map
+        (catalog.column_map): the base and every buffered cell, cell
+        tombstone and range bound follow renamed columns and user-type
+        fields, added ones read null, and a dropped column's cells are
+        deleted — the reference records the drop
+        (TableMetadata.droppedColumns), so a later ADD of the same name
+        shows none of them."""
+        moved = column_map(self._meta, meta)
+        # old name -> type, user-type fields under their "col#field" names
+        old_types: dict[str, T.DataType] = {}
+        for f in self._meta.schema.fields:
+            old_types[f.name] = f.dataType
+            if isinstance(f.dataType, T.StructType):
+                old_types.update(
+                    (f"{f.name}#{g.name}", g.dataType) for g in f.dataType.fields
+                )
+
+        def value(col: str, v: Any) -> Any:
+            # user-type values (frozen whole values, per-field cells) are
+            # dicts keyed by field name
+            if not isinstance(old_types[col], T.StructType) or not isinstance(v, dict):
+                return v
+            return {
+                moved[f"{col}#{f}"].split("#", 1)[1]: x
+                for f, x in v.items()
+                if f"{col}#{f}" in moved
+            }
+
+        def cells(d: dict) -> dict:
+            return {moved[c]: value(c, v) for c, v in d.items() if c in moved}
+
+        for m in self._mutations:
+            m.cells = cells(m.cells)
+            m.elem_cells = cells(m.elem_cells)
+            m.udt_cells = cells(m.udt_cells)
+            m.counter_deltas = cells(m.counter_deltas)
+        for ct in self._cell_tombs:
+            ct.columns = [moved[c] for c in ct.columns if c in moved]
+        for rg in self._range_tombs:
+            rg.eq, rg.ranges = cells(rg.eq), cells(rg.ranges)
+        if self._base is not None:
+            source = {n: o for o, n in moved.items()}
+
+            def column(name: str, dt: T.DataType) -> Column:
+                o = source.get(name)
+                if o is None:
+                    return F.lit(None).cast(dt)
+                col, _, fld = o.partition("#")
+                src = F.col(col).getField(fld) if fld else F.col(col)
+                if old_types[o] == dt:
+                    return src
+                # an ALTERed user type: rebuild the struct field by field
+                return F.when(
+                    src.isNotNull(),
+                    F.struct(*[
+                        column(f"{name}#{f.name}", f.dataType).alias(f.name)
+                        for f in dt.fields
+                    ]),
+                )
+
+            self._base = self._base.select(
+                *[column(f.name, f.dataType).alias(f.name) for f in meta.schema.fields]
+            )
+        self._meta = meta
+        self.collection_info = collection_info
         self._generation += 1
 
     def import_base(self, df: DataFrame) -> None:
@@ -2240,16 +2306,7 @@ class CqlWriteSession:
         if self._base is not None:
             # one projection: the constant shadows, each elem column's
             # fragment/full-write pair and each UDT's field cells
-            proj = [
-                F.lit(None).cast(by_name[c].dataType).alias(c)
-                # the struct column itself is dead weight post-
-                # decomposition (reassembly rebuilds it) — null it at the
-                # DECLARED type so unionByName can't clash when the base
-                # was captured under a pre-ALTER TYPE shape
-                if c in udt_syn
-                else F.col(c)
-                for c in fields
-            ] + [
+            proj = [F.col(c) for c in fields] + [
                 F.lit(0).cast("long").alias("__writetime"),
                 F.lit(None).cast("long").alias("__expiry"),
                 F.lit(0).cast("long").alias("__row_live_wt"),
@@ -2263,23 +2320,10 @@ class CqlWriteSession:
                 )
                 proj.append(F.col(c).isNotNull().alias(f"__full_{c}"))
             for c in udt_cols:
-                # base struct decomposes into field cells written at t=0;
-                # a field ADDed by ALTER TYPE after the base was captured
-                # back-fills null (AlterTypeStatement ADD semantics)
-                base_dt = self._base.schema[c].dataType
-                have = (
-                    {f.name for f in base_dt.fields}
-                    if isinstance(base_dt, T.StructType)
-                    else set()
+                # the base struct decomposes into field cells written at t=0
+                proj.extend(
+                    F.col(c).getField(f).alias(syn) for syn, f, _t in udt_syn[c]
                 )
-                for syn, f, ftype in udt_syn[c]:
-                    proj.append(
-                        (
-                            F.col(c).getField(f)
-                            if f in have
-                            else F.lit(None).cast(ftype)
-                        ).alias(syn)
-                    )
             base = self._base.select(*proj)
             log = base.unionByName(log) if log is not None else base
         if log is None:

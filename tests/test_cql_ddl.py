@@ -356,15 +356,15 @@ class TestQualifiedDmlAndCascade:
         assert "a_idx" not in reg.indexes
         assert "unqualified" in reg.tables  # not a member — survives
 
-    def test_rename_refusal_rolls_back_registry(self, spark):
+    def test_rename_under_buffered_writes_renames_the_rows(self, spark):
+        # a RENAME only changes metadata (AlterTableStatement.RenameColumns):
+        # the buffered row reads back under the new key name
         db = CqlDatabase(spark)
         db.execute("CREATE TABLE rt (k bigint PRIMARY KEY, v text)")
         db.execute("INSERT INTO rt (k, v) VALUES (1, 'x')")  # buffered write
-        with pytest.raises(InvalidRequest, match="RENAME"):
-            db.execute("ALTER TABLE rt RENAME k TO k2")
-        # registry rolled back: the OLD pk name still works end-to-end
-        assert db.registry.table("rt").primary_key == ("k",)
-        out = db.execute("SELECT k, v FROM rt WHERE k = 1")
+        db.execute("ALTER TABLE rt RENAME k TO k2")
+        assert db.registry.table("rt").primary_key == ("k2",)
+        out = db.execute("SELECT k2, v FROM rt WHERE k2 = 1")
         assert [tuple(r) for r in out.collect()] == [(1, "x")]
 
 
@@ -642,6 +642,81 @@ class TestAlterSessionCollectionSync:
         db.execute("DROP TABLE kb.pets")
         assert ("kb", "pets") not in db.registry.tables
         assert ("ka", "pets") in db.registry.tables
+
+
+@pytest.fixture(scope="module")
+def sst_111(spark, tmp_path_factory):
+    """An sstable directory holding the one row (k, c, v) = (1, 1, 1)."""
+    src = CqlDatabase(spark)
+    src.execute("CREATE TABLE t (k int, c int, v int, PRIMARY KEY (k, c))")
+    src.execute("INSERT INTO t (k, c, v) VALUES (1, 1, 1)")
+    out = str(tmp_path_factory.mktemp("sst_111"))
+    src.flush_sstables("t", out)
+    return out
+
+
+_LOAD = "<load sst_111>"
+
+
+class TestSchemaChangeMovesSessionState:
+    """An ALTER moves a live session's imported base and buffered writes
+    to the new schema: renames follow, added columns read null, and a
+    dropped column's cells stay dead when the name is re-ADDed (the
+    reference records the drop, TableMetadata.droppedColumns)."""
+
+    @pytest.mark.parametrize(
+        "script, select, expected",
+        [
+            pytest.param(
+                ["DELETE FROM t WHERE k = 1 AND c < 3",
+                 "ALTER TABLE t RENAME c TO cc",
+                 "INSERT INTO t (k, cc, v) VALUES (1, 5, 5)"],
+                "SELECT k, cc, v FROM t", [(1, 5, 5)], id="A-range-delete-rename",
+            ),
+            pytest.param(
+                [_LOAD, "ALTER TABLE t RENAME c TO cc"],
+                "SELECT k, cc, v FROM t", [(1, 1, 1)], id="B-import-rename",
+            ),
+            pytest.param(
+                [_LOAD, "ALTER TABLE t ADD w int"],
+                "SELECT k, c, v, w FROM t", [(1, 1, 1, None)], id="C-import-add",
+            ),
+            pytest.param(
+                ["INSERT INTO t (k, c, v) VALUES (1, 1, 1)",
+                 "ALTER TABLE t DROP v", "ALTER TABLE t ADD v int"],
+                "SELECT k, c, v FROM t", [(1, 1, None)], id="D-buffered-drop-add",
+            ),
+            pytest.param(
+                [_LOAD, "ALTER TABLE t DROP v", "ALTER TABLE t ADD v int"],
+                "SELECT k, c, v FROM t", [(1, 1, None)], id="E-import-drop-add",
+            ),
+            pytest.param(
+                ["INSERT INTO t (k, c, v) VALUES (1, 1, 1)",
+                 "ALTER TABLE t RENAME c TO cc"],
+                "SELECT k, cc, v FROM t", [(1, 1, 1)], id="F-buffered-key-rename",
+            ),
+            pytest.param(
+                ["INSERT INTO t (k, c, v) VALUES (1, 1, 1)",
+                 "ALTER TABLE t DROP v", "ALTER TABLE t ADD v text"],
+                "SELECT k, c, v FROM t", [(1, 1, None)], id="G-drop-add-other-type",
+            ),
+            pytest.param(
+                [_LOAD, "INSERT INTO t (k, c, v) VALUES (2, 2, 2)",
+                 "ALTER TABLE t ADD w int"],
+                "SELECT k, c, v, w FROM t", [(1, 1, 1, None), (2, 2, 2, None)],
+                id="H-import-and-buffer-add",
+            ),
+        ],
+    )
+    def test_script(self, spark, sst_111, script, select, expected):
+        db = CqlDatabase(spark)
+        db.execute("CREATE TABLE t (k int, c int, v int, PRIMARY KEY (k, c))")
+        for cql in script:
+            if cql == _LOAD:
+                db.load_sstables("t", sst_111)
+            else:
+                db.execute(cql)
+        assert sorted(tuple(r) for r in db.execute(select).collect()) == expected
 
 
 class TestCli:

@@ -225,6 +225,28 @@ class TestAlterType:
         with pytest.raises(InvalidRequest, match="duplicate"):
             db.execute("ALTER TYPE addr RENAME street TO city")
 
+    @pytest.mark.parametrize("table", ["users", "fusers"])
+    def test_base_and_buffer_follow_rename_then_add(self, db, table):
+        # both ALTERs move the base frame too: its struct follows the
+        # rename, gains the added field, and a null value stays null
+        sess = db._session(("uks", table))
+        base = [(1, {"street": "M", "city": "R", "zip": 7}), (2, None)]
+        if table == "users":
+            base = [(k, "n", a) for k, a in base]
+        sess.base = db.spark.createDataFrame(base, sess.meta.schema)
+        db.execute(f"INSERT INTO {table} (id, a) VALUES (3, {{street: 'S', zip: 9}})")
+        db.execute("ALTER TYPE addr RENAME street TO road")
+        db.execute("ALTER TYPE addr ADD country text")
+        got = rows(db.execute(f"SELECT id, a FROM {table}"))
+        assert [(k, a and tuple(a)) for k, a in got] == [
+            (1, ("M", "R", 7, None)),
+            (2, None),
+            (3, ("S", None, 9, None)),
+        ]
+        assert rows(db.execute(f"SELECT id, a.road FROM {table} WHERE id = 1")) == [
+            (1, "M")
+        ]
+
 
 class TestDropTypeAndFrozenRename:
     def test_drop_type_in_use_rejected(self, db):

@@ -1158,6 +1158,30 @@ class TestConnectedComponents:
             if i in got and i + 100000 in got:
                 assert got[i + 100000] == got[i]
 
+    @pytest.mark.parametrize("algorithm", ["label", "star"])
+    def test_repeated_calls_hold_no_more_persisted_rdds(self, spark, algorithm):
+        """Whatever one near_dup_components call leaves persisted, the
+        ContextCleaner releases once a later call replaces it: the count
+        after a third call is no larger than after the first. (The first
+        read may still include frames an earlier test left behind.)"""
+        import gc
+
+        from cassandra_pmem_spark.pipeline.dedup import near_dup_components
+        from tests.conftest import persisted_rdds
+
+        docs = load_table(spark, "documents", SF_SMALL).filter(
+            F.col("doc_id") < 30
+        ).select("doc_id", "text")
+        counts = []
+        for _ in range(3):
+            near_dup_components(docs, algorithm=algorithm).collect()
+            # drop the Python handles first, so the JVM collection that
+            # wakes the ContextCleaner sees the frames unreachable
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
+            counts.append(persisted_rdds(spark))
+        assert counts[2] <= counts[0], counts
+
 
 class TestDecontamination:
     def test_planted_overlap_is_flagged(self, spark):

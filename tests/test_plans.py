@@ -1266,3 +1266,30 @@ def test_ddl_builds_table_metas_only_at_create():
 
     Calls().visit(ast.parse(path.read_text()))
     assert sorted(calls) == ["create_table", "create_view"]
+
+
+def test_schema_changes_move_session_state_in_one_place():
+    """A schema change reaches a live table session through one method,
+    CqlWriteSession.apply_schema: the session's meta has no setter, the
+    registry keeps no side channel of the last ALTER TYPE, and the DDL
+    never rewrites a session's buffers or base itself."""
+    import ast
+    from pathlib import Path
+
+    import cassandra_pmem_spark
+    from cassandra_pmem_spark.cql.ddl import SchemaRegistry
+    from cassandra_pmem_spark.cql.writes import CqlWriteSession
+
+    assert CqlWriteSession.meta.fset is None
+    assert not hasattr(SchemaRegistry(), "last_alter_type")
+    path = Path(cassandra_pmem_spark.__file__).parent / "cql" / "ddl.py"
+    state = {"_mutations", "_row_tombs", "_cell_tombs", "_range_tombs", "base", "_base"}
+    assigned = [
+        ast.unparse(t)
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        for a in ast.walk(t)
+        if isinstance(a, ast.Attribute) and a.attr in state
+    ]
+    assert assigned == []
