@@ -102,6 +102,27 @@ def type_facts(text: str, types) -> TypeFacts:
     return TypeFacts(kind, frozen, text == "counter", udt, refs)
 
 
+def column_facts(meta: TableMeta) -> dict[str, TypeFacts]:
+    """type_facts of every column of `meta`, declared or not. A declared
+    struct column whose head is not `tuple` is a user type. An
+    undeclared column (a bare API meta) has only its Spark shape: a
+    MapType is a non-frozen map, an ArrayType a non-frozen list, and
+    anything else one cell."""
+    out = {}
+    for f in meta.schema.fields:
+        text = meta.cql_type(f.name)
+        if text is None:
+            dt = f.dataType
+            text = (
+                "map" if isinstance(dt, T.MapType)
+                else "list" if isinstance(dt, T.ArrayType) else ""
+            )
+        head = next((w for w in _TYPE_WORD.findall(text) if w != "frozen"), "")
+        udts = {head} if isinstance(f.dataType, T.StructType) and head != "tuple" else ()
+        out[f.name] = type_facts(text, udts)
+    return out
+
+
 def _as_int(v) -> int | None:
     """Option value as an int when it is one (bools excluded), else None —
     the ALTER MV param guards compare numerically."""
@@ -2114,16 +2135,6 @@ class CqlDatabase:
             name, keyspace=ks, current=self.current_keyspace
         )
 
-    def _collection_info(self, key: tuple):
-        from cassandra_pmem_spark.cql.writes import CollectionInfo
-
-        facts = self.registry.facts(self.registry.tables[key])
-        return CollectionInfo(
-            kinds={c: f.kind for c, f in facts.items() if f.kind},
-            frozen=frozenset(c for c, f in facts.items() if f.frozen),
-            counters=frozenset(c for c, f in facts.items() if f.counter),
-        )
-
     def _session(self, table):
         return self._session_for_key(self._table_key(table))
 
@@ -2136,7 +2147,6 @@ class CqlDatabase:
             self._sessions[key] = CqlWriteSession(
                 self.spark,
                 self.registry.tables[key],
-                collection_info=self._collection_info(key),
                 clock=self._write_clock,
                 default_ttl=self.registry.table_params.get(key, {}).get(
                     "default_ttl", 0
@@ -2327,9 +2337,7 @@ class CqlDatabase:
                     "default_ttl", 0
                 )
                 if sess.meta is not new_meta:
-                    # the Spark-erased facts follow too: an ALTER can add
-                    # or drop counter/frozen/collection columns
-                    sess.apply_schema(new_meta, self._collection_info(key))
+                    sess.apply_schema(new_meta)
             return None
         if head in self._DML_HEADS:
             if head == "begin":
@@ -2455,15 +2463,24 @@ class CqlDatabase:
         uuid/timeuuid/ascii columns keep their declared CQL types via
         the meta's cql_types (Spark erases them to string); counter
         columns flush their folded totals as single-global-shard
-        CounterContext cells (CounterContext.createGlobal)."""
+        CounterContext cells (CounterContext.createGlobal). The sstable
+        subset has no user-type marshal: a table with a column whose
+        type names a user type is refused before any file is written."""
         from cassandra_pmem_spark.sources.sstable import bulk_write_sstables
 
         key = self._table_key(table)
+        meta = self.registry.tables[key]
+        for col, facts in self.registry.facts(meta).items():
+            if facts.refs:
+                raise InvalidRequest(
+                    f"Cannot flush column {col!r} of type "
+                    f"{meta.cql_type(col)}: user types have no sstable "
+                    "marshal in this engine"
+                )
         sess = self._session_for_key(key)
         df = sess.table(now=sess._clock_ref[0])
         return bulk_write_sstables(
-            df, self.registry.tables[key], out_dir, sstables=sstables,
-            compression=compression,
+            df, meta, out_dir, sstables=sstables, compression=compression,
         )
 
     def pager(self, cql: str, params: list[Any] | None = None,

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cassandra_pmem_spark.catalog import TableMeta, column_map
+from cassandra_pmem_spark.cql.ddl import column_facts
 from cassandra_pmem_spark.cql.parser import _Parser, _tokenize
 from cassandra_pmem_spark.cql.validator import (
     declared_timeuuid as _decl_timeuuid,
@@ -49,21 +50,6 @@ from cassandra_pmem_spark.cql.validator import (
 )
 from cassandra_pmem_spark.operators.upsert import lww_cell_aggs
 from cassandra_pmem_spark.plans.hints import unpersist_quietly
-
-
-@dataclass(frozen=True)
-class CollectionInfo:
-    """Schema facts Spark's type system erases but the reference's mutation
-    validation needs: the declared collection kind per column ('list' |
-    'set' | 'map' — set<t> and list<t> are both ArrayType in Spark), which
-    columns were declared frozen<...> (frozen collections only accept
-    full-value writes; FrozenCollectionsTest.testInvalidOperations), and
-    which were declared counter (counters fold, they are never set —
-    cql3/Operation.java:169, UpdateStatement.java counter branch)."""
-
-    kinds: dict
-    frozen: frozenset
-    counters: frozenset = frozenset()
 
 
 # Attributes.java:47 — 20 years in seconds; TTLs beyond it are rejected,
@@ -801,7 +787,6 @@ class CqlWriteSession:
         spark: SparkSession,
         meta: TableMeta,
         base: DataFrame | None = None,
-        collection_info: CollectionInfo | None = None,
         clock: list[int] | None = None,
         default_ttl: int = 0,
         now_occs: "NowOccs | None" = None,
@@ -809,7 +794,9 @@ class CqlWriteSession:
         self.spark = spark
         self._generation = 0
         self._meta = meta
-        self.collection_info = collection_info
+        # what the Spark types erase (collection kind, frozen, counter,
+        # user type), one record per column, derived from the meta
+        self._facts = column_facts(meta)
         # TableParams.defaultTimeToLive: applied when a write carries no
         # USING TTL; an EXPLICIT `USING TTL 0` means no expiry and the
         # default does NOT re-apply (Attributes.getTimeToLive:105-119)
@@ -856,9 +843,7 @@ class CqlWriteSession:
         self._base = df
         self._generation += 1
 
-    def apply_schema(
-        self, meta: TableMeta, collection_info: CollectionInfo | None
-    ) -> None:
+    def apply_schema(self, meta: TableMeta) -> None:
         """Move the whole session state to `meta`, the table's schema
         after one ALTER TABLE or ALTER TYPE, through one column map
         (catalog.column_map): the base and every buffered cell, cell
@@ -866,7 +851,9 @@ class CqlWriteSession:
         fields, added ones read null, and a dropped column's cells are
         deleted — the reference records the drop
         (TableMetadata.droppedColumns), so a later ADD of the same name
-        shows none of them."""
+        shows none of them. The column facts are derived again from
+        `meta`: an ALTER can add or drop counter, frozen and collection
+        columns."""
         moved = column_map(self._meta, meta)
         # old name -> type, user-type fields under their "col#field" names
         old_types: dict[str, T.DataType] = {}
@@ -924,7 +911,7 @@ class CqlWriteSession:
                 *[column(f.name, f.dataType).alias(f.name) for f in meta.schema.fields]
             )
         self._meta = meta
-        self.collection_info = collection_info
+        self._facts = column_facts(meta)
         self._generation += 1
 
     def import_base(self, df: DataFrame) -> None:
@@ -1023,7 +1010,7 @@ class CqlWriteSession:
             return True
         if head not in ("insert", "update", "delete"):
             raise InvalidRequest(f"unsupported write statement {head!r}")
-        counters = self.collection_info.counters if self.collection_info else frozenset()
+        counters = {c for c, f in self._facts.items() if f.counter}
         p = _WriteParser(_tokenize(cql))
         # now()-family terms fold from THIS statement's coordinator tick
         # (TimeFcts.java:39-57 execute coordinator-side): fold_ts inside a
@@ -1090,7 +1077,7 @@ class CqlWriteSession:
             # model full map writes use); frozen UDTs stay one cell
             live_cells = {c: v for c, v in cells.items() if c not in null_cols}
             udt_cells: dict = {}
-            for c in self._nonfrozen_udt_cols():
+            for c in self._multi_cell("udt"):
                 if c in live_cells:
                     v = live_cells.pop(c)
                     if not isinstance(v, dict):
@@ -1433,7 +1420,7 @@ class CqlWriteSession:
         # `sets` — decompose it exactly like the parsed {…} literal path
         # (complex deletion at wt-1 + field cells); a non-dict bind on a
         # UDT column is a type error at prepare
-        for ecol in self._nonfrozen_udt_cols():
+        for ecol in self._multi_cell("udt"):
             if ecol in sets and sets[ecol] is not None:
                 v = sets.pop(ecol)
                 if not isinstance(v, dict):
@@ -1474,7 +1461,7 @@ class CqlWriteSession:
         """Column-delete targets with non-frozen UDT columns expanded to
         their per-field cells (deleting the column = deleting every field
         cell; UserTypes.java full-column DeleterByField loop)."""
-        nonfrozen = set(self._nonfrozen_udt_cols())
+        nonfrozen = self._multi_cell("udt")
         out: list = []
         for c in cols:
             if c in nonfrozen:
@@ -1520,30 +1507,20 @@ class CqlWriteSession:
             raise InvalidRequest(f"column {col!r} is not a user type")
         return [f.name for f in dt.fields]
 
-    def _nonfrozen_udt_cols(self) -> list[str]:
-        """Columns declared as NON-frozen user types — the multi-cell
-        ones (UserType.java:52-63 isMultiCell)."""
-        info = self.collection_info
-        if not info:
-            return []
+    def _multi_cell(self, *kinds: str) -> list[str]:
+        """Columns of the given kinds that are not frozen — the
+        multi-cell ones (UserType.java:52-63, CollectionType isMultiCell),
+        in schema order."""
         return [
-            c for c, k in info.kinds.items()
-            if k == "udt" and c not in info.frozen
+            c for c, f in self._facts.items() if f.kind in kinds and not f.frozen
         ]
 
     def _collection_kind(self, col: str) -> tuple[str | None, bool]:
-        """(declared collection kind | None, frozen?) for a column."""
-        by_name = {f.name: f.dataType for f in self.meta.schema.fields}
-        dt = by_name.get(col)
-        if dt is None:
+        """(collection kind | None, frozen?) for a column."""
+        f = self._facts.get(col)
+        if f is None:
             raise InvalidRequest(f"undefined column {col!r}")
-        info = self.collection_info
-        kind = (info.kinds.get(col) if info else None) or (
-            "map"
-            if isinstance(dt, T.MapType)
-            else "list" if isinstance(dt, T.ArrayType) else None
-        )
-        return kind, bool(info and col in info.frozen)
+        return f.kind, f.frozen
 
     def _validate_elem_ops(self, elem_ops: list) -> None:
         """Reference rejection rules for textual collection mutations
@@ -1825,22 +1802,19 @@ class CqlWriteSession:
                 return False
         return True
 
-    def _read_visible_rows(self, key: tuple) -> list:
+    def _read_visible_rows(self, key: tuple, with_shadows: bool = False) -> list:
         """Point read of the current visible row for a full primary key —
         the reference's read-before-write (LWT conditions, list index
-        resolution). Bounded: one key, limit 1. Reads at the session
-        clock so TTL-expired cells are dead to conditions, matching the
+        resolution). Bounded: one key. Reads at the session clock so
+        TTL-expired cells are dead to conditions, matching the
         reference's nowInSec read (StorageProxy.cas reads at the
         request's nowInSeconds; an expired cell never satisfies IF)."""
-        current = self.table(now=self._clock_ref[0])
-        flt = F.lit(True)
-        for kc, kv in zip(self.meta.primary_key, key):
-            flt = flt & (F.col(kc) == F.lit(kv))
+        current = self.table(now=self._clock_ref[0], with_shadows=with_shadows)
         # NO .limit(1): the full-pk filter already yields <=1 row, and a
         # LIMIT above this shuffle plan would run CollectLimit's
         # incremental multi-job execution (measured 537ms vs 78ms for
         # the plain collect on a 6-row buffer table)
-        return current.filter(flt).collect()
+        return current.filter(_key_match(zip(self.meta.primary_key, key))).collect()
 
     def _read_visible(self, key: tuple) -> dict | None:
         row = self._read_visible_rows(key)
@@ -1849,20 +1823,11 @@ class CqlWriteSession:
     def _list_cells(self, key: tuple, col: str) -> list[tuple[str, Any]]:
         """Position-ordered (cell key, value) pairs of one visible list —
         the read-before-write Lists.SetterByIndex/DiscarderByIndex/
-        Discarder perform. When the column is already cell-tracked the
-        positions ALWAYS come from the real per-cell merge — the read
-        forces the column through it (force_elem), so tie-breaks and TTL
-        expiry match what a later merge will produce exactly; no
-        synthesized keys. Bounded: one key, limit 1."""
-        df = self.table(
-            now=self._clock_ref[0], with_shadows=True, force_elem={col}
-        )
-        flt = F.lit(True)
-        for kc, kv in zip(self.meta.primary_key, key):
-            flt = flt & (F.col(kc) == F.lit(kv))
-        # no .limit(1) — full-pk filter yields <=1 row; see
-        # _read_visible_rows on CollectLimit's multi-job cost
-        rows = df.filter(flt).collect()
+        Discarder perform. Every non-frozen list merges per cell, so the
+        positions come from the real per-cell merge (`_cellwt_{col}`'s
+        keys): tie-breaks and TTL expiry match what a later merge will
+        produce exactly; no synthesized keys."""
+        rows = self._read_visible_rows(key, with_shadows=True)
         if not rows:
             return []
         row = rows[0].asDict()
@@ -2200,55 +2165,39 @@ class CqlWriteSession:
         except Exception:
             return self.spark.createDataFrame(rows, log_schema)
 
-    def table(
-        self,
-        now: int | None = None,
-        with_shadows: bool = False,
-        force_elem: set | None = None,
-    ) -> DataFrame:
+    def table(self, now: int | None = None, with_shadows: bool = False) -> DataFrame:
         """Visible state — what a SELECT over this table reads.
 
         with_shadows=True keeps each value column's liveness alongside it:
         ``_writetime_{col}`` (the WRITETIME(col) selector's source) and
         ``_ttl_{col}`` = remaining time at ``now`` (the TTL(col) selector;
         NULL for cells written without TTL), both in the session's
-        logical-clock unit.
+        logical-clock unit, plus ``_cellwt_{col}``/``_cellttl_{col}``
+        per-cell maps for every multi-cell column.
 
-        force_elem routes the named collection columns through the
-        per-cell merge even without element mutations — the
-        read-before-write path uses it to see the EXACT cell keys a
-        later merge will produce (ties, TTL expiry and all), instead of
-        synthesizing them."""
+        Every non-frozen collection merges per cell (map entries, set
+        elements, list positions) and every non-frozen user type per
+        field, as the column facts say — never by what the buffer holds.
+        Tied full writes of one collection keep both cell sets (each
+        complex deletion at wt-1 shadows neither), which a whole-value
+        LWW cannot express."""
         meta = self.meta
         fields = [f.name for f in meta.schema.fields]
         by_name = {f.name: f for f in meta.schema.fields}
         key_cols = list(meta.primary_key)
         value_cols = [c for c in fields if c not in key_cols]
-        # collection columns with per-cell mutations merge cell-by-cell
-        # (maps keyed by entry key, sets by element, lists by position
-        # string); every other column keeps the atomic cell-LWW path
-        # every non-frozen collection column with a DECLARED kind merges
-        # per cell, matching the reference's multi-cell columns — tied
-        # full writes keep both cell sets (each complex deletion at wt-1
-        # shadows neither), which a whole-value LWW cannot express.
-        # Sessions without CollectionInfo (bare API metas) keep the
-        # scalar path for their collections.
-        auto_elem: set = set()
-        if self.collection_info:
-            for c in value_cols:
-                k = self.collection_info.kinds.get(c)
-                if k and k != "udt" and c not in self.collection_info.frozen:
-                    auto_elem.add(c)
-        elem_cols = sorted(
-            {c for m in self._mutations for c in m.elem_cells}
-            | (force_elem or set())
-            | auto_elem
-        )
+        # collection columns merge cell-by-cell (maps keyed by entry key,
+        # sets by element, lists by position string); every other column
+        # keeps the atomic cell-LWW path. A written [] or {} stores no
+        # cells, so it reads NULL with no liveness (a complex deletion)
+        elem_cols = [
+            c for c in self._multi_cell("list", "set", "map") if c in value_cols
+        ]
         # non-frozen UDT columns merge per FIELD cell: each field becomes
         # a synthetic scalar column "col#field" with its own liveness
         # (UserType.java:52-63 multi-cell; the field index is the cell
         # path), reassembled into the struct after the merge
-        udt_cols = [c for c in value_cols if c in set(self._nonfrozen_udt_cols())]
+        udt_cols = [c for c in self._multi_cell("udt") if c in value_cols]
         udt_syn: dict[str, list[tuple[str, str, T.DataType]]] = {}
         for c in udt_cols:
             udt_syn[c] = [
@@ -2499,29 +2448,6 @@ class CqlWriteSession:
                     applied[c] = F.when(dead, F.lit(None)).otherwise(F.col(c))
             merged = _project(merged, applied, drop=thresholds)
 
-        # non-frozen empty collections are a COMPLEX DELETION, not a
-        # value: writing {} / [] stores no cells, so the column is dead —
-        # value NULL and no liveness (WRITETIME must be NULL, and an
-        # UPDATE-created row whose only column is an empty collection is
-        # not visible at all). Runs BEFORE the row-visibility filter so
-        # the dead column cannot keep the row alive. Frozen collections
-        # are single cells and keep their empty value; the per-cell path
-        # already stores no cells for {}.
-        info = self.collection_info
-        emptied = {}
-        for col in value_cols:
-            dt = by_name[col].dataType
-            if not isinstance(dt, (T.ArrayType, T.MapType)):
-                continue
-            if (info and col in info.frozen) or col in elem_cols:
-                continue
-            dead = F.size(
-                F.map_keys(F.col(col)) if isinstance(dt, T.MapType) else F.col(col)
-            ) == 0
-            for c in (col, f"_writetime_{col}", f"_expiry_{col}"):
-                emptied[c] = F.when(dead, F.lit(None)).otherwise(F.col(c))
-        merged = _project(merged, emptied)
-
         # reassemble non-frozen UDT structs from their surviving field
         # cells; the column is NULL iff no field cell is live (a UDT with
         # every field deleted reads as NULL, UserTypesTest shapes), and
@@ -2586,13 +2512,6 @@ class CqlWriteSession:
             )
         return merged.select(*fields, *shadows)
 
-    def _collection_kind_of(self, col: str) -> str:
-        """Declared collection kind for a cell-tracked column (mutations
-        with elem_cells only exist for columns the validator resolved a
-        kind for)."""
-        info = self.collection_info
-        return (info.kinds.get(col) if info else None) or "map"
-
     def _cell_map_type(self, col: str, dt: T.DataType) -> T.MapType:
         """Cell-fragment map type for one collection column: maps keep
         (key → value), sets key cells by ELEMENT (Sets.java — the cell
@@ -2600,7 +2519,7 @@ class CqlWriteSession:
         (Lists.java timeuuid cell names → the key encodings documented
         at `_list_frag_key`; full-write cells build
         "5" || stmt(9) || "0" || pos(9) in the merge itself)."""
-        kind = self._collection_kind_of(col)
+        kind = self._facts[col].kind
         if isinstance(dt, T.MapType):
             return T.MapType(dt.keyType, dt.valueType, True)
         if kind == "set":
@@ -2618,7 +2537,7 @@ class CqlWriteSession:
         Lists.DiscarderByIndex). Reconcile per cell key by (writetime,
         tombstone-wins, value); survivors reassemble into the declared
         collection shape plus per-cell writetime/expiry shadow maps."""
-        kind = self._collection_kind_of(col)
+        kind = self._facts[col].kind
         sel = [
             F.col("__writetime").alias("__wt"),
             F.col("__expiry").alias("__exp"),
@@ -2698,7 +2617,7 @@ class CqlWriteSession:
         rewrite follows the collection shape — map entries by key, set
         elements by themselves, list values by their position in the
         key-sorted cell order."""
-        kind = self._collection_kind_of(col)
+        kind = self._facts[col].kind
         hit = thr.isNotNull()
         cwt = F.col(f"_cellwt_{col}")
         if kind == "map":

@@ -433,6 +433,7 @@ _CT_META = TableMeta(
         ]
     ),
     partition_key=("user_id",),
+    cql_types=(("l", "list<text>"), ("s", "set<text>"), ("m", "map<text, bigint>")),
 )
 
 
@@ -447,7 +448,6 @@ def cql_collection_text_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies each op as a per-user CASE — results must match element for
     element, order for order."""
     from cassandra_pmem_spark.operators.collections import sorted_entries
-    from cassandra_pmem_spark.cql.writes import CollectionInfo
 
     ev = load_table(spark, "events", sf_dir).filter(F.col("user_id") < 30)
     seq = F.transform(
@@ -467,8 +467,7 @@ def cql_collection_text_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("m")
     )
     base = lists.join(maps, "user_id")
-    info = CollectionInfo(kinds={"l": "list", "s": "set", "m": "map"}, frozen=frozenset())
-    sess = CqlWriteSession(spark, _CT_META, base=base, collection_info=info)
+    sess = CqlWriteSession(spark, _CT_META, base=base)
     sess.execute("UPDATE ct SET l = l + ['end'] WHERE user_id = 1")
     sess.execute("UPDATE ct SET l = ['start'] + l WHERE user_id = 2")
     sess.execute("UPDATE ct SET s = s + {'extra'} WHERE user_id = 3")

@@ -553,8 +553,9 @@ class SSTableSchema:
         columns, and the set-vs-list kind Spark's ArrayType erases."""
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.cql.ddl import type_facts
+        from cassandra_pmem_spark.cql.ddl import column_facts
 
+        facts = column_facts(meta)
         ov = {
             "uuid": _MARSHAL + "UUIDType",
             "timeuuid": _MARSHAL + "TimeUUIDType",
@@ -565,10 +566,9 @@ class SSTableSchema:
         for f in meta.schema.fields:
             declared = meta.cql_type(f.name)
             if isinstance(f.dataType, (T.ArrayType, T.MapType)):
-                kind = type_facts(declared or "", ()).kind
-                if kind not in ("list", "set", "map"):
-                    kind = "map" if isinstance(f.dataType, T.MapType) else "list"
-                by_name[f.name] = marshal_for_collection(kind, f.dataType)
+                by_name[f.name] = marshal_for_collection(
+                    facts[f.name].kind, f.dataType
+                )
                 continue
             ss = f.dataType.simpleString()
             m = ov.get(declared) or _SPARK_TO_MARSHAL.get(ss)

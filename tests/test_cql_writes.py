@@ -648,6 +648,7 @@ COUNTER_META = TableMeta(
         ]
     ),
     partition_key=("k",),
+    cql_types=(("n", "counter"), ("m", "counter")),
 )
 
 
@@ -661,10 +662,7 @@ class TestReferenceWriteLimits:
 
     @pytest.fixture()
     def csess(self, spark):
-        from cassandra_pmem_spark.cql.writes import CollectionInfo
-
-        info = CollectionInfo(kinds={}, frozen=frozenset(), counters=frozenset({"n", "m"}))
-        return CqlWriteSession(spark, COUNTER_META, collection_info=info)
+        return CqlWriteSession(spark, COUNTER_META)
 
     # -- TTL bounds (Attributes.java, TTLTest.java) -------------------------
 
@@ -1689,3 +1687,69 @@ class TestVisibleFrameCacheInvalidation:
             for d in (db, fresh):
                 d.execute("INSERT INTO t (k, v) VALUES (3, 'c') USING TIMESTAMP 100")
             assert read(db) == read(fresh) == [(2, "b"), (3, "c")], name
+
+
+def _coll_meta(cql_types=()):
+    return TableMeta(
+        "cl",
+        T.StructType(
+            [
+                T.StructField("k", T.LongType()),
+                T.StructField("l", T.ArrayType(T.LongType())),
+                T.StructField("m", T.MapType(T.StringType(), T.LongType())),
+            ]
+        ),
+        partition_key=("k",),
+        cql_types=cql_types,
+    )
+
+
+class TestCollectionFactsFromMeta:
+    """A session takes its column facts from the meta alone: a declared
+    `list<bigint>` is a non-frozen list, and on a bare meta (no declared
+    types) an ArrayType is a non-frozen list and a MapType a non-frozen
+    map. Either way every write to the column takes the per-cell merge,
+    whatever the buffer already holds."""
+
+    @pytest.mark.parametrize(
+        "cql_types, statements, col, expected",
+        [
+            pytest.param(
+                (("l", "list<bigint>"),),
+                ["INSERT INTO cl (k, l) VALUES (1, [1, 2])",
+                 "UPDATE cl SET l = l + [3] WHERE k = 1"],
+                "l", [(1, [1, 2, 3])], id="declared_list_append",
+            ),
+            pytest.param(
+                (),
+                ["INSERT INTO cl (k, l) VALUES (1, [1, 2])",
+                 "UPDATE cl SET l = l + [3] WHERE k = 1"],
+                "l", [(1, [1, 2, 3])], id="bare_list_append",
+            ),
+            pytest.param(
+                (),
+                ["INSERT INTO cl (k, l) VALUES (1, [1, 2])",
+                 "UPDATE cl SET l[0] = 9 WHERE k = 1"],
+                "l", [(1, [9, 2])], id="bare_list_set_index",
+            ),
+            # Cassandra 4.0: each tied full write's complex deletion at
+            # wt-1 shadows neither write's cells
+            pytest.param(
+                (),
+                ["INSERT INTO cl (k, l) VALUES (1, [1, 2]) USING TIMESTAMP 5",
+                 "INSERT INTO cl (k, l) VALUES (1, [3]) USING TIMESTAMP 5"],
+                "l", [(1, [1, 2, 3])], id="bare_tied_full_writes",
+            ),
+            pytest.param(
+                (),
+                ["INSERT INTO cl (k, m) VALUES (1, {'a': 1})",
+                 "UPDATE cl SET m['b'] = 2 WHERE k = 1"],
+                "m", [(1, {"a": 1, "b": 2})], id="bare_map_put",
+            ),
+        ],
+    )
+    def test_collection_writes(self, spark, cql_types, statements, col, expected):
+        sess = CqlWriteSession(spark, _coll_meta(cql_types))
+        for stmt in statements:
+            sess.execute(stmt)
+        assert [tuple(r) for r in sess.table().select("k", col).collect()] == expected

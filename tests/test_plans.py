@@ -914,7 +914,7 @@ class TestUdtMergePlan:
         from pyspark.sql import types as T
 
         from cassandra_pmem_spark.catalog import TableMeta
-        from cassandra_pmem_spark.cql.writes import CollectionInfo, CqlWriteSession
+        from cassandra_pmem_spark.cql.writes import CqlWriteSession
 
         if udt:
             schema = T.StructType(
@@ -931,7 +931,7 @@ class TestUdtMergePlan:
                     ),
                 ]
             )
-            info = CollectionInfo(kinds={"u": "udt"}, frozen=frozenset())
+            declared = (("u", "pt"),)
         else:
             schema = T.StructType(
                 [
@@ -940,9 +940,9 @@ class TestUdtMergePlan:
                     T.StructField("b", T.LongType()),
                 ]
             )
-            info = None
-        meta = TableMeta("t", schema, partition_key=("k",))
-        s = CqlWriteSession(spark, meta, collection_info=info)
+            declared = ()
+        meta = TableMeta("t", schema, partition_key=("k",), cql_types=declared)
+        s = CqlWriteSession(spark, meta)
         if udt:
             s.execute("UPDATE t SET u.a = 'x' WHERE k = 1")
             s.execute("INSERT INTO t (k, u) VALUES (2, {a: 'y', b: 3})")
@@ -1293,3 +1293,22 @@ def test_schema_changes_move_session_state_in_one_place():
         if isinstance(a, ast.Attribute) and a.attr in state
     ]
     assert assigned == []
+
+
+def test_table_session_column_facts_come_from_the_meta():
+    """A table session has one record of its columns' Spark-erased facts,
+    derived from its TableMeta: no separate collection record is built
+    or passed in, no guess stands in for a missing one, and no caller
+    can force a column onto the per-cell merge."""
+    import inspect
+
+    from cassandra_pmem_spark.cql import ddl, writes
+    from cassandra_pmem_spark.cql.writes import CqlWriteSession
+
+    assert not hasattr(writes, "CollectionInfo")
+    for method in (CqlWriteSession.__init__, CqlWriteSession.apply_schema):
+        assert "collection_info" not in inspect.signature(method).parameters
+    assert "force_elem" not in inspect.signature(CqlWriteSession.table).parameters
+    assert not hasattr(CqlWriteSession, "_collection_kind_of")
+    assert not hasattr(CqlWriteSession, "_nonfrozen_udt_cols")
+    assert not hasattr(ddl.CqlDatabase, "_collection_info")

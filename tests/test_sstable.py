@@ -1413,6 +1413,22 @@ class TestFlush:
         assert len(got) == 14
         assert got[(0, 0)] == "new" and (2, 1) not in got
 
+    @pytest.mark.parametrize("decl", ["frozen<pt>", "pt"])
+    def test_flush_refuses_user_type_columns(self, spark, tmp_path, decl):
+        # the sstable subset has no user-type marshal: the flush names
+        # the column and its declared type and writes nothing
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+        from cassandra_pmem_spark.cql.validator import InvalidRequest
+
+        db = CqlDatabase(spark)
+        db.execute("CREATE TYPE pt (x int, y int)")
+        db.execute(f"CREATE TABLE t (k int PRIMARY KEY, p {decl})")
+        db.execute("INSERT INTO t (k, p) VALUES (1, {x: 1, y: 2})")
+        out = tmp_path / "flush_udt"
+        with pytest.raises(InvalidRequest, match=f"column 'p' of type {decl}:"):
+            db.flush_sstables("t", str(out))
+        assert not out.exists()
+
     def test_flush_timeuuid_keys_keep_wire_form(self, spark, tmp_path):
         # a timeuuid partition key must hash through its 16-byte wire
         # form in the sstable writer, not its text form

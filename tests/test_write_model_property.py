@@ -461,6 +461,7 @@ _COLL_META = TableMeta(
         ]
     ),
     partition_key=("k",),
+    cql_types=(("l", "list<text>"), ("s", "set<text>")),
 )
 
 
@@ -562,15 +563,7 @@ class TestCollectionCellProperty:
     )
     @given(ops=st.lists(coll_op(), min_size=1, max_size=8))
     def test_session_matches_collection_model(self, spark, ops):
-        from cassandra_pmem_spark.cql.writes import CollectionInfo
-
-        sess = CqlWriteSession(
-            spark,
-            _COLL_META,
-            collection_info=CollectionInfo(
-                kinds={"l": "list", "s": "set"}, frozen=frozenset()
-            ),
-        )
+        sess = CqlWriteSession(spark, _COLL_META)
         model = CollModel()
         for kind, vals, wt in ops:
             lit = "[" + ", ".join(f"'{v}'" for v in vals) + "]"
@@ -645,6 +638,7 @@ _UDT_META = TableMeta(
     ),
     partition_key=("k",),
     clustering=(ClusteringColumn("c"),),
+    cql_types=(("u", "pt"),),
 )
 
 _UKEYS = [(1, 1), (1, 2), (2, 1)]
@@ -754,13 +748,7 @@ class TestUdtWriteModelProperty:
     )
     @given(st.lists(udt_op(), min_size=1, max_size=8))
     def test_udt_session_matches_model(self, spark, ops):
-        from cassandra_pmem_spark.cql.writes import CollectionInfo
-
-        sess = CqlWriteSession(
-            spark,
-            _UDT_META,
-            collection_info=CollectionInfo(kinds={"u": "udt"}, frozen=frozenset()),
-        )
+        sess = CqlWriteSession(spark, _UDT_META)
         model = UdtModel()
         for i, (kind, (k, c), val) in enumerate(ops):
             wt = (i + 1) * 10
