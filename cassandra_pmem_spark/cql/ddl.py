@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from cassandra_pmem_spark.catalog import ClusteringColumn, TableMeta, column_map
 from cassandra_pmem_spark.cql.parser import _Parser, _tokenize
 from cassandra_pmem_spark.cql.validator import ConfigurationException, InvalidRequest
+from cassandra_pmem_spark.marshal import split_args
 from cassandra_pmem_spark.plans.hints import unpersist_quietly
 
 # db/marshal/* → Spark types. time is nanos-since-midnight (long);
@@ -236,31 +237,10 @@ _SQL_TYPE_TEXT: dict[str, str] = {
 }
 
 
-def _split_generics(body: str) -> list[str]:
-    """Split a parameterized-type body at depth-0 commas only, so
-    tuple<tuple<int,int>,text> yields ['tuple<int,int>', 'text'] rather
-    than mis-splitting the nested generic at its inner comma."""
-    parts: list[str] = []
-    depth = 0
-    cur: list[str] = []
-    for ch in body:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur).strip())
-    return parts
-
-
 def _cql_type_to_sql(cql_type: str) -> str:
     t = cql_type.strip().lower()
     if t.startswith("tuple<") and t.endswith(">"):
-        inner = _split_generics(t[len("tuple<"):-1])
+        inner = split_args(t[len("tuple<"):-1], "<", ">")
         fields = ", ".join(
             f"_{i + 1}: {_cql_type_to_sql(x)}" for i, x in enumerate(inner)
         )
@@ -542,6 +522,11 @@ class _DdlParser(_Parser):
             )
         if name in _NATIVE_TYPES:
             return _NATIVE_TYPES[name]
+        if self.accept_punct("."):
+            # ks.udt (Parser.g userTypeName): the type must live there
+            ks, name = name, self.ident().lower()
+            if self.registry.type_keyspaces.get(name, ks) != ks:
+                raise InvalidRequest(f"unknown type {ks}.{name}")
         if name in self.registry.types:
             return self.registry.types[name]
         raise InvalidRequest(f"unknown type {name!r}")
@@ -553,6 +538,8 @@ class _DdlParser(_Parser):
         start = self.i
         dtype = self.cql_type()
         text = "".join(t.text for t in self.toks[start:self.i]).lower()
+        # a user type keeps its bare name (the registry's key)
+        text = re.sub(r"[^<>,.]+\.", "", text)
         return dtype, text.replace(",", ", ")
 
     def map_literal(self) -> dict:
@@ -1452,7 +1439,7 @@ class _DdlParser(_Parser):
                 st = typ.strip().lower()
                 if not st.startswith("tuple<"):
                     raise InvalidRequest("tuple INITCOND requires a tuple STYPE")
-                inner = _split_generics(st[len("tuple<"):-1])
+                inner = split_args(st[len("tuple<"):-1], "<", ">")
                 vals = [value_sql(inner[0] if inner else "")]
                 while self.accept_punct(","):
                     if len(vals) >= len(inner):
@@ -2464,19 +2451,13 @@ class CqlDatabase:
         the meta's cql_types (Spark erases them to string); counter
         columns flush their folded totals as single-global-shard
         CounterContext cells (CounterContext.createGlobal). The sstable
-        subset has no user-type marshal: a table with a column whose
-        type names a user type is refused before any file is written."""
+        subset has no duration, tuple or user-type marshal: a table with
+        such a column is refused before any file is written
+        (SSTableSchema.from_table_meta)."""
         from cassandra_pmem_spark.sources.sstable import bulk_write_sstables
 
         key = self._table_key(table)
         meta = self.registry.tables[key]
-        for col, facts in self.registry.facts(meta).items():
-            if facts.refs:
-                raise InvalidRequest(
-                    f"Cannot flush column {col!r} of type "
-                    f"{meta.cql_type(col)}: user types have no sstable "
-                    "marshal in this engine"
-                )
         sess = self._session_for_key(key)
         df = sess.table(now=sess._clock_ref[0])
         return bulk_write_sstables(

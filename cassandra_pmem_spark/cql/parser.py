@@ -714,17 +714,17 @@ def _timefct_column(s, meta):
 
 
 def _scalar_token(meta, values: tuple) -> int:
-    """token(<key literals>) folded driver-side: the same serialization
-    and Murmur3 the column side hashes with (functions/murmur3.py
-    serialize_partition_key + murmur3_token_bytes_py), so the scalar
-    compares bit-exactly against where_token's column expression.
-    uuid/timeuuid/inet keys resolve their wire form via the table's
-    declared cql_types, exactly like token_column."""
-    from cassandra_pmem_spark.functions.murmur3 import (
-        InetMarshal,
-        UuidMarshal,
-        murmur3_token_bytes_py,
-        serialize_partition_key,
+    """token(<key literals>) folded driver-side: the same marshal codecs
+    and Murmur3 the column side hashes with (marshal.pack_key +
+    murmur3_token_bytes_py), so the scalar compares bit-exactly against
+    where_token's column expression. Each component's codec comes from
+    the table's declared cql_types, exactly like token_column."""
+    from cassandra_pmem_spark.functions.murmur3 import murmur3_token_bytes_py
+    from cassandra_pmem_spark.marshal import (
+        _MARSHAL,
+        codec_of,
+        marshal_of,
+        pack_key,
     )
 
     if len(values) != len(meta.partition_key):
@@ -732,23 +732,15 @@ def _scalar_token(meta, values: tuple) -> int:
             f"token() takes the full partition key "
             f"({len(meta.partition_key)} values), got {len(values)}"
         )
-    from pyspark.sql import types as _T
-
-    marshal_by_cql = {"uuid": UuidMarshal, "timeuuid": UuidMarshal, "inet": InetMarshal}
     by_name = {f.name: f.dataType for f in meta.schema.fields}
-    dtypes = [
-        marshal_by_cql[t]() if (t := meta.cql_type(c)) in marshal_by_cql
-        else by_name[c]
-        for c in meta.partition_key
-    ]
 
-    def _coerce(v, dt):
+    def _coerce(v, m):
         # date/timestamp keys arrive as string literals in CQL text —
-        # convert to the Python value serialize_pk_value expects (the
-        # same conversion the write path's typed validation applies)
+        # convert to the Python value the codec packs (the same
+        # conversion the write path's typed validation applies)
         from cassandra_pmem_spark.cql.terms import evaluate_fn
 
-        if isinstance(v, str) and isinstance(dt, _T.DateType):
+        if isinstance(v, str) and m == _MARSHAL + "SimpleDateType":
             # evaluate_fn raises InvalidRequest on a malformed literal —
             # the same rejection the write path's typed validation gives.
             # SimpleDateType rejects a time component; toDate's lenient
@@ -758,13 +750,17 @@ def _scalar_token(meta, values: tuple) -> int:
                     f"Invalid date literal {v!r} for a date partition key"
                 )
             return evaluate_fn("toDate", [v])
-        if isinstance(v, str) and isinstance(dt, _T.TimestampType):
+        if isinstance(v, str) and m == _MARSHAL + "TimestampType":
             return evaluate_fn("toTimestamp", [v])
         return v
 
-    values = tuple(_coerce(v, dt) for v, dt in zip(values, dtypes))
     try:
-        key = serialize_partition_key(tuple(values), dtypes)
+        marshals = [
+            marshal_of(meta.cql_type(c), by_name[c], frozen=True)
+            for c in meta.partition_key
+        ]
+        values = [_coerce(v, m) for v, m in zip(values, marshals)]
+        key = pack_key([codec_of(m) for m in marshals], values)
     except (TypeError, ValueError) as exc:
         raise InvalidRequest(f"token() literal does not fit the key: {exc}") from exc
     return murmur3_token_bytes_py(key)

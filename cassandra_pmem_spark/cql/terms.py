@@ -28,12 +28,19 @@ still reject with guidance.
 from __future__ import annotations
 
 import datetime as _dtmod
-import struct
 from typing import Any
 
 from cassandra_pmem_spark.cql.validator import InvalidRequest
+from cassandra_pmem_spark.marshal import codec_of, marshal_of
 
 _INT_WIDTHS = {"bigint": 8, "int": 4, "smallint": 2, "tinyint": 1}
+_BLOB_WIDTHS = {**_INT_WIDTHS, "boolean": 1, "double": 8, "float": 4}
+# CQL type -> its marshal codec, for the xAsBlob / blobAsX folds
+# (BytesConversionFcts.java)
+_BLOB_CODECS = {
+    t: codec_of(marshal_of(t, None, False))
+    for t in (*_BLOB_WIDTHS, "text", "varchar", "ascii")
+}
 
 # -- version-1 (time-based) UUID arithmetic (utils/UUIDGen.java) ---------------
 # The v1 timestamp is 100ns ticks since the UUID epoch 1582-10-15;
@@ -165,21 +172,41 @@ class SessionClockFold:
         raise InvalidRequest(f"unknown clock function {low!r}")  # pragma: no cover
 
 
-def _int_as_blob(v: Any, width: int, name: str) -> bytes:
-    if not isinstance(v, int) or isinstance(v, bool):
-        raise InvalidRequest(f"{name}() takes an integer literal, got {v!r}")
+def _as_blob(t: str, v: Any, name: str) -> bytes:
+    """xAsBlob: the literal checks, then the type's marshal codec."""
+    if t in _INT_WIDTHS:
+        if not isinstance(v, int) or isinstance(v, bool):
+            raise InvalidRequest(f"{name}() takes an integer literal, got {v!r}")
+        half = 1 << (8 * _INT_WIDTHS[t] - 1)
+        if not -half <= v < half:
+            raise InvalidRequest(f"{name}({v}) out of range")
+    elif t == "boolean":
+        if not isinstance(v, bool):
+            raise InvalidRequest(f"{name}() takes a boolean literal")
+    elif t in ("double", "float"):
+        if isinstance(v, bool) or not isinstance(v, (int, float)):
+            raise InvalidRequest(f"{name}() takes a numeric literal")
+    elif not isinstance(v, str):
+        raise InvalidRequest(f"{name}() takes a string literal")
+    elif t == "ascii" and not v.isascii():
+        # AsciiType rejects code points above 0x7F
+        raise InvalidRequest(f"{name}() takes an ASCII string literal")
+    return _BLOB_CODECS[t].pack(v)
+
+
+def _blob_as(t: str, v: Any, name: str) -> Any:
+    """blobAsX: the blob checks, then the type's marshal codec."""
+    width = _BLOB_WIDTHS.get(t)
+    if not isinstance(v, (bytes, bytearray)) or width not in (None, len(v)):
+        want = f"{width}-byte blob" if width else "blob"
+        raise InvalidRequest(f"{name}() takes a {want}, got {v!r}")
+    if t == "ascii" and any(b > 0x7F for b in v):
+        # AsciiSerializer.validate rejects bytes above 0x7F
+        raise InvalidRequest(f"{name}() takes an ASCII blob")
     try:
-        return int(v).to_bytes(width, "big", signed=True)
-    except OverflowError as exc:
-        raise InvalidRequest(f"{name}({v}) out of range") from exc
-
-
-def _blob_as_int(v: Any, width: int, name: str) -> int:
-    if not isinstance(v, (bytes, bytearray)) or len(v) != width:
-        raise InvalidRequest(
-            f"{name}() takes a {width}-byte blob, got {v!r}"
-        )
-    return int.from_bytes(bytes(v), "big", signed=True)
+        return _BLOB_CODECS[t].unpack(v)
+    except UnicodeDecodeError as exc:
+        raise InvalidRequest(f"{name}(): invalid UTF-8 blob") from exc
 
 
 class TimeuuidBound(_dtmod.datetime):
@@ -310,60 +337,10 @@ def evaluate_fn(name: str, args: list[Any], clock: "SessionClockFold | None" = N
     def one() -> Any:
         return args[0]
 
-    for t, w in _INT_WIDTHS.items():
-        if low == f"{t}asblob":
-            return _int_as_blob(one(), w, name)
-        if low == f"blobas{t}":
-            return _blob_as_int(one(), w, name)
-    if low in ("textasblob", "asciiasblob", "varcharasblob"):
-        v = one()
-        if not isinstance(v, str):
-            raise InvalidRequest(f"{name}() takes a string literal")
-        if low == "asciiasblob" and not v.isascii():
-            # AsciiType rejects code points above 0x7F
-            raise InvalidRequest(f"{name}() takes an ASCII string literal")
-        return v.encode("utf-8")
-    if low in ("blobastext", "blobasascii", "blobasvarchar"):
-        v = one()
-        if not isinstance(v, (bytes, bytearray)):
-            raise InvalidRequest(f"{name}() takes a blob")
-        if low == "blobasascii" and any(b > 0x7F for b in v):
-            # AsciiSerializer.validate rejects bytes above 0x7F
-            raise InvalidRequest(f"{name}() takes an ASCII blob")
-        try:
-            return bytes(v).decode("utf-8")
-        except UnicodeDecodeError as exc:
-            raise InvalidRequest(f"{name}(): invalid UTF-8 blob") from exc
-    if low == "booleanasblob":
-        v = one()
-        if not isinstance(v, bool):
-            raise InvalidRequest(f"{name}() takes a boolean literal")
-        return b"\x01" if v else b"\x00"
-    if low == "blobasboolean":
-        v = one()
-        if not isinstance(v, (bytes, bytearray)) or len(v) != 1:
-            raise InvalidRequest(f"{name}() takes a 1-byte blob")
-        return v[0] != 0
-    if low == "doubleasblob":
-        v = one()
-        if isinstance(v, bool) or not isinstance(v, (int, float)):
-            raise InvalidRequest(f"{name}() takes a numeric literal")
-        return struct.pack(">d", float(v))
-    if low == "blobasdouble":
-        v = one()
-        if not isinstance(v, (bytes, bytearray)) or len(v) != 8:
-            raise InvalidRequest(f"{name}() takes an 8-byte blob")
-        return struct.unpack(">d", bytes(v))[0]
-    if low == "floatasblob":
-        v = one()
-        if isinstance(v, bool) or not isinstance(v, (int, float)):
-            raise InvalidRequest(f"{name}() takes a numeric literal")
-        return struct.pack(">f", float(v))
-    if low == "blobasfloat":
-        v = one()
-        if not isinstance(v, (bytes, bytearray)) or len(v) != 4:
-            raise InvalidRequest(f"{name}() takes a 4-byte blob")
-        return struct.unpack(">f", bytes(v))[0]
+    if low.endswith("asblob") and low[:-6] in _BLOB_CODECS:
+        return _as_blob(low[:-6], one(), name)
+    if low.startswith("blobas") and low[6:] in _BLOB_CODECS:
+        return _blob_as(low[6:], one(), name)
     if low in ("totimestamp", "tounixtimestamp", "todate",
                "mintimeuuid", "maxtimeuuid"):
         # TimeFcts over string literals: 'YYYY-MM-DD[ hh:mm:ss]' — the
@@ -411,11 +388,7 @@ def evaluate_fn(name: str, args: list[Any], clock: "SessionClockFold | None" = N
 
 
 _KNOWN_FNS = frozenset(
-    [f"{t}asblob" for t in _INT_WIDTHS] + [f"blobas{t}" for t in _INT_WIDTHS]
-    + ["textasblob", "asciiasblob", "varcharasblob",
-       "blobastext", "blobasascii", "blobasvarchar",
-       "booleanasblob", "blobasboolean",
-       "doubleasblob", "blobasdouble", "floatasblob", "blobasfloat",
-       "totimestamp", "tounixtimestamp", "todate",
+    [f"{t}asblob" for t in _BLOB_CODECS] + [f"blobas{t}" for t in _BLOB_CODECS]
+    + ["totimestamp", "tounixtimestamp", "todate",
        "mintimeuuid", "maxtimeuuid"]
 )

@@ -317,7 +317,15 @@ class _WriteParser(_Parser):
         column stores the reference's fake extreme uuid
         (UUIDGen.min/maxTimeUUID), a timestamp column the plain instant.
         _record downgrades every bound, so the tagged subclass never
-        reaches Spark row construction."""
+        reaches Spark row construction. ``(t1, t2, ...)`` is a tuple
+        literal (Parser.g tupleLiteral): a Python tuple, like a bound
+        one."""
+        if self.accept_punct("("):
+            vals = [self.value_term(params, cursor)]
+            while self.accept_punct(","):
+                vals.append(self.value_term(params, cursor))
+            self.expect_punct(")")
+            return tuple(vals)
         return self.term(params, cursor)
 
     def insert_statement(self, params: list[Any], cursor: list[int] | None = None):
@@ -2049,6 +2057,12 @@ class CqlWriteSession:
             elif isinstance(dt, T.MapType):
                 ok = isinstance(val, dict)
             elif isinstance(dt, T.StructType):
+                names = [f.name for f in dt.fields]
+                if isinstance(val, (tuple, list)) and names == [
+                    f"_{i + 1}" for i in range(len(val))
+                ]:
+                    # a tuple<...> value: fields are positional
+                    val = dict(zip(names, val))
                 ok = isinstance(val, dict)
                 if ok:
                     # frozen-UDT whole values validate PER FIELD too —

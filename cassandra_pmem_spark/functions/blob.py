@@ -8,7 +8,7 @@ int64 via unix_millis — timezone-exact), date (unsigned epoch-centered
 days), uuid/timeuuid (16 raw bytes from the canonical text form),
 double/float (IEEE-754 bit patterns — the one Arrow-batched pair, since
 no JVM builtin exposes float bits), varint (minimal two's-complement,
-shared with the Murmur3 marshal serializer). time and counter map to
+the varint codec of cassandra_pmem_spark.marshal). time and counter map to
 LongType in the DDL, so they ride bigint_as_blob; inet and duration keep
 their text forms, so they ride text_as_blob. Everything except
 double/float/varint stays JVM-side in whole-stage codegen.
@@ -215,16 +215,16 @@ def blob_as_float(col: Column | str) -> Column:
 
 
 def varint_as_blob(col: Column | str) -> Column:
-    """Minimal two's-complement bytes (IntegerType.java) — shares the
-    marshal serializer with the Murmur3 token path."""
+    """Minimal two's-complement bytes (IntegerType.java) — the varint
+    marshal codec the sstable format and Murmur3 token path use."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(T.BinaryType())
     def fn(s: pd.Series) -> pd.Series:
-        from cassandra_pmem_spark.functions.murmur3 import serialize_pk_value
+        from cassandra_pmem_spark.marshal import CODECS, _MARSHAL
 
-        dt = T.DecimalType(38, 0)
-        return pd.Series([serialize_pk_value(v, dt) for v in s])
+        pack = CODECS[_MARSHAL + "IntegerType"].pack
+        return pd.Series([pack(v) for v in s])
 
     c = F.col(col) if isinstance(col, str) else col
     return fn(c.cast(T.DecimalType(38, 0)))
@@ -235,11 +235,10 @@ def blob_as_varint(col: Column | str) -> Column:
 
     @pandas_udf(T.DecimalType(38, 0))
     def fn(s: pd.Series) -> pd.Series:
-        from decimal import Decimal
+        from cassandra_pmem_spark.marshal import CODECS, _MARSHAL
 
-        return pd.Series(
-            [Decimal(int.from_bytes(bytes(v), "big", signed=True)) for v in s]
-        )
+        unpack = CODECS[_MARSHAL + "IntegerType"].unpack
+        return pd.Series([unpack(v) for v in s])
 
     c = F.col(col) if isinstance(col, str) else col
     return fn(c)

@@ -240,11 +240,9 @@ def murmur3_token_subquery(
 # --- general-length kernel: arbitrary serialized partition keys --------------
 #
 # Reference: utils/MurmurHash.java:174-252 (hash3_x64_128, seed 0) over the
-# partition key's serialized bytes: a single-column key hashes its type's raw
-# serialization (db/marshal/LongType.java: 8-byte big-endian; Int32Type:
-# 4-byte; UTF8Type: utf8 bytes); a multi-column key hashes the CompositeType
-# layout (db/marshal/CompositeType.java:38-44: per component a 2-byte
-# big-endian length, the value bytes, and one 0x00 end-of-component byte).
+# partition key's serialized bytes — the marshal codecs' output
+# (cassandra_pmem_spark/marshal.py): a single-column key hashes its type's
+# raw serialization; a multi-column key the CompositeType layout.
 # Body blocks assemble bytes little-endian *unsigned* (getblock, :160-172);
 # only the tail sign-extends (the documented quirk, :29).
 
@@ -316,299 +314,27 @@ def _murmur3_bytes_np(B: "np.ndarray", lens: "np.ndarray") -> "np.ndarray":
     return np.where(s == np.int64(LONG_MIN), np.int64(LONG_MAX), s)
 
 
-class UuidMarshal:
-    """Marker marshal dtype for uuid/timeuuid partition keys held as text.
-
-    db/marshal/UUIDType.java (and TimeUUIDType.java — identical wire form,
-    they differ only in comparison order): the 16 raw bytes, most-significant
-    long then least-significant long, each big-endian — i.e. the canonical
-    hex string's pairs in order, dashes removed."""
-
-
-class InetMarshal:
-    """Marker marshal dtype for inet partition keys held as text.
-
-    db/marshal/InetAddressType.java: InetAddress.getAddress() bytes —
-    4 for IPv4, 16 for IPv6."""
-
-
-class FrozenListMarshal:
-    """Marker marshal dtype for a frozen<list<T>> partition-key component.
-
-    Frozen collections ARE legal partition keys (CreateTableStatement.java:179
-    rejects only non-frozen; FrozenCollectionsTest.java:55 creates them). The
-    serialized form Murmur3Partitioner hashes is CollectionSerializer.pack
-    (serializers/CollectionSerializer.java:60-98, protocol V3+): a 4-byte
-    big-endian element count, then per element a 4-byte big-endian length and
-    the element's own marshal serialization."""
-
-    def __init__(self, elem_dtype):
-        self.elem_dtype = elem_dtype
-
-
-class FrozenSetMarshal:
-    """frozen<set<T>> partition-key component: same pack layout as list, but
-    elements sorted by the element type's comparator before packing
-    (serializers/SetSerializer.java:59 Collections.sort on serialized bytes;
-    for the int family that comparator is signed-value order —
-    Int32Type.java:45-53 signed first byte, LongType.compareLongs — and for
-    text/blob it is unsigned lexicographic byte order)."""
-
-    def __init__(self, elem_dtype):
-        self.elem_dtype = elem_dtype
-
-
-class FrozenMapMarshal:
-    """frozen<map<K,V>> partition-key component: 4-byte count, then per entry
-    key-length+key-bytes, value-length+value-bytes, entries sorted by the key
-    comparator (serializers/MapSerializer.java:62)."""
-
-    def __init__(self, key_dtype, val_dtype):
-        self.key_dtype = key_dtype
-        self.val_dtype = val_dtype
-
-
-class FrozenUdtMarshal:
-    """frozen UDT (or tuple) partition-key component: TupleType.buildValue
-    (db/marshal/TupleType.java:221-240, UserType extends TupleType) — per
-    field a 4-byte big-endian length and the field bytes, NO count prefix;
-    a null field serializes as length -1 with no bytes."""
-
-    def __init__(self, field_dtypes: "list"):
-        self.field_dtypes = list(field_dtypes)
-
-
-def _epoch_ms(v) -> int:
-    """datetime/pd.Timestamp/raw millis -> epoch millis, naive-as-UTC.
-
-    Plain datetime arithmetic, NOT pd.Timestamp(v).value: the ns-based
-    .value ceiling (years 1677..2262) would crash for the far-past/
-    far-future instants Cassandra timestamps allow (years 1..9999) —
-    and pd.Timestamp subclasses datetime, so the in-range fast path is
-    the same code. timedelta normalization keeps floor semantics for
-    pre-1970 sub-millisecond parts, matching int64 // division."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        d = v - _dt.datetime(1970, 1, 1)
-        return (d.days * 86_400_000 + d.seconds * 1_000
-                + d.microseconds // 1_000)
-    return int(v)
-
-
-def _set_sort_key(v, dtype):
-    """Sort key matching the reference element comparator (the order
-    SetSerializer/MapSerializer pack elements in):
-
-    - int family: signed value order (Int32Type.java:45-53 signed first
-      byte, LongType.compareLongs);
-    - float/double: VALUE order via compose().compareTo()
-      (FloatType.java:49-55, DoubleType.java:48-54) — Java Float.compare
-      semantics, so -0.0 < 0.0 and NaN sorts greatest (compareTo sees the
-      canonical floatToIntBits NaN, so all NaN payloads tie);
-    - decimal / varint: numeric value, scale-independent
-      (DecimalType.java:51-57 BigDecimal.compareTo,
-      IntegerType.java:70-73 compareIntegers) — unsigned serialized-byte
-      order would mis-sort negatives and different-length varints;
-    - text/blob/date/boolean: unsigned byte order of the serialization,
-      which IS those types' comparator (UTF8Type/BytesType
-      lexicographic, SimpleDateType epoch-centered unsigned int)."""
-    import math
-
-    from pyspark.sql import types as T
-
-    if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        return (0, int(v), 0, b"")
-    if isinstance(dtype, T.TimestampType):
-        # TimestampType.compareCustom compares the epoch-millis LONGS by
-        # value (TimestampType.java:55-60); unsigned serialized-byte
-        # order would mis-sort pre-1970 (negative-millis) elements
-        return (0, _epoch_ms(v), 0, b"")
-    if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        f = float(v)
-        if math.isnan(f):
-            return (0, math.inf, 2, b"")  # NaN > +inf (Float.compare)
-        return (0, f, 0 if math.copysign(1.0, f) < 0 else 1, b"")
-    if isinstance(dtype, T.DecimalType):
-        from decimal import Decimal
-
-        d = v if isinstance(v, Decimal) else Decimal(str(v))
-        return (0, d, 0, b"")
-    return (1, 0, 0, serialize_pk_value(v, dtype))
-
-
-def serialize_pk_value(v, dtype) -> bytes:
-    """One partition-key component's raw serialization (db/marshal/*).
-
-    Covered marshal types (each cited to its reference serializer):
-    - LongType.java / Int32Type.java / ShortType.java / ByteType.java —
-      big-endian two's-complement at the type's width;
-    - UTF8Type.java — raw utf8 bytes;
-    - DoubleType.java / FloatType.java — big-endian IEEE-754 bit pattern;
-    - BooleanType.java — one byte, 0 or 1;
-    - SimpleDateType.java — UNSIGNED 4-byte days-since-epoch with the
-      epoch centered at 2^31 (so day 0 serializes as 0x80000000);
-    - TimestampType.java — epoch millis as a big-endian int64 (the
-      Timestamp path in token_column pre-converts via unix_millis so the
-      value here is already a long — see functions/token.py);
-    - DecimalType.java — 4-byte int scale, then the unscaled value as a
-      BigInteger.toByteArray() minimal two's-complement varint;
-    - IntegerType.java (CQL varint) — the varint bytes alone;
-    - BytesType.java — the blob verbatim;
-    - UuidMarshal (uuid/timeuuid text) — 16 bytes msb||lsb big-endian;
-    - InetMarshal (inet text) — the 4/16 address bytes.
-    """
-    import struct
-
-    from pyspark.sql import types as T
-
-    if isinstance(dtype, UuidMarshal):
-        import uuid as _uuid
-
-        return _uuid.UUID(str(v)).bytes  # UUIDType.java msb||lsb big-endian
-    if isinstance(dtype, InetMarshal):
-        import ipaddress
-
-        return ipaddress.ip_address(str(v)).packed  # InetAddressType.java
-    if isinstance(dtype, T.LongType):
-        return struct.pack(">q", int(v))  # LongType.java big-endian int64
-    if isinstance(dtype, T.IntegerType):
-        return struct.pack(">i", int(v))  # Int32Type.java big-endian int32
-    if isinstance(dtype, T.StringType):
-        return str(v).encode("utf-8")  # UTF8Type.java raw utf8
-    if isinstance(dtype, T.ShortType):
-        return struct.pack(">h", int(v))  # ShortType.java
-    if isinstance(dtype, T.ByteType):
-        return struct.pack(">b", int(v))  # ByteType.java
-    if isinstance(dtype, T.DoubleType):
-        return struct.pack(">d", float(v))  # DoubleType.java IEEE-754 bits
-    if isinstance(dtype, T.FloatType):
-        return struct.pack(">f", float(v))  # FloatType.java
-    if isinstance(dtype, T.BooleanType):
-        return b"\x01" if v else b"\x00"  # BooleanType.java
-    if isinstance(dtype, T.DateType):
-        import datetime
-
-        days = (v - datetime.date(1970, 1, 1)).days
-        # SimpleDateType.java: unsigned int, epoch at 2^31
-        return struct.pack(">I", (days + (1 << 31)) & 0xFFFFFFFF)
-    if isinstance(dtype, T.TimestampType):
-        # TimestampType.java: epoch millis int64, full year 1..9999
-        # range (_epoch_ms avoids pandas' ns ceiling). NOTE: naive
-        # timestamps are interpreted as UTC; top-level columns
-        # pre-convert through unix_millis in token_column (TZ-exact),
-        # NESTED values take this path and are exact only under a UTC
-        # session timezone (gated in token_column)
-        return struct.pack(">q", _epoch_ms(v))
-    if isinstance(dtype, T.DecimalType):
-        from decimal import Decimal
-
-        d = v if isinstance(v, Decimal) else Decimal(str(v))
-        # exact unscaled value from the digit tuple — context arithmetic
-        # (scaleb/quantize) silently ROUNDS past the 28-digit default
-        # precision, which a 38-digit varint overflows
-        sign, digits, exp = d.as_tuple()
-        unscaled = int("".join(map(str, digits)) or "0")
-        if exp > 0:
-            unscaled *= 10**exp
-            exp = 0
-        if sign:
-            unscaled = -unscaled
-        scale = -exp
-        # BigInteger.toByteArray() minimal length: for n >= 0 one leading
-        # 0-bit must fit; for n < 0 the boundary values -2^(8k-1) fit in
-        # exactly k bytes (naive bit_length()//8+1 pads -128 to FF 80)
-        nbytes = (
-            unscaled.bit_length() // 8 + 1
-            if unscaled >= 0
-            else (unscaled + 1).bit_length() // 8 + 1
-        )
-        vb = unscaled.to_bytes(nbytes, "big", signed=True)
-        if dtype.scale == 0:
-            # the DDL maps CQL varint to DecimalType(38,0): IntegerType.java
-            # serializes the BigInteger.toByteArray() bytes alone
-            return vb
-        # DecimalType.java: int scale + unscaled varint
-        return struct.pack(">i", scale) + vb
-    if isinstance(dtype, T.BinaryType):
-        return bytes(v)  # BytesType.java verbatim
-    # frozen collections / UDTs (legal pk components when frozen:
-    # CreateTableStatement.java:179, FrozenCollectionsTest.java:55).
-    # A bare Spark ArrayType/MapType/StructType maps to frozen
-    # list/map/udt; set semantics need the FrozenSetMarshal tag (Spark
-    # has no set type, so ordering intent can't be inferred).
-    if isinstance(dtype, T.ArrayType):
-        dtype = FrozenListMarshal(dtype.elementType)
-    if isinstance(dtype, T.MapType):
-        dtype = FrozenMapMarshal(dtype.keyType, dtype.valueType)
-    if isinstance(dtype, T.StructType):
-        dtype = FrozenUdtMarshal([f.dataType for f in dtype.fields])
-    if isinstance(dtype, (FrozenListMarshal, FrozenSetMarshal)):
-        elems = list(v)
-        if isinstance(dtype, FrozenSetMarshal):
-            elems.sort(key=lambda e: _set_sort_key(e, dtype.elem_dtype))
-        parts = [serialize_pk_value(e, dtype.elem_dtype) for e in elems]
-        # CollectionSerializer.pack: int32 count + per element int32 len+bytes
-        return struct.pack(">i", len(parts)) + b"".join(
-            struct.pack(">i", len(p)) + p for p in parts
-        )
-    if isinstance(dtype, FrozenMapMarshal):
-        entries = list(v.items()) if hasattr(v, "items") else [tuple(e) for e in v]
-        entries.sort(key=lambda kv: _set_sort_key(kv[0], dtype.key_dtype))
-        out = [struct.pack(">i", len(entries))]
-        for k, mv in entries:
-            kb = serialize_pk_value(k, dtype.key_dtype)
-            vb = serialize_pk_value(mv, dtype.val_dtype)
-            out.append(struct.pack(">i", len(kb)) + kb)
-            out.append(struct.pack(">i", len(vb)) + vb)
-        return b"".join(out)
-    if isinstance(dtype, FrozenUdtMarshal):
-        vals = list(v.values()) if hasattr(v, "values") else list(v)
-        out = []
-        for fv, fdt in zip(vals, dtype.field_dtypes):
-            if fv is None:
-                out.append(struct.pack(">i", -1))  # TupleType.java:232
-            else:
-                fb = serialize_pk_value(fv, fdt)
-                out.append(struct.pack(">i", len(fb)) + fb)
-        return b"".join(out)
-    raise TypeError(f"unsupported partition-key type for token(): {dtype}")
-
-
-def serialize_partition_key(values: tuple, dtypes: list) -> bytes:
-    """Serialized form Murmur3Partitioner hashes: the single component's raw
-    bytes, or the CompositeType layout for multi-column keys."""
-    comps = [serialize_pk_value(v, dt) for v, dt in zip(values, dtypes)]
-    if len(comps) == 1:
-        return comps[0]
-    import struct
-
-    return b"".join(struct.pack(">H", len(c)) + c + b"\x00" for c in comps)
-
-
-def murmur3_token_key_columns(cols, dtypes):
+def murmur3_token_key_columns(cols, codecs):
     """Column expression: bit-exact Cassandra token over one or more
-    partition-key columns of long/int/text type. Serialization per row
-    (cheap, Arrow-batched); hashing vectorized (_murmur3_bytes_np)."""
-    from pyspark.sql.functions import pandas_udf
+    partition-key columns, each packed by its marshal codec
+    (marshal.pack_key: raw bytes, or the CompositeType layout) per row
+    (Arrow-batched); hashing vectorized (_murmur3_bytes_np)."""
+    from cassandra_pmem_spark.marshal import pack_key
 
-    dts = list(dtypes)
+    cs = list(codecs)
 
     def fn(*series: pd.Series) -> pd.Series:
         n = len(series[0])
-        # struct (UDT) columns arrive as a pandas DataFrame per Arrow
-        # conversion — flatten each to row tuples so zip sees one value
+        # struct (tuple / user type) columns arrive as a pandas DataFrame
+        # per Arrow conversion — flatten each to row tuples so zip sees
+        # one value
         cols = [
             list(s.itertuples(index=False, name=None))
             if isinstance(s, pd.DataFrame)
             else s
             for s in series
         ]
-        keys = [
-            serialize_partition_key(row, dts) for row in zip(*cols)
-        ]
+        keys = [pack_key(cs, row) for row in zip(*cols)]
         lens = np.array([len(k) for k in keys], dtype=np.int64)
         lmax = max(1, int(lens.max()) if n else 1)
         B = np.zeros((n, lmax), dtype=np.uint8)

@@ -55,6 +55,11 @@ _PRIORITY: tuple[str, ...] = (
     # the session's column facts come from TableMeta.cql_types: the
     # textual collection ops run on a meta that declares l, s and m
     "cql_collection_text_ops",
+    # the one CQL value codec (marshal.py): the text, composite and
+    # timestamp token lanes now pack keys through it
+    "cql_token_scan_text",
+    "cql_token_scan_composite",
+    "cql_token_scan_timestamp",
     # -- (2) round-14 evidence. The sstable tier (one opener and one
     # ranged partition walker, the import snapshot, the declared-type
     # overrides), the write path (one BATCH path, the session frame
@@ -92,16 +97,14 @@ _PRIORITY: tuple[str, ...] = (
     "cql_per_partition_limit",
     "cql_point_lookup",
     "cql_static_column",
-    "dedup_simhash",
-    "multimodal_video_dedup",
-    "virtual_system_tables",
 )
 # Deliberately outside the window this round: analytics_count_distinct,
 # analytics_set_ops, analytics_topk_orders, analytics_rollup,
 # analytics_explode_wordcount, analytics_salted_agg, csv_roundtrip,
 # jsonl_roundtrip, sim_ivf_topk, streaming_exactly_once_sink,
 # streaming_sliding_batch, streaming_session_batch,
-# streaming_tumbling_batch, dedup_exact_docs and dedup_ngram_jaccard —
+# streaming_tumbling_batch, dedup_exact_docs, dedup_ngram_jaccard,
+# dedup_simhash, multimodal_video_dedup and virtual_system_tables —
 # plain DataFrame queries over the generated tables, with round-14
 # evidence and no code change since.
 

@@ -268,9 +268,10 @@ def cql_token_scan_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Murmur3Partitioner.java:214-246). Keys are derived deterministically
     from c_custkey with NEGATIVE elements in three of the four shapes, so
     the DuckDB twin (fixed_layout_byte_exprs) proves two's-complement
-    serialization too. Spark has no set type, so the set column is tagged
-    via cql_types={'fs': 'frozen_set'}; element order in the built array is
-    descending to prove the comparator sort actually runs."""
+    serialization too. Spark has no set type, so the set column's declared
+    CQL type rides in cql_types={'fs': 'frozen<set<int>>'}; element order
+    in the built array is descending to prove the comparator sort actually
+    runs."""
     from cassandra_pmem_spark.functions.token import token_column
 
     k = F.col("c_custkey")
@@ -287,7 +288,10 @@ def cql_token_scan_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         df.withColumn("t_list", token_column(["fl"], df.schema))
-        .withColumn("t_set", token_column(["fs"], df.schema, cql_types={"fs": "frozen_set"}))
+        .withColumn(
+            "t_set",
+            token_column(["fs"], df.schema, cql_types={"fs": "frozen<set<int>>"}),
+        )
         .withColumn("t_map", token_column(["fm"], df.schema))
         .withColumn("t_udt", token_column(["fu"], df.schema))
         .select("c_custkey", "t_list", "t_set", "t_map", "t_udt")
@@ -381,8 +385,14 @@ def cql_token_scan_frozen_num(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.create_map(pos_d, k * 11, neg_d, k * 7).alias("md"),
     )
     return (
-        df.withColumn("t_sd", token_column(["sd"], df.schema, cql_types={"sd": "frozen_set"}))
-        .withColumn("t_sv", token_column(["sv"], df.schema, cql_types={"sv": "frozen_set"}))
+        df.withColumn(
+            "t_sd",
+            token_column(["sd"], df.schema, cql_types={"sd": "frozen<set<double>>"}),
+        )
+        .withColumn(
+            "t_sv",
+            token_column(["sv"], df.schema, cql_types={"sv": "frozen<set<varint>>"}),
+        )
         .withColumn("t_md", token_column(["md"], df.schema))
         .select("c_custkey", "t_sd", "t_sv", "t_md")
         .orderBy("t_sd")
@@ -476,7 +486,10 @@ def cql_token_scan_frozen_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         df.withColumn("t_lts", token_column(["lt"], df.schema))
         .withColumn(
-            "t_sts", token_column(["st"], df.schema, cql_types={"st": "frozen_set"})
+            "t_sts",
+            token_column(
+                ["st"], df.schema, cql_types={"st": "frozen<set<timestamp>>"}
+            ),
         )
         .withColumn("t_uts", token_column(["ut"], df.schema))
         .select("c_custkey", "t_lts", "t_sts", "t_uts")

@@ -54,8 +54,9 @@ layout is implemented from the reference serializers (file:line into
   Data.db CRC32 as decimal text.
 
 Scope (documented subset, validated by round-trip + pinned vectors in
-tests/test_sstable.py): scalar regular columns over int/bigint/text/
-ascii/double/float/boolean/timestamp/blob/uuid keys and values,
+tests/test_sstable.py): keys and values of every native type but
+duration, each packed by its codec in cassandra_pmem_spark/marshal.py
+(frozen list/set/map keys too; no tuple or user-type values),
 COUNTER cells (values are CounterContext blobs — written as the
 single-global-shard compacted form, read as the shard-count sum,
 db/context/CounterContext.java — see the counter section below),
@@ -109,6 +110,22 @@ import os
 import struct
 import zlib
 from dataclasses import dataclass, field
+
+from cassandra_pmem_spark.marshal import (  # noqa: F401 — re-exported
+    _MARSHAL,
+    COUNTER_ID_LENGTH,
+    REVERSED_PREFIX,
+    Codec,
+    CollectionCodec,
+    codec_of,
+    collection_codec_of,
+    counter_context_global,
+    counter_context_total,
+    marshal_of,
+    pack_key,
+    timestamp_millis,
+    unpack_key,
+)
 
 # -- constants (UnfilteredSerializer / Cell.Serializer / EncodingStats) ----
 
@@ -199,9 +216,6 @@ def version_from_path(path: str) -> SSTableVersion:
     direction). Raises on versions outside ma..nb, like the reference's
     earliest_supported_version gate."""
     return SSTableVersion(os.path.basename(path).split("-", 1)[0])
-
-_MARSHAL = "org.apache.cassandra.db.marshal."
-
 
 # -- vints (VIntCoding.java) ------------------------------------------------
 
@@ -311,178 +325,6 @@ _VINT_EXTRA = tuple(
 )
 
 
-# -- marshal type codecs ----------------------------------------------------
-
-@dataclass(frozen=True)
-class Codec:
-    """One CQL marshal type: the wire codec + Spark/py round trip."""
-
-    marshal: str          # fully-qualified marshal class name
-    spark: str            # spark simpleString
-    fixed_len: int        # -1 = variable length
-    pack: object          # value -> bytes
-    unpack: object        # bytes -> value
-
-
-def _c(marshal, spark, fixed, pack, unpack) -> Codec:
-    return Codec(_MARSHAL + marshal, spark, fixed, pack, unpack)
-
-
-def _uuid_pack(v) -> bytes:
-    import uuid as _uuid
-
-    return _uuid.UUID(str(v)).bytes
-
-
-def _uuid_unpack(b: bytes):
-    import uuid as _uuid
-
-    return str(_uuid.UUID(bytes=bytes(b)))
-
-
-def _ts_pack(v) -> bytes:
-    # TimestampType: millis since epoch, 8-byte BE
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
-        ns = getattr(v, "value", None)
-        if ns is not None:
-            # pandas Timestamp fast path: .value is ns since epoch,
-            # UTC-normalized for aware and naive-as-UTC for naive —
-            # exactly the replace(utc).timestamp() result below, minus
-            # two object constructions per cell (hot write path).
-            # Truncation toward zero matches int(timestamp()*1000) for
-            # pre-1970 instants with sub-ms parts.
-            ms = ns // 1_000_000 if ns >= 0 else -((-ns) // 1_000_000)
-            return struct.pack(">q", ms)
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=_dt.timezone.utc)
-        ms = int(v.timestamp() * 1000)
-    else:
-        ms = int(v)
-    return struct.pack(">q", ms)
-
-
-def _ts_unpack(b: bytes):
-    import datetime as _dt
-
-    ms = struct.unpack(">q", bytes(b))[0]
-    return _dt.datetime.fromtimestamp(ms / 1000.0, tz=_dt.timezone.utc).replace(
-        tzinfo=None
-    )
-
-
-# -- counter cells (db/context/CounterContext.java) ---------------------------
-#
-# A counter cell's VALUE is a serialized CounterContext: a header
-# (int16 element count n, then n int16 body indices — global shards
-# encoded as idx + Short.MIN_VALUE, so always negative) followed by the
-# body of (CounterId 16 bytes, int64 clock, int64 count) shards
-# (CounterContext.java:36-60 layout comment, :78-82 lengths). The
-# visible counter value is the SUM of shard counts
-# (CounterContext.total:570-576). This engine writes the
-# single-global-shard form a compacted/flushed perfect value takes
-# (createGlobal:142-147) with a fixed engine CounterId and clock 1;
-# it reads ANY context — including legacy pre-2.1 negative header
-# sizes (headerLength:171-174 takes Math.abs) and multi-shard bodies.
-
-COUNTER_ID_LENGTH = 16  # utils/CounterId.LENGTH
-_ENGINE_COUNTER_ID = bytes(COUNTER_ID_LENGTH)
-
-
-def counter_context_global(count: int, clock: int = 1,
-                           counter_id: bytes = _ENGINE_COUNTER_ID) -> bytes:
-    """Single-global-shard context (CounterContext.createGlobal:142-147):
-    header (1, [0 + Short.MIN_VALUE]) + one (id, clock, count) shard."""
-    return (
-        struct.pack(">hh", 1, -(1 << 15))
-        + counter_id
-        + struct.pack(">qq", clock, count)
-    )
-
-
-def counter_context_total(blob: bytes) -> int:
-    """Sum of every shard's count (CounterContext.total:570-576); the
-    header size is abs()'d for legacy pre-2.1 contexts (:173)."""
-    b = bytes(blob)
-    (n,) = struct.unpack_from(">h", b, 0)
-    off = 2 + abs(n) * 2
-    total = 0
-    step = COUNTER_ID_LENGTH + 16
-    while off + step <= len(b):
-        (count,) = struct.unpack_from(">q", b, off + COUNTER_ID_LENGTH + 8)
-        total += count
-        off += step
-    return total
-
-
-CODECS: dict[str, Codec] = {
-    c.marshal: c
-    for c in (
-        _c("CounterColumnType", "bigint", -1,
-           lambda v: counter_context_global(int(v)),
-           lambda b: counter_context_total(b)),
-        _c("Int32Type", "int", 4,
-           lambda v: struct.pack(">i", int(v)),
-           lambda b: struct.unpack(">i", bytes(b))[0]),
-        _c("LongType", "bigint", 8,
-           lambda v: struct.pack(">q", int(v)),
-           lambda b: struct.unpack(">q", bytes(b))[0]),
-        _c("DoubleType", "double", 8,
-           lambda v: struct.pack(">d", float(v)),
-           lambda b: struct.unpack(">d", bytes(b))[0]),
-        _c("FloatType", "float", 4,
-           lambda v: struct.pack(">f", float(v)),
-           lambda b: struct.unpack(">f", bytes(b))[0]),
-        _c("BooleanType", "boolean", 1,
-           lambda v: b"\x01" if v else b"\x00",
-           lambda b: bytes(b) != b"\x00"),
-        _c("TimestampType", "timestamp", 8, _ts_pack, _ts_unpack),
-        _c("UTF8Type", "string", -1,
-           lambda v: str(v).encode("utf-8"),
-           lambda b: bytes(b).decode("utf-8")),
-        _c("AsciiType", "string", -1,
-           lambda v: str(v).encode("ascii"),
-           lambda b: bytes(b).decode("ascii")),
-        _c("BytesType", "binary", -1,
-           lambda v: bytes(v),
-           lambda b: bytes(b)),
-        _c("UUIDType", "string", 16, _uuid_pack, _uuid_unpack),
-        _c("TimeUUIDType", "string", 16, _uuid_pack, _uuid_unpack),
-    )
-}
-
-# spark simpleString -> default marshal name (first match wins)
-_SPARK_TO_MARSHAL = {
-    "int": _MARSHAL + "Int32Type",
-    "bigint": _MARSHAL + "LongType",
-    "double": _MARSHAL + "DoubleType",
-    "float": _MARSHAL + "FloatType",
-    "boolean": _MARSHAL + "BooleanType",
-    "timestamp": _MARSHAL + "TimestampType",
-    "string": _MARSHAL + "UTF8Type",
-    "binary": _MARSHAL + "BytesType",
-}
-
-REVERSED_PREFIX = _MARSHAL + "ReversedType("
-
-
-import functools as _functools
-
-
-@_functools.lru_cache(maxsize=512)
-def codec_of(type_text: str) -> Codec:
-    # pure function of the type text — called per CELL in the row
-    # serializers, so the parse is memoized
-    base = type_text
-    if base.startswith(REVERSED_PREFIX) and base.endswith(")"):
-        base = base[len(REVERSED_PREFIX):-1]
-    c = CODECS.get(base)
-    if c is None:
-        raise ValueError(f"unsupported sstable marshal type {type_text!r}")
-    return c
-
-
 # -- schema ------------------------------------------------------------------
 
 @dataclass
@@ -547,35 +389,24 @@ class SSTableSchema:
 
     @classmethod
     def from_table_meta(cls, meta):
-        """Derive from a catalog TableMeta; Spark types map to their
-        default marshal, except where the declared CQL type (meta.
-        cql_types) names a Spark-erased one: uuid/timeuuid/ascii/counter
-        columns, and the set-vs-list kind Spark's ArrayType erases."""
-        from pyspark.sql import types as T
+        """Derive from a catalog TableMeta: each column's marshal comes
+        from its declared CQL type (meta.cql_types) through marshal_of;
+        partition-key components pack as frozen values. Duration, tuple
+        and user-type values have no marshal in this subset: such a
+        column is refused here, before any file is written."""
+        from cassandra_pmem_spark.cql.validator import InvalidRequest
 
-        from cassandra_pmem_spark.cql.ddl import column_facts
-
-        facts = column_facts(meta)
-        ov = {
-            "uuid": _MARSHAL + "UUIDType",
-            "timeuuid": _MARSHAL + "TimeUUIDType",
-            "ascii": _MARSHAL + "AsciiType",
-            "counter": _MARSHAL + "CounterColumnType",
-        }
+        pk = list(meta.partition_key)
         by_name = {}
         for f in meta.schema.fields:
             declared = meta.cql_type(f.name)
-            if isinstance(f.dataType, (T.ArrayType, T.MapType)):
-                by_name[f.name] = marshal_for_collection(
-                    facts[f.name].kind, f.dataType
-                )
-                continue
-            ss = f.dataType.simpleString()
-            m = ov.get(declared) or _SPARK_TO_MARSHAL.get(ss)
-            if m is None:
-                raise ValueError(
-                    f"column {f.name!r}: no sstable marshal for spark "
-                    f"type {ss!r}"
+            m = marshal_of(declared, f.dataType, frozen=f.name in pk)
+            if "DurationType" in m or "TupleType(" in m:
+                raise InvalidRequest(
+                    f"Cannot flush column {f.name!r} of type "
+                    f"{declared or f.dataType.simpleString()}: duration, "
+                    "tuple and user type values have no sstable marshal "
+                    "in this engine"
                 )
             by_name[f.name] = m
         ck_names = [c.name for c in meta.clustering]
@@ -585,7 +416,6 @@ class SSTableSchema:
             else f"{_MARSHAL}ReversedType({by_name[c.name]})"
             for c in meta.clustering
         ]
-        pk = list(meta.partition_key)
         statics = set(getattr(meta, "static_columns", ()) or ())
         reg = [
             (n, t) for n, t in by_name.items()
@@ -597,38 +427,12 @@ class SSTableSchema:
         )
 
     def key_bytes(self, values: list) -> bytes:
-        """Serialized partition key: single component raw, composite via
-        CompositeType (2-byte length + bytes + 0x00 per component —
-        AbstractCompositeType) — the same bytes Murmur3 tokens hash."""
-        comps = [
-            _pack_value(codec_of(t), v)
-            for t, v in zip(self.key_types, values)
-        ]
-        if len(comps) == 1:
-            return comps[0]
-        out = bytearray()
-        for c in comps:
-            out += struct.pack(">H", len(c)) + c + b"\x00"
-        return bytes(out)
+        """Serialized partition key — the same bytes Murmur3 tokens
+        hash (marshal.pack_key)."""
+        return pack_key([codec_of(t) for t in self.key_types], values)
 
     def key_values(self, key: bytes) -> list:
-        if len(self.key_types) == 1:
-            return [_unpack_value(codec_of(self.key_types[0]), key)]
-        r = ByteReader(key)
-        out = []
-        for t in self.key_types:
-            ln = r.u16()
-            out.append(_unpack_value(codec_of(t), r.take(ln)))
-            r.u8()  # end-of-component byte
-        return out
-
-
-def _pack_value(codec: Codec, v) -> bytes:
-    return codec.pack(v)
-
-
-def _unpack_value(codec: Codec, b: bytes):
-    return codec.unpack(b)
+        return unpack_key([codec_of(t) for t in self.key_types], key)
 
 
 def write_value(out: bytearray, codec: Codec, v) -> None:
@@ -1982,17 +1786,8 @@ def visible_rows(part: PartitionData, schema: SSTableSchema,
 
 
 def _dt_to_ms(v):
-    """datetime → epoch millis (naive values are UTC, like _ts_unpack).
-    round(), not int(): timestamp() returns ms/1000.0 whose binary
-    representation can sit a hair BELOW the true value, and truncation
-    would then lose a millisecond."""
-    if v is None:
-        return None
-    import datetime as _dt
-
-    if v.tzinfo is None:
-        v = v.replace(tzinfo=_dt.timezone.utc)
-    return round(v.timestamp() * 1000)
+    """datetime → epoch millis (naive values are UTC), None kept."""
+    return None if v is None else timestamp_millis(v)
 
 
 def read_visible_columns(data_blob: bytes, start: int, end: int,
@@ -2253,31 +2048,17 @@ def _sliced_split_columns(base: str, buf: bytes, base_off: int,
 def _spark_schema(schema: SSTableSchema):
     from pyspark.sql import types as T
 
-    by_ss = {
-        "int": T.IntegerType(), "bigint": T.LongType(),
-        "double": T.DoubleType(), "float": T.FloatType(),
-        "boolean": T.BooleanType(), "timestamp": T.TimestampType(),
-        "string": T.StringType(), "binary": T.BinaryType(),
-    }
     def field_type(t: str):
-        cc = collection_codec_of(t)
-        if cc is None:
-            return by_ss[codec_of(t).spark]
-        if cc.kind == "map":
-            return T.MapType(by_ss[cc.key.spark], by_ss[cc.value.spark])
-        inner = cc.value if cc.kind == "list" else cc.key
-        return T.ArrayType(by_ss[inner.spark])
+        return (collection_codec_of(t) or codec_of(t)).spark
 
-    fields = []
-    for name, t in zip(schema.key_names, schema.key_types):
-        fields.append(T.StructField(name, field_type(t), True))
-    for name, t in zip(schema.clustering_names, schema.clustering_types):
-        fields.append(T.StructField(name, field_type(t), True))
-    for name, t in schema.regular:
-        fields.append(T.StructField(name, field_type(t), True))
-    for name, t in schema.statics:
-        fields.append(T.StructField(name, field_type(t), True))
-    return T.StructType(fields)
+    cols = (
+        list(zip(schema.key_names, schema.key_types))
+        + list(zip(schema.clustering_names, schema.clustering_types))
+        + schema.regular + schema.statics
+    )
+    return T.StructType(
+        [T.StructField(name, field_type(t), True) for name, t in cols]
+    )
 
 
 def _spark_hash_int32(v: int, seed: int = 42) -> int:
@@ -2332,6 +2113,7 @@ def bulk_write_sstables(df, meta, out_dir: str, sstables: int = 1,
     several buckets writes several sstables, cutting at bucket
     boundaries. Returns the manifest rows."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from cassandra_pmem_spark.functions.token import token_column
 
@@ -2376,6 +2158,11 @@ def bulk_write_sstables(df, meta, out_dir: str, sstables: int = 1,
     work = work.sortWithinPartitions(*sort_cols)
 
     key_names = list(schema.key_names)
+    # frozen list/set keys arrive as numpy arrays: compared as lists
+    array_keys = {
+        n for n, t in zip(key_names, schema.key_types)
+        if isinstance(codec_of(t).spark, T.ArrayType)
+    }
     ck_names = list(schema.clustering_names)
     reg_names = [n for n, _ in schema.regular]
     stat_names = [n for n, _ in schema.statics]
@@ -2404,7 +2191,11 @@ def bulk_write_sstables(df, meta, out_dir: str, sstables: int = 1,
         for pdf in pdf_iter:
             # columnar extraction: to_dict('records') built one dict
             # per row and dominated the write task's Python time
-            key_series = [pdf[c].tolist() for c in key_names]
+            key_series = [
+                [v.tolist() for v in pdf[c]] if c in array_keys
+                else pdf[c].tolist()
+                for c in key_names
+            ]
             ck_series = [pdf[c].tolist() for c in ck_names]
             reg_series = [(c, pdf[c].tolist()) for c in reg_names]
             stat_series = [(c, pdf[c].tolist()) for c in stat_names]
@@ -2459,8 +2250,6 @@ def bulk_write_sstables(df, meta, out_dir: str, sstables: int = 1,
         flush()
         if manifests:
             yield pd.DataFrame(manifests)
-
-    from pyspark.sql import types as T
 
     mschema = T.StructType(
         [
@@ -3728,7 +3517,7 @@ def stats_component(schema: SSTableSchema, stats: EncodingStats,
     out += struct.pack(">q", 0)               # repairedAt = UNREPAIRED
     for bound in (min_ck, max_ck):
         vals = [
-            _pack_value(codec_of(t), v)
+            codec_of(t).pack(v)
             for t, v in zip(schema.clustering_types, bound)
             if v is not None
         ]
@@ -4418,7 +4207,7 @@ def parse_stats_component(blob: bytes, schema: SSTableSchema,
     for name in ("min_clustering_values", "max_clustering_values"):
         k = r.i32()
         vals = [
-            _unpack_value(codec_of(schema.clustering_types[i]), r.take(r.u16()))
+            codec_of(schema.clustering_types[i]).unpack(r.take(r.u16()))
             for i in range(k)
         ]
         # below md the values are consumed but NOT kept (see docstring)
@@ -4548,75 +4337,6 @@ def _read_marker(r: ByteReader, schema: SSTableSchema,
 # values (Sets.java), map paths are the keys (Maps.java). A full-value
 # write is a complex deletion at (ts - 1) plus the element cells —
 # the shape a flushed memtable full-set produces.
-
-@dataclass(frozen=True)
-class CollectionCodec:
-    kind: str            # 'list' | 'set' | 'map'
-    marshal: str         # full marshal text
-    spark: str           # spark simpleString
-    key: "Codec | None"    # set: element; map: key; list: None (timeuuid)
-    value: "Codec | None"  # list/map: element/value; set: None
-
-
-def _split_generics_marshal(body: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in body:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return [s.strip() for s in out]
-
-
-@_functools.lru_cache(maxsize=512)
-def collection_codec_of(type_text: str) -> "CollectionCodec | None":
-    # pure function of the type text (see codec_of) — memoized; the
-    # returned CollectionCodec is treated as immutable by all callers
-    for kind, cls in (("list", "ListType"), ("set", "SetType"),
-                      ("map", "MapType")):
-        pref = _MARSHAL + cls + "("
-        if type_text.startswith(pref) and type_text.endswith(")"):
-            args = _split_generics_marshal(type_text[len(pref):-1])
-            if kind == "map":
-                kc, vc = codec_of(args[0]), codec_of(args[1])
-                spark = f"map<{kc.spark},{vc.spark}>"
-                return CollectionCodec(kind, type_text, spark, kc, vc)
-            ec = codec_of(args[0])
-            spark = f"array<{ec.spark}>"
-            if kind == "list":
-                return CollectionCodec(kind, type_text, spark, None, ec)
-            return CollectionCodec(kind, type_text, spark, ec, None)
-    return None
-
-
-def marshal_for_collection(kind: str, spark_type) -> str:
-    """Spark ArrayType/MapType + declared kind -> marshal text."""
-    from pyspark.sql import types as T
-
-    def elem(dt) -> str:
-        m = _SPARK_TO_MARSHAL.get(dt.simpleString())
-        if m is None:
-            raise ValueError(
-                f"unsupported collection element type {dt.simpleString()!r}"
-            )
-        return m
-
-    if kind == "map":
-        assert isinstance(spark_type, T.MapType)
-        return (
-            _MARSHAL + "MapType("
-            + elem(spark_type.keyType) + "," + elem(spark_type.valueType) + ")"
-        )
-    assert isinstance(spark_type, T.ArrayType)
-    cls = "ListType" if kind == "list" else "SetType"
-    return _MARSHAL + cls + "(" + elem(spark_type.elementType) + ")"
-
 
 def _list_path(base_ts_micros: int, index: int) -> bytes:
     """Deterministic ascending timeuuid cell paths for list elements

@@ -103,6 +103,25 @@ class TestKeyspaceTypeIndex:
         with pytest.raises(InvalidRequest, match="already exists"):
             reg.execute("CREATE TYPE addr (street text)")
 
+    def test_keyspace_qualified_user_type_in_columns(self, spark):
+        # Parser.g userTypeName accepts ks.udt; the declared text keeps
+        # the bare name, the registry's key for the type
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+        db = CqlDatabase(spark)
+        db.execute("CREATE KEYSPACE ks WITH REPLICATION = {'class': 'SimpleStrategy'}")
+        db.execute("CREATE TYPE ks.pt (x int, y int)")
+        db.execute("CREATE TABLE ks.t (k int PRIMARY KEY, p ks.pt)")
+        db.execute("ALTER TABLE ks.t ADD q frozen<ks.pt>")
+        meta = db.registry.tables[("ks", "t")]
+        assert (meta.cql_type("p"), meta.cql_type("q")) == ("pt", "frozen<pt>")
+        db.execute("INSERT INTO ks.t (k, p, q) VALUES (1, {x: 1, y: 2}, {x: 3, y: 4})")
+        [r] = db.execute("SELECT p, q FROM ks.t").collect()
+        assert (tuple(r.p), tuple(r.q)) == ((1, 2), (3, 4))
+        db.execute("CREATE KEYSPACE ks2 WITH REPLICATION = {'class': 'SimpleStrategy'}")
+        with pytest.raises(InvalidRequest, match="unknown type ks2.pt"):
+            db.execute("CREATE TABLE ks2.t (k int PRIMARY KEY, p ks2.pt)")
+
     def test_index_requires_table(self, reg):
         with pytest.raises(InvalidRequest, match="unknown table"):
             reg.execute("CREATE INDEX ON missing (v)")

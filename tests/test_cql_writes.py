@@ -1753,3 +1753,35 @@ class TestCollectionFactsFromMeta:
         for stmt in statements:
             sess.execute(stmt)
         assert [tuple(r) for r in sess.table().select("k", col).collect()] == expected
+
+
+class TestTupleValues:
+    """tuple<...> columns take a tuple literal (Parser.g tupleLiteral) or
+    a bound Python tuple; IN keeps parsing its parenthesized list as
+    values."""
+
+    @pytest.fixture()
+    def db(self, spark):
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+        db = CqlDatabase(spark)
+        db.execute("CREATE TABLE t (k int PRIMARY KEY, tp frozen<tuple<int, text>>)")
+        return db
+
+    def test_literal_and_bound_tuple_read_back(self, db):
+        db.execute("INSERT INTO t (k, tp) VALUES (1, (1, 'a'))")
+        db.execute("INSERT INTO t (k, tp) VALUES (?, ?)", [2, (1, "a")])
+        db.execute("UPDATE t SET tp = (3, 'c') WHERE k = 3")
+        got = sorted(
+            (r.k, tuple(r.tp)) for r in db.execute("SELECT k, tp FROM t").collect()
+        )
+        assert got == [(1, (1, "a")), (2, (1, "a")), (3, (3, "c"))]
+        in_rows = db.execute("SELECT k FROM t WHERE k IN (1, 3)").collect()
+        assert sorted(r.k for r in in_rows) == [1, 3]
+        db.execute("DELETE FROM t WHERE k IN (1, 2)")
+        assert [r.k for r in db.execute("SELECT k FROM t").collect()] == [3]
+
+    @pytest.mark.parametrize("value", ["(1, 'a', 2)", "('x', 'a')"])
+    def test_mismatched_tuple_rejected(self, db, value):
+        with pytest.raises(InvalidRequest, match="Invalid"):
+            db.execute(f"INSERT INTO t (k, tp) VALUES (1, {value})")

@@ -299,7 +299,10 @@ class TestBlobConversionMatrix:
         from pyspark.sql import types as T
 
         from cassandra_pmem_spark.functions import blob as B
-        from cassandra_pmem_spark.functions.murmur3 import serialize_pk_value
+        from cassandra_pmem_spark.marshal import codec_of, marshal_of
+
+        def pack(v, dt):
+            return codec_of(marshal_of(None, dt, False)).pack(v)
 
         df = spark.createDataFrame([(-300, -2, 123456)], "s short, t tinyint, i int")
         r = df.select(
@@ -307,9 +310,9 @@ class TestBlobConversionMatrix:
             B.tinyint_as_blob("t").alias("tb"),
             B.int_as_blob("i").alias("ib"),
         ).collect()[0]
-        assert bytes(r.sb) == serialize_pk_value(-300, T.ShortType()) == struct.pack(">h", -300)
-        assert bytes(r.tb) == serialize_pk_value(-2, T.ByteType())
-        assert bytes(r.ib) == serialize_pk_value(123456, T.IntegerType())
+        assert bytes(r.sb) == pack(-300, T.ShortType()) == struct.pack(">h", -300)
+        assert bytes(r.tb) == pack(-2, T.ByteType())
+        assert bytes(r.ib) == pack(123456, T.IntegerType())
 
     def test_temporal_roundtrips(self, spark):
         import datetime

@@ -20,6 +20,20 @@ from cassandra_pmem_spark.functions.murmur3 import (
     with_murmur3_token,
 )
 
+def _pack(v, cql=None, dtype=None) -> bytes:
+    """One value packed by the marshal codec of its CQL type (or Spark
+    shape), frozen as a partition-key component."""
+    from cassandra_pmem_spark.marshal import codec_of, marshal_of
+
+    return codec_of(marshal_of(cql, dtype, frozen=True)).pack(v)
+
+
+def _pack_key(values, dtypes) -> bytes:
+    from cassandra_pmem_spark.marshal import codec_of, marshal_of, pack_key
+
+    return pack_key([codec_of(marshal_of(None, dt, True)) for dt in dtypes], values)
+
+
 EDGE_KEYS = [0, 1, -1, 2, 127, 128, 255, 256, -128, -129, 42, 10**6, -(10**6),
              2**31 - 1, -(2**31), 2**62, 2**63 - 1, -(2**63), 7, -5]
 
@@ -121,9 +135,7 @@ class TestMurmur3GeneralLength:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import serialize_partition_key
-
-        got = serialize_partition_key((1, "ab"), [T.LongType(), T.StringType()])
+        got = _pack_key((1, "ab"), [T.LongType(), T.StringType()])
         assert got == b"\x00\x08" + struct.pack(">q", 1) + b"\x00" + b"\x00\x02ab\x00"
 
     def test_text_twin_matches_port(self):
@@ -149,7 +161,6 @@ class TestMurmur3GeneralLength:
             bigint_pair_composite_byte_exprs,
             murmur3_token_bytes_py,
             murmur3_token_general_subquery,
-            serialize_partition_key,
         )
 
         pairs = [(1, 2), (-5, 9999999), (0, 0), (-(2**63), 2**63 - 1), (255, -256)]
@@ -164,17 +175,14 @@ class TestMurmur3GeneralLength:
         con.close()
         two = [T.LongType(), T.LongType()]
         assert {(a, b): t for a, b, t in rows} == {
-            (a, b): murmur3_token_bytes_py(serialize_partition_key((a, b), two))
+            (a, b): murmur3_token_bytes_py(_pack_key((a, b), two))
             for a, b in pairs
         }
 
     def test_spark_token_routes_text_and_composite_to_murmur3(self, spark):
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import (
-            murmur3_token_bytes_py,
-            serialize_partition_key,
-        )
+        from cassandra_pmem_spark.functions.murmur3 import murmur3_token_bytes_py
         from cassandra_pmem_spark.functions.token import token_column
 
         df = spark.createDataFrame(
@@ -189,7 +197,7 @@ class TestMurmur3GeneralLength:
         for r in out:
             assert r.t_text == murmur3_token_bytes_py(r.s.encode())
             assert r.t_comp == murmur3_token_bytes_py(
-                serialize_partition_key((r.k, r.s), [T.LongType(), T.StringType()])
+                _pack_key((r.k, r.s), [T.LongType(), T.StringType()])
             )
 
 
@@ -199,9 +207,7 @@ class TestMarshalSerializations:
     against the reference serializer's documented wire form)."""
 
     def _ser(self, v, dt):
-        from cassandra_pmem_spark.functions.murmur3 import serialize_pk_value
-
-        return serialize_pk_value(v, dt)
+        return _pack(v, dtype=dt)
 
     def test_fixed_width_numerics(self):
         import struct
@@ -319,9 +325,7 @@ class TestMarshalSerializations:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import serialize_pk_value
-
-        b = serialize_pk_value(Decimal(n), T.DecimalType(38, 0))
+        b = _pack(Decimal(n), dtype=T.DecimalType(38, 0))
         assert int.from_bytes(b, "big", signed=True) == n
         if len(b) > 1:
             # minimality: dropping the first byte must change the value
@@ -334,9 +338,7 @@ class TestMarshalSerializations:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import serialize_pk_value
-
-        b = serialize_pk_value(v, T.DoubleType())
+        b = _pack(v, dtype=T.DoubleType())
         assert len(b) == 8 and struct.unpack(">d", b)[0] == v
 
 
@@ -359,25 +361,15 @@ class TestMurmur3UuidInet:
     def test_uuid_serialization_is_msb_lsb_big_endian(self):
         import uuid as uuid_lib
 
-        from cassandra_pmem_spark.functions.murmur3 import (
-            UuidMarshal,
-            serialize_pk_value,
-        )
-
         for s in self.UUIDS:
-            b = serialize_pk_value(s, UuidMarshal())
+            b = _pack(s, "uuid")
             assert b == bytes.fromhex(s.replace("-", "")) == uuid_lib.UUID(s).bytes
             assert len(b) == 16
 
     def test_inet_serialization(self):
-        from cassandra_pmem_spark.functions.murmur3 import (
-            InetMarshal,
-            serialize_pk_value,
-        )
-
-        assert serialize_pk_value("10.1.2.3", InetMarshal()) == bytes([10, 1, 2, 3])
+        assert _pack("10.1.2.3", "inet") == bytes([10, 1, 2, 3])
         # InetAddressType.java stores getAddress() bytes: 16 for IPv6
-        assert len(serialize_pk_value("2001:db8::1", InetMarshal())) == 16
+        assert len(_pack("2001:db8::1", "inet")) == 16
 
     def test_uuid_twin_matches_port(self):
         from cassandra_pmem_spark.functions.murmur3 import (
@@ -454,9 +446,7 @@ class TestMurmur3Frozen:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import serialize_pk_value
-
-        got = serialize_pk_value([5, -16], T.ArrayType(T.LongType()))
+        got = _pack([5, -16], dtype=T.ArrayType(T.LongType()))
         want = (
             struct.pack(">i", 2)
             + struct.pack(">i", 8) + struct.pack(">q", 5)
@@ -469,14 +459,9 @@ class TestMurmur3Frozen:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import (
-            FrozenSetMarshal,
-            serialize_pk_value,
-        )
-
         # int family: SIGNED value order (Int32Type.java:45-53 compares the
         # first byte signed) — -3 sorts before 90 despite 0xFD > 0x5A
-        got = serialize_pk_value([90, -3], FrozenSetMarshal(T.IntegerType()))
+        got = _pack([90, -3], "frozen<set<int>>")
         want = (
             struct.pack(">i", 2)
             + struct.pack(">i", 4) + struct.pack(">i", -3)
@@ -484,7 +469,7 @@ class TestMurmur3Frozen:
         )
         assert got == want
         # text: unsigned byte order of the utf8 serialization
-        got = serialize_pk_value(["b", "a"], FrozenSetMarshal(T.StringType()))
+        got = _pack(["b", "a"], "frozen<set<text>>")
         want = (
             struct.pack(">i", 2)
             + struct.pack(">i", 1) + b"a"
@@ -498,17 +483,12 @@ class TestMurmur3Frozen:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import (
-            FrozenSetMarshal,
-            serialize_pk_value,
-        )
-
         # DoubleType.compareCustom is compose().compareTo()
         # (DoubleType.java:48-54): VALUE order. -1.25 (sign bit set,
         # byte-greatest) must pack FIRST; NaN sorts greatest and
         # -0.0 < 0.0 (Java Double.compare semantics).
         vals = [3.5, float("nan"), -1.25, 0.0, -0.0]
-        got = serialize_pk_value(vals, FrozenSetMarshal(T.DoubleType()))
+        got = _pack(vals, "frozen<set<double>>")
         order = [-1.25, -0.0, 0.0, 3.5, float("nan")]
         want = struct.pack(">i", 5) + b"".join(
             struct.pack(">i", 8) + struct.pack(">d", v) for v in order
@@ -524,17 +504,11 @@ class TestMurmur3Frozen:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import (
-            FrozenSetMarshal,
-            serialize_pk_value,
-        )
-
         # varint (IntegerType.java:70-73 compareIntegers): signed value
         # order across DIFFERENT serialized lengths — byte order would put
         # 255 (0x00FF) before 1 (0x01) and negatives (0xFF…) last
-        got = serialize_pk_value(
-            [Decimal(255), Decimal(-300), Decimal(1)],
-            FrozenSetMarshal(T.DecimalType(38, 0)),
+        got = _pack(
+            [Decimal(255), Decimal(-300), Decimal(1)], "frozen<set<varint>>"
         )
         parts = [b"\xfe\xd4", b"\x01", b"\x00\xff"]  # -300, 1, 255
         want = struct.pack(">i", 3) + b"".join(
@@ -544,10 +518,7 @@ class TestMurmur3Frozen:
         # decimal (DecimalType.java:51-57 BigDecimal.compareTo): numeric
         # value, scale-independent — 2.50 < 10 even though its unscaled
         # varint (250) is byte-greater
-        got = serialize_pk_value(
-            [Decimal("10"), Decimal("2.50")],
-            FrozenSetMarshal(T.DecimalType(38, 2)),
-        )
+        got = _pack([Decimal("10"), Decimal("2.50")], "frozen<set<decimal>>")
 
         def dec_ser(scale: int, unscaled: bytes) -> bytes:
             return struct.pack(">i", scale) + unscaled
@@ -565,11 +536,7 @@ class TestMurmur3Frozen:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import serialize_pk_value
-
-        got = serialize_pk_value(
-            {4.0: 11, -8.0: 7}, T.MapType(T.DoubleType(), T.LongType())
-        )
+        got = _pack({4.0: 11, -8.0: 7}, dtype=T.MapType(T.DoubleType(), T.LongType()))
         want = (
             struct.pack(">i", 2)
             + struct.pack(">i", 8) + struct.pack(">d", -8.0)
@@ -584,11 +551,7 @@ class TestMurmur3Frozen:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import serialize_pk_value
-
-        got = serialize_pk_value(
-            {7: 49, -2: 10}, T.MapType(T.IntegerType(), T.LongType())
-        )
+        got = _pack({7: 49, -2: 10}, dtype=T.MapType(T.IntegerType(), T.LongType()))
         want = (
             struct.pack(">i", 2)
             + struct.pack(">i", 4) + struct.pack(">i", -2)
@@ -603,14 +566,7 @@ class TestMurmur3Frozen:
 
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import (
-            FrozenUdtMarshal,
-            serialize_pk_value,
-        )
-
-        got = serialize_pk_value(
-            (11, None), FrozenUdtMarshal([T.LongType(), T.IntegerType()])
-        )
+        got = _pack((11, None), "frozen<tuple<bigint, int>>")
         want = struct.pack(">i", 8) + struct.pack(">q", 11) + struct.pack(">i", -1)
         assert got == want
 
@@ -618,11 +574,7 @@ class TestMurmur3Frozen:
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        from cassandra_pmem_spark.functions.murmur3 import (
-            FrozenSetMarshal,
-            murmur3_token_bytes_py,
-            serialize_pk_value,
-        )
+        from cassandra_pmem_spark.functions.murmur3 import murmur3_token_bytes_py
         from cassandra_pmem_spark.functions.token import token_column
 
         df = spark.range(1, 12).select(
@@ -640,7 +592,8 @@ class TestMurmur3Frozen:
         out = (
             df.withColumn("t_list", token_column(["fl"], df.schema))
             .withColumn(
-                "t_set", token_column(["fs"], df.schema, cql_types={"fs": "frozen_set"})
+                "t_set",
+                token_column(["fs"], df.schema, cql_types={"fs": "frozen<set<int>>"}),
             )
             .withColumn("t_map", token_column(["fm"], df.schema))
             .withColumn("t_udt", token_column(["fu"], df.schema))
@@ -651,21 +604,21 @@ class TestMurmur3Frozen:
         )
         for r in out:
             assert r.t_list == murmur3_token_bytes_py(
-                serialize_pk_value(r.fl, T.ArrayType(T.LongType()))
+                _pack(r.fl, dtype=T.ArrayType(T.LongType()))
             )
             assert r.t_set == murmur3_token_bytes_py(
-                serialize_pk_value(r.fs, FrozenSetMarshal(T.IntegerType()))
+                _pack(r.fs, "frozen<set<int>>")
             )
             assert r.t_map == murmur3_token_bytes_py(
-                serialize_pk_value(r.fm, T.MapType(T.IntegerType(), T.LongType()))
+                _pack(r.fm, dtype=T.MapType(T.IntegerType(), T.LongType()))
             )
             assert r.t_udt == murmur3_token_bytes_py(
-                serialize_pk_value(tuple(r.fu), st)
+                _pack(tuple(r.fu), dtype=st)
             )
 
     def test_timestamp_element_outside_ns_range(self, spark):
         """Nested timestamps beyond pandas' datetime64[ns] span (years
-        1677..2262) must still hash bit-exactly — _epoch_ms derives the
+        1677..2262) must still hash bit-exactly — timestamp_millis derives the
         millis with datetime arithmetic, so year-1600 and year-2500
         elements neither crash nor fall back (Cassandra timestamps
         cover years 1..9999)."""
@@ -756,7 +709,9 @@ class TestMurmur3Frozen:
             df.withColumn("t_list", token_column(["ft"], df.schema))
             .withColumn(
                 "t_set",
-                token_column(["fst"], df.schema, cql_types={"fst": "frozen_set"}),
+                token_column(
+                    ["fst"], df.schema, cql_types={"fst": "frozen<set<timestamp>>"}
+                ),
             )
             .withColumn("t_udt", token_column(["fu"], df.schema))
             .collect()
@@ -791,7 +746,6 @@ class TestMurmur3Frozen:
             fixed_layout_byte_exprs,
             murmur3_token_bytes_py,
             murmur3_token_general_subquery,
-            serialize_pk_value,
         )
 
         con = duckdb.connect()
@@ -809,6 +763,6 @@ class TestMurmur3Frozen:
         con.close()
         for k in range(1, 30):
             want = murmur3_token_bytes_py(
-                serialize_pk_value([k - 15, k * 3], T.ArrayType(T.LongType()))
+                _pack([k - 15, k * 3], dtype=T.ArrayType(T.LongType()))
             )
             assert got[k] == want

@@ -1312,3 +1312,34 @@ def test_table_session_column_facts_come_from_the_meta():
     assert not hasattr(CqlWriteSession, "_collection_kind_of")
     assert not hasattr(CqlWriteSession, "_nonfrozen_udt_cols")
     assert not hasattr(ddl.CqlDatabase, "_collection_info")
+
+
+def test_cql_values_serialize_through_one_codec_table():
+    """cassandra_pmem_spark/marshal.py is the only serializer of CQL
+    values: the token lane keeps no serializer or marker types of its
+    own, the blob folds pack through the codecs, and no caller tags a
+    column with a non-CQL type name."""
+    import ast
+    import pathlib
+
+    import cassandra_pmem_spark
+    from cassandra_pmem_spark.cql import terms
+    from cassandra_pmem_spark.functions import murmur3
+
+    for name in ("serialize_pk_value", "serialize_partition_key"):
+        assert not hasattr(murmur3, name)
+    assert not [n for n in vars(murmur3) if n.endswith("Marshal")]
+    tree = ast.parse(pathlib.Path(terms.__file__).read_text())
+    names = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    imported = {
+        a.name for n in ast.walk(tree)
+        if isinstance(n, (ast.Import, ast.ImportFrom)) for a in n.names
+    }
+    attrs = {
+        n.func.attr for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    }
+    # no struct.pack/struct.unpack, no int.to_bytes
+    assert "struct" not in names | imported and "to_bytes" not in attrs
+    root = pathlib.Path(cassandra_pmem_spark.__file__).parent
+    assert not [p for p in root.rglob("*.py") if "frozen_set" in p.read_text()]

@@ -1413,17 +1413,23 @@ class TestFlush:
         assert len(got) == 14
         assert got[(0, 0)] == "new" and (2, 1) not in got
 
-    @pytest.mark.parametrize("decl", ["frozen<pt>", "pt"])
+    @pytest.mark.parametrize(
+        "decl", ["frozen<pt>", "pt", "duration", "frozen<tuple<int, text>>"]
+    )
     def test_flush_refuses_user_type_columns(self, spark, tmp_path, decl):
-        # the sstable subset has no user-type marshal: the flush names
-        # the column and its declared type and writes nothing
+        # the sstable subset has no duration, tuple or user-type marshal:
+        # the flush names the column and its declared type and writes
+        # nothing
         from cassandra_pmem_spark.cql.ddl import CqlDatabase
         from cassandra_pmem_spark.cql.validator import InvalidRequest
 
+        value = {"duration": "'1h'", "frozen<tuple<int, text>>": "(1, 'a')"}
         db = CqlDatabase(spark)
         db.execute("CREATE TYPE pt (x int, y int)")
         db.execute(f"CREATE TABLE t (k int PRIMARY KEY, p {decl})")
-        db.execute("INSERT INTO t (k, p) VALUES (1, {x: 1, y: 2})")
+        db.execute(
+            f"INSERT INTO t (k, p) VALUES (1, {value.get(decl, '{x: 1, y: 2}')})"
+        )
         out = tmp_path / "flush_udt"
         with pytest.raises(InvalidRequest, match=f"column 'p' of type {decl}:"):
             db.flush_sstables("t", str(out))
@@ -1453,6 +1459,135 @@ class TestFlush:
             r["cells"][0]["value"] for p in dump for r in p["rows"]
         )
         assert vals == [1, 2]
+
+
+class TestOneCodec:
+    """An sstable key and its token() come from one byte format
+    (cassandra_pmem_spark/marshal.py): a flushed table reloads with the
+    same rows and the same token(k), and SSTableSchema.key_bytes is what
+    the token kernel hashes."""
+
+    def _flush_reload(self, spark, tmp_path, decl, inserts):
+        """(rows before, rows after) of `SELECT v, k, token(k)` around a
+        flush and a load into a fresh table of the same schema."""
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+        db = CqlDatabase(spark)
+        for t in ("t", "t2"):
+            db.execute(f"CREATE TABLE {t} (k {decl} PRIMARY KEY, v int)")
+        for stmt, params in inserts:
+            db.execute(stmt, params)
+
+        def rows(t):
+            return sorted(
+                (r.v, r.k, r.tk)
+                for r in db.execute(f"SELECT v, k, token(k) AS tk FROM {t}").collect()
+            )
+
+        before = rows("t")
+        out = str(tmp_path / "flush")
+        db.flush_sstables("t", out, sstables=2)
+        db.load_sstables("t2", out)
+        return before, rows("t2")
+
+    def test_inet_keys(self, spark, tmp_path):
+        ins = "INSERT INTO t (k, v) VALUES (?, ?)"
+        keys = [f"10.{i % 3}.{i * 37 % 256}.{i}" for i in range(29)] + ["2001:db8::7"]
+        before, after = self._flush_reload(
+            spark, tmp_path, "inet", [(ins, [k, i]) for i, k in enumerate(keys)]
+        )
+        assert len(before) == 30
+        assert after == before
+
+    def test_pre_epoch_sub_millisecond_timestamp_keys(self, spark, tmp_path):
+        import datetime as dt
+
+        ins = "INSERT INTO t (k, v) VALUES (?, ?)"
+        keys = [
+            dt.datetime(1969, 12, 31, 23, 59, 59, 999500),
+            dt.datetime(1969, 12, 31, 23, 59, 59, 998100),
+            dt.datetime(1950, 6, 1, 12, 0, 0, 250),
+            dt.datetime(1900, 1, 1, 0, 0, 0, 1),
+            dt.datetime(1969, 1, 1, 0, 0, 0, 999999),
+            dt.datetime(2001, 2, 3, 4, 5, 6, 789123),
+        ]
+        before, after = self._flush_reload(
+            spark, tmp_path, "timestamp", [(ins, [k, i]) for i, k in enumerate(keys)]
+        )
+        # timestamps pack floored to the millisecond, the rule token()
+        # hashes (unix_millis): the keys reload floored, same tokens
+        floored = [
+            (v, k.replace(microsecond=k.microsecond // 1000 * 1000), tk)
+            for v, k, tk in before
+        ]
+        assert [v for v, _k, _tk in before] == list(range(len(keys)))
+        assert after == floored
+
+    def test_frozen_set_keys(self, spark, tmp_path):
+        sets = ["{3, 1, -2}", "{90, -3}", "{}", "{7}", "{-100, 100, 0, 5}"]
+        before, after = self._flush_reload(
+            spark, tmp_path, "frozen<set<int>>",
+            [(f"INSERT INTO t (k, v) VALUES ({s}, {i})", None)
+             for i, s in enumerate(sets)],
+        )
+        assert len(before) == len(sets)
+        assert after == before
+
+    @pytest.mark.parametrize(
+        "decl,literal",
+        [
+            ("int", "-7"), ("bigint", "-9000000000"), ("smallint", "-300"),
+            ("tinyint", "-2"), ("varint", "-123456789012345678901234"),
+            ("decimal", "-12.5"), ("float", "1.5"), ("double", "-2.25"),
+            ("boolean", "true"), ("text", "'héllo'"), ("ascii", "'abc'"),
+            ("blob", "bigintAsBlob(-2)"),
+            ("uuid", "'6ba7b810-9dad-11d1-80b4-00c04fd430c8'"),
+            ("timeuuid", "'6ba7b810-9dad-11d1-80b4-00c04fd430c8'"),
+            ("inet", "'10.1.2.3'"), ("date", "'1969-12-31'"),
+            ("timestamp", "'1969-12-31 23:59:59.5'"),
+            ("time", "3600000000000"),
+            ("frozen<list<int>>", "[2, -1, 2]"),
+            ("frozen<set<text>>", "{'b', 'a'}"),
+            ("frozen<map<int, text>>", "{2: 'x', -1: 'y'}"),
+        ],
+    )
+    def test_key_bytes_are_what_the_token_hashes(self, spark, decl, literal):
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+        from cassandra_pmem_spark.functions.murmur3 import murmur3_token_bytes_py
+
+        db = CqlDatabase(spark)
+        db.execute(f"CREATE TABLE t (k {decl} PRIMARY KEY, v int)")
+        db.execute(f"INSERT INTO t (k, v) VALUES ({literal}, 1)")
+        [r] = db.execute("SELECT k, token(k) AS tk FROM t").collect()
+        schema = SSTableSchema.from_table_meta(db.registry.tables[db._table_key("t")])
+        assert r.tk == murmur3_token_bytes_py(schema.key_bytes([r.k]))
+
+    @pytest.mark.parametrize(
+        "decl,literal",
+        [
+            ("date", "'1969-12-31'"), ("smallint", "-300"), ("tinyint", "-2"),
+            ("decimal", "-12.5"), ("varint", "-123456789012345678901234"),
+            ("inet", "'2001:db8::1'"), ("time", "3600000000001"),
+        ],
+    )
+    def test_column_types_flush_and_reload(self, spark, tmp_path, decl, literal):
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+        db = CqlDatabase(spark)
+        for t in ("t", "t2"):
+            db.execute(
+                f"CREATE TABLE {t} (k int, c {decl}, v {decl}, "
+                "PRIMARY KEY (k, c))"
+            )
+        db.execute(f"INSERT INTO t (k, c, v) VALUES (1, {literal}, {literal})")
+        db.execute("INSERT INTO t (k, c) VALUES (2, " + literal + ")")
+        out = str(tmp_path / "flush")
+        db.flush_sstables("t", out)
+        db.load_sstables("t2", out)
+        q = "SELECT k, c, v FROM {}"
+        before = sorted(db.execute(q.format("t")).collect())
+        assert sorted(db.execute(q.format("t2")).collect()) == before
+        assert before[0].v is not None and before[1].v is None
 
 
 class TestSummary:
