@@ -17,9 +17,6 @@ pyspark.sql.functions (JVM/codegen path) unless semantics genuinely require
 an Arrow-batched pandas UDF.
 """
 
-from cassandra_pmem_spark.catalog import TABLE_NAMES, load_table, load_tables
-from cassandra_pmem_spark.session import get_spark
-
 __all__ = [
     "get_spark",
     "load_table",
@@ -32,7 +29,17 @@ __all__ = [
 __version__ = "0.1.0"
 
 
-def __getattr__(name):  # lazy: avoid importing the full surface at package load
+def __getattr__(name):
+    # lazy: the package itself imports no pyspark, so the worker daemon
+    # (worker_daemon.py) runs before pyspark is first imported
+    if name == "get_spark":
+        from cassandra_pmem_spark.session import get_spark
+
+        return get_spark
+    if name in ("load_table", "load_tables", "TABLE_NAMES"):
+        from cassandra_pmem_spark import catalog
+
+        return getattr(catalog, name)
     if name == "cql_table":
         from cassandra_pmem_spark.cql.table import cql_table
 

@@ -30,6 +30,7 @@ ordinary declarative DataFrame plan; nothing here executes row-at-a-time.
 
 from __future__ import annotations
 
+import datetime as _dt
 import re
 from dataclasses import dataclass, field
 from typing import Any
@@ -46,6 +47,26 @@ from cassandra_pmem_spark.cql.validator import (
     validate_limits,
 )
 from cassandra_pmem_spark.functions.token import token_column
+from cassandra_pmem_spark.marshal import floor_millis
+
+
+def _bound_value(v: Any) -> Any:
+    """A bind value as the protocol carries it: a timestamp is epoch
+    millis, so a datetime, also one inside a collection, is floored to
+    the millisecond (TimestampSerializer). A write, a read and a delete
+    bound the same datetime then address the same key. Reads floor too,
+    so a table read through CQL must hold millisecond timestamps, as
+    every table written through CQL does: over a DataFrame loaded with
+    sub-millisecond timestamps, ``WHERE ts = ?`` bound with such a value
+    matches no row."""
+    if type(v) is _dt.datetime:
+        return floor_millis(v)
+    if type(v) in (list, tuple, set, frozenset):
+        return type(v)(_bound_value(x) for x in v)
+    if type(v) is dict:
+        return {_bound_value(k): _bound_value(x) for k, x in v.items()}
+    return v
+
 
 # `+`/`-` ops serve counter updates, `;` separates BATCH inner statements
 # (write grammar), and `{}:[]` serve DDL map options / collection types
@@ -203,7 +224,7 @@ class _Parser:
             cursor[0] += 1
             if idx >= len(params):
                 raise InvalidRequest("not enough bind values for ? markers")
-            return params[idx]
+            return _bound_value(params[idx])
         if (
             t.kind == "punct"
             and t.text == ":"
@@ -219,7 +240,7 @@ class _Parser:
                 )
             if name not in params:
                 raise InvalidRequest(f"no bind value for marker :{name}")
-            return params[name]
+            return _bound_value(params[name])
         if t.kind == "string":
             return t.text[1:-1].replace("''", "'")
         if t.kind == "number":

@@ -39,6 +39,7 @@ from cassandra_pmem_spark.cql.validator import (
     validate_restrictions,
 )
 from cassandra_pmem_spark.functions.token import token_column
+from cassandra_pmem_spark.marshal import set_value
 
 
 
@@ -186,9 +187,11 @@ class CqlTable:
                 # reference's assignment testing resolves it
                 value = {}
             if isinstance(dt, T.ArrayType) and not isinstance(value, dict):
+                # a set literal, or a bound list for a set column, in the
+                # form the write path stores a set in
                 vals = (
-                    sorted(value)
-                    if isinstance(value, (set, frozenset))
+                    set_value(value)
+                    if isinstance(value, (set, frozenset)) or self._is_set(column)
                     else list(value)
                 )
                 # whole-array cast: types the empty literal and nested
@@ -382,6 +385,13 @@ class CqlTable:
     def _dtype(self, column: str):
         f = dict(zip(self._df.schema.names, self._df.schema.fields)).get(column)
         return f.dataType if f is not None else None
+
+    def _is_set(self, column: str) -> bool:
+        """Whether ``column`` is declared a ``set<…>`` or ``frozen<set<…>>``
+        (Spark stores both as an array, like a list)."""
+        from cassandra_pmem_spark.cql.ddl import type_facts
+
+        return type_facts(self.meta.cql_type(column) or "", ()).kind == "set"
 
     def where_entry(self, column: str, key: Any, value: Any) -> "CqlTable":
         """Map-entry relation ``m[k] = v`` (SingleColumnRelation.onMapEntry;

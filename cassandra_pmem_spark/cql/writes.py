@@ -48,6 +48,7 @@ from cassandra_pmem_spark.cql.validator import (
     declared_timeuuid as _decl_timeuuid,
     InvalidRequest,
 )
+from cassandra_pmem_spark.marshal import floor_millis, set_value
 from cassandra_pmem_spark.operators.upsert import lww_cell_aggs
 from cassandra_pmem_spark.plans.hints import unpersist_quietly
 
@@ -256,7 +257,8 @@ def _parse_timestamp_text(v: str, label: str):
     to UTC like the rest of the engine — session.py pins the session
     zone). Parsing here, not at the Arrow boundary, keeps the Arrow
     fast path and the createDataFrame fallback on the same instant
-    under ANY session timezone."""
+    under ANY session timezone. Floored to the millisecond, the
+    precision a CQL timestamp has."""
     import datetime as _dt
 
     s = v.strip()
@@ -274,7 +276,7 @@ def _parse_timestamp_text(v: str, label: str):
         )
     if d.tzinfo is None:
         d = d.replace(tzinfo=_dt.timezone.utc)
-    return d
+    return floor_millis(d)
 
 
 def _tz_norm(cur: Any, val: Any) -> tuple[Any, Any]:
@@ -1379,7 +1381,7 @@ class CqlWriteSession:
             elif op[0] == "coll_set":
                 _, ecol, (_lk, val) = op
                 if kind == "set":
-                    sets[ecol] = sorted(set(val or []))
+                    sets[ecol] = set_value(val)
                 elif kind == "map":
                     sets[ecol] = dict(val or {})
                 else:
@@ -1398,7 +1400,7 @@ class CqlWriteSession:
                 if kind == "set":
                     # Sets.Adder/Discarder: cell key = element, no read
                     frag = elem_cells.setdefault(ecol, {})
-                    for v in sorted(set(val or [])):
+                    for v in set_value(val):
                         frag[v] = v if sign == "+" else None
                 elif kind == "list":
                     frag = elem_cells.setdefault(ecol, {})
@@ -1502,7 +1504,7 @@ class CqlWriteSession:
                 )
             return dict(val or {})
         if kind == "set":
-            return sorted(set(val or []))
+            return set_value(val)
         if kind == "map":
             return dict(val or {})
         return list(val or [])
@@ -1887,13 +1889,22 @@ class CqlWriteSession:
         """A min/maxTimeuuid fold lands per the target column's declared
         type: a timeuuid column stores the reference's fake extreme uuid
         (UUIDGen.minTimeUUID:198/maxTimeUUID:209), a timestamp column the
-        plain instant (the r9 shadow contract). Applied EARLY in the
+        plain instant (the r9 shadow contract). A list bound to a set
+        column stores as a ``{...}`` literal does. Applied EARLY in the
         INSERT path so key extraction and tombstone addressing never see
-        a datetime subclass."""
+        a datetime subclass or an unsorted set."""
         if isinstance(val, TimeuuidBound):
             if _decl_timeuuid(self.meta, col):
                 return val.uuid_text()
             return val.instant()
+        return self._set_form(col, val)
+
+    def _set_form(self, col: str, val):
+        """``val`` as a set column stores it (sorted, deduplicated) when
+        it is a bound list or tuple for one; otherwise unchanged."""
+        f = self._facts.get(col)
+        if isinstance(val, (list, tuple)) and f is not None and f.kind == "set":
+            return set_value(val)
         return val
 
     def _resolve_keys(self, key: dict) -> dict:
@@ -1912,7 +1923,7 @@ class CqlWriteSession:
                     f"Invalid null value in condition for column {col}"
                 )
             if not isinstance(v, TimeuuidBound):
-                return v
+                return self._set_form(col, v)
             if _decl_timeuuid(self.meta, col):
                 return v.uuid_text()
             v.reject(where)

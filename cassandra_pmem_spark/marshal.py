@@ -110,6 +110,24 @@ def timestamp_millis(v) -> int:
     return int(v)
 
 
+def floor_millis(v: _dt.datetime) -> _dt.datetime:
+    """A datetime floored to the millisecond, the precision
+    ``timestamp_millis`` packs: two values in one millisecond are one
+    CQL timestamp."""
+    return v.replace(microsecond=v.microsecond // 1000 * 1000)
+
+
+def set_value(vals) -> list:
+    """A CQL set as stored: its elements sorted, without duplicates.
+    Elements Python cannot order (frozen maps) keep the given order.
+    The write path stores, and the read path compares, a set this way."""
+    try:
+        ordered = sorted(vals or [])
+    except TypeError:
+        return list(vals or [])
+    return [v for i, v in enumerate(ordered) if i == 0 or v != ordered[i - 1]]
+
+
 _Q = struct.Struct(">q")
 
 

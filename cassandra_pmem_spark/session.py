@@ -50,6 +50,10 @@ def get_spark(app_name: str = "cassandra-pmem-spark", shuffle_partitions: int | 
     - Arrow enabled for the pandas-UDF slow path.
     - ANSI off: CQL semantics are permissive (overflow wraps, bad casts are
       errors at *prepare* time, not row time); we validate up front instead.
+    - Python workers start from ``worker_daemon``, which takes Spark's
+      own zip archives off their path, so a task no longer re-reads them.
+      The directory holding this package joins the workers' PYTHONPATH,
+      so they find it whatever the driver's working directory.
     """
     cpus = _cpus()
     builder = (
@@ -67,7 +71,24 @@ def get_spark(app_name: str = "cassandra-pmem-spark", shuffle_partitions: int | 
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.python.daemon.module", "cassandra_pmem_spark.worker_daemon")
     )
     if not env_flag("SPARK_GRAFT_NO_MASTER"):
         builder = builder.master(f"local[{cpus}]")
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # a Spark Connect session (SPARK_REMOTE) is another class with no
+    # local SparkContext: its server starts the workers
+    if isinstance(spark, SparkSession):
+        _add_package_to_worker_path(spark.sparkContext.environment)
+    return spark
+
+
+def _add_package_to_worker_path(env: dict) -> None:
+    """Append the directory holding this package to the PYTHONPATH in
+    ``env`` (a SparkContext's environment, which every Python function
+    created after this carries to its workers). Entries already there,
+    set through ``spark.executorEnv.PYTHONPATH``, stay first."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in parts:
+        env["PYTHONPATH"] = os.pathsep.join(parts + [root])

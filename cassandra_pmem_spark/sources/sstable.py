@@ -391,16 +391,18 @@ class SSTableSchema:
     def from_table_meta(cls, meta):
         """Derive from a catalog TableMeta: each column's marshal comes
         from its declared CQL type (meta.cql_types) through marshal_of;
-        partition-key components pack as frozen values. Duration, tuple
-        and user-type values have no marshal in this subset: such a
-        column is refused here, before any file is written."""
+        partition-key and clustering components are one cell each, so
+        they pack as frozen values. Duration, tuple and user-type values
+        have no marshal in this subset: such a column is refused here,
+        before any file is written."""
         from cassandra_pmem_spark.cql.validator import InvalidRequest
 
         pk = list(meta.partition_key)
+        ck_names = [c.name for c in meta.clustering]
         by_name = {}
         for f in meta.schema.fields:
             declared = meta.cql_type(f.name)
-            m = marshal_of(declared, f.dataType, frozen=f.name in pk)
+            m = marshal_of(declared, f.dataType, frozen=f.name in pk or f.name in ck_names)
             if "DurationType" in m or "TupleType(" in m:
                 raise InvalidRequest(
                     f"Cannot flush column {f.name!r} of type "
@@ -409,7 +411,6 @@ class SSTableSchema:
                     "in this engine"
                 )
             by_name[f.name] = m
-        ck_names = [c.name for c in meta.clustering]
         ck_types = [
             by_name[c.name]
             if c.ascending
@@ -2158,12 +2159,16 @@ def bulk_write_sstables(df, meta, out_dir: str, sstables: int = 1,
     work = work.sortWithinPartitions(*sort_cols)
 
     key_names = list(schema.key_names)
-    # frozen list/set keys arrive as numpy arrays: compared as lists
-    array_keys = {
-        n for n, t in zip(key_names, schema.key_types)
+    ck_names = list(schema.clustering_names)
+    # frozen list/set key and clustering values arrive as numpy arrays:
+    # compared as lists
+    array_cols = {
+        n for n, t in zip(
+            key_names + ck_names,
+            list(schema.key_types) + list(schema.clustering_types),
+        )
         if isinstance(codec_of(t).spark, T.ArrayType)
     }
-    ck_names = list(schema.clustering_names)
     reg_names = [n for n, _ in schema.regular]
     stat_names = [n for n, _ in schema.statics]
     exp = (
@@ -2171,6 +2176,11 @@ def bulk_write_sstables(df, meta, out_dir: str, sstables: int = 1,
         if ttl_seconds
         else NO_DELETION_TIME
     )
+
+    def values(pdf, c: str) -> list:
+        if c in array_cols:
+            return [v.tolist() for v in pdf[c]]
+        return pdf[c].tolist()
 
     def write_partition_iter(pdf_iter):
         import pandas as pd
@@ -2191,12 +2201,8 @@ def bulk_write_sstables(df, meta, out_dir: str, sstables: int = 1,
         for pdf in pdf_iter:
             # columnar extraction: to_dict('records') built one dict
             # per row and dominated the write task's Python time
-            key_series = [
-                [v.tolist() for v in pdf[c]] if c in array_keys
-                else pdf[c].tolist()
-                for c in key_names
-            ]
-            ck_series = [pdf[c].tolist() for c in ck_names]
+            key_series = [values(pdf, c) for c in key_names]
+            ck_series = [values(pdf, c) for c in ck_names]
             reg_series = [(c, pdf[c].tolist()) for c in reg_names]
             stat_series = [(c, pdf[c].tolist()) for c in stat_names]
             pid_series = pdf["__sst_pid"].tolist()

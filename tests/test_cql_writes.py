@@ -1785,3 +1785,76 @@ class TestTupleValues:
     def test_mismatched_tuple_rejected(self, db, value):
         with pytest.raises(InvalidRequest, match="Invalid"):
             db.execute(f"INSERT INTO t (k, tp) VALUES (1, {value})")
+
+
+class TestKeysStoreAsTheyPack:
+    """A key stores in the form its sstable marshal packs, so two values
+    that pack to the same bytes are one partition (or one row), and a
+    flush of the table succeeds."""
+
+    @pytest.fixture()
+    def db(self, spark):
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+        return CqlDatabase(spark)
+
+    def _flush(self, db, tmp_path, table="t"):
+        return db.flush_sstables(table, str(tmp_path / "flush"))
+
+    def test_bound_list_for_a_frozen_set_key_is_one_partition(self, db, tmp_path):
+        db.execute("CREATE TABLE t (k frozen<set<int>> PRIMARY KEY, v int)")
+        db.execute("INSERT INTO t (k, v) VALUES ({1, 2}, 0)")
+        assert not db.execute(
+            "INSERT INTO t (k, v) VALUES (?, ?) IF NOT EXISTS", [[2, 1], 9]
+        )
+        db.execute("INSERT INTO t (k, v) VALUES (?, ?)", [[2, 1, 2], 1])
+        assert rows(db.execute("SELECT k, v FROM t")) == [([1, 2], 1)]
+        [m] = self._flush(db, tmp_path)
+        assert (m["partitions"], m["rows"]) == (1, 1)
+        # a bound read addresses the key the bound write stored
+        q = "SELECT v FROM t WHERE k = ?"
+        assert rows(db.execute(q, [[2, 1]])) == [(1,)]
+        assert rows(db.execute(q, [[1, 2, 2]])) == [(1,)]
+        assert rows(db.execute("SELECT v FROM t WHERE k = {2, 1}")) == [(1,)]
+        db.execute("DELETE FROM t WHERE k = ?", [[2, 1]])
+        assert rows(db.execute("SELECT k, v FROM t")) == []
+
+    def test_bound_list_for_a_set_column_sorts_and_dedups(self, db):
+        db.execute("CREATE TABLE t (k int PRIMARY KEY, s set<int>)")
+        db.execute("INSERT INTO t (k, s) VALUES (?, ?)", [1, [3, 1, 3, 2]])
+        assert rows(db.execute("SELECT k, s FROM t")) == [(1, [1, 2, 3])]
+
+    def test_bound_timestamps_floor_to_the_millisecond(self, db, tmp_path):
+        import datetime as dt
+
+        db.execute("CREATE TABLE t (k timestamp PRIMARY KEY, v int)")
+        ins = "INSERT INTO t (k, v) VALUES (?, ?)"
+        db.execute(ins, [dt.datetime(2020, 1, 1, 0, 0, 0, 100), 0])
+        db.execute(ins, [dt.datetime(2020, 1, 1, 0, 0, 0, 200), 1])
+        db.execute(ins, [dt.datetime(2020, 1, 1, 0, 0, 0, 1500), 2])
+        assert rows(db.execute("SELECT k, v FROM t")) == [
+            (dt.datetime(2020, 1, 1), 1),
+            (dt.datetime(2020, 1, 1, 0, 0, 0, 1000), 2),
+        ]
+        [m] = self._flush(db, tmp_path)
+        assert (m["partitions"], m["rows"]) == (2, 2)
+        # a read and a delete bound a sub-millisecond datetime address
+        # the same key as the write did
+        q = "SELECT v FROM t WHERE k = ?"
+        assert rows(db.execute(q, [dt.datetime(2020, 1, 1, 0, 0, 0, 900)])) == [(1,)]
+        db.execute("DELETE FROM t WHERE k = ?", [dt.datetime(2020, 1, 1, 0, 0, 0, 1999)])
+        assert rows(db.execute("SELECT k, v FROM t")) == [(dt.datetime(2020, 1, 1), 1)]
+
+    def test_frozen_collection_clustering_flushes_and_reloads(self, db, tmp_path):
+        for t in ("t", "t2"):
+            db.execute(
+                f"CREATE TABLE {t} (k int, c frozen<list<int>>, v int, PRIMARY KEY (k, c))"
+            )
+        db.execute("INSERT INTO t (k, c, v) VALUES (1, [3, 1], 0)")
+        db.execute("INSERT INTO t (k, c, v) VALUES (1, [1, 2], 1)")
+        db.execute("INSERT INTO t (k, c, v) VALUES (2, [], 2)")
+        before = rows(db.execute("SELECT k, c, v FROM t"))
+        assert len(before) == 3
+        self._flush(db, tmp_path)
+        db.load_sstables("t2", str(tmp_path / "flush"))
+        assert rows(db.execute("SELECT k, c, v FROM t2")) == before

@@ -1343,3 +1343,22 @@ def test_cql_values_serialize_through_one_codec_table():
     assert "struct" not in names | imported and "to_bytes" not in attrs
     root = pathlib.Path(cassandra_pmem_spark.__file__).parent
     assert not [p for p in root.rglob("*.py") if "frozen_set" in p.read_text()]
+
+
+def test_package_import_loads_no_pyspark():
+    """Python workers run ``python -m cassandra_pmem_spark.worker_daemon``,
+    which must take Spark's archives off the path before anything
+    imports pyspark: the package and the daemon module import none."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, cassandra_pmem_spark, cassandra_pmem_spark.worker_daemon; "
+        "print(sorted(m for m in sys.modules if m.split('.')[0] in ('pyspark', 'py4j')))"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "[]"
