@@ -2434,11 +2434,11 @@ class CqlDatabase:
         tag = uuid.uuid4().hex
         base = base.filter(F.lit(tag) == F.lit(tag)).persist()
         try:
-            base.count()
+            rows = base.count()
         except Exception:
             unpersist_quietly(base)
             raise
-        self._session_for_key(key).import_base(base)
+        self._session_for_key(key).import_base(base, rows)
 
     def flush_sstables(self, table, out_dir: str, sstables: int = 1,
                        compression: bool = True) -> list[dict]:

@@ -771,6 +771,11 @@ def _split_statements(s: str) -> list[str]:
 # memo_frame key of the visible frame (paged statements use their repr)
 _VISIBLE = "visible"
 
+# base rows plus buffered mutations up to which a session of known size
+# merges in one partition (CqlWriteSession.table); a larger or
+# unknown-size base keeps the merge at spark.sql.shuffle.partitions width
+_ONE_PARTITION_MERGE_ROWS = 100_000
+
 
 class CqlWriteSession:
     """Mutable table state driven by CQL write statements.
@@ -825,6 +830,10 @@ class CqlWriteSession:
         # were never written, so the next statement may re-mint them
         self._now_occs = now_occs if now_occs is not None else NowOccs()
         self._base = base
+        # the base's row count: 0 with no base, None when unknown (a
+        # frame given here or through the setter); import_base adds the
+        # counts load_sstables takes
+        self._base_rows: int | None = 0 if base is None else None
         # frames load_sstables persisted into _base: the session owns
         # their pins and releases them with the base (release_base)
         self._pinned: list[DataFrame] = []
@@ -851,6 +860,7 @@ class CqlWriteSession:
     @base.setter
     def base(self, df: DataFrame | None) -> None:
         self._base = df
+        self._base_rows = 0 if df is None else None
         self._generation += 1
 
     def apply_schema(self, meta: TableMeta) -> None:
@@ -924,11 +934,13 @@ class CqlWriteSession:
         self._facts = column_facts(meta)
         self._generation += 1
 
-    def import_base(self, df: DataFrame) -> None:
-        """Merge an imported, already-persisted frame into the base
-        history; the session now owns its pin."""
+    def import_base(self, df: DataFrame, rows: int) -> None:
+        """Merge an imported, already-persisted frame of `rows` rows into
+        the base history; the session now owns its pin."""
         self._pinned.append(df)
+        total = None if self._base_rows is None else self._base_rows + rows
         self.base = df if self._base is None else self._base.unionByName(df)
+        self._base_rows = total
 
     def release_base(self) -> None:
         """Drop the base history and unpin every imported frame."""
@@ -970,17 +982,10 @@ class CqlWriteSession:
         clock with its liveness shadows, memoized (memo_frame), so a
         pager's later pages read the merged rows instead of re-merging."""
 
-        def build() -> DataFrame:
-            df = self.table(now=self._clock_ref[0], with_shadows=True)
-            # the merge ran at spark.sql.shuffle.partitions width; a pinned
-            # frame keeps one partition so later page/SELECT jobs do not
-            # drag many tiny cached partitions along. A large ingest keeps
-            # its parallel layout.
-            if self._base is None and len(self._mutations) <= 100_000:
-                df = df.coalesce(1)
-            return df
-
-        return self.memo_frame(_VISIBLE, build)
+        return self.memo_frame(
+            _VISIBLE,
+            lambda: self.table(now=self._clock_ref[0], with_shadows=True),
+        )
 
     # -- statement entry (ModificationStatement.execute analog) ---------------
 
@@ -2325,6 +2330,15 @@ class CqlWriteSession:
                         T.StructField(f"_cellttl_{c}", T.MapType(T.StringType(), T.LongType()))
                     )
             return self.spark.createDataFrame([], T.StructType(schema_fields))
+
+        # a small session merges in one partition, which already meets
+        # the aggregate's distribution: the plan has no Exchange, and a
+        # memo frame over it caches one partition, not many tiny ones
+        if (
+            self._base_rows is not None
+            and self._base_rows + len(rows) <= _ONE_PARTITION_MERGE_ROWS
+        ):
+            log = log.coalesce(1)
 
         # complex deletions never expire — compute them BEFORE the TTL
         # purge (a full map write at wt shadows older cells at wt-1,

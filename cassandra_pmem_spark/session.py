@@ -54,6 +54,17 @@ def get_spark(app_name: str = "cassandra-pmem-spark", shuffle_partitions: int | 
       own zip archives off their path, so a task no longer re-reads them.
       The directory holding this package joins the workers' PYTHONPATH,
       so they find it whatever the driver's working directory.
+    - No DataFrame call-site capture: with it on, every ``Column``
+      method and ``F.*`` call makes ~4 extra py4j round trips to record
+      the Python file:line in the JVM (pyspark.errors.utils._with_origin),
+      which tripled a CQL statement's py4j calls. Spark errors raised
+      from DataFrame code lose that Python context. A static conf, so
+      it is set on the builder.
+    - A codegen cache that holds a CQL session's generated classes. In
+      local mode the driver and the executor each compile a body once
+      (the cache keys on the class loader), and one cql_write session
+      needs more entries than Spark's default of 100, so every session
+      recompiled classes the previous one had compiled.
     """
     cpus = _cpus()
     builder = (
@@ -72,6 +83,9 @@ def get_spark(app_name: str = "cassandra-pmem-spark", shuffle_partitions: int | 
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.python.daemon.module", "cassandra_pmem_spark.worker_daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # ~110 entries per cql_write session (driver + executor copies)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if not env_flag("SPARK_GRAFT_NO_MASTER"):
         builder = builder.master(f"local[{cpus}]")

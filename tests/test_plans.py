@@ -961,9 +961,10 @@ class TestUdtMergePlan:
 
 class TestVisibleMergePlan:
     """The statement path's visible-state merge (`CqlWriteSession.table`):
-    cell LWW and row liveness share ONE aggregate — one shuffle, no join —
-    and the tombstones apply in a fixed number of projections whatever
-    their count."""
+    cell LWW and row liveness share ONE aggregate — no join, and one
+    shuffle, or none for a session of known size within the one-partition
+    limit — and the tombstones apply in a fixed number of projections
+    whatever their count."""
 
     def _session(self, spark, base=None):
         from pyspark.sql import types as T
@@ -989,18 +990,54 @@ class TestVisibleMergePlan:
         s.execute("INSERT INTO t (k, c, a, b) VALUES (2, 1, 'y', 3)")
         return s, base
 
-    @pytest.mark.parametrize("with_base", [False, True])
-    def test_merge_is_one_exchange_and_no_join(self, spark, with_base):
-        s, base = self._session(
-            spark, base=[(3, 1, "p", 4), (1, 2, "q", 5)] if with_base else None
-        )
+    def _imported_session(self, spark, tmp_path):
+        """The same two statements over a load_sstables import of the
+        same base rows: an import knows its row count. The database is
+        returned too: dropping it releases its sessions."""
+        from cassandra_pmem_spark.cql.ddl import CqlDatabase
+
+        db = CqlDatabase(spark)
+        db.execute("CREATE KEYSPACE vmp WITH REPLICATION = {'class': 'SimpleStrategy'}")
+        db.execute("USE vmp")
+        for t in ("src", "t"):
+            db.execute(
+                f"CREATE TABLE {t} (k bigint, c bigint, a text, b bigint, "
+                "PRIMARY KEY (k, c))"
+            )
+        db.execute("INSERT INTO src (k, c, a, b) VALUES (3, 1, 'p', 4)")
+        db.execute("INSERT INTO src (k, c, a, b) VALUES (1, 2, 'q', 5)")
+        db.flush_sstables("src", str(tmp_path))
+        db.load_sstables("t", str(tmp_path))
+        db.execute("UPDATE t SET a = 'x' WHERE k = 1 AND c = 1")
+        db.execute("INSERT INTO t (k, c, a, b) VALUES (2, 1, 'y', 3)")
+        return db, db._session_for_key(db._table_key("t"))
+
+    @pytest.mark.parametrize(
+        "base, exchanges", [("none", 0), ("imported", 0), ("frame", 1)]
+    )
+    def test_merge_shuffles_only_a_base_of_unknown_size(
+        self, spark, tmp_path, base, exchanges
+    ):
+        frame = None
+        if base == "imported":
+            _db, s = self._imported_session(spark, tmp_path)
+        else:
+            s, frame = self._session(
+                spark, base=[(3, 1, "p", 4), (1, 2, "q", 5)] if base == "frame" else None
+            )
         try:
             plan = plan_of(s.table())
+            rows = sorted(tuple(r) for r in s.table().collect())
         finally:
-            if base is not None:
-                base.unpersist()
-        assert plan.count("Exchange") == 1, plan
-        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+            s.release()
+            if frame is not None:
+                frame.unpersist()
+        assert plan.count("Exchange") == exchanges, plan
+        assert "Join" not in plan, plan
+        want = [(1, 1, "x", None), (2, 1, "y", 3)]
+        if base != "none":
+            want = sorted(want + [(1, 2, "q", 5), (3, 1, "p", 4)])
+        assert rows == want
 
     def test_tombstone_count_adds_no_projection(self, spark):
         def projects(s):
@@ -1362,3 +1399,72 @@ def test_package_import_loads_no_pyspark():
         [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
     )
     assert out.stdout.strip() == "[]"
+
+
+def test_merge_width_is_picked_in_table_alone():
+    """One place picks the width of a session's merge: `table()`
+    coalesces its log before the aggregate, and `visible_frame` (like
+    every other function in cql/) sets no partition count of its own."""
+    import ast
+    import pathlib
+
+    from cassandra_pmem_spark import cql
+
+    picks = []
+    for path in sorted(pathlib.Path(cql.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for n in ast.walk(fn):
+                named = (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in ("coalesce", "repartition")
+                    and not (isinstance(n.func.value, ast.Name) and n.func.value.id == "F")
+                ) or (isinstance(n, ast.Name) and n.id == "_ONE_PARTITION_MERGE_ROWS")
+                if named:
+                    picks.append((path.name, fn.name, ast.unparse(n)))
+    # nested functions repeat their parent's calls: keep the innermost
+    assert sorted(set(picks)) == [
+        ("writes.py", "table", "_ONE_PARTITION_MERGE_ROWS"),
+        ("writes.py", "table", "log.coalesce(1)"),
+    ], picks
+
+
+class TestStatementFixedCosts:
+    """get_spark's statement-path confs: DataFrame calls make no py4j
+    call-site capture, and the codegen cache holds more classes than
+    one CQL session compiles."""
+
+    def test_column_calls_capture_no_call_site(self, spark, monkeypatch):
+        from pyspark.errors.utils import is_debugging_enabled
+
+        client = spark.sparkContext._gateway._gateway_client
+        sent = []
+        send = client.send_command
+
+        def counting(command, *args, **kwargs):
+            sent.append(command)
+            return send(command, *args, **kwargs)
+
+        monkeypatch.setattr(client, "send_command", counting)
+        F.col("a") + 1
+        monkeypatch.undo()
+        assert is_debugging_enabled() is False
+        assert sent and not [c for c in sent if "PySparkCurrentOrigin" in c], sent
+
+    def test_repeated_shape_compiles_nothing_after_150_others(self, spark):
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+        def run(i):
+            spark.range(3).selectExpr(f"id * 7 + {i} AS x").collect()
+
+        # literals inline into the generated code: each is its own class
+        first = 7_340_003
+        run(first)
+        for i in range(1, 161):
+            run(first + i)
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        run(first)
+        assert metrics.METRIC_COMPILATION_TIME().getCount() == before
