@@ -728,6 +728,14 @@ class _DdlParser(_Parser):
                 raise InvalidRequest(
                     f"counter type is not supported for PRIMARY KEY column {sorted(bad_key)[0]!r}"
                 )
+        # durations have no order (Duration is not comparable), so they
+        # can neither be hashed into a key nor cluster rows
+        # (CreateTableStatement: referencesDuration on key columns)
+        for c in pk_cols + ck_cols:
+            if self.registry.references_duration(cql_types[c]):
+                raise InvalidRequest(
+                    f"duration type is not supported for PRIMARY KEY column {c!r}"
+                )
 
         meta = TableMeta(
             name,
@@ -1673,6 +1681,16 @@ class SchemaRegistry:
               for t in self.type_field_text[name].values())
         )
 
+    def references_duration(self, text: str) -> bool:
+        """Whether declared type `text` is or contains duration, through
+        the fields of the user types it names too
+        (AbstractType.referencesDuration)."""
+        return "duration" in _TYPE_WORD.findall(text) or any(
+            self.references_duration(t)
+            for name in type_facts(text, self.types).refs
+            for t in self.type_field_text.get(name, {}).values()
+        )
+
     def _table_users(self, name: str) -> dict[tuple, TypeFacts]:
         """(table key, column) -> facts for every table column whose
         declared type names user type `name`, nested uses included."""
@@ -2061,14 +2079,6 @@ class SchemaRegistry:
             raise InvalidRequest(f"not a DDL statement: {head!r}")
 
 
-def _release_sessions(sessions: dict) -> None:
-    """weakref.finalize target: unpin everything a CqlDatabase's table
-    sessions hold when the database object is collected (module-level so
-    the finalizer holds no reference back to the instance)."""
-    for sess in list(sessions.values()):
-        sess.release()
-
-
 class CqlDatabase:
     """Full CQL text surface: DDL → SchemaRegistry, DML → per-table
     CqlWriteSession, SELECT → parser compile over the table's visible
@@ -2081,18 +2091,16 @@ class CqlDatabase:
         self.spark = spark
         self.strict = strict
         self.registry = SchemaRegistry()
+        # table sessions unpin what they pinned when they are collected
+        # (CqlWriteSession's finalizer), so a short-lived database leaves
+        # no persisted frame behind, and a session a caller still holds
+        # keeps its base after the database is gone
         self._sessions: dict[str, Any] = {}
         # cached per-table index-cardinality estimates (the analog of
         # SecondaryIndexManager's stored estimatedResultRows; refreshed
         # on DDL, deliberately NOT per-write — estimates lag in the
         # reference too)
         self._index_stats: dict[tuple, dict] = {}
-        # unpin everything when this database is collected — otherwise a
-        # long Spark session accumulates persisted frames from
-        # short-lived CqlDatabase instances (one per registry query)
-        import weakref
-
-        weakref.finalize(self, _release_sessions, self._sessions)
         self.last_index_choice: tuple | None = None
         self.current_keyspace: str | None = None
         # ONE coordinator timeline shared by every table session: a write

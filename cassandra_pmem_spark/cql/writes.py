@@ -34,6 +34,7 @@ expiry rides with each mutation's cells.
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -777,6 +778,14 @@ _VISIBLE = "visible"
 _ONE_PARTITION_MERGE_ROWS = 100_000
 
 
+def _unpin(pinned: list, frames: dict) -> None:
+    """weakref.finalize target: unpersist a collected session's imports
+    and memo frames (module-level, so the finalizer holds no reference
+    back to the session)."""
+    for df in [*pinned, *frames.values()]:
+        unpersist_quietly(df)
+
+
 class CqlWriteSession:
     """Mutable table state driven by CQL write statements.
 
@@ -840,6 +849,9 @@ class CqlWriteSession:
         # frames compiled over table() at _frames_version: the visible
         # frame under _VISIBLE, each paged statement's frame under its repr
         self._frames: dict = {}
+        # both kinds of pin are released when the session itself is
+        # collected, never while a caller still holds it
+        weakref.finalize(self, _unpin, self._pinned, self._frames)
         self._frames_version: tuple | None = None
         # True iff the LAST statement (or any inner batch statement)
         # carried an IF clause — the coordinator's trigger hook reads it

@@ -60,6 +60,13 @@ _PRIORITY: tuple[str, ...] = (
     "cql_token_scan_text",
     "cql_token_scan_composite",
     "cql_token_scan_timestamp",
+    # the read path's resolved base scan (cql.table._base_scan): on a
+    # one-task table the ORDER BY, PER PARTITION LIMIT, DISTINCT and
+    # GROUP BY plans lose their Exchange
+    "cql_clustering_slice",
+    "cql_per_partition_limit",
+    "cql_distinct_partitions",
+    "cql_group_by_pk_prefix",
     # -- (2) round-14 evidence. The sstable tier (one opener and one
     # ranged partition walker, the import snapshot, the declared-type
     # overrides), the write path (one BATCH path, the session frame
@@ -85,16 +92,12 @@ _PRIORITY: tuple[str, ...] = (
     "cql_counter_fold",
     "cql_trigger_audit",
     "cql_collection_writetime",
-    "cql_clustering_slice",
-    "cql_distinct_partitions",
     "cql_duration_arithmetic",
     "cql_from_json",
-    "cql_group_by_pk_prefix",
     "cql_group_limit",
     "cql_is_not_null",
     "cql_latest_events",
     "cql_multipoint_in",
-    "cql_per_partition_limit",
     "cql_point_lookup",
     "cql_static_column",
 )

@@ -850,9 +850,10 @@ def cql_from_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cql_group_by_pk_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY pk prefix (AggregationSpecification.AGGREGATE_BY_PK_PREFIX:56;
-    GroupMaker.java:78) with typed aggregates."""
+    GroupMaker.java:78) with typed aggregates, over the CQL read path's
+    base scan (a one-task table aggregates without a shuffle)."""
     validate_group_by(TABLES["lineitem"], ["l_orderkey"])  # strict-mode gate
-    li = load_table(spark, "lineitem", sf_dir)
+    li = cql_table(spark, "lineitem", sf_dir, strict=True).df()
     return li.groupBy("l_orderkey").agg(
         F.count("*").alias("n_lines"),
         exact_double_sum("l_quantity").alias("sum_qty"),

@@ -87,6 +87,35 @@ class TestCreateTable:
         with pytest.raises(InvalidRequest, match="unknown type"):
             reg.execute("CREATE TABLE t (k int PRIMARY KEY, v sometype)")
 
+    @pytest.mark.parametrize(
+        "ddl",
+        [
+            "CREATE TABLE t (k duration PRIMARY KEY, v int)",
+            "CREATE TABLE t (k int, c DURATION, v int, PRIMARY KEY (k, c))",
+            "CREATE TABLE t (k frozen<list<duration>>, v int, PRIMARY KEY (k))",
+            "CREATE TABLE t (k int, c frozen<map<int, duration>>, PRIMARY KEY (k, c))",
+            "CREATE TABLE t (k frozen<tuple<int, duration>> PRIMARY KEY, v int)",
+            "CREATE TABLE t (k frozen<outer> PRIMARY KEY, v int)",
+        ],
+        ids=["partition", "clustering", "list", "map", "tuple", "nested-udt"],
+    )
+    def test_duration_key_rejected(self, reg, ddl):
+        """Durations have no order (CreateTest.testCreateTableWithDurationColumns):
+        no key column may be or contain one, through user type fields too."""
+        reg.execute("CREATE TYPE inner (x int, d duration)")
+        reg.execute("CREATE TYPE outer (i frozen<inner>)")
+        with pytest.raises(InvalidRequest, match="duration type is not supported for PRIMARY KEY"):
+            reg.execute(ddl)
+        assert "t" not in reg.tables
+
+    def test_duration_regular_column_accepted(self, reg):
+        reg.execute("CREATE TYPE work_duration (x int)")
+        reg.execute(
+            "CREATE TABLE t (k frozen<work_duration>, c int, d duration, "
+            "l list<duration>, PRIMARY KEY (k, c))"
+        )
+        assert reg.tables["t"].cql_type("d") == "duration"
+
 
 class TestKeyspaceTypeIndex:
     def test_keyspace_replication(self, reg):

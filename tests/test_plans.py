@@ -992,8 +992,7 @@ class TestVisibleMergePlan:
 
     def _imported_session(self, spark, tmp_path):
         """The same two statements over a load_sstables import of the
-        same base rows: an import knows its row count. The database is
-        returned too: dropping it releases its sessions."""
+        same base rows: an import knows its row count."""
         from cassandra_pmem_spark.cql.ddl import CqlDatabase
 
         db = CqlDatabase(spark)
@@ -1039,6 +1038,26 @@ class TestVisibleMergePlan:
             want = sorted(want + [(1, 2, "q", 5), (3, 1, "p", 4)])
         assert rows == want
 
+    def test_held_session_keeps_its_base_after_the_database_is_collected(
+        self, spark, tmp_path
+    ):
+        """A session's pins live as long as the session: the database
+        going away leaves a session a caller holds whole, and the
+        session going away unpins its import."""
+        import gc
+
+        from tests.conftest import persisted_rdds
+
+        before = persisted_rdds(spark)
+        db, s = self._imported_session(spark, tmp_path)
+        del db
+        gc.collect()
+        rows = sorted(tuple(r) for r in s.table().collect())
+        assert rows == [(1, 1, "x", None), (1, 2, "q", 5), (2, 1, "y", 3), (3, 1, "p", 4)]
+        assert persisted_rdds(spark) > before
+        del s
+        assert persisted_rdds(spark) == before
+
     def test_tombstone_count_adds_no_projection(self, spark):
         def projects(s):
             analysed = s.table()._jdf.queryExecution().analyzed().toString()
@@ -1052,6 +1071,133 @@ class TestVisibleMergePlan:
             twelve.execute(f"DELETE FROM t WHERE k = {i} AND c >= {i}")
             twelve.execute(f"DELETE a FROM t WHERE k = {i} AND c = 2")
         assert projects(twelve) == projects(one), (projects(twelve), projects(one))
+
+
+class TestReadScan:
+    """The CQL read path resolves each fixture table once per session,
+    file version and split settings (`cql.table._base_scan`). A table
+    Spark scans in one task reads as one partition, so slices with ORDER
+    BY, PER PARTITION LIMIT, GROUP BY pk and DISTINCT plan no Exchange,
+    while filters still reach the parquet scan; a multi-split table
+    keeps its shuffle and returns the same rows."""
+
+    STATEMENTS = {
+        "slice": (
+            "SELECT user_id, ts, event_id, value FROM events WHERE user_id = ? "
+            "AND ts >= ? AND ts < ? ORDER BY ts DESC",
+            [3, "2024-01-02 00:00:00", "2024-01-30 00:00:00"],
+        ),
+        "per_partition_limit": (
+            "SELECT o_custkey, o_orderdate, o_orderkey FROM orders "
+            "WHERE o_custkey IN (?, ?, ?) PER PARTITION LIMIT 2",
+            [1, 7, 42],
+        ),
+        "group_by_pk": (
+            "SELECT user_id, count(*), max(value) FROM events "
+            "WHERE user_id IN (?, ?) GROUP BY user_id",
+            [1, 2],
+        ),
+        "distinct": (
+            "SELECT DISTINCT o_custkey FROM orders WHERE o_custkey IN (?, ?, ?)",
+            [1, 7, 42],
+        ),
+    }
+
+    @pytest.fixture(scope="class")
+    def multi_split(self, spark, tmp_path_factory):
+        """events and orders of SF_SMALL rewritten as three files each:
+        Spark plans one split per file."""
+        d = tmp_path_factory.mktemp("read-scan")
+        for name in ("events", "orders"):
+            load_table(spark, name, SF_SMALL).repartition(3).write.parquet(
+                f"{d}/{name}.parquet"
+            )
+        return str(d)
+
+    def _run(self, spark, sf_dir, kind):
+        from cassandra_pmem_spark.cql.parser import execute_cql
+
+        text, params = self.STATEMENTS[kind]
+        df = execute_cql(spark, text, sf_dir, params=params)
+        return plan_of(df), sorted(tuple(r) for r in df.collect())
+
+    @pytest.mark.parametrize("kind", list(STATEMENTS))
+    def test_one_split_table_plans_no_exchange(self, spark, multi_split, kind):
+        table = "events" if kind in ("slice", "group_by_pk") else "orders"
+        assert load_table(spark, table, SF_SMALL).rdd.getNumPartitions() == 1
+        assert load_table(spark, table, multi_split).rdd.getNumPartitions() == 3
+        one_plan, one_rows = self._run(spark, SF_SMALL, kind)
+        assert "Exchange" not in one_plan, one_plan
+        assert re.search(r"PushedFilters: \[[^\]]*(EqualTo|In)\(", one_plan), one_plan
+        multi_plan, multi_rows = self._run(spark, multi_split, kind)
+        assert "Exchange" in multi_plan, multi_plan
+        assert one_rows and multi_rows == one_rows
+
+    def test_statements_share_one_resolved_relation(self, spark):
+        from cassandra_pmem_spark.cql.table import cql_table
+
+        a = cql_table(spark, "orders", SF_SMALL).where("o_custkey", "=", 1)
+        b = cql_table(spark, "orders", SF_SMALL).where("o_custkey", "=", 2)
+        assert a._df._jdf.equals(b._df._jdf)
+        # plain DataFrame queries keep a relation of their own
+        assert not load_table(spark, "orders", SF_SMALL)._jdf.equals(a._df._jdf)
+
+    def test_rewritten_file_is_planned_again(self, spark, tmp_path):
+        from cassandra_pmem_spark.cql.table import cql_table
+
+        src = load_table(spark, "region", SF_SMALL)
+        path = f"{tmp_path}/region.parquet"
+        src.filter(F.col("r_regionkey") < 2).coalesce(1).write.parquet(path)
+        first = cql_table(spark, "region", str(tmp_path))
+        assert first.df().count() == 2
+        src.coalesce(1).write.mode("overwrite").parquet(path)
+        again = cql_table(spark, "region", str(tmp_path))
+        assert not again._df._jdf.equals(first._df._jdf)
+        assert again.df().count() == src.count()
+
+    def test_stopped_session_leaves_no_entry(self, tmp_path):
+        """In a process of its own: stopping a session drops its entries
+        even while the caller still holds the session object, and a
+        collected session's entries go with it. (PySpark's RDD.toDF
+        holds the session constructed last, so a third one is made
+        before the second is dropped.)"""
+        import os
+        import subprocess
+        import sys
+
+        code = f"""
+import gc
+from pyspark.sql import SparkSession
+from cassandra_pmem_spark.cql import table
+
+def start():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false").getOrCreate())
+
+first = start()
+table.cql_table(first, "region", {SF_SMALL!r}).df().count()
+assert list(table._SCANS) == [first]
+first.stop()
+second = start()
+table.cql_table(second, "nation", {SF_SMALL!r}).df().count()
+assert list(table._SCANS) == [second], list(table._SCANS)
+third = second.newSession()
+table.cql_table(third, "region", {SF_SMALL!r}).df().count()
+assert len(table._SCANS) == 2
+second.newSession()
+del third
+gc.collect()
+assert list(table._SCANS) == [second], list(table._SCANS)
+second.stop()
+print("ok")
+"""
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, SPARK_LOCAL_DIRS=str(tmp_path))
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=root, env=env,
+            capture_output=True, text=True, timeout=300,
+        )
+        assert out.stdout.strip().endswith("ok"), out.stderr[-2000:]
 
 
 class TestRound12Plans:
@@ -1404,7 +1550,9 @@ def test_package_import_loads_no_pyspark():
 def test_merge_width_is_picked_in_table_alone():
     """One place picks the width of a session's merge: `table()`
     coalesces its log before the aggregate, and `visible_frame` (like
-    every other function in cql/) sets no partition count of its own."""
+    every other function in cql/ but the read path's base scan, which
+    reads a one-task table as one partition) sets no partition count
+    of its own."""
     import ast
     import pathlib
 
@@ -1427,6 +1575,7 @@ def test_merge_width_is_picked_in_table_alone():
                     picks.append((path.name, fn.name, ast.unparse(n)))
     # nested functions repeat their parent's calls: keep the innermost
     assert sorted(set(picks)) == [
+        ("table.py", "_base_scan", "df.coalesce(1)"),
         ("writes.py", "table", "_ONE_PARTITION_MERGE_ROWS"),
         ("writes.py", "table", "log.coalesce(1)"),
     ], picks
